@@ -17,6 +17,8 @@ and reports records/second.
 
     python scale_bench.py                 # 10M records, local[$CPUS]
     SCALE_RECORDS=2000000 python scale_bench.py
+    SCALE_ONLY=licensing SCALE_RECORDS=2000000 python scale_bench.py
+                                          # controls + oa_flag/licensing legs
 
 Prints ONE JSON line:
     {"metric": "records_per_second", "oa_flag": N, "licensing_tag": N,
@@ -1796,6 +1798,46 @@ def _curation_leg(spark, docs, results: dict, timed) -> None:
     )
 
 
+def _licensing_inputs(spark) -> tuple:
+    """(records, KBART holdings, 50K OA ISSN list, free collections)."""
+    return (
+        spark.read.parquet(os.path.join(CORPUS, "records")),
+        spark.read.parquet(os.path.join(CORPUS, "holdings")),
+        spark.range(N_OA_ISSNS).select(_issn(F.col("id") * 3).alias("issn")),
+        [f"Coll {k}" for k in range(0, N_COLLECTIONS, 20)],
+    )
+
+
+def _licensing_leg(spark, results: dict, timed) -> None:
+    """The two span-tool legs: ``apply_oa_flag`` with the 50K OA list
+    and ``attach_labels`` with the 22-ISIL config over the records
+    parquet (best of three after a warm-up)."""
+    import datetime
+
+    from siskin_spark.operators.licensing import apply_oa_flag, attach_labels
+
+    records, holdings, oa_issns, free_colls = _licensing_inputs(spark)
+
+    oa = lambda: apply_oa_flag(  # noqa: E731
+        records,
+        oa_issns=oa_issns,
+        free_collections=free_colls,
+        oa_source_ids=["5", "17"],
+        excluded_source_ids=["39"],
+    )
+    timed(oa())  # warm-up: scan cache, codegen, broadcast
+    results["oa_flag_s"] = min(timed(oa()) for _ in range(3))
+
+    lic = lambda: attach_labels(  # noqa: E731
+        records,
+        filter_config(),
+        holdings=holdings,
+        now=datetime.date(2026, 8, 13),
+    )
+    timed(lic())
+    results["licensing_tag_s"] = min(timed(lic()) for _ in range(3))
+
+
 def main() -> None:
     import datetime
 
@@ -1814,6 +1856,7 @@ def main() -> None:
         "neardup_incremental", "curation", "r9", "r10", "semincr", "r11",
         "sq8", "tokbudget", "nprobe", "dim768", "dailygate", "bm25", "dsir",
         "search", "searchprune", "searchgemm", "gatebench", "ndsearch",
+        "licensing",
     ):
         # iterate on this one leg without the ~25-minute full suite;
         # emits a partial JSON with only the leg's keys
@@ -1885,6 +1928,9 @@ def main() -> None:
         elif os.environ["SCALE_ONLY"] == "ndsearch":
             _control_leg(spark, results, timed_only)
             _ndsearch_leg(spark, docs_only, results, timed_only)
+        elif os.environ["SCALE_ONLY"] == "licensing":
+            _control_leg(spark, results, timed_only)
+            _licensing_leg(spark, results, timed_only)
         elif os.environ["SCALE_ONLY"] == "gatebench":
             _control_leg(spark, results, timed_only)
             _gate_leg(spark, results, timed_only)
@@ -1907,11 +1953,7 @@ def main() -> None:
 
     from siskin_spark.operators.licensing import apply_oa_flag, attach_labels
 
-    records = spark.read.parquet(os.path.join(CORPUS, "records"))
-    holdings = spark.read.parquet(os.path.join(CORPUS, "holdings"))
-
-    oa_issns = spark.range(N_OA_ISSNS).select(_issn(F.col("id") * 3).alias("issn"))
-    free_colls = [f"Coll {k}" for k in range(0, N_COLLECTIONS, 20)]
+    records, holdings, oa_issns, free_colls = _licensing_inputs(spark)
 
     def timed(df) -> float:
         t0 = time.perf_counter()
@@ -1920,25 +1962,7 @@ def main() -> None:
 
     results: dict[str, float] = {}
     _control_leg(spark, results, timed)
-
-    oa = lambda: apply_oa_flag(  # noqa: E731
-        records,
-        oa_issns=oa_issns,
-        free_collections=free_colls,
-        oa_source_ids=["5", "17"],
-        excluded_source_ids=["39"],
-    )
-    timed(oa())  # warm-up: scan cache, codegen, broadcast
-    results["oa_flag_s"] = min(timed(oa()) for _ in range(3))
-
-    lic = lambda: attach_labels(  # noqa: E731
-        records,
-        filter_config(),
-        holdings=holdings,
-        now=datetime.date(2026, 8, 13),
-    )
-    timed(lic())
-    results["licensing_tag_s"] = min(timed(lic()) for _ in range(3))
+    _licensing_leg(spark, results, timed)
 
     from siskin_spark.operators.dedup import snapshot_latest
 

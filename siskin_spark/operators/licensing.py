@@ -21,11 +21,13 @@ never happens inside executors.
 Execution model: column-only predicates fold into ONE pass over the
 records (broadcast literals — the reference's own observation that
 in-memory collection lists are the main speedup, amsl.py:906-922).
-Holdings leaves need a join; each distinct (files-tuple) gets one
-exploded-ISSN equi-join against the broadcast KBART table, aggregated
-back to a boolean flag column, and the tree then references the flag.
-All ISILs are evaluated in a single job — no per-ISIL passes over the
-corpus (span-tag iterates filters per record in one pass too).
+Holdings leaves and large ISSN lists need a join: they share ONE
+broadcast frame (the KBART table read once, plus every large list
+folded on the driver), joined once to one explode of the records'
+ISSNs and aggregated back to one flag bitmask per record; the tree
+then references per-leaf flag columns. All ISILs are evaluated in a
+single job — no per-ISIL or per-leaf passes over the corpus (span-tag
+iterates filters per record in one pass too).
 """
 
 from __future__ import annotations
@@ -49,13 +51,13 @@ ISSN_FLAG_PREFIX = "_issnf_"
 # huge expression tree.
 CONTENT_ISIN_MAX = 1000
 
-# Above this many entries an ISSN list compiles to a broadcast-join
-# flag riding the same exploded-ISSN frame and bit_or aggregate as the
-# holdings leaves. `arrays_overlap(record_issns, lit_array)` rebuilds
-# a hash set of the literal side PER RECORD — measured 38 s of a 49 s
-# attach_labels at 30M records for seven 2,000-entry lists; as join
-# flags the whole tree evaluation drops to ~12 s. Small lists stay
-# inline literals (cheap, and what the sf-scale oracle configs use).
+# Above this many entries an ISSN list compiles to a join-backed flag:
+# every such list folds into the holdings leaves' broadcast side as
+# (ISSN -> flag bits) rows. `arrays_overlap(record_issns, lit_array)`
+# rebuilds a hash set of the literal side PER RECORD — measured 38 s of
+# a 49 s attach_labels at 30M records for seven 2,000-entry lists; as
+# join flags the whole tree evaluation dropped to ~12 s. Small lists
+# stay inline literals (cheap, and what the sf-scale oracle configs use).
 ISSN_JOIN_MAX = 100
 
 _EMBARGO_RE = r"^\s*([RP])([0-9]+)([DMY])\s*$"
@@ -223,54 +225,14 @@ class LicensingCompiler:
             return F.col(self._holdings_leaves[key])
         raise ValueError(f"unknown filter node: {op}")
 
-    def _tagged_holdings(self) -> DataFrame:
-        """Every holdings leaf's KBART rows, tagged with the leaf's flag
-        name, in ONE small frame (the broadcast side). N leaves means N
-        filters of the dimension table — never N passes over records."""
-        h = self.holdings
-        cols = set(h.columns)
-        opt = lambda name: (  # noqa: E731
-            F.col(name) if name in cols else F.lit(None).cast("string")
-        )
-        base = h.select(
-            F.explode(
-                F.array_distinct(
-                    F.array_compact(
-                        F.array(F.col("print_identifier"), F.col("online_identifier"))
-                    )
-                )
-            ).alias("_ident"),
-            # explicit try_cast (string-typed KBART files): malformed
-            # coverage date -> null -> open bound, not an ANSI abort at
-            # the comparison site
-            F.col("date_first_issue_online").try_cast("date").alias("_from"),
-            F.col("date_last_issue_online").try_cast("date").alias("_to"),
-            opt("embargo_info").alias("_embargo"),
-            # try_cast: real KBART files carry junk in num_* columns;
-            # unparseable bound -> null -> open interval, never an abort
-            opt("num_first_vol_online").try_cast("int").alias("_fvol"),
-            opt("num_first_issue_online").try_cast("int").alias("_fiss"),
-            opt("num_last_vol_online").try_cast("int").alias("_lvol"),
-            opt("num_last_issue_online").try_cast("int").alias("_liss"),
-            *([F.col("file_uri")] if "file_uri" in cols else []),
-        )
-        tagged = None
-        for files, flag in self._holdings_leaves.items():
-            t = base
-            if files:
-                t = t.filter(F.col("file_uri").isin(list(files)))
-            t = t.withColumn("_flag", self._flag_lit(flag))
-            tagged = t if tagged is None else tagged.unionByName(t)
-        return tagged.drop("file_uri") if "file_uri" in cols else tagged
-
     # -- flag representation ------------------------------------------
     # With <= 63 join-backed leaves (the reference runs ~30 holdings
     # files) each leaf gets one BIT in a single long: the per-record
-    # aggregate is bit_or of longs instead of collect_set of strings —
+    # aggregate is bit_or of longs instead of collecting strings —
     # a fixed 8-byte shuffle/join payload and zero array allocations,
     # which is exactly the memory pressure the 30 M-row single-JVM leg
     # hit. Past 63 leaves the representation degrades gracefully to
-    # the name-array path.
+    # arrays of flag names.
     def _all_flag_names(self) -> list[str]:
         return [
             *self._holdings_leaves.values(),
@@ -284,120 +246,158 @@ class LicensingCompiler:
             return None
         return {name: 1 << i for i, name in enumerate(names)}
 
-    def _flag_lit(self, flag: str) -> Column:
+    def _flag_type(self) -> str:
+        return "long" if self._flag_bits() is not None else "array<string>"
+
+    def _flag_value(self, flags: Sequence[str]) -> Any:
+        """The ``_flag`` of a row that matches ``flags``: the OR of
+        their bits, or past 63 leaves the array of their names."""
         bits = self._flag_bits()
         if bits is None:
-            return F.lit(flag)
-        return F.lit(bits[flag]).cast("long")
+            return sorted(set(flags))
+        return sum(bits[f] for f in set(flags))
+
+    def _probe_side(self, spark: Any) -> DataFrame:
+        """Every ident-keyed leaf — holdings files and large ISSN lists —
+        in ONE small frame, the broadcast side of the single probe join.
+
+        The KBART table is read and exploded once; each row carries the
+        flags of every holdings leaf whose ``files`` lists its file_uri
+        (every row, for a leaf without ``files``). The large ISSN lists
+        fold on the driver into one (ident -> flags) row per distinct
+        ISSN with null coverage bounds, which pass every coverage test.
+        Rows carrying no flag are dropped."""
+        ftype = self._flag_type()
+
+        def flag_lit(flags: Sequence[str]) -> Column:
+            return F.lit(self._flag_value(flags)).cast(ftype)
+
+        side = None
+        if self._holdings_leaves:
+            h = self.holdings
+            cols = set(h.columns)
+            opt = lambda name: (  # noqa: E731
+                F.col(name) if name in cols else F.lit(None).cast("string")
+            )
+            every = [f for files, f in self._holdings_leaves.items() if not files]
+            by_file: dict[str, list[str]] = {}
+            for files, f in self._holdings_leaves.items():
+                for uri in files:
+                    by_file.setdefault(uri, list(every)).append(f)
+            flag = flag_lit(every)
+            if by_file:
+                pairs = sorted(by_file.items())
+                file_flags = F.create_map(
+                    *[c for u, fl in pairs for c in (F.lit(u), flag_lit(fl))]
+                )
+                flag = F.coalesce(file_flags[F.col("file_uri")], flag)
+            idents = F.array(F.col("print_identifier"), F.col("online_identifier"))
+            side = h.select(
+                F.explode(F.array_distinct(F.array_compact(idents))).alias("_ident"),
+                # explicit try_cast (string-typed KBART files): malformed
+                # coverage date -> null -> open bound, not an ANSI abort at
+                # the comparison site
+                F.col("date_first_issue_online").try_cast("date").alias("_from"),
+                F.col("date_last_issue_online").try_cast("date").alias("_to"),
+                opt("embargo_info").alias("_embargo"),
+                # try_cast: real KBART files carry junk in num_* columns;
+                # unparseable bound -> null -> open interval, never an abort
+                opt("num_first_vol_online").try_cast("int").alias("_fvol"),
+                opt("num_first_issue_online").try_cast("int").alias("_fiss"),
+                opt("num_last_vol_online").try_cast("int").alias("_lvol"),
+                opt("num_last_issue_online").try_cast("int").alias("_liss"),
+                flag.alias("_flag"),
+            )
+        if self._issn_leaves:
+            by_ident: dict[str, list[str]] = {}
+            for issn_list, f in self._issn_leaves.items():
+                for v in issn_list:
+                    by_ident.setdefault(v, []).append(f)
+            issns = local_table(
+                spark,
+                [(v, self._flag_value(fl)) for v, fl in by_ident.items()],
+                f"_ident string, _flag {ftype}",
+            )
+            side = (
+                issns
+                if side is None
+                else side.unionByName(issns, allowMissingColumns=True)
+            )
+        return side.filter(F.col("_flag") != flag_lit([]))
 
     def _attach_flags(self, records: DataFrame, id_col: str) -> DataFrame:
-        """Attach every holdings flag AND every large-content flag with
-        ONE join against the records (union of per-leaf matches on the
-        small side -> collect_set of flag names -> array_contains).
-        The reference runs ~30 holdings files; sequentially that was
-        ~30 full left joins of the corpus — this is one. Large ISSN
-        lists ride the same machinery: their matches come from the
-        exploded-ISSN frame joined to the broadcast list."""
-        if not (
-            self._holdings_leaves or self._content_leaves or self._issn_leaves
-        ):
+        """Attach every join-backed flag with ONE probe of the records:
+        holdings leaves and large ISSN lists share one broadcast side
+        (``_probe_side``) joined once to one explode of the records'
+        ISSNs, and large content whitelists (keyed by record id) join
+        the same per-record flag aggregate. The reference runs ~30
+        holdings files; sequentially that was ~30 full left joins of
+        the corpus — this is one."""
+        names = self._all_flag_names()
+        if not names:
             return records
         spark = records.sparkSession
-        rcols = set(records.columns)
-        matches = None  # (_rk, _flag) pairs, small/broadcastable side logic
+        matches = None  # (_rk, _flag) pairs
 
-        if self._holdings_leaves:
-            if self.holdings is None:
-                raise ValueError(
-                    "config has holdings leaves but no holdings table given"
-                )
-            if "embargo_info" in self.holdings.columns and self.now is None:
+        if self._holdings_leaves or self._issn_leaves:
+            probe = [F.col(id_col).alias("_rk")]
+            cond = None
+            if self._holdings_leaves:
+                if self.holdings is None:
+                    raise ValueError(
+                        "config has holdings leaves but no holdings table given"
+                    )
                 # Real KBART files always carry the embargo_info COLUMN
                 # (32-column standard) — only a parseable VALUE makes
                 # `now` mandatory. Holdings are config-sized, so this
-                # probe is one tiny scan of the broadcast side.
-                has_embargo = (
-                    self.holdings.filter(
+                # check is one tiny scan of the broadcast side.
+                if (
+                    "embargo_info" in self.holdings.columns
+                    and self.now is None
+                    and not self.holdings.filter(
                         F.regexp_extract(
                             F.col("embargo_info").cast("string"), _EMBARGO_RE, 1
                         )
                         != ""
-                    )
-                    .limit(1)
-                    .count()
-                    > 0
-                )
-                if has_embargo:
+                    ).isEmpty()
+                ):
                     raise ValueError(
                         "holdings table has embargo_info values but no `now` "
                         "was given; embargo walls are wall-clock-relative and "
                         "need an explicit evaluation date (attach_labels(..., "
                         "now=date(...)))"
                     )
-            th = self._tagged_holdings()
-            # coverage is date-granular (KBART bounds are dates); record
-            # timestamps truncate to the day for the comparison
-            ids = records.select(
-                F.col(id_col).alias("_rk"),
+                rcols = set(records.columns)
                 # try_cast: malformed record date/volume/issue -> null
                 # -> the record simply matches no holdings window
                 # (reference skips such records), instead of aborting
                 # the whole tagging job under ANSI mode
-                F.col(self.date_col).try_cast("date").alias("_rdate"),
-                (
-                    F.col(self.volume_col).try_cast("int")
-                    if self.volume_col in rcols
-                    else F.lit(None).cast("int")
-                ).alias("_rvol"),
-                (
-                    F.col(self.issue_col).try_cast("int")
-                    if self.issue_col in rcols
-                    else F.lit(None).cast("int")
-                ).alias("_riss"),
-                F.explode(issns_all()).alias("_ident"),
-            )
-            cond = (
-                (F.col("_from").isNull() | (F.col("_rdate") >= F.col("_from")))
-                & (F.col("_to").isNull() | (F.col("_rdate") <= F.col("_to")))
-                & kbart_volume_issue_ok(
-                    F.col("_rvol"),
-                    F.col("_riss"),
-                    F.col("_fvol"),
-                    F.col("_fiss"),
-                    F.col("_lvol"),
-                    F.col("_liss"),
+                as_int = lambda c: (  # noqa: E731
+                    F.col(c).try_cast("int") if c in rcols else F.lit(None).cast("int")
                 )
-            )
-            if self.now is not None:
-                cond = cond & kbart_embargo_ok(
-                    F.col("_embargo"), F.col("_rdate"), F.lit(self.now)
+                # coverage is date-granular (KBART bounds are dates); record
+                # timestamps truncate to the day for the comparison
+                probe += [
+                    F.col(self.date_col).try_cast("date").alias("_rdate"),
+                    as_int(self.volume_col).alias("_rvol"),
+                    as_int(self.issue_col).alias("_riss"),
+                ]
+                bounds = ("_rvol", "_riss", "_fvol", "_fiss", "_lvol", "_liss")
+                cond = (
+                    (F.col("_from").isNull() | (F.col("_rdate") >= F.col("_from")))
+                    & (F.col("_to").isNull() | (F.col("_rdate") <= F.col("_to")))
+                    & kbart_volume_issue_ok(*map(F.col, bounds))
                 )
-            matches = (
-                ids.join(broadcast(th), on="_ident")
-                .filter(cond)
-                .select("_rk", "_flag")
-            )
-
-        if self._issn_leaves:
-            if self._holdings_leaves:
-                # reuse the frame the holdings join already built —
-                # one explode of the corpus serves both leaf kinds
-                issn_ids = ids.select("_rk", "_ident")
-            else:
-                issn_ids = records.select(
-                    F.col(id_col).alias("_rk"),
-                    F.explode(issns_all()).alias("_ident"),
-                )
-            spark_ = records.sparkSession
-            for issn_list, flag in self._issn_leaves.items():
-                lst = local_table(
-                    spark_, [(v,) for v in issn_list], "_ident string"
-                )
-                m = (
-                    issn_ids.join(broadcast(lst), on="_ident")
-                    .select("_rk", self._flag_lit(flag).alias("_flag"))
-                )
-                matches = m if matches is None else matches.unionByName(m)
+                if self.now is not None:
+                    cond = cond & kbart_embargo_ok(
+                        F.col("_embargo"), F.col("_rdate"), F.lit(self.now)
+                    )
+            matches = records.select(
+                *probe, F.explode(issns_all()).alias("_ident")
+            ).join(broadcast(self._probe_side(spark)), on="_ident")
+            if cond is not None:
+                matches = matches.filter(cond)
+            matches = matches.select("_rk", "_flag")
 
         id_type = records.schema[id_col].dataType.simpleString()
         for content_ids, flag in self._content_leaves.items():
@@ -405,7 +405,7 @@ class LicensingCompiler:
                 spark, [(str(i),) for i in content_ids], "_id string"
             ).select(
                 F.col("_id").cast(id_type).alias("_rk"),
-                self._flag_lit(flag).alias("_flag"),
+                F.lit(self._flag_value([flag])).cast(self._flag_type()).alias("_flag"),
             )
             # records ∩ whitelist resolved in the same single aggregate:
             # semi-join happens implicitly when flags join back below
@@ -415,13 +415,12 @@ class LicensingCompiler:
         if bits is not None:
             # one long bitmask per record (see _flag_bits); bit_or
             # partial-aggregates map-side like any sum
-            flags_per_rec = matches.groupBy("_rk").agg(
-                F.bit_or("_flag").alias("_flags")
-            )
+            agg = F.bit_or("_flag")
+            test = lambda f: F.col("_flags").bitwiseAND(bits[f]) != 0  # noqa: E731
         else:
-            flags_per_rec = matches.groupBy("_rk").agg(
-                F.collect_set("_flag").alias("_flags")
-            )
+            agg = F.flatten(F.collect_list("_flag"))
+            test = lambda f: F.array_contains(F.col("_flags"), f)  # noqa: E731
+        flags_per_rec = matches.groupBy("_rk").agg(agg.alias("_flags"))
         # shuffle_hash on the NARROW flags side: a sort-merge join here
         # would sort the full wide corpus by id — at 30 M rows in one
         # JVM that sort was the measured heap-pressure cliff. A
@@ -432,14 +431,9 @@ class LicensingCompiler:
             on=id_col,
             how="left",
         )
-        for flag in self._all_flag_names():
-            test = (
-                F.col("_flags").bitwiseAND(bits[flag]) != 0
-                if bits is not None
-                else F.array_contains(F.col("_flags"), flag)
-            )
-            records = records.withColumn(flag, F.coalesce(test, F.lit(False)))
-        return records.drop("_flags")
+        return records.withColumns(
+            {f: F.coalesce(test(f), F.lit(False)) for f in names}
+        ).drop("_flags")
 
     def attach_labels(
         self,
@@ -534,9 +528,14 @@ def apply_oa_flag(
     if inline_issn is not None:
         records = records.withColumn("_oa_issn", inline_issn)
     elif oa_issns is not None:
+        # left_semi: a repeated list entry multiplies no row, and the
+        # planner sizes the hit set by the exploded records (an inner
+        # join to a side of unknown key distinctness is sized as a
+        # product, which turns the join-back into a sort-merge join)
+        oa_side = broadcast(oa_issns.select(F.col("issn").alias("_i")))
         hit = (
             records.select(F.col("finc_id").alias("_rk"), F.explode(issns_all()).alias("_i"))
-            .join(broadcast(oa_issns.select(F.col("issn").alias("_i")).distinct()), on="_i")
+            .join(oa_side, on="_i", how="left_semi")
             .select("_rk")
             .distinct()
             .withColumn("_oa_issn", F.lit(True))

@@ -105,6 +105,22 @@ def test_oa_flag_list_input_matches_dataframe_input(spark):
     assert big_out == small_out  # the padding issns match no record
 
 
+def test_oa_flag_duplicate_issns_match_deduplicated_list(spark):
+    # the broadcast OA list is not de-duplicated: it is semi-joined and
+    # the hit set is distinct on the record id, so repeats change nothing
+    recs = is_records(spark)
+
+    def x_oa(issns):
+        oa = spark.createDataFrame([(i,) for i in issns], "issn string")
+        rows = apply_oa_flag(recs, oa_issns=oa).collect()
+        assert len(rows) == recs.count()
+        return {r["finc_id"]: r["x_oa"] for r in rows}
+
+    dup = x_oa(["5555-6666", "3333-4444", "5555-6666", "3333-4444", "3333-4444"])
+    assert dup == x_oa(["5555-6666", "3333-4444"])
+    assert dup["ai-28-b1"] and dup["ai-49-a1"] and not dup["ai-55-c1"]
+
+
 def test_doi_groupcover_chain(spark):
     """D5+J3 over domain rows: case-insensitive DOI grouping, preferred
     source keeps the label."""
@@ -348,3 +364,110 @@ def test_attach_labels_large_issn_list_join_flag(spark):
     assert got == want
     assert any(v == ["DE-X"] for v in got.values())  # some record matched
     assert any(v == [] for v in got.values())  # and some did not
+
+
+def _big_issn_list(tag, hits=()):
+    from siskin_spark.operators.licensing import ISSN_JOIN_MAX
+
+    return list(hits) + [f"{i:04d}-{tag}" for i in range(ISSN_JOIN_MAX + 1)]
+
+
+def test_more_than_63_join_leaves_match_smaller_configs(spark):
+    """Past 63 join-backed leaves the flags fall back from one bit per
+    leaf to arrays of flag names; the labels must equal those of the
+    same leaves evaluated in configs small enough for the bitmask."""
+    import datetime
+
+    from siskin_spark.operators.licensing import CONTENT_ISIN_MAX, LicensingCompiler
+
+    files = ["file:kbart_de15", "file:kbart_de14", "file:none"]
+    issns = ["1111-2222", "3333-4444", "5555-6666", "7777-8888"]
+    ids = ["ai-49-a1", "ai-28-b1", "ai-55-c2"]
+    pad = [f"pad{i}" for i in range(CONTENT_ISIN_MAX + 1)]
+    config = {}
+    for i in range(30):  # distinct file sets; H00 has none (every file)
+        fs = [files[k] for k in range(3) if (i + 1) >> k & 1]
+        config[f"H{i:02d}"] = {"holdings": {"files": fs + [f"file:x{i}"] if i else []}}
+    for i in range(30):  # distinct large ISSN lists, overlapping hits
+        config[f"I{i:02d}"] = {"issn": {"list": _big_issn_list(
+            f"{i:03d}X", [issns[i % 4], issns[(i * 3) % 4]][: 1 + i % 2]
+        )}}
+    for i in range(6):
+        config[f"C{i}"] = {"content": {"list": ids[: i % 4] + pad + [f"c{i}"]}}
+    config["NOT"] = {"not": {"or": [config["H01"], config["I01"]]}}
+
+    def labels(cfg):
+        comp = LicensingCompiler(
+            holdings=kbart_holdings(spark), now=datetime.date(2024, 6, 15)
+        )
+        out = comp.attach_labels(is_records(spark), cfg)
+        got = {r["finc_id"]: list(r["x_labels"]) for r in out.collect()}
+        return got, comp._flag_bits() is None
+
+    got, fallback = labels(config)
+    assert fallback  # 66 join-backed leaves
+    want: dict = {k: [] for k in got}
+    isils = sorted(config)
+    for part in (isils[:33], isils[33:]):
+        sub, sub_fallback = labels({k: config[k] for k in part})
+        assert not sub_fallback
+        for k, v in sub.items():
+            want[k] = sorted(want[k] + v)
+    assert got == want
+    # anchors: the file-less leaf honours the coverage window, the
+    # content and ISSN flags hit, and `not` inverts a join flag
+    assert "H00" in got["ai-49-a1"] and "H00" not in got["ai-55-c2"]
+    assert "I01" in got["ai-55-c2"] and "C1" in got["ai-49-a1"]
+    assert [k for k, v in got.items() if "NOT" in v] == ["ai-49-a2"]
+
+
+def _tree_lines_under(plan: str, marker: str) -> list[str]:
+    """The lines of the plan subtree rooted at the first line holding
+    ``marker`` (deeper indentation than that line)."""
+    lines = plan.splitlines()
+    depth = lambda ln: len(ln) - len(ln.lstrip(" :+-"))  # noqa: E731
+    top = next(i for i, ln in enumerate(lines) if marker in ln)
+    sub = []
+    for ln in lines[top + 1:]:
+        if depth(ln) <= depth(lines[top]):
+            break
+        sub.append(ln)
+    return sub
+
+
+def test_join_leaves_share_one_broadcast_probe(spark, tmp_path):
+    """Holdings leaves and large ISSN lists cost ONE broadcast join over
+    ONE explode of the records: the executed plan scans the records
+    twice (probe + the frame the flags join back to), the KBART table
+    once, and has one BroadcastExchange, under the flag aggregate."""
+    import datetime
+
+    recs_dir, hold_dir = str(tmp_path / "records"), str(tmp_path / "kbart")
+    is_records(spark).write.parquet(recs_dir)
+    kbart_holdings(spark).write.parquet(hold_dir)
+    config = {
+        "H1": {"holdings": {"files": ["file:kbart_de15"]}},
+        "H2": {"holdings": {"files": ["file:kbart_de15", "file:kbart_de14"]}},
+        "H3": {"or": [{"holdings": {}}, {"source": ["49"]}]},
+        "I1": {"issn": {"list": _big_issn_list("111X", ["3333-4444"])}},
+        "I2": {"issn": {"list": _big_issn_list("222X", ["5555-6666"])}},
+    }
+    out = attach_labels(
+        spark.read.parquet(recs_dir),
+        config,
+        holdings=spark.read.parquet(hold_dir),
+        now=datetime.date(2024, 6, 15),
+    )
+    got = {r["finc_id"]: list(r["x_labels"]) for r in out.collect()}
+    assert got["ai-49-a1"] == ["H1", "H2", "H3", "I1"]
+    assert got["ai-28-b1"] == ["H2", "H3", "I2"]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    # (locations print truncated; the scanned columns tell the tables apart)
+    scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
+    assert sum("finc_id" in ln for ln in scans) == 2, plan
+    assert sum("print_identifier" in ln for ln in scans) == 1, plan
+    assert len(scans) == 3, plan
+    assert plan.count("BroadcastExchange") == 1, plan
+    under_agg = _tree_lines_under(plan, "functions=[bit_or(")
+    assert sum("BroadcastExchange" in ln for ln in under_agg) == 1, plan

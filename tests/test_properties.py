@@ -453,20 +453,23 @@ _rec = st.tuples(
 )
 
 
-def _naive(tree, rec):
+def _naive(tree, rec, join_leaf=None):
     """Reference evaluator: mirrors amsl.py tree semantics over one
     record dict. All leaves are null-safe (compiler coalesces arrays
-    to empty before overlap), so plain Boolean logic suffices."""
+    to empty before overlap), so plain Boolean logic suffices.
+    ``join_leaf(op, arg)`` answers holdings and content leaves."""
     src, coll, subj, issn, eissn = rec
     if len(tree) != 1:
-        return all(_naive({k: v}, rec) for k, v in tree.items())
+        return all(_naive({k: v}, rec, join_leaf) for k, v in tree.items())
     ((op, arg),) = tree.items()
     if op == "or":
-        return any(_naive(s, rec) for s in arg)
+        return any(_naive(s, rec, join_leaf) for s in arg)
     if op == "and":
-        return all(_naive(s, rec) for s in arg)
+        return all(_naive(s, rec, join_leaf) for s in arg)
     if op == "not":
-        return not _naive(arg, rec)
+        return not _naive(arg, rec, join_leaf)
+    if op in ("holdings", "content") and join_leaf is not None:
+        return join_leaf(op, arg)
     if op == "source":
         return src in [str(s) for s in arg]
     if op == "collection":
@@ -654,6 +657,96 @@ def test_holdings_leaf_matches_naive(spark, recs, hrows, files):
     for i, rec in enumerate(recs):
         want = ["H"] if _naive_covered(rec, hrows, files, now) else []
         assert got[f"id{i}"] == want, (rec, hrows, files, got[f"id{i}"], want)
+
+
+_ISSN_SETS = st.sets(_H_ISSN | st.just("4444-444X"))
+
+
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow,
+                                 HealthCheck.function_scoped_fixture])
+@given(
+    recs=st.lists(st.tuples(_SRC, _lic_rec), min_size=1, max_size=6),
+    hrows=st.lists(
+        st.tuples(st.sampled_from(["f0", "f1", "f2"]), _hold_row).map(
+            lambda t: (t[0],) + t[1][1:]
+        ),
+        min_size=1,
+        max_size=8,
+    ),
+    files_a=st.sampled_from([("f0",), ("f0", "f1"), ("f1", "f2")]),
+    files_b=st.sampled_from([("f1",), ("f0", "f2"), ("f2",)]),
+    shared=_ISSN_SETS,
+    own1=_ISSN_SETS,
+    own2=_ISSN_SETS,
+    content_ids=st.sets(st.integers(0, 5)),
+)
+def test_mixed_join_leaves_match_naive(
+    spark, recs, hrows, files_a, files_b, shared, own1, own2, content_ids
+):
+    """Every join-backed leaf kind in ONE config — overlapping holdings
+    file sets plus a file-less leaf, two large ISSN lists sharing
+    ISSNs, a large content list, inline leaves and a `not` over join
+    leaves — labels exactly like the naive evaluator."""
+    import datetime
+
+    from siskin_spark.operators.licensing import (
+        CONTENT_ISIN_MAX,
+        ISSN_JOIN_MAX,
+        attach_labels,
+    )
+
+    now = datetime.date(2026, 8, 13)
+    pad = [f"{i:04d}-000X" for i in range(ISSN_JOIN_MAX + 1)]
+    big1 = sorted(shared | own1) + pad
+    big2 = sorted(shared | own2) + pad[:-1] + ["9999-999X"]
+    content = [f"id{i}" for i in sorted(content_ids)] + [
+        f"pad{i}" for i in range(CONTENT_ISIN_MAX + 1)
+    ]
+    config = {
+        "HA": {"holdings": {"files": list(files_a)}},
+        "HB": {"or": [{"holdings": {"files": list(files_b)}}, {"source": ["1"]}]},
+        "HALL": {"holdings": {}},
+        "I2": {"or": [{"issn": {"list": big2}}, {"content": {"list": content}}]},
+        "NOT": {"not": {"or": [
+            {"holdings": {"files": ["f0"]}}, {"issn": {"list": big1}},
+        ]}},
+        "INL": {"and": [{"source": ["1", "2"]}, {"issn": {"list": ["1111-111X"]}}]},
+    }
+    holdings = spark.createDataFrame(
+        hrows,
+        "file_uri string, print_identifier string, online_identifier string, "
+        "date_first_issue_online string, date_last_issue_online string, "
+        "embargo_info string, num_first_vol_online int, "
+        "num_first_issue_online int, num_last_vol_online int, "
+        "num_last_issue_online int",
+    )
+    df = spark.createDataFrame(
+        [
+            (f"id{i}", src, r[0], None, r[1], r[2], r[3])
+            for i, (src, r) in enumerate(recs)
+        ],
+        "finc_id string, finc_source_id string, rft_issn array<string>, "
+        "rft_eissn array<string>, x_date string, rft_volume string, "
+        "rft_issue string",
+    )
+    got = {
+        r["finc_id"]: r["x_labels"]
+        for r in attach_labels(df, config, holdings=holdings, now=now).collect()
+    }
+    for i, (src, rec) in enumerate(recs):
+
+        def join_leaf(op, arg, i=i, rec=rec):
+            if op == "content":
+                return f"id{i}" in arg["list"]
+            return _naive_covered(rec, hrows, tuple(arg.get("files", ())), now)
+
+        want = sorted(
+            isil
+            for isil, t in config.items()
+            if _naive(t, (src, None, None, rec[0], None), join_leaf)
+        )
+        assert got[f"id{i}"] == want, (src, rec, hrows, config, got[f"id{i}"], want)
 
 
 # --- exact shingle Jaccard vs naive set arithmetic ---------------------
