@@ -592,13 +592,7 @@ def exact_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    # r14: measured and REJECTED here — snapshot_earliest(...,
-    # unique_order=True): the sort-free hash shape wins for single-
-    # consumer snapshots, but this snapshot feeds ~5 consumer subtrees
-    # and AQE materializes the winners aggregate + SHJ probe per
-    # consumer (19 -> 32 jobs, 1.35 -> 2.19 s isolated). The min_by
-    # form re-runs one SortAggregate per consumer instead, which is
-    # cheaper in waves. Oracle was green either way.
+    # sort-free hash snapshot measured worse here (19 -> 32 jobs, 2.19 s vs 1.35 s)
     out = dedup.snapshot_earliest(docs, ["text"], ["doc_id"])
     # r13 opt: the dedup-window + cap-window plan and the vocab
     # aggregate plan are checkpoint-free — memoize their CONSTRUCTION
@@ -4143,7 +4137,7 @@ def latest_file_per_member(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor("o_totalprice").cast("bigint").alias("size_bytes"),
         "o_orderkey",
     ).filter(F.col("size_bytes") > 22)
-    latest = dedup.snapshot_latest(listing, ["member"], ["ship_date", "o_orderkey"], unique_order=True)
+    latest = dedup.snapshot_latest(listing, ["member"], ["ship_date", "o_orderkey"])
     return latest.select(
         "member", "path", F.col("ship_date").cast("string").alias("ship_date"),
         "size_bytes",
@@ -4407,7 +4401,7 @@ def union_mixed_schemas(spark: SparkSession, sf_dir: str) -> DataFrame:
     u AS (SELECT * FROM a UNION ALL SELECT * FROM b),
     latest AS (
       SELECT * FROM (
-        SELECT u.*, row_number() OVER (PARTITION BY doi ORDER BY seq DESC) AS rn
+        SELECT u.*, row_number() OVER (PARTITION BY doi ORDER BY seq DESC, src DESC) AS rn
         FROM u) WHERE rn = 1
     )
     SELECT doi, record_id, src FROM latest
@@ -4446,7 +4440,7 @@ def ai_doi_list(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lang"),  # drift column: absent from source A
     )
     u = a.unionByName(b, allowMissingColumns=True)
-    latest = dedup.snapshot_latest(u, ["doi"], ["seq"], unique_order=True)
+    latest = dedup.snapshot_latest(u, ["doi"], ["seq", "finc_source_id"])
     rec = latest.select(
         "*",
         F.lit(None).cast("array<string>").alias("rft_eissn"),
@@ -4745,7 +4739,7 @@ def _ai_update_export_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("int").alias("issued_day"),
         F.concat(od.cast("string"), F.lit("T08:30:00")).alias("created"),
     ]))
-    snap49 = dedup.snapshot_latest(raw49, ["doi"], ["seq"], unique_order=True)
+    snap49 = dedup.snapshot_latest(raw49, ["doi"], ["seq"])
     is49 = normalize_source(snap49, "crossref", now=datetime.date(2026, 8, 13))
 
     # -- source 28: doaj-shaped OAI records -> spec
@@ -4905,7 +4899,7 @@ def entry(spark: SparkSession) -> DataFrame:
     nation = _t(spark, sf_dir, "nation")
     region = _t(spark, sf_dir, "region")
 
-    latest = dedup.snapshot_latest(orders, ["o_custkey"], ["o_orderdate", "o_orderkey"], unique_order=True)
+    latest = dedup.snapshot_latest(orders, ["o_custkey"], ["o_orderdate", "o_orderkey"])
     enriched = joins.enrich_lookup(
         latest.withColumnRenamed("o_custkey", "c_custkey"), cust, on="c_custkey"
     )

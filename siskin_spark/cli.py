@@ -182,8 +182,8 @@ def main(argv: list[str] | None = None) -> int:
     )
     p_nidx.add_argument(
         "--batch-id", default=None,
-        help="stable identity for --append (harvest date, file digest): "
-             "makes the append idempotent — a replayed batch id no-ops",
+        help="required with --append: stable identity of the batch "
+             "(harvest date, file digest) — a replayed batch id no-ops",
     )
     p_nbatch = sub.add_parser("neardup-batch")
     p_nbatch.add_argument("docs", help="new-batch doc table (doc_id, text)")
@@ -247,8 +247,8 @@ def main(argv: list[str] | None = None) -> int:
     )
     p_sidx.add_argument(
         "--batch-id", default=None,
-        help="stable identity for --append (harvest date, file digest): "
-             "makes the append idempotent — a replayed batch id no-ops",
+        help="required with --append: stable identity of the batch "
+             "(harvest date, file digest) — a replayed batch id no-ops",
     )
     p_scmp = sub.add_parser("semdedup-compact")
     p_scmp.add_argument("index_dir")
@@ -495,6 +495,9 @@ def main(argv: list[str] | None = None) -> int:
                        "the verified pair list instead")
     p_cur.add_argument("--seed", type=int, default=0)
     args = ap.parse_args(argv)
+    index_verbs = {"neardup-index": p_nidx, "semdedup-index": p_sidx}
+    if args.cmd in index_verbs and args.append and args.batch_id is None:
+        index_verbs[args.cmd].error("--append requires --batch-id")
 
     if args.cmd == "queries":
         sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -757,12 +760,12 @@ def main(argv: list[str] | None = None) -> int:
         from pyspark.sql import functions as F
 
         if args.cmd == "semdedup-remove":
-            from siskin_spark.functions.vectors import _sem_meta_read
+            from siskin_spark import index_store
             from siskin_spark.functions.vectors import (
                 semdedup_index_remove as _remove,
             )
 
-            id_col = _sem_meta_read(args.index_dir)["id_col"]
+            id_col = index_store.read_meta(args.index_dir, "semdedup")["id_col"]
             table, table_col = "cells", "vec_id"
         else:
             from siskin_spark.operators.neardup import (
@@ -830,9 +833,9 @@ def main(argv: list[str] | None = None) -> int:
         pairs.write.mode("overwrite").parquet(pairs_path)
         print(f"pairs: {spark.read.parquet(pairs_path).count()} at {pairs_path}")
         if args.keep or args.append_survivors:
-            from siskin_spark.functions.vectors import _sem_meta_read
+            from siskin_spark import index_store
 
-            idc = _sem_meta_read(args.index_dir)["id_col"]
+            idc = index_store.read_meta(args.index_dir, "semdedup")["id_col"]
             kept_path = os.path.join(args.out_dir, "kept")
             incremental_semdedup_keep(
                 batch, spark.read.parquet(pairs_path), id_col=idc

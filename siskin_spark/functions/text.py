@@ -54,11 +54,6 @@ def tokens(text: Column | str, sep: str = " ") -> Column:
     return F.split(c, sep)
 
 
-def token_count(text: Column | str) -> Column:
-    """Whitespace token count."""
-    return F.size(tokens(text))
-
-
 def sep_token_count(text: Column | str, sep: str = " ") -> Column:
     """Exact token count WITHOUT materializing the token array.
 
@@ -77,20 +72,6 @@ def sep_token_count(text: Column | str, sep: str = " ") -> Column:
             F.length(c) - F.length(F.replace(c, F.lit(sep), F.lit(""))) + 1
         )
     return F.size(tokens(c, sep))
-
-
-def regex_token_count(text: Column | str, pattern: str = TOKEN_REGEX) -> Column:
-    """Token count for an ARBITRARY regex token pattern.
-
-    Measured caveat: Spark's ``regexp_count`` is runtime-replaced by
-    ``size(regexp_extract_all(...))``, so every match is materialized
-    as a string — at 3M ~450-char docs the default TOKEN_REGEX took
-    34.6s (and a bare negated-class count 184s) on 32 cores, all
-    allocation/GC. For the DEFAULT pattern use
-    :func:`bpe_token_count`, which computes the identical value
-    regex-free in ~10s; this general form stays for custom patterns."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.regexp_count(c, F.lit(pattern))
 
 
 def symbol_count(text: Column | str) -> Column:

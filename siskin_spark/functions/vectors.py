@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from siskin_spark import index_store
+
 
 def _parallel(df: DataFrame, key: str) -> DataFrame:
     """Vector scoring is CPU-bound (sequential-fold dot products); a
@@ -138,18 +140,6 @@ def brute_force_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
-
-
-def sign_bucket(vec: Column, dims: int = 6) -> Column:
-    """Crude-but-deterministic LSH bucket: sign bits of the first
-    ``dims`` components packed into an integer (2^dims buckets).
-    A stand-in for random-hyperplane LSH that any SQL engine can
-    recompute; swap hyperplanes in via :func:`hyperplane_bucket`."""
-    bit = lambda j: F.when(F.element_at(vec, j + 1) > 0, F.lit(1 << j)).otherwise(F.lit(0))  # noqa: E731
-    out = bit(0)
-    for j in range(1, dims):
-        out = out + bit(j)
-    return out
 
 
 def plane_weights(plane: int, dim: int = 64) -> list[float]:
@@ -1101,48 +1091,9 @@ def semantic_dedup(
 # --- incremental semantic dedup: admit a new embedding batch against -
 # --- a persisted cell index without re-comparing the corpus ----------
 
-#: index layout version + the parameters the index was built with — a
-#: batch assigned under different centroids would silently land in the
-#: wrong cells, so the meta file is verified on every incremental call
-_SEM_INDEX_META = "_semdedup_index.json"
-
-
-def _sem_meta_path(index_dir: str) -> str:
-    import os
-
-    return os.path.join(index_dir, _SEM_INDEX_META)
-
-
-def _sem_meta_write(index_dir: str, meta: dict) -> None:
-    """Crash-atomic meta write (tmp + rename): the meta is the replay
-    ledger AND the pending write-ahead log — a truncated half-written
-    json from a crash mid-dump would brick every retry path that
-    starts with _sem_meta_read."""
-    import json
-    import os
-
-    path = _sem_meta_path(index_dir)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, path)
-
-
-def _sem_meta_read(index_dir: str) -> dict:
-    """Load + verify the index meta. The version gate is the contract
-    check the layout docstring promises: an index from a different
-    layout (or a missing meta) fails loudly before any work."""
-    import json
-
-    with open(_sem_meta_path(index_dir)) as f:
-        meta = json.load(f)
-    if meta.get("version") != 1:
-        raise ValueError(
-            f"semdedup index at {index_dir!r}: unsupported layout version "
-            f"{meta.get('version')!r} (expected 1) — rebuild the index"
-        )
-    return meta
-
+# The meta (index_store: "semdedup") pins the parameters the index was
+# built with — a batch assigned under different centroids would
+# silently land in the wrong cells — plus the per-cell row histogram.
 
 _INDEX_ARTIFACTS: dict = {}
 
@@ -1170,7 +1121,7 @@ def _index_artifacts(spark, index_dir: str) -> dict:
     see their own in-flight state, not a memo)."""
     import os
 
-    st = os.stat(_sem_meta_path(index_dir))
+    st = os.stat(index_store.meta_path(index_dir, "semdedup"))
     base = (spark.sparkContext.applicationId, os.path.abspath(index_dir))
     key = base + (st.st_mtime_ns, st.st_size)
     ent = _INDEX_ARTIFACTS.get(key)
@@ -1178,7 +1129,7 @@ def _index_artifacts(spark, index_dir: str) -> dict:
         for k in [k for k in _INDEX_ARTIFACTS if k[:2] == base]:
             del _INDEX_ARTIFACTS[k]
         ent = {
-            "meta": _sem_meta_read(index_dir),
+            "meta": index_store.read_meta(index_dir, "semdedup"),
             "cents": spark.read.parquet(os.path.join(index_dir, "centroids")),
             "cells": spark.read.parquet(os.path.join(index_dir, "cells")),
         }
@@ -1389,10 +1340,10 @@ def _assign_probes_local(
 
 def _sem_recount_cells(spark, index_dir: str, meta: dict) -> None:
     """Refresh ``meta['cell_counts']`` from the written ``cells/``
-    table (ONE narrow cid-column scan, k-bounded collect) and persist
-    the meta. Keeping the histogram IN the meta makes the per-admit
-    hot-cell guard a driver-side dict lookup instead of a full
-    corpus-scale groupBy per batch."""
+    table (ONE narrow cid-column scan, k-bounded collect); the caller
+    persists the meta. Keeping the histogram IN the meta makes the
+    per-admit hot-cell guard a driver-side dict lookup instead of a
+    full corpus-scale groupBy per batch."""
     import os
 
     counts = (
@@ -1402,7 +1353,6 @@ def _sem_recount_cells(spark, index_dir: str, meta: dict) -> None:
         .collect()
     )
     meta["cell_counts"] = {str(int(r["cid"])): int(r["n"]) for r in counts}
-    _sem_meta_write(index_dir, meta)
 
 
 def _sem_quantize_q8(assigned: DataFrame) -> DataFrame:
@@ -1529,84 +1479,38 @@ def semdedup_index_build(
     if dim_row is not None:
         meta["dim"] = int(dim_row["d"])
     _sem_recount_cells(emb.sparkSession, index_dir, meta)
+    index_store.write_meta(index_dir, "semdedup", meta)
 
 
 def semdedup_index_append(
-    emb: DataFrame, index_dir: str, batch_id: str | None = None
+    emb: DataFrame, index_dir: str, batch_id: str
 ) -> None:
     """Extend an existing cell index with new vectors (typically the
-    batch survivors after :func:`incremental_semdedup`): assign under
-    the index's FROZEN centroids and append to ``cells/`` — the
-    centroids stay untouched, so every past and future batch lands in
-    a consistent cell space; the meta's cell histogram is refreshed
-    from the written table (self-healing even if a prior append
-    crashed between write and meta update).
-
-    Retry safety: pass ``batch_id`` (any stable identity for the
-    batch — the harvest date, the source file digest) to make the
-    append IDEMPOTENT. A batch already recorded in the meta's
-    ``appended`` list is a no-op; a crashed attempt (files landed,
-    meta not yet updated) is replay-safe because the batch is staged
-    with ``mode=overwrite`` and its ``cells/`` files carry
-    batch-derived names that the retry deletes before re-placing —
-    the same vectors can never land twice. The batch_id is recorded
-    as ``pending`` in the meta BEFORE any file placement (write-ahead)
-    and finalized to ``appended`` after, so
-    :func:`semdedup_index_compact` can tell a half-placed batch apart
-    from a committed one and refuses to rewrite ``cells/`` while one
-    exists — without the marker, a compaction run between a crash and
-    the retry would erase the batch-prefixed file names the retry's
-    sweep keys on, and the batch would land twice. Without
-    ``batch_id`` the legacy blind parquet append runs, and a replayed
-    call WILL double-append (inflating pair lists and the histogram);
-    only use it when the caller owns retry bookkeeping.
-
-    Concurrency contract: SINGLE WRITER. The meta ledger is a
-    read-modify-write of ``meta.json`` — two appends (or an append
-    racing a compaction) running concurrently can lose a ledger entry
-    or a histogram update. Serialize all mutations of one index_dir
-    (appends, compactions, rebuilds) behind one scheduler slot;
-    concurrent READS (incremental_semdedup admits) are fine against a
-    quiesced index."""
+    batch survivors after :func:`incremental_semdedup`) under
+    ``batch_id`` — any stable identity of the batch (harvest date,
+    source file digest): assign under the index's FROZEN centroids and
+    append to ``cells/``. The centroids stay untouched, so every past
+    and future batch lands in a consistent cell space; the cell
+    histogram is recounted from the written table in the same meta
+    write that commits the batch. Idempotent and replay-safe under the
+    ledger contract of :mod:`siskin_spark.index_store`."""
     import os
-    import re
-
-    from siskin_spark.operators.layout import staged_append
 
     spark = emb.sparkSession
-    meta = _sem_meta_read(index_dir)
-    if batch_id is not None and batch_id in meta.get("appended", []):
-        # replayed append: already admitted. The ledger entry and the
-        # histogram persist in the SAME meta write (_sem_recount_cells),
-        # so a ledger hit implies the histogram covered this batch —
-        # nothing to write, nothing to heal.
-        return
-    cents = spark.read.parquet(os.path.join(index_dir, "centroids"))
-    assigned = _sem_assign(emb, cents, meta["id_col"], meta["vec_col"])
-    if meta.get("store", "float32") == "int8":
-        # the index's declared store wins: a float append into an int8
-        # index would mix schemas inside cells/ and break the scan
-        assigned = _sem_quantize_q8(assigned)
-    cells_dir = os.path.join(index_dir, "cells")
-    if batch_id is None:
-        assigned.repartition("cid").write.mode("append").parquet(cells_dir)
-    else:
-        # write-ahead: mark the batch pending BEFORE any file lands, so
-        # a compaction interleaved between a crash and the retry refuses
-        # instead of erasing the batch-prefixed names the retry's sweep
-        # keys on (which would make the retry place the batch twice)
-        if batch_id not in meta.setdefault("pending", []):
-            meta["pending"].append(batch_id)
-            _sem_meta_write(index_dir, meta)
-        tag = re.sub(r"[^A-Za-z0-9._-]", "_", batch_id)
-        staged_append(
-            assigned, cells_dir,
-            staging_dir=os.path.join(index_dir, f"_append_{tag}"),
-            prefix=f"batch-{tag}-", cluster_col="cid",
-        )
-        meta["pending"].remove(batch_id)
-        meta.setdefault("appended", []).append(batch_id)
-    _sem_recount_cells(spark, index_dir, meta)
+
+    def tables(meta: dict) -> dict:
+        cents = spark.read.parquet(os.path.join(index_dir, "centroids"))
+        assigned = _sem_assign(emb, cents, meta["id_col"], meta["vec_col"])
+        if meta.get("store", "float32") == "int8":
+            # the index's declared store wins: a float append into an
+            # int8 index would mix schemas inside cells/ and break the scan
+            assigned = _sem_quantize_q8(assigned)
+        return {"cells": (assigned, "cid")}
+
+    index_store.append(
+        index_dir, "semdedup", batch_id, tables,
+        on_commit=lambda meta: _sem_recount_cells(spark, index_dir, meta),
+    )
 
 
 def semdedup_index_compact(
@@ -1621,39 +1525,23 @@ def semdedup_index_compact(
     scan then pays more in file-open/footer round-trips than in data;
     compaction restores the one-generation layout the build wrote.
     Incremental results are unchanged (same rows, same cid
-    clustering), the meta's ``appended`` replay ledger survives (a
-    compacted batch must still no-op on replay), and the histogram is
-    re-counted from the rewritten table. Returns the
-    files/bytes-before/after stats of the rewrite. Run on a cadence
-    (weekly/monthly) or when ``files_before`` from the last run says
-    so.
-
-    Refuses while an append is in flight or crashed mid-placement
-    (``pending`` entries in the meta, or ``_append_*`` staging dirs on
-    disk): compacting then would erase the batch-prefixed file names a
-    crashed append's RETRY sweeps before re-placing, so the retry
-    would land the batch a second time — duplicated index rows and an
-    inflated histogram. Replay the named appends to completion (they
-    converge and clear the marker), then compact. Single-writer
-    contract as on :func:`semdedup_index_append`."""
+    clustering), and the histogram is re-counted from the rewritten
+    table. Returns the files/bytes-before/after stats of the rewrite.
+    Run on a cadence (weekly/monthly) or when ``files_before`` from
+    the last run says so. Refuses while an append is pending; the
+    replay ledger survives (see :mod:`siskin_spark.index_store`)."""
     import os
 
-    from siskin_spark.operators.layout import (
-        _guard_inflight_appends,
-        compact_parquet,
-    )
+    from siskin_spark.operators.layout import compact_parquet
 
-    meta = _sem_meta_read(index_dir)
-    _guard_inflight_appends(
-        index_dir, meta, staging_prefix="_append_",
-        replayer="semdedup_index_append",
-    )
+    meta = index_store.guard(index_dir, "semdedup")
     stats = compact_parquet(
         spark, os.path.join(index_dir, "cells"),
         target_file_mb=target_file_mb, cluster_by=["cid"],
         range_cluster=True, row_group_mb=row_group_mb,
     )
     _sem_recount_cells(spark, index_dir, meta)
+    index_store.write_meta(index_dir, "semdedup", meta)
     return stats
 
 
@@ -1685,7 +1573,7 @@ def semdedup_index_drift(
     import os
 
     spark = new_emb.sparkSession
-    meta = _sem_meta_read(index_dir)
+    meta = index_store.read_meta(index_dir, "semdedup")
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     cents = spark.read.parquet(os.path.join(index_dir, "centroids"))
     cells = spark.read.parquet(os.path.join(index_dir, "cells"))
@@ -1743,29 +1631,16 @@ def semdedup_index_remove(
     preserved, histogram recounted. Centroids stay frozen (removing
     members does not move the cell space; refit on drift is a
     scheduled rebuild, same posture as appends). Returns the rewrite's
-    files/bytes stats plus ``rows_removed``.
-
-    Ledger semantics, stated honestly: the ``appended`` replay ledger
-    SURVIVES removal — a replayed append of a batch whose vectors were
-    later removed still no-ops (the removal is a newer fact than the
-    append, so this is the order a retry race should resolve in). The
-    flip side: re-inserting a removed vector needs a NEW batch_id.
-    Removal is a compaction-class mutation (it erases batch-prefixed
-    file names), so it refuses while an append is pending or crashed
-    mid-placement, and the single-writer contract applies."""
+    files/bytes stats plus ``rows_removed``. Ledger rules (removal
+    survives replay, so re-inserting needs a new batch id; refusal
+    while an append is pending; single writer):
+    :mod:`siskin_spark.index_store`."""
     import os
 
-    from siskin_spark.operators.layout import (
-        _guard_inflight_appends,
-        rewrite_parquet,
-    )
+    from siskin_spark.operators.layout import rewrite_parquet
 
     spark = ids.sparkSession
-    meta = _sem_meta_read(index_dir)
-    _guard_inflight_appends(
-        index_dir, meta, staging_prefix="_append_",
-        replayer="semdedup_index_append",
-    )
+    meta = index_store.guard(index_dir, "semdedup")
     id_col = meta["id_col"]
     if ids.columns != [id_col]:
         raise ValueError(
@@ -1786,6 +1661,7 @@ def semdedup_index_remove(
         range_cluster=True, row_group_mb=8,
     )
     _sem_recount_cells(spark, index_dir, meta)
+    index_store.write_meta(index_dir, "semdedup", meta)
     stats["rows_removed"] = before - sum(meta["cell_counts"].values())
     return stats
 

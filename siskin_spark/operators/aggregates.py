@@ -96,15 +96,6 @@ def degree_report(
     )
 
 
-def error_counters(df: DataFrame, class_col: str) -> DataFrame:
-    """A5: quality-counter tallies (reference: collections.Counter over
-    error classes, sources/base.py:172-215). As a DataFrame so it scales;
-    accumulators only count within one action."""
-    return df.groupBy(class_col).agg(F.count("*").alias("n")).orderBy(
-        F.desc("n"), class_col
-    )
-
-
 def two_phase_agg(
     df: DataFrame,
     keys: Sequence[str],

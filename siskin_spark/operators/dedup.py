@@ -37,7 +37,6 @@ def snapshot_latest(
     df: DataFrame,
     keys: Sequence[str],
     order_by: Sequence[str | Column],
-    unique_order: bool = False,
 ) -> DataFrame:
     """D1: keep the newest row per key (append-only feed -> snapshot).
 
@@ -47,38 +46,24 @@ def snapshot_latest(
     position, which has no Spark equivalent, so an explicit tiebreak is
     the correct re-expression.
 
-    Default shape: ``groupBy(keys).agg(max_by(struct(cols), ord))`` so
-    the partial (map-side) aggregation keeps one candidate per key per
+    Shape: ``groupBy(keys).agg(max_by(struct(cols), ord))`` so the
+    partial (map-side) aggregation keeps one candidate per key per
     partition before the shuffle. Because the struct-valued max_by
     buffer is not hash-aggregable, this plans SortAggregates — a sort
     of the full input by key on BOTH sides of the exchange, re-run by
     every downstream consumer after the reused exchange.
-
-    ``unique_order=True`` (r14, guide §2.1/§3) opts into a sort-free
-    shape for inputs whose order tuple is NON-NULL and UNIQUE within
-    each key group (every registry caller passes a primary key as the
-    final tiebreak): one shared hash-Exchange by ``keys``, a plain
-    min/max HashAggregate per order column, and a co-partitioned
-    shuffled-hash join + equality filter that keeps exactly the winner
-    row. No sort anywhere, winners identical to the max_by form
-    (pinned by a parity test). NULL keys group together (null-safe
-    join); NULL order values are out of contract (the max_by form
-    skips them, the filter drops them — with an all-NULL group the
-    forms differ, which is why this is opt-in).
     """
-    return _snapshot(df, keys, order_by, latest=True, unique_order=unique_order)
+    return _snapshot(df, keys, order_by, latest=True)
 
 
 def snapshot_earliest(
     df: DataFrame,
     keys: Sequence[str],
     order_by: Sequence[str | Column],
-    unique_order: bool = False,
 ) -> DataFrame:
     """D1 dual: keep the smallest-ordered row per key (deterministic
-    `sort -u`-style representative: e.g. min id per duplicate text).
-    See :func:`snapshot_latest` for ``unique_order``."""
-    return _snapshot(df, keys, order_by, latest=False, unique_order=unique_order)
+    `sort -u`-style representative: e.g. min id per duplicate text)."""
+    return _snapshot(df, keys, order_by, latest=False)
 
 
 def _snapshot(
@@ -86,63 +71,13 @@ def _snapshot(
     keys: Sequence[str],
     order_by: Sequence[str | Column],
     latest: bool,
-    unique_order: bool,
 ) -> DataFrame:
     cols = df.columns
     ords = [c if isinstance(c, Column) else F.col(c) for c in order_by]
-    if not unique_order:
-        ord_expr = F.struct(*ords)
-        pick = F.max_by if latest else F.min_by
-        winner = pick(F.struct(*[F.col(c) for c in cols]), ord_expr).alias("_w")
-        out = df.groupBy(*[F.col(k) for k in keys]).agg(winner)
-        return out.select(*[F.col(f"_w.{c}").alias(c) for c in cols])
-    # hash shape: stage the order expressions, share ONE exchange by
-    # keys between the winner aggregate and the probe side (AQE stage
-    # reuse), and peel the lexicographic winner one order column per
-    # round — each round is a plain min/max HashAggregate (primitive
-    # buffer) plus a co-partitioned shuffled-hash join, so the full
-    # input is never sorted. Multi-column orders run one round per
-    # column; every registry caller has <= 2.
-    staged = df.withColumns(
-        {f"_snap_o{i}": c for i, c in enumerate(ords)}
-    )
-    cur = staged.repartition(*[F.col(k) for k in keys])
-    agg_fn = F.max if latest else F.min
-    for i in range(len(ords)):
-        oc = f"_snap_o{i}"
-        w = cur.groupBy(*[F.col(k) for k in keys]).agg(
-            agg_fn(F.col(oc)).alias("_snap_w")
-        )
-        w = w.select(
-            *[F.col(k).alias(f"_snap_k_{k}") for k in keys], "_snap_w"
-        )
-        cond = None
-        for k in keys:
-            c = F.col(k).eqNullSafe(F.col(f"_snap_k_{k}"))
-            cond = c if cond is None else cond & c
-        cur = (
-            cur.join(w.hint("shuffle_hash"), cond)
-            .filter(F.col(oc) == F.col("_snap_w"))
-            .drop("_snap_w", *[f"_snap_k_{k}" for k in keys])
-        )
-    return cur.select(*cols)
-
-
-def snapshot_latest_window(
-    df: DataFrame,
-    keys: Sequence[str],
-    order_by: Sequence[Column],
-) -> DataFrame:
-    """D1 via window row_number — reference plan shape, kept for parity
-    testing and for when the full sorted-runs-per-key order matters.
-    Prefer :func:`snapshot_latest` (cheaper shuffle) in pipelines.
-    """
-    w = Window.partitionBy(*keys).orderBy(*[c.desc() for c in order_by])
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    pick = F.max_by if latest else F.min_by
+    winner = pick(F.struct(*[F.col(c) for c in cols]), F.struct(*ords)).alias("_w")
+    out = df.groupBy(*[F.col(k) for k in keys]).agg(winner)
+    return out.select(*[F.col(f"_w.{c}").alias(c) for c in cols])
 
 
 def argmax_dedup(

@@ -211,77 +211,6 @@ def rewrite_parquet(
     }
 
 
-def staged_append(
-    df: DataFrame,
-    dest_dir: str,
-    staging_dir: str,
-    prefix: str,
-    cluster_col: str | None = None,
-) -> None:
-    """IDEMPOTENT parquet append: write ``df`` to ``staging_dir`` with
-    ``mode=overwrite`` (a replayed attempt rewrites the stage, never
-    doubles it), sweep any ``prefix``-named files a crashed earlier
-    attempt left in ``dest_dir``, then move the staged parts in under
-    deterministic ``prefix``-derived names. Replaying the whole
-    sequence after a crash at ANY point converges to exactly one copy
-    of the batch — the building block for the persisted-index appends
-    (``semdedup_index_append`` / ``neardup_index_append``), whose
-    blind ``mode=append`` form double-appends under retry. The caller
-    owns recording the batch identity in its meta so a COMPLETED
-    append short-circuits. Driver-local fs ops (mirrors the test
-    environment); maps 1:1 onto the Hadoop FileSystem API."""
-    import shutil
-
-    rep = df.repartition(F.col(cluster_col)) if cluster_col else df
-    rep.write.mode("overwrite").parquet(staging_dir)
-    for f in os.listdir(dest_dir):
-        if f.startswith(prefix):
-            os.remove(os.path.join(dest_dir, f))
-    parts = sorted(
-        f for f in os.listdir(staging_dir)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    )
-    for i, f in enumerate(parts):
-        os.replace(
-            os.path.join(staging_dir, f),
-            os.path.join(dest_dir, f"{prefix}{i:05d}.parquet"),
-        )
-    shutil.rmtree(staging_dir, ignore_errors=True)
-
-
-def _guard_inflight_appends(
-    index_dir: str, meta: dict, staging_prefix: str, replayer: str
-) -> None:
-    """Refuse a destructive index rewrite (compaction) while a staged
-    append is in flight or crashed mid-placement. Two independent
-    signals, either one blocks: ``pending`` batch_ids in the meta (the
-    append's write-ahead marker — placed before any file lands,
-    cleared when the ledger entry lands), and leftover
-    ``staging_prefix*`` dirs under ``index_dir`` (an attempt that
-    crashed before its staging cleanup — it may also predate the
-    pending marker, so the dir check is not redundant). Compacting
-    across a half-placed batch would rename away the batch-prefixed
-    files the retry's sweep keys on, making the retry place the batch
-    twice; replaying the append instead converges and clears both
-    signals."""
-    pending = meta.get("pending", [])
-    staging = sorted(
-        d for d in os.listdir(index_dir)
-        if d.startswith(staging_prefix)
-        and os.path.isdir(os.path.join(index_dir, d))
-    )
-    if pending or staging:
-        raise RuntimeError(
-            f"index at {index_dir!r} has append(s) in flight or crashed "
-            f"mid-placement (pending batch_ids: {pending!r}; staging "
-            f"dirs: {staging!r}) — compacting now would erase the "
-            f"batch-prefixed files their retries sweep, so a replay "
-            f"would double-place the batch. Replay {replayer} for each "
-            "named batch to completion (idempotent; clears the marker), "
-            "then compact."
-        )
-
-
 def skipping_stats(path: str, column: str, lo, hi) -> dict:
     """How much of a parquet layout a ``lo <= column <= hi`` predicate
     can skip, computed from the SAME per-row-group min/max footer stats

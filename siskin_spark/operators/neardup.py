@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from siskin_spark import index_store
 from siskin_spark.functions.similarity import (
     lsh_band_keys,
     minhash_signature,
@@ -723,32 +724,9 @@ def keep_canonical_cc(
 
 # --- incremental near-dup: dedup a new batch against a persisted -----
 # --- signature index without recomputing the corpus ------------------
-
-#: index layout version + the banding params the index was built with;
-#: a query with different params would silently produce wrong
-#: candidates, so the meta file is verified on every incremental call
-_INDEX_META = "_neardup_index.json"
-
-
-def _index_meta_path(index_dir: str) -> str:
-    import os
-
-    return os.path.join(index_dir, _INDEX_META)
-
-
-def _index_meta_write(index_dir: str, meta: dict) -> None:
-    """Crash-atomic meta write (tmp + rename): the meta carries the
-    replay ledger and the pending write-ahead markers — a truncated
-    half-written json from a crash mid-dump would brick every retry
-    path that starts by reading it."""
-    import json
-    import os
-
-    path = _index_meta_path(index_dir)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, path)
+# The meta (index_store: "neardup") pins the banding parameters the
+# index was built with; a query with different ones would silently
+# produce wrong candidates, so every incremental call reads them from it.
 
 
 def neardup_index_build(
@@ -760,7 +738,6 @@ def neardup_index_build(
     k: int = 16,
     bands: int = 4,
     hash_family: str = "md5",
-    mode: str = "overwrite",
 ) -> None:
     """Persist the near-dup signature index for a corpus: band keys
     (``bands/``: band, doc_id) and the shingle universe (``shingles/``:
@@ -770,12 +747,12 @@ def neardup_index_build(
     the per-batch corpus cost drops from a full re-shingle + re-hash
     of all text to two narrow-column parquet scans (bands, shingles;
     neither ever shuffles) — and new survivors extend the index with
-    :func:`neardup_index_append` (mode="append" on the same writer —
-    parquet appends are new part files, no rewrite). Measured on the
-    3M-doc scale corpus (SCALE.md): build 12.6 s once, then a 30K-doc
-    batch verifies in 4.4 s vs 8.9-28.4 s full recompute — a floor,
-    since those docs are ~50 words; at real document sizes the
-    recompute side grows with corpus text bytes, this path doesn't.
+    :func:`neardup_index_append` (new part files, no rewrite).
+    Measured on the 3M-doc scale corpus (SCALE.md): build 12.6 s once,
+    then a 30K-doc batch verifies in 4.4 s vs 8.9-28.4 s full
+    recompute — a floor, since those docs are ~50 words; at real
+    document sizes the recompute side grows with corpus text bytes,
+    this path doesn't.
 
     The reference recomputes full-corpus artifacts per run (its
     incremental story is input caching, e.g. workflows/ai.py); a 100 TB
@@ -784,13 +761,8 @@ def neardup_index_build(
     repartitioned on their join key (band / doc_id), so incremental
     reads scan narrow 2-column parquet and the batch side broadcasts —
     the index is never shuffled."""
-    import json
     import os
 
-    # param mismatch must fail BEFORE any part file lands — an append
-    # under different banding params would poison the whole index
-    if mode != "overwrite" and os.path.exists(_index_meta_path(index_dir)):
-        _check_index_meta(index_dir, n, k, bands, hash_family)
     # Deliberately TWO text scans (bands job, shingles job), not a
     # fused single-shingle-pass build. Fusion was measured three ways
     # at 3M docs/118M shingles and every variant lost: write-shingles-
@@ -806,23 +778,20 @@ def neardup_index_build(
     # The same economics hold at 100 TB: shingle-table bytes > text
     # bytes by construction.
     banded, sh = _index_frames(docs, id_col, text_col, n, k, bands, hash_family)
-    banded.repartition("band").write.mode(mode).parquet(
+    banded.repartition("band").write.mode("overwrite").parquet(
         os.path.join(index_dir, "bands")
     )
-    sh.repartition("doc_id").write.mode(mode).parquet(
+    sh.repartition("doc_id").write.mode("overwrite").parquet(
         os.path.join(index_dir, "shingles")
     )
-    meta = {
+    index_store.write_meta(index_dir, "neardup", {
         "version": 1,
         "n": n,
         "k": k,
         "bands": bands,
         "hash_family": hash_family,
         "id_col": id_col,
-    }
-    if mode == "overwrite" or not os.path.exists(_index_meta_path(index_dir)):
-        with open(_index_meta_path(index_dir), "w") as f:
-            json.dump(meta, f)
+    })
 
 
 def _index_frames(docs, id_col, text_col, n, k, bands, hash_family):
@@ -848,105 +817,28 @@ def neardup_index_append(
     index_dir: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    batch_id: str | None = None,
+    *,
+    batch_id: str,
 ) -> None:
     """Extend an existing index with new documents (typically the
-    batch survivors :func:`incremental_keep` returned). Banding params
-    come from the index meta — passing different ones is impossible by
-    construction.
+    batch survivors :func:`incremental_keep` returned) under
+    ``batch_id`` — any stable identity of the batch (harvest date,
+    source file digest). Banding params come from the index meta, so
+    passing different ones is impossible by construction. Idempotent
+    and replay-safe under the ledger contract of
+    :mod:`siskin_spark.index_store`, which matters more here than for
+    the cell index: a double-placed ``shingles/`` batch doubles those
+    docs' shingle counts and corrupts exact-Jaccard verification
+    (union sizes inflate, every affected pair under-scores)."""
 
-    Retry safety (mirrors :func:`semdedup_index_append
-    <siskin_spark.functions.vectors.semdedup_index_append>`): pass
-    ``batch_id`` to make the append IDEMPOTENT via the meta's replay
-    ledger + stage-overwrite + swept deterministic file names in BOTH
-    tables. The hazard is worse here than for the cell index: a
-    double-appended ``shingles/`` batch doubles those docs' shingle
-    counts, which CORRUPTS exact-Jaccard verification (union sizes
-    inflate, every affected pair under-scores), not just the candidate
-    volume. The batch_id is recorded as ``pending`` in the meta BEFORE
-    any file placement (write-ahead) and finalized to ``appended``
-    after, so :func:`neardup_index_compact` refuses to rewrite the
-    tables while a half-placed batch exists — a compaction interleaved
-    between a crash and the retry would otherwise erase the
-    batch-prefixed names the retry's sweep keys on, double-placing the
-    batch. Without ``batch_id`` the legacy blind parquet append runs
-    — only use it when the caller owns retry bookkeeping.
-
-    Concurrency contract: SINGLE WRITER (same as
-    :func:`semdedup_index_append
-    <siskin_spark.functions.vectors.semdedup_index_append>`): the meta
-    ledger is a read-modify-write of the meta json, so concurrent
-    appends — or an append racing a compaction — can lose a ledger
-    entry. Serialize all mutations of one index_dir behind one
-    scheduler slot; concurrent incremental READS are fine against a
-    quiesced index."""
-    import json
-    import os
-    import re
-
-    from siskin_spark.operators.layout import staged_append
-
-    with open(_index_meta_path(index_dir)) as f:
-        meta = json.load(f)
-    if batch_id is None:
-        neardup_index_build(
-            docs,
-            index_dir,
-            id_col=id_col,
-            text_col=text_col,
-            n=meta["n"],
-            k=meta["k"],
-            bands=meta["bands"],
-            hash_family=meta["hash_family"],
-            mode="append",
+    def tables(meta: dict) -> dict:
+        banded, sh = _index_frames(
+            docs, id_col, text_col,
+            meta["n"], meta["k"], meta["bands"], meta["hash_family"],
         )
-        return
-    if batch_id in meta.get("appended", []):
-        return  # replayed append: already admitted, nothing to do
-    banded, sh = _index_frames(
-        docs, id_col, text_col,
-        meta["n"], meta["k"], meta["bands"], meta["hash_family"],
-    )
-    # write-ahead: mark pending BEFORE any file lands so a compaction
-    # interleaved between a crash and the retry refuses instead of
-    # erasing the batch-prefixed names the retry's sweep keys on
-    if batch_id not in meta.setdefault("pending", []):
-        meta["pending"].append(batch_id)
-        _index_meta_write(index_dir, meta)
-    tag = re.sub(r"[^A-Za-z0-9._-]", "_", batch_id)
-    # a crash between the two staged appends leaves bands/ placed and
-    # shingles/ not — the retry re-stages BOTH (overwrite + sweep +
-    # deterministic names), converging to exactly one copy of each
-    staged_append(
-        banded, os.path.join(index_dir, "bands"),
-        staging_dir=os.path.join(index_dir, f"_append_bands_{tag}"),
-        prefix=f"batch-{tag}-", cluster_col="band",
-    )
-    staged_append(
-        sh, os.path.join(index_dir, "shingles"),
-        staging_dir=os.path.join(index_dir, f"_append_shingles_{tag}"),
-        prefix=f"batch-{tag}-", cluster_col="doc_id",
-    )
-    meta["pending"].remove(batch_id)
-    meta.setdefault("appended", []).append(batch_id)
-    _index_meta_write(index_dir, meta)
+        return {"bands": (banded, "band"), "shingles": (sh, "doc_id")}
 
-
-def _check_index_meta(
-    index_dir: str, n: int, k: int, bands: int, hash_family: str
-) -> None:
-    import json
-
-    with open(_index_meta_path(index_dir)) as f:
-        meta = json.load(f)
-    want = {"n": n, "k": k, "bands": bands, "hash_family": hash_family}
-    got = {key: meta.get(key) for key in want}
-    if got != want:
-        raise ValueError(
-            f"near-dup index at {index_dir} was built with {got}, "
-            f"query asked for {want}: candidates would be silently "
-            "wrong — rebuild the index or match its parameters"
-        )
+    index_store.append(index_dir, "neardup", batch_id, tables)
 
 
 def incremental_neardup(
@@ -1138,10 +1030,7 @@ def neardup_index_search(
 
 
 def _read_index_params(index_dir: str) -> tuple[int, int, int, str]:
-    import json
-
-    with open(_index_meta_path(index_dir)) as f:
-        meta = json.load(f)
+    meta = index_store.read_meta(index_dir, "neardup")
     return meta["n"], meta["k"], meta["bands"], meta["hash_family"]
 
 
@@ -1171,27 +1060,15 @@ def neardup_index_remove(
     crash recovery). A removed doc stops appearing as anyone's
     ``dup_of`` AND stops contributing shingles, so exact-Jaccard
     verification of future batches never unions against ghost text.
-    The ``appended`` replay ledger survives (a replayed append of a
-    removed batch still no-ops — removal is the newer fact;
-    re-inserting needs a new batch_id). Removal is a compaction-class
-    mutation: refuses while an append is pending / crashed
-    mid-placement; single-writer contract applies. Returns per-table
-    rewrite stats plus ``docs_removed``."""
-    import json
+    Ledger rules (removal survives replay, refusal while an append is
+    pending, single writer): :mod:`siskin_spark.index_store`. Returns
+    per-table rewrite stats plus ``docs_removed``."""
     import os
 
-    from siskin_spark.operators.layout import (
-        _guard_inflight_appends,
-        rewrite_parquet,
-    )
+    from siskin_spark.operators.layout import rewrite_parquet
 
     spark = ids.sparkSession
-    with open(_index_meta_path(index_dir)) as f:
-        meta = json.load(f)
-    _guard_inflight_appends(
-        index_dir, meta, staging_prefix="_append_",
-        replayer="neardup_index_append",
-    )
+    index_store.guard(index_dir, "neardup")
     if ids.columns != ["doc_id"]:
         raise ValueError(
             "neardup_index_remove: ids frame must have exactly "
@@ -1243,27 +1120,13 @@ def neardup_index_compact(
     never a mix. (Paths are driver-local here like the index meta; on a
     cluster the same dance runs through the Hadoop FileSystem API.)
 
-    Returns per-table stats: files/bytes before and after.
-
-    Refuses while an append is pending or crashed mid-placement (meta
-    ``pending`` entries / leftover ``_append_*`` staging dirs) — see
-    :func:`neardup_index_append`'s write-ahead contract; compacting
-    across a half-placed batch would make its retry double-place.
-    Single-writer contract applies here too."""
-    import json
+    Returns per-table stats: files/bytes before and after. Refuses
+    while an append is pending (see :mod:`siskin_spark.index_store`)."""
     import os
 
-    from siskin_spark.operators.layout import (
-        _guard_inflight_appends,
-        compact_parquet,
-    )
+    from siskin_spark.operators.layout import compact_parquet
 
-    with open(_index_meta_path(index_dir)) as f:
-        meta = json.load(f)
-    _guard_inflight_appends(
-        index_dir, meta, staging_prefix="_append_",
-        replayer="neardup_index_append",
-    )
+    index_store.guard(index_dir, "neardup")
     return {
         table: compact_parquet(
             spark,

@@ -58,14 +58,6 @@ def truncate_str(col: Column | str, max_len: int) -> Column:
     return F.substring(c, 1, max_len)
 
 
-def extract_year(col: Column | str) -> Column:
-    """M7/M13: pull a 4-digit year out of a display date string
-    (reference: regex in sources/base.py:209-211)."""
-    c = F.col(col) if isinstance(col, str) else col
-    y = F.regexp_extract(c.cast("string"), r"(1[0-9]{3}|20[0-9]{2})", 1)
-    return F.nullif(y, F.lit("")).cast("int")  # '' -> NULL, same values
-
-
 def jour_fixe(date_col: Column | str) -> Column:
     """§2.9 date arithmetic: snap to the 15th of the current month, or
     of the previous month when the day is before the 15th (reference:

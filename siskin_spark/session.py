@@ -180,34 +180,3 @@ def local_table(spark: SparkSession, rows, schema):
         return spark.createDataFrame(pdf, st)
     finally:
         spark.conf.set(ak, prev)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
-    """Load the driver's synthetic parquet tables as a dict of DataFrames.
-
-    Also registers each as a temp view so ``spark.sql`` queries can refer
-    to them by name (mirroring the DuckDB oracle's pre-registered views).
-    """
-    if names is None:
-        names = (
-            "region",
-            "nation",
-            "customer",
-            "supplier",
-            "part",
-            "orders",
-            "lineitem",
-            "events",
-            "documents",
-            "embeddings",
-        )
-    from siskin_spark.sources.readers import read_table
-
-    out = {}
-    for name in names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = read_table(spark, sf_dir, name)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out

@@ -108,16 +108,6 @@ def read_ndjson(spark: SparkSession, path: str, schema=None) -> DataFrame:
     return reader.json(path)
 
 
-def read_tsv(
-    spark: SparkSession, path: str, schema=None, header: bool = False
-) -> DataFrame:
-    """TSV reader (gluish TSV format / KBART files)."""
-    reader = spark.read.option("sep", "\t").option("header", str(header).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.csv(path)
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,

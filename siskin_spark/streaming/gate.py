@@ -28,7 +28,7 @@ correctly: files are overwritten, the pending marker is swept).
 
 Concurrency contract: ONE streaming query per index_dir (micro-batches
 within a query are already serial). The index meta ledger is
-single-writer — see functions/vectors.py:semdedup_index_append.
+single-writer — see :mod:`siskin_spark.index_store`.
 """
 
 from __future__ import annotations
@@ -64,8 +64,8 @@ def semdedup_gate_writer(
     partition-parallel. Backlog catch-up (``availableNow`` over a
     directory feed) and live tailing run the identical code path.
     """
+    from siskin_spark import index_store
     from siskin_spark.functions.vectors import (
-        _sem_meta_read,
         incremental_semdedup,
         incremental_semdedup_keep,
         semdedup_index_append,
@@ -73,33 +73,22 @@ def semdedup_gate_writer(
 
     def gate(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        meta = _sem_meta_read(index_dir)
+        meta = index_store.read_meta(index_dir, "semdedup")
         id_col = meta.get("id_col", "vec_id")
         ledger_id = f"{batch_id_prefix}-{int(batch_id)}"
-        if append and ledger_id in meta.get("appended", []):
+        if append and index_store.committed(meta, ledger_id):
             # replay of a COMMITTED batch: survivors are already on
             # disk and in the index; re-admitting would self-pair
             return
-        if append and ledger_id in meta.get("pending", []):
+        if append:
             # replay of a CRASHED append (files may be half-placed):
-            # sweep this batch's prefix-named cell files BEFORE the
-            # admit, or the batch's own vectors sit in the index and
-            # every survivor pairs with its indexed self, collapsing
-            # the replayed survivor set to empty. Same sweep the
-            # append retry runs (operators/layout.py:staged_append) —
-            # done here too because the gate ADMITS before it appends.
-            # The stale histogram is recounted by the append below.
-            import re
-            import shutil
-
-            tag = re.sub(r"[^A-Za-z0-9._-]", "_", ledger_id)
-            cells_dir = os.path.join(index_dir, "cells")
-            for f in os.listdir(cells_dir):
-                if f.startswith(f"batch-{tag}-"):
-                    os.remove(os.path.join(cells_dir, f))
-            shutil.rmtree(
-                os.path.join(index_dir, f"_append_{tag}"), ignore_errors=True
-            )
+            # sweep them BEFORE the admit, or the batch's own vectors
+            # sit in the index and every survivor pairs with its
+            # indexed self, collapsing the replayed survivor set to
+            # empty. The append retry sweeps too, but the gate ADMITS
+            # before it appends. The append below recounts the stale
+            # histogram.
+            index_store.sweep_pending(index_dir, "semdedup", meta, ledger_id)
         pairs = incremental_semdedup(
             spark,
             batch,

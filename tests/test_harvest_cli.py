@@ -763,7 +763,7 @@ def test_cli_semdedup_index_and_batch(capsys, tmp_path, spark):
     # append the survivor; a copy of it must now hit
     k_path = str(tmp_path / "kept_in")
     spark.read.parquet(out + "/kept").write.parquet(k_path)
-    assert main(["semdedup-index", k_path, idx, "--append"]) == 0
+    assert main(["semdedup-index", k_path, idx, "--append", "--batch-id", "day-1"]) == 0
     capsys.readouterr()
     b2 = spark.createDataFrame(
         [(200, [float(x) for x in w / np.linalg.norm(w)])],

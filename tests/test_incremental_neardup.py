@@ -186,12 +186,13 @@ def test_index_build_contents_pinned(spark, tmp_path):
 
 
 def test_index_append_and_param_guard(spark, index_dir, tmp_path):
-    """Appending batch survivors makes them visible to the NEXT batch;
-    mismatched banding params fail before any part file lands."""
+    """Appending batch survivors makes them visible to the NEXT batch.
+    Banding params always come from the index meta, so an append
+    under different ones has no entry point."""
     survivors = spark.createDataFrame(
         [(102, _doc(40))], "doc_id long, text string"
     )
-    neardup_index_append(survivors, index_dir)
+    neardup_index_append(survivors, index_dir, batch_id="day-1")
     next_batch = spark.createDataFrame(
         [(200, _doc(40))], "doc_id long, text string"
     )
@@ -201,13 +202,10 @@ def test_index_append_and_param_guard(spark, index_dir, tmp_path):
     }
     assert (200, 102) in pairs  # dup of the APPENDED doc is caught
 
-    import os
+    import inspect
 
-    before = sorted(os.listdir(os.path.join(index_dir, "bands")))
-    with pytest.raises(ValueError, match="rebuild the index"):
-        neardup_index_build(survivors, index_dir, bands=8, mode="append")
-    # the failed append must not have written any part files
-    assert sorted(os.listdir(os.path.join(index_dir, "bands"))) == before
+    params = inspect.signature(neardup_index_append).parameters
+    assert not {"n", "k", "bands", "hash_family"} & set(params)
 
 
 def test_index_compact_preserves_results(spark, index_dir):
@@ -224,6 +222,7 @@ def test_index_compact_preserves_results(spark, index_dir):
                 [(300 + i, _doc(60 + i))], "doc_id long, text string"
             ),
             index_dir,
+            batch_id=f"day-{i}",
         )
     batch = spark.createDataFrame(
         [(400, _doc(3)), (401, _doc(61)), (402, _doc(90))],
@@ -253,47 +252,6 @@ def test_index_compact_preserves_results(spark, index_dir):
     assert after == before
 
 
-def test_index_append_idempotent(spark, index_dir):
-    """r11 (mirror of the semdedup ADVICE fix): a replayed append with
-    the same batch_id must be a no-op in BOTH index tables — a doubled
-    shingles/ batch would inflate union sizes and corrupt
-    exact-Jaccard verification, not just candidate volume."""
-    import json
-
-    from siskin_spark.operators.neardup import _index_meta_path
-
-    b = spark.createDataFrame([(200, _doc(60))], "doc_id long, text string")
-    neardup_index_append(b, index_dir, batch_id="2026-08-16")
-    bands = lambda: spark.read.parquet(index_dir + "/bands").count()  # noqa: E731
-    sh = lambda: spark.read.parquet(index_dir + "/shingles").count()  # noqa: E731
-    nb, ns = bands(), sh()
-    # happy replay: ledger short-circuits
-    neardup_index_append(b, index_dir, batch_id="2026-08-16")
-    assert (bands(), sh()) == (nb, ns)
-    # crash replay: files landed but the meta update was lost
-    meta = json.load(open(_index_meta_path(index_dir)))
-    assert meta["appended"] == ["2026-08-16"]
-    meta["appended"] = []
-    json.dump(meta, open(_index_meta_path(index_dir), "w"))
-    neardup_index_append(b, index_dir, batch_id="2026-08-16")
-    assert (bands(), sh()) == (nb, ns)  # swept + re-placed, never doubled
-    # the appended doc is live and verifies at full jaccard exactly once
-    probe = spark.createDataFrame([(300, _doc(60))], "doc_id long, text string")
-    hits = [
-        (r["doc_id"], r["dup_of"], r["jaccard"])
-        for r in incremental_neardup(spark, probe, index_dir, threshold=0.9)
-        .collect()
-    ]
-    assert hits == [(300, 200, 1.0)]
-    # compaction keeps the replay ledger: a compacted-away batch still
-    # no-ops on replay (the meta json is not touched by the rewrite)
-    from siskin_spark.operators.neardup import neardup_index_compact
-
-    neardup_index_compact(spark, index_dir)
-    neardup_index_append(b, index_dir, batch_id="2026-08-16")
-    assert (bands(), sh()) == (nb, ns)
-
-
 def test_index_remove(spark, index_dir):
     """r12 retraction path (neardup sibling): removed docs stop
     matching (bands AND shingles — no ghost text in exact-Jaccard
@@ -305,10 +263,11 @@ def test_index_remove(spark, index_dir):
 
     import pytest
 
-    from siskin_spark.operators.neardup import (
-        _index_meta_path,
-        neardup_index_remove,
-    )
+    from siskin_spark.index_store import meta_path
+    from siskin_spark.operators.neardup import neardup_index_remove
+
+    def _index_meta_path(d):
+        return meta_path(d, "neardup")
 
     b = spark.createDataFrame([(200, _doc(60))], "doc_id long, text string")
     neardup_index_append(b, index_dir, batch_id="day-5")
@@ -348,52 +307,6 @@ def test_index_remove(spark, index_dir):
     assert spark.read.parquet(
         os.path.join(index_dir, "shingles")
     ).filter("doc_id = 200").count() == 0
-
-
-def test_index_compact_refuses_inflight_append(spark, index_dir):
-    """ADVICE r12 (medium, semdedup sibling): compaction between an
-    append's file placement and its ledger write would erase the
-    batch-prefixed names the retry sweeps, double-placing the batch —
-    the write-ahead pending marker (or a leftover staging dir) makes
-    compaction refuse until the replay converges."""
-    import json
-    import os
-
-    import pytest
-
-    from siskin_spark.operators.neardup import (
-        _index_meta_path,
-        neardup_index_compact,
-    )
-
-    b = spark.createDataFrame([(210, _doc(70))], "doc_id long, text string")
-    neardup_index_append(b, index_dir, batch_id="day-3")
-    meta = json.load(open(_index_meta_path(index_dir)))
-    assert meta["appended"] == ["day-3"] and meta["pending"] == []
-
-    # crash window: files placed, ledger write lost
-    meta["appended"], meta["pending"] = [], ["day-3"]
-    json.dump(meta, open(_index_meta_path(index_dir), "w"))
-    with pytest.raises(RuntimeError, match="day-3"):
-        neardup_index_compact(spark, index_dir)
-    # replay converges and clears the marker; compaction proceeds
-    neardup_index_append(b, index_dir, batch_id="day-3")
-    counts = (
-        spark.read.parquet(index_dir + "/bands").count(),
-        spark.read.parquet(index_dir + "/shingles").count(),
-    )
-    neardup_index_compact(spark, index_dir)
-    assert (
-        spark.read.parquet(index_dir + "/bands").count(),
-        spark.read.parquet(index_dir + "/shingles").count(),
-    ) == counts
-
-    # leftover staging dir is an independent refuse signal
-    os.makedirs(os.path.join(index_dir, "_append_bands_stale"))
-    with pytest.raises(RuntimeError, match="_append_bands_stale"):
-        neardup_index_compact(spark, index_dir)
-    os.rmdir(os.path.join(index_dir, "_append_bands_stale"))
-    neardup_index_compact(spark, index_dir)
 
 
 def test_neardup_index_search(spark, index_dir):

@@ -1,0 +1,369 @@
+"""The ledgered index store (siskin_spark/index_store.py), driven
+through both index families on tiny indexes: crash-injected replays
+converge to exactly one copy, rewrites refuse while an append is
+pending, the ledger survives compaction and removal, a foreign layout
+version fails loudly, and an index dir left mid-append in the on-disk
+format replays and then compacts."""
+
+from __future__ import annotations
+
+import hashlib
+import json
+import os
+import shutil
+
+import numpy as np
+import pytest
+
+from siskin_spark import index_store
+from siskin_spark.functions import vectors as V
+from siskin_spark.operators import neardup as N
+
+_VOCAB = [f"w{v}" for v in range(50)]
+_DIM = 16
+
+
+def _doc(i: int, n_words: int = 120) -> str:
+    return " ".join(
+        _VOCAB[int.from_bytes(hashlib.md5(f"{i}-{j}".encode()).digest()[:4], "big") % 50]
+        for j in range(n_words)
+    )
+
+
+def _unit(rng) -> list[float]:
+    w = rng.normal(size=_DIM)
+    return [float(x) for x in w / np.linalg.norm(w)]
+
+
+class _NearDup:
+    name = "neardup"
+    tables = ("bands", "shingles")
+    stale_staging = "_append_bands_stale"
+
+    def build(self, spark, d):
+        corpus = spark.createDataFrame(
+            [(i, _doc(i)) for i in range(20)], "doc_id long, text string"
+        )
+        N.neardup_index_build(corpus, d)
+
+    def batch(self, spark):
+        return spark.createDataFrame([(200, _doc(60))], "doc_id long, text string")
+
+    def append(self, df, d, batch_id):
+        N.neardup_index_append(df, d, batch_id=batch_id)
+
+    def frames(self, spark, d, df):
+        meta = index_store.read_meta(d, self.name)
+        banded, sh = N._index_frames(
+            df, "doc_id", "text",
+            meta["n"], meta["k"], meta["bands"], meta["hash_family"],
+        )
+        return {"bands": banded, "shingles": sh}
+
+    def hits(self, spark, d):
+        probe = spark.createDataFrame([(300, _doc(60))], "doc_id long, text string")
+        return [
+            (r["doc_id"], r["dup_of"], r["jaccard"])
+            for r in N.incremental_neardup(spark, probe, d, threshold=0.9).collect()
+        ]
+
+    expected_hits = [(300, 200, 1.0)]
+
+    def admit(self, spark, d):
+        return N.incremental_neardup(spark, self.batch(spark), d)
+
+    def compact(self, spark, d):
+        return N.neardup_index_compact(spark, d)
+
+    def remove(self, spark, d, ids):
+        return N.neardup_index_remove(
+            spark.createDataFrame([(i,) for i in ids], "doc_id long"), d
+        )
+
+    batch_ids = [200]
+
+
+class _SemDedup:
+    name = "semdedup"
+    tables = ("cells",)
+    stale_staging = "_append_stale"
+
+    def build(self, spark, d):
+        rng = np.random.default_rng(61)
+        corpus = spark.createDataFrame(
+            [(i, _unit(rng)) for i in range(80)],
+            "vec_id long, embedding array<float>",
+        )
+        V.semdedup_index_build(corpus, d, k=3, sample=80, iters=5, seed=3)
+
+    def _w(self):
+        return _unit(np.random.default_rng(8))
+
+    def batch(self, spark):
+        return spark.createDataFrame(
+            [(700, self._w())], "vec_id long, embedding array<float>"
+        )
+
+    def append(self, df, d, batch_id):
+        V.semdedup_index_append(df, d, batch_id=batch_id)
+
+    def frames(self, spark, d, df):
+        meta = index_store.read_meta(d, self.name)
+        cents = spark.read.parquet(os.path.join(d, "centroids"))
+        return {"cells": V._sem_assign(df, cents, meta["id_col"], meta["vec_col"])}
+
+    def hits(self, spark, d):
+        probe = spark.createDataFrame(
+            [(800, self._w())], "vec_id long, embedding array<float>"
+        )
+        return [
+            (r["vec_id"], r["dup_of"])
+            for r in V.incremental_semdedup(spark, probe, d).collect()
+            if r["dup_of"] == 700
+        ]
+
+    expected_hits = [(800, 700)]
+
+    def admit(self, spark, d):
+        return V.incremental_semdedup(spark, self.batch(spark), d)
+
+    def compact(self, spark, d):
+        return V.semdedup_index_compact(spark, d)
+
+    def remove(self, spark, d, ids):
+        return V.semdedup_index_remove(
+            spark.createDataFrame([(i,) for i in ids], "vec_id long"), d
+        )
+
+    batch_ids = [700]
+
+
+FAMILIES = {"neardup": _NearDup(), "semdedup": _SemDedup()}
+
+
+@pytest.fixture(params=sorted(FAMILIES))
+def fam(request):
+    return FAMILIES[request.param]
+
+
+@pytest.fixture(scope="module")
+def pristine(spark, tmp_path_factory):
+    """One freshly built index per family (tests mutate copies), with
+    the per-table row counts after exactly one copy of the batch."""
+    root = tmp_path_factory.mktemp("pristine")
+    out = {}
+    for name, fam in FAMILIES.items():
+        d = str(root / name)
+        fam.build(spark, d)
+        frames = fam.frames(spark, d, fam.batch(spark))
+        out[name] = d, tuple(
+            n + frames[t].count() for n, t in zip(_rows(spark, d, fam), fam.tables)
+        )
+    return out
+
+
+def _index(pristine, tmp_path, fam):
+    """A fresh copy of the family's index and its one-copy row counts."""
+    d = str(tmp_path / f"{fam.name}_idx")
+    shutil.copytree(pristine[fam.name][0], d)
+    return d, pristine[fam.name][1]
+
+
+def _rows(spark, d, fam):
+    return tuple(
+        spark.read.parquet(os.path.join(d, t)).count() for t in fam.tables
+    )
+
+
+def _meta(d, fam) -> dict:
+    with open(index_store.meta_path(d, fam.name)) as f:
+        return json.load(f)
+
+
+def _set_meta(d, fam, **keys) -> None:
+    meta = _meta(d, fam)
+    meta.update(keys)
+    with open(index_store.meta_path(d, fam.name), "w") as f:
+        json.dump(meta, f)
+
+
+def _staging_dirs(d):
+    return [x for x in os.listdir(d) if x.startswith("_append_")]
+
+
+def test_append_replay_is_idempotent(spark, pristine, tmp_path, fam):
+    """A replayed batch id is a no-op in every table — the happy replay
+    (ledger hit), the lost-ledger replay (files placed, meta entry
+    lost: swept and re-placed) and the replay after compaction. A
+    doubled batch would inflate exact-Jaccard union sizes (near-dup)
+    or the pair lists and histogram (SemDeDup). Remove-then-replay is
+    pinned per family in test_index_remove / test_semdedup_index_remove."""
+    d, n1 = _index(pristine, tmp_path, fam)
+    b = fam.batch(spark)
+    fam.append(b, d, "2026-08-16")
+    assert _rows(spark, d, fam) == n1
+    # happy replay: the ledger short-circuits
+    fam.append(b, d, "2026-08-16")
+    assert _rows(spark, d, fam) == n1
+    # lost-ledger replay: swept + re-placed, never doubled
+    assert _meta(d, fam)["appended"] == ["2026-08-16"]
+    _set_meta(d, fam, appended=[])
+    fam.append(b, d, "2026-08-16")
+    assert _rows(spark, d, fam) == n1
+    # the appended batch is live, and matches exactly once
+    assert fam.hits(spark, d) == fam.expected_hits
+    # compaction keeps the ledger: a compacted batch still no-ops
+    fam.compact(spark, d)
+    fam.append(b, d, "2026-08-16")
+    assert _rows(spark, d, fam) == n1
+
+
+_CRASHES = [
+    ("neardup", "staged_append", 0),  # after the pending mark
+    ("neardup", "staged_append", 1),  # between the two table placements
+    ("neardup", "write_meta", 1),  # before finalize
+    ("semdedup", "staged_append", 0),
+    ("semdedup", "write_meta", 1),
+]
+
+
+@pytest.mark.parametrize(
+    "family,step,call", _CRASHES, ids=[f"{f}-{s}-{c}" for f, s, c in _CRASHES]
+)
+def test_crash_replay_converges(
+    spark, pristine, tmp_path, monkeypatch, family, step, call
+):
+    """A crash injected at each step of the append leaves the batch
+    pending (so rewrites refuse); the replay converges to exactly one
+    copy of the batch in every table and clears every marker."""
+    fam = FAMILIES[family]
+    d, want = _index(pristine, tmp_path, fam)
+    b = fam.batch(spark)
+
+    real, calls = getattr(index_store, step), []
+
+    def crashing(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == call + 1:
+            raise RuntimeError("injected crash")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(index_store, step, crashing)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        fam.append(b, d, "day-1")
+    monkeypatch.undo()
+
+    assert _meta(d, fam)["pending"] == ["day-1"]
+    with pytest.raises(RuntimeError, match="day-1"):
+        fam.compact(spark, d)
+    fam.append(b, d, "day-1")
+    assert _rows(spark, d, fam) == want
+    meta = _meta(d, fam)
+    assert meta["appended"] == ["day-1"] and meta["pending"] == []
+    assert _staging_dirs(d) == []
+
+
+def test_rewrites_refuse_while_pending(spark, pristine, tmp_path, fam):
+    """Compaction and removal between an append's file placement and
+    its ledger write would erase the batch-prefixed names the retry
+    sweeps, double-placing the batch: the pending mark and, as an
+    independent signal, a leftover staging dir both make them refuse
+    until the replay converges."""
+    d, counts = _index(pristine, tmp_path, fam)
+    b = fam.batch(spark)
+    fam.append(b, d, "day-3")
+    meta = _meta(d, fam)
+    assert meta["appended"] == ["day-3"] and meta["pending"] == []
+    if fam.name == "semdedup":
+        assert counts == (81,)
+
+    # crash window: files placed, ledger write lost
+    _set_meta(d, fam, appended=[], pending=["day-3"])
+    with pytest.raises(RuntimeError, match="day-3"):
+        fam.compact(spark, d)
+    with pytest.raises(RuntimeError, match="day-3"):
+        fam.remove(spark, d, fam.batch_ids)
+    # the replay converges and clears the marker; compaction proceeds
+    fam.append(b, d, "day-3")
+    assert _rows(spark, d, fam) == counts
+    meta = _meta(d, fam)
+    assert meta["appended"] == ["day-3"] and meta["pending"] == []
+    stats = fam.compact(spark, d)
+    assert _rows(spark, d, fam) == counts
+    if fam.name == "semdedup":
+        assert stats["bytes_after"] > 0
+
+    # a leftover staging dir blocks on its own
+    os.makedirs(os.path.join(d, fam.stale_staging))
+    with pytest.raises(RuntimeError, match=fam.stale_staging):
+        fam.compact(spark, d)
+    with pytest.raises(RuntimeError, match=fam.stale_staging):
+        fam.remove(spark, d, fam.batch_ids)
+    os.rmdir(os.path.join(d, fam.stale_staging))
+    fam.compact(spark, d)
+
+
+def test_foreign_layout_version_fails_loudly(spark, pristine, tmp_path, fam):
+    """A meta from another layout version fails before any work, on
+    the read path and on every mutation, in both families."""
+    d, _ = _index(pristine, tmp_path, fam)
+    _set_meta(d, fam, version=2)
+    before = {t: sorted(os.listdir(os.path.join(d, t))) for t in fam.tables}
+    for run in (
+        lambda: fam.admit(spark, d),
+        lambda: fam.append(fam.batch(spark), d, "day-1"),
+        lambda: fam.compact(spark, d),
+        lambda: fam.remove(spark, d, fam.batch_ids),
+    ):
+        with pytest.raises(ValueError, match="layout version 2"):
+            run()
+    assert {t: sorted(os.listdir(os.path.join(d, t))) for t in fam.tables} == before
+
+
+def test_mid_append_dir_replays_then_compacts(spark, pristine, tmp_path, fam):
+    """An index dir left mid-append, written here file by file in the
+    on-disk format (pending mark, the last table's staging dir, and
+    two ``batch-<tag>-`` parts in the first table — one of them a
+    stray copy), replays to exactly one copy and then compacts."""
+    d, want = _index(pristine, tmp_path, fam)
+    b = fam.batch(spark)
+    frames = fam.frames(spark, d, b)
+    batch_id, tag = "2026-08-16 run/1", "2026-08-16_run_1"
+
+    first, last = fam.tables[0], fam.tables[-1]
+    scratch = str(tmp_path / "scratch")
+    frames[first].coalesce(1).write.parquet(scratch)
+    part = next(f for f in os.listdir(scratch) if f.endswith(".parquet"))
+    for i in range(2):
+        shutil.copy(
+            os.path.join(scratch, part),
+            os.path.join(d, first, f"batch-{tag}-{i:05d}.parquet"),
+        )
+    staging = f"_append_{tag}" if fam.name == "semdedup" else f"_append_{last}_{tag}"
+    frames[last].write.parquet(os.path.join(d, staging))
+    _set_meta(d, fam, pending=[batch_id])
+
+    with pytest.raises(RuntimeError, match=staging):
+        fam.compact(spark, d)
+    fam.append(b, d, batch_id)
+    assert _rows(spark, d, fam) == want
+    assert _staging_dirs(d) == []
+    meta = _meta(d, fam)
+    assert meta["appended"] == [batch_id] and meta["pending"] == []
+    assert sorted(
+        f for f in os.listdir(os.path.join(d, first)) if f.startswith("batch-")
+    )[0] == f"batch-{tag}-00000.parquet"
+    fam.compact(spark, d)
+    assert _rows(spark, d, fam) == want
+
+
+@pytest.mark.parametrize("verb", ["neardup-index", "semdedup-index"])
+def test_cli_append_requires_batch_id(capsys, verb):
+    """``--append`` without ``--batch-id`` is a usage error, raised
+    before any Spark work."""
+    from siskin_spark.cli import main
+
+    with pytest.raises(SystemExit) as exc:
+        main([verb, "in.parquet", "idx", "--append"])
+    assert exc.value.code == 2
+    assert "--append requires --batch-id" in capsys.readouterr().err

@@ -137,7 +137,7 @@ def test_staged_append_converges_after_partial_move(tmp_path, spark):
 
     from pyspark.sql import functions as F
 
-    from siskin_spark.operators.layout import staged_append
+    from siskin_spark.index_store import staged_append
 
     dest = str(tmp_path / "dest")
     spark.range(10).select(F.col("id"), (F.col("id") % 3).alias("k")) \

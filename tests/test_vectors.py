@@ -8,9 +8,14 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
+from siskin_spark import index_store
 from siskin_spark.functions.vectors import embedding_neardup_pairs, lsh_band_keys
 
 DIM = 64
+
+
+def _sem_meta_path(index_dir: str) -> str:
+    return index_store.meta_path(index_dir, "semdedup")
 
 
 def _mk_embeddings(spark):
@@ -810,7 +815,7 @@ def test_incremental_semdedup_append_and_guard(tmp_path, spark):
     p1 = incremental_semdedup(spark, b1, idx_dir, threshold=0.95)
     surv = incremental_semdedup_keep(b1, p1)
     assert surv.count() == 1  # novel vector survives
-    semdedup_index_append(surv, idx_dir)
+    semdedup_index_append(surv, idx_dir, batch_id="day-1")
 
     # second batch: an exact copy of the appended vector must now hit
     b2 = spark.createDataFrame(
@@ -839,7 +844,6 @@ def test_incremental_semdedup_tiling_and_meta_version(tmp_path, spark):
     import pytest as _pytest
 
     from siskin_spark.functions.vectors import (
-        _sem_meta_path,
         incremental_semdedup,
         semdedup_index_build,
     )
@@ -887,7 +891,6 @@ def test_incremental_semdedup_guard_fallback_and_dup_ids(tmp_path, spark):
     import pytest as _pytest
 
     from siskin_spark.functions.vectors import (
-        _sem_meta_path,
         incremental_semdedup,
         incremental_semdedup_keep,
         semdedup_index_build,
@@ -985,58 +988,6 @@ def test_incremental_semdedup_chunked_matches_unchunked(tmp_path, spark):
     assert len(one) >= 40  # every planted copy + the internal pair
 
 
-def test_semdedup_index_append_idempotent(tmp_path, spark):
-    """ADVICE r10: a replayed append (same batch_id) must be a no-op —
-    both the happy replay (meta recorded) and the crash replay (files
-    landed, meta write lost) leave the index with exactly one copy of
-    the batch."""
-    import json
-
-    import numpy as np
-
-    from siskin_spark.functions.vectors import (
-        _sem_meta_path,
-        incremental_semdedup,
-        semdedup_index_append,
-        semdedup_index_build,
-    )
-
-    rows, _ = _sem_corpus(spark, 120, seed=61)
-    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    idx_dir = str(tmp_path / "semidx6")
-    semdedup_index_build(corpus, idx_dir, k=3, sample=120, iters=5, seed=3)
-
-    rng = np.random.default_rng(8)
-    w = rng.normal(size=DIM)
-    w = w / np.linalg.norm(w)
-    b = spark.createDataFrame(
-        [(700, [float(x) for x in w])], "vec_id long, embedding array<float>"
-    )
-    cells = lambda: spark.read.parquet(idx_dir + "/cells")  # noqa: E731
-    semdedup_index_append(b, idx_dir, batch_id="2026-08-16")
-    n1 = cells().count()
-    assert n1 == 121
-    # happy replay: recorded in meta -> no-op
-    semdedup_index_append(b, idx_dir, batch_id="2026-08-16")
-    assert cells().count() == n1
-    # crash replay: files landed but the meta update was lost
-    meta = json.load(open(_sem_meta_path(idx_dir)))
-    assert meta["appended"] == ["2026-08-16"]
-    meta["appended"] = []
-    json.dump(meta, open(_sem_meta_path(idx_dir), "w"))
-    semdedup_index_append(b, idx_dir, batch_id="2026-08-16")
-    assert cells().count() == n1  # swept + re-placed, never doubled
-    # the appended vector is live: an exact copy hits it
-    probe = spark.createDataFrame(
-        [(800, [float(x) for x in w])], "vec_id long, embedding array<float>"
-    )
-    hits = {(r["vec_id"], r["dup_of"]) for r in
-            incremental_semdedup(spark, probe, idx_dir).collect()}
-    assert (800, 700) in hits
-    # duplicated index rows would ALSO have shown as a doubled hit list
-    assert len([h for h in hits if h == (800, 700)]) == 1
-
-
 def test_semdedup_index_compact(tmp_path, spark):
     """Round 11: N daily appends leave N file generations; compaction
     re-packs cells/ into few cid-clustered files with IDENTICAL
@@ -1047,7 +998,6 @@ def test_semdedup_index_compact(tmp_path, spark):
     import numpy as np
 
     from siskin_spark.functions.vectors import (
-        _sem_meta_path,
         incremental_semdedup,
         semdedup_index_append,
         semdedup_index_build,
@@ -1096,69 +1046,6 @@ def test_semdedup_index_compact(tmp_path, spark):
     )
     semdedup_index_append(bdf, idx_dir, batch_id="day-0")
     assert spark.read.parquet(idx_dir + "/cells").count() == 120
-
-
-def test_semdedup_compact_refuses_inflight_append(tmp_path, spark):
-    """ADVICE r12 (medium): an append that crashed AFTER placing its
-    batch-prefixed files but BEFORE the ledger write leaves the batch
-    half-committed; a compaction run before the retry would erase the
-    prefixed names the retry's sweep keys on, so the retry would place
-    the batch a SECOND time. The write-ahead ``pending`` marker (plus
-    the staging-dir signal) makes compaction refuse until the replay
-    converges."""
-    import json
-    import os
-
-    import numpy as np
-    import pytest
-
-    from siskin_spark.functions.vectors import (
-        _sem_meta_path,
-        semdedup_index_append,
-        semdedup_index_build,
-        semdedup_index_compact,
-    )
-
-    rows, _ = _sem_corpus(spark, 80, seed=91)
-    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    idx_dir = str(tmp_path / "semidx_guard")
-    semdedup_index_build(corpus, idx_dir, k=3, sample=80, iters=5, seed=3)
-
-    rng = np.random.default_rng(5)
-    w = rng.normal(size=DIM)
-    w = w / np.linalg.norm(w)
-    b = spark.createDataFrame(
-        [(500, [float(x) for x in w])], "vec_id long, embedding array<float>"
-    )
-    semdedup_index_append(b, idx_dir, batch_id="day-9")
-    meta = json.load(open(_sem_meta_path(idx_dir)))
-    assert meta["appended"] == ["day-9"] and meta["pending"] == []
-
-    # simulate the crash window: files placed, ledger write lost —
-    # exactly what the on-disk state looks like between staged_append
-    # returning and the finalize meta write landing
-    meta["appended"], meta["pending"] = [], ["day-9"]
-    json.dump(meta, open(_sem_meta_path(idx_dir), "w"))
-    with pytest.raises(RuntimeError, match="day-9"):
-        semdedup_index_compact(spark, idx_dir)
-    # the replay converges (one copy), clears the marker...
-    semdedup_index_append(b, idx_dir, batch_id="day-9")
-    cells = spark.read.parquet(idx_dir + "/cells")
-    assert cells.count() == 81
-    meta = json.load(open(_sem_meta_path(idx_dir)))
-    assert meta["appended"] == ["day-9"] and meta["pending"] == []
-    # ...and compaction now proceeds
-    stats = semdedup_index_compact(spark, idx_dir)
-    assert stats["bytes_after"] > 0
-    assert spark.read.parquet(idx_dir + "/cells").count() == 81
-
-    # the second, independent signal: a leftover staging dir (a crash
-    # BEFORE the pending marker existed, or a pre-marker-era index)
-    os.makedirs(os.path.join(idx_dir, "_append_stale"))
-    with pytest.raises(RuntimeError, match="_append_stale"):
-        semdedup_index_compact(spark, idx_dir)
-    os.rmdir(os.path.join(idx_dir, "_append_stale"))
-    semdedup_index_compact(spark, idx_dir)
 
 
 def test_semdedup_index_drift(tmp_path, spark):
@@ -1224,7 +1111,6 @@ def test_semdedup_index_remove(tmp_path, spark):
     import pytest
 
     from siskin_spark.functions.vectors import (
-        _sem_meta_path,
         incremental_semdedup,
         semdedup_index_append,
         semdedup_index_build,
@@ -1362,7 +1248,6 @@ def test_semdedup_index_int8_store(tmp_path, spark):
     import pytest as _pytest
 
     from siskin_spark.functions.vectors import (
-        _sem_meta_path,
         incremental_semdedup,
         semdedup_index_append,
         semdedup_index_build,
@@ -1508,7 +1393,6 @@ def test_incremental_semdedup_nprobe_boundary_recovery(tmp_path, spark):
     # and marks the source instead of the default k=256/sample/iters
     import json
 
-    from siskin_spark.functions.vectors import _sem_meta_path
 
     meta = json.load(open(_sem_meta_path(idx_dir)))
     assert meta["k"] == 2 and meta["centroids"] == "caller"
@@ -1565,7 +1449,6 @@ def test_streaming_semdedup_gate(tmp_path, spark):
     import numpy as np
 
     from siskin_spark.functions.vectors import (
-        _sem_meta_path,
         semdedup_index_build,
     )
     from siskin_spark.streaming.gate import semdedup_gate_writer
