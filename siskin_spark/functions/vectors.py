@@ -295,31 +295,36 @@ def ivf_assign(
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    nprobe: int = 1,
 ) -> DataFrame:
-    """Assign every vector to its nearest centroid (IVF cell) by cosine.
+    """Assign every vector to its ``nprobe`` nearest centroids (IVF
+    cells) by cosine — the expression engine, bit-identical to the
+    DuckDB oracle (the GEMM engine is :func:`ivf_assign_gemm`).
 
     ``centroids`` is (cid, cv) — small (k-means fit on a sample at
     scale), so it broadcasts; the index never shuffles for assignment.
-    Ties broken by cid. Returns the index columns plus ``cid``.
+    With ``nprobe=1`` returns the index columns plus ``cid``; with
+    ``nprobe > 1`` one row per (vector, cell) plus ``rank`` (0 =
+    nearest, ascending outward; at most k rows per vector). nprobe is
+    the IVF recall lever: :func:`ivf_topk` then scans nprobe/k of the
+    index, and nprobe = k is exhaustive (equal to brute force).
 
-    r14: row-local argmax over a broadcast centroid LIST. The previous
-    shape (k-way crossJoin explode -> groupBy(id) max_by) multiplied
-    every index row k-fold and — because a struct-valued max_by buffer
-    is not hash-aggregable — planned a full-corpus Exchange feeding
-    SortAggregates on BOTH sides. Now the k centroids aggregate to ONE
-    sorted array row that rides a broadcast hash join on a
-    non-foldable constant key (the token_sequence_layout idiom; a
-    crossJoin would plan the forbidden BroadcastNestedLoopJoin), and
-    each row picks its cell inside the projection: zero shuffle of the
-    index, no sort, no row multiplication (guide §2.1/§2.4). The fold
-    keeps max_by(struct(csim, -cid)) semantics exactly: the array is
-    cid-ascending and only a STRICTLY greater score replaces the
-    incumbent, so ties keep the lowest cid; a NULL score (NULL input
-    vector) never replaces a real one and real scores replace NULL
-    ones, mirroring max_by's nulls-first ordering (parity pinned in
-    tests incl. the tie case; zero-norm vectors are out of contract
-    for both shapes — ANSI double division throws).
+    Shape (r14): the k centroids aggregate to ONE array row that rides
+    a broadcast hash join on a non-foldable constant key (the
+    token_sequence_layout idiom; a crossJoin would plan the forbidden
+    BroadcastNestedLoopJoin), and each row scores every centroid
+    inside its projection: zero shuffle of the index, no window, no
+    row multiplication before the final explode (guide §2.1/§2.4).
+    Each centroid is scored once into a struct(score, -cid); the top
+    cell is that array's max, the top nprobe its descending
+    ``sort_array`` slice — so an exact score tie goes to the smaller
+    cid, and a NULL score (NULL input vector) ranks below every real
+    one. Zero norms follow the one rule both engines share: a
+    zero-norm vector or centroid scores 0 against every cell (the
+    guard covers only this division; pair cosines are untouched).
     """
+    if int(nprobe) < 1:
+        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
     cols = index.columns
     clist = (
         centroids.agg(
@@ -351,73 +356,24 @@ def ivf_assign(
         ),
     })
     scored = staged.join(broadcast(clist), "_ivf_one")
-    # score once per centroid (transform), then fold for the argmax —
-    # a when() that recomputed the cosine in both branches would embed
-    # the fold twice per step
-    mapped = F.transform(
+    cells = F.transform(
         F.col("_ivf_cents"),
         lambda c: F.struct(
-            c["cid"].alias("cid"),
-            _cosine_prenormed(
-                F.col("_vd"), c["_cvd"], F.col("_vn"), c["_cn"]
-            ).alias("_s"),
+            F.when((F.col("_vn") == 0) | (c["_cn"] == 0), F.lit(0.0))
+            .otherwise(
+                _cosine_prenormed(F.col("_vd"), c["_cvd"], F.col("_vn"), c["_cn"])
+            )
+            .alias("_s"),
+            (-c["cid"]).alias("_nc"),
         ),
     )
-    best = F.aggregate(
-        F.slice(mapped, 2, F.greatest(F.size(mapped) - 1, F.lit(0))),
-        F.element_at(mapped, 1),
-        lambda acc, x: F.when(
-            F.coalesce(
-                (x["_s"] > acc["_s"])
-                | (acc["_s"].isNull() & x["_s"].isNotNull()),
-                F.lit(False),
-            ),
-            x,
-        ).otherwise(acc),
-    )
-    return scored.withColumn("cid", best["cid"]).select(*cols, "cid")
-
-
-def ivf_probe_cells(
-    probes: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nprobe: int = 2,
-) -> DataFrame:
-    """Multi-cell probe assignment — the IVF recall lever: each probe
-    fans out to its ``nprobe`` nearest centroids (one output row per
-    (probe, cell)), so :func:`ivf_topk` scans nprobe/n_cells of the
-    index instead of 1/n_cells. With nprobe = n_cells the search is
-    exhaustive and matches brute force exactly (the invariant the
-    tests pin). Probes are query-batch-sized, so the per-probe
-    centroid ranking is a window over a broadcast-scale frame."""
-    from pyspark.sql import Window
-
-    cols = probes.columns
-    normed_centroids = centroids.select(
-        F.col("cid"),
-        as_double(F.col("cv")).alias("_cvd"),
-        norm(F.col("cv")).alias("_cn"),
-    )
-    scored = (
-        probes.withColumns({
-            "_vd": as_double(F.col(vec_col)),
-            "_vn": norm(F.col(vec_col)),
-        })
-        .crossJoin(broadcast(normed_centroids))
-        .withColumn(
-            "_csim",
-            _cosine_prenormed(
-                F.col("_vd"), F.col("_cvd"), F.col("_vn"), F.col("_cn")
-            ),
-        )
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("_csim"), F.asc("cid"))
-    return (
-        scored.withColumn("_cr", F.row_number().over(w))
-        .filter(F.col("_cr") <= nprobe)
-        .select(*cols, "cid")
+    if nprobe == 1:
+        return scored.select(*cols, (-F.array_max(cells)["_nc"]).alias("cid"))
+    top = F.slice(F.sort_array(cells, asc=False), 1, int(nprobe))
+    return scored.select(*cols, F.posexplode(top).alias("rank", "_c")).select(
+        *cols,
+        (-F.col("_c._nc")).alias("cid"),
+        F.col("rank").cast("long").alias("rank"),
     )
 
 
@@ -431,9 +387,9 @@ def ivf_topk(
     """Per-probe top-k within the probe's assigned IVF cell(s): one
     equi-join on cid replaces the cross join — the 100 TB path, since
     each probe scans ~nprobe/n_cells of the index. Pass probes through
-    :func:`ivf_assign` (nprobe=1) or :func:`ivf_probe_cells`
-    (nprobe>1; duplicate (probe, neighbor) pairs are impossible since
-    an index vector lives in exactly one cell). Returns
+    :func:`ivf_assign` with ``nprobe`` (duplicate (probe, neighbor)
+    pairs are impossible since an index vector lives in exactly one
+    cell). Returns
     (probe_id, neighbor_id, cos_sim, rank); self-matches excluded."""
     from pyspark.sql import Window
 
@@ -512,27 +468,25 @@ def ivf_assign_gemm(
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    nprobe: int = 1,
     matrix=None,
 ) -> DataFrame:
-    """Scale-path IVF cell assignment: one numpy GEMM per Arrow batch
-    against the broadcast centroid matrix, instead of one Catalyst
-    fold expression per (row, centroid) pair.
+    """Scale-path IVF cell assignment — the GEMM engine: one numpy
+    GEMM per Arrow batch against the broadcast centroid matrix,
+    instead of one Catalyst fold expression per (row, centroid) pair.
 
-    Degenerate inputs: empty/ragged embedding arrays raise (never
-    silently dropped); zero-NORM vectors get the smallest cid here
-    (all sims 0, argmax index 0) where the expression path's
-    divide-by-zero yields nulls — reject zero vectors upstream if the
-    two build paths must agree on them.
-
-    Same contract as :func:`ivf_assign` — nearest centroid by cosine,
-    ties to the smaller cid — but the per-batch cost is a single
-    ``X @ C.T`` (BLAS) over the whole batch, which is the plan you
-    want when building a 100 TB index: ``ivf_assign``'s expression
-    path evaluates |centroids| sequential folds per row and dominates
-    the build. Numerics: float64 accumulation both ways; the GEMM sums
-    pairwise rather than left-to-right, so results can differ from the
-    fold path only on near-exact ties (tests pin agreement on a
-    planted corpus).
+    Same contract and output shape as :func:`ivf_assign` — the
+    ``nprobe`` nearest centroids by cosine (``cid``, plus ``rank``
+    when ``nprobe > 1``), ties to the smaller cid, a zero-norm vector
+    or centroid scoring 0 against every cell, empty or ragged
+    embedding arrays refused with ``ValueError`` (never silently
+    dropped) — but the per-batch cost is a single ``X @ C.T`` (BLAS)
+    over the whole batch, which is the plan you want when building a
+    100 TB index: the expression engine evaluates |centroids|
+    sequential folds per row and dominates the build. Numerics:
+    float64 accumulation both ways; the GEMM sums pairwise rather
+    than left-to-right, so results can differ from the fold engine
+    only on near-exact ties (tests pin agreement on a planted corpus).
 
     ``centroids`` (cid, cv) is collected to the driver — it is k-means
     output, inherently bounded (thousands of cells, not records) — and
@@ -542,42 +496,83 @@ def ivf_assign_gemm(
     against a persisted index reuse the artifact-memoized matrix
     instead of re-collecting the same frozen centroids every call).
     """
-    import numpy as np
-
-    cids, Cn = matrix if matrix is not None else _centroid_matrix(
-        centroids.select(F.col("cid"), F.col("cv"))
+    assign, out_schema = _gemm_assigner(
+        index.schema, vec_col, nprobe,
+        matrix if matrix is not None else _centroid_matrix(centroids),
     )
+    return index.mapInPandas(
+        lambda batches: (assign(pdf) for pdf in batches if len(pdf)), out_schema
+    )
+
+
+def _gemm_assigner(schema, vec_col: str, nprobe: int, matrix):
+    """The GEMM engine's kernel, written once: returns ``(assign,
+    out_schema)`` where ``assign`` maps one pandas frame of ``schema``
+    rows to its cell rows — the input columns plus ``cid`` (and
+    ``rank`` when ``nprobe > 1``, one row per (vector, cell)).
+    :func:`ivf_assign_gemm` runs it per Arrow batch in
+    ``mapInPandas``; :func:`_sem_assign_local` runs it on one
+    driver-side Arrow collect."""
+    import numpy as np
 
     from pyspark.sql.types import LongType, StructField, StructType
 
+    if int(nprobe) < 1:
+        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
+    cids, Cn = matrix
+    npb = min(int(nprobe), len(cids))
+    extra = [StructField("cid", LongType(), False)]
+    if nprobe > 1:
+        extra.append(StructField("rank", LongType(), False))
     # copy, don't .add(): StructType.add mutates in place, and
     # DataFrame.schema hands back its cached instance
-    out_schema = StructType(
-        list(index.schema.fields) + [StructField("cid", LongType(), False)]
-    )
-    in_cols = index.columns
+    out_schema = StructType(list(schema.fields) + extra)
 
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(list(pdf[vec_col]), dtype=np.float64)
-            if X.ndim != 2 or X.shape[1] == 0:
-                # empty or ragged embedding arrays: refuse loudly — a
-                # silent `continue` here would DROP the batch's rows
-                # from the built index (cardinality bug, not a skip)
-                raise ValueError(
-                    f"ivf_assign_gemm: {vec_col} must be fixed-width non-empty "
-                    f"arrays; got batch array of shape {X.shape}"
-                )
-            xn = np.linalg.norm(X, axis=1)
-            Xn = X / np.where(xn == 0.0, 1.0, xn)[:, None]
-            sims = Xn @ Cn.T
-            pdf = pdf[in_cols].copy()
-            pdf["cid"] = cids[np.argmax(sims, axis=1)]
-            yield pdf
+    def assign(pdf):
+        X = np.array(list(pdf[vec_col]), dtype=np.float64)
+        if X.ndim != 2 or X.shape[1] == 0:
+            # empty or ragged embedding arrays: refuse loudly — skipping
+            # the batch would DROP its rows from the built index
+            raise ValueError(
+                f"cell assignment: {vec_col} must be fixed-width non-empty "
+                f"arrays; got batch array of shape {X.shape}"
+            )
+        order = _top_cells(X, Cn, npb)
+        out = pdf.iloc[np.repeat(np.arange(len(pdf)), npb)].reset_index(drop=True)
+        out["cid"] = cids[order.ravel()]
+        if nprobe > 1:
+            out["rank"] = np.tile(np.arange(npb), len(pdf))
+        return out
 
-    return index.mapInPandas(assign, out_schema)
+    return assign, out_schema
+
+
+def _unit_rows(M):
+    """Rows scaled to unit norm; a zero row stays zero, so it scores 0
+    against everything (the zero-norm rule of both engines)."""
+    import numpy as np
+
+    n = np.linalg.norm(M, axis=1, keepdims=True)
+    return M / np.where(n == 0.0, 1.0, n)
+
+
+def _top_cells(X, Cn, npb: int):
+    """Column indices of each row's ``npb`` nearest unit rows of
+    ``Cn`` by cosine, nearest first: rows normalized, one GEMM, then
+    ``npb`` masked argmax passes — exactly the first ``npb`` columns
+    of a stable argsort of the negated sims (argmax keeps the first of
+    equal values, so a tie goes to the smaller index, i.e. the smaller
+    cid of a cid-sorted matrix), at O(npb·k) per row instead of the
+    full sort's O(k log k)."""
+    import numpy as np
+
+    S = _unit_rows(X) @ Cn.T
+    rows = np.arange(len(S))
+    order = np.empty((len(S), npb), dtype=np.int64)
+    for r in range(npb):
+        order[:, r] = np.argmax(S, axis=1)
+        S[rows, order[:, r]] = -np.inf
+    return order
 
 
 def _spherical_kmeans(X, k: int, iters: int, seed: int):
@@ -627,8 +622,8 @@ def ivf_fit_centroids(
     The sample is a seeded deterministic slice (hash-ordered limit) so
     the fit is reproducible run-to-run; ``k`` cells over arbitrary
     corpus size keeps the collect bounded regardless of scale. Returns
-    (cid, cv) — feed straight to :func:`ivf_assign_gemm` /
-    :func:`ivf_probe_cells`.
+    (cid, cv) — feed straight to either assignment engine,
+    :func:`ivf_assign` or :func:`ivf_assign_gemm`.
     """
     import numpy as np
 
@@ -759,8 +754,10 @@ def semantic_dedup_pairs(
     verify all-pairs.
 
     Scale: cell assignment is a broadcast of k centroids against the
-    corpus (GEMM-batched by default — :func:`ivf_assign_gemm`,
-    measured 14x over the expression path at 3M vectors), then
+    corpus (the GEMM engine :func:`ivf_assign_gemm` by default,
+    measured 14x over the expression engine :func:`ivf_assign` at 3M
+    vectors; ``use_gemm=False`` picks the oracle-exact expression
+    engine — both share the tie and zero-norm rules), then
     ``localCheckpoint``-ed ONCE: the assignment feeds the cell
     histogram and both self-join sides, and without the lineage cut
     the GEMM pass would re-execute per consumer. The within-cell
@@ -954,10 +951,6 @@ def semantic_dedup_pairs(
         # exactly what piles into hot cells) would otherwise yield a
         # NaN sub-centroid, and argmax treats NaN as maximal — every
         # row of the cell would collapse onto that one sub-cell
-        def _unit_rows(m):
-            nm = np.linalg.norm(m, axis=1, keepdims=True)
-            return m / np.where(nm == 0.0, 1.0, nm)
-
         mats = {c: _unit_rows(m) for c, m in sub_cents.items()}
         rest = rest.filter(~F.col("cid").isin(fitted))
         v_hot = v.filter(F.col("cid").isin(fitted))
@@ -972,13 +965,11 @@ def semantic_dedup_pairs(
                 if len(pdf) == 0:
                     continue
                 X = np.array(list(pdf["_v"]), dtype=np.float64)
-                nrm = np.linalg.norm(X, axis=1)
-                Xn = X / np.where(nrm == 0.0, 1.0, nrm)[:, None]
                 cids = pdf["cid"].to_numpy()
                 sub = np.zeros(len(pdf), dtype=np.int64)
                 for c in np.unique(cids):
                     m = cids == c
-                    sub[m] = np.argmax(Xn[m] @ mats[int(c)].T, axis=1)
+                    sub[m] = _top_cells(X[m], mats[int(c)], 1)[:, 0]
                 pdf = pdf.copy()
                 pdf["_sub"] = sub
                 yield pdf
@@ -1146,25 +1137,67 @@ def _index_matrix(ent: dict):
 
 
 def _sem_assign(
-    emb: DataFrame, cents: DataFrame, id_col: str, vec_col: str, matrix=None
+    emb: DataFrame, cents: DataFrame, id_col: str, vec_col: str,
+    nprobe: int = 1, matrix=None,
 ) -> DataFrame:
-    """Cell assignment in the canonical ``cells/`` schema — shared by
-    build, append and admit so the three can never drift field-wise.
-    ALWAYS the GEMM engine: the index's cell space must come from ONE
-    assignment semantics (zero-norm -> smallest cid, near-ties -> the
-    GEMM argmax), and mixing ``ivf_assign``'s expression path in — its
-    zero-norm rows produce NULL cids that crash the gemm admit and
-    silently never join in the expr admit — was a reviewed bug, not a
-    feature."""
+    """Cell assignment in the canonical ``cells/`` schema (vec_id, cid,
+    norm, embedding; plus ``rank`` when ``nprobe > 1``, rank 0 being
+    the cell a build or append stores) — shared by build, append,
+    admit and search so they can never drift field-wise. ALWAYS the
+    GEMM engine: the index's cell space must come from ONE assignment
+    semantics (its near-ties are the GEMM's). :func:`_sem_assign_local`
+    is the same assignment on the driver."""
     return ivf_assign_gemm(
-        emb.select(id_col, vec_col), cents, id_col=id_col, vec_col=vec_col,
-        matrix=matrix,
-    ).select(
+        _sem_src(emb, id_col, vec_col), cents, nprobe=nprobe, matrix=matrix
+    ).select(*_sem_cols(nprobe))
+
+
+def _sem_src(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    # norm is folded in the JVM on both assignment paths: the
+    # oracle-checked prenormed cosines read it
+    return emb.select(
         F.col(id_col).alias("vec_id"),
-        F.col("cid").cast("long").alias("cid"),
-        norm(F.col(vec_col)).alias("norm"),
         F.col(vec_col).alias("embedding"),
+        norm(F.col(vec_col)).alias("norm"),
     )
+
+
+def _sem_cols(nprobe: int) -> list[str]:
+    return ["vec_id", "cid", "norm", "embedding"] + (["rank"] if nprobe > 1 else [])
+
+
+def _sem_assign_local(
+    spark, emb: DataFrame, cents: DataFrame, id_col: str, vec_col: str,
+    nprobe: int = 1, matrix=None,
+):
+    """Driver-side :func:`_sem_assign` for BOUNDED batches: ONE Arrow
+    collect of the batch (norm included), then the same kernel
+    (:func:`_gemm_assigner`) the distributed path runs per Arrow
+    batch. Returns ``(probes, touched)`` where ``probes`` is a
+    local-relation DataFrame in :func:`_sem_assign`'s schema and
+    ``touched`` the sorted distinct cid list — already
+    driver-resident, so the caller's cell pruning needs NO extra
+    collect and the frame needs no localCheckpoint (nothing to
+    recompute). The distributed path spends three
+    driver-synchronized jobs on the same answer (mapInPandas
+    assignment -> eager checkpoint -> cid collect)."""
+    src = _sem_src(emb, id_col, vec_col)
+    assign, out_schema = _gemm_assigner(
+        src.schema, "embedding", nprobe,
+        matrix if matrix is not None else _centroid_matrix(cents),
+    )
+    # pin Arrow for both driver<->JVM conversions (vanilla sessions may
+    # have it off and would silently take the 10x Row path)
+    _AK = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(_AK, "false")
+    spark.conf.set(_AK, "true")
+    try:
+        pdf = src.toPandas()
+        out = assign(pdf) if len(pdf) else []
+        probes = spark.createDataFrame(out, out_schema).select(*_sem_cols(nprobe))
+    finally:
+        spark.conf.set(_AK, prev)
+    return probes, sorted(int(c) for c in out["cid"].unique()) if len(out) else []
 
 
 def _centroid_matrix(cents: DataFrame):
@@ -1178,164 +1211,7 @@ def _centroid_matrix(cents: DataFrame):
     rows = cents.select("cid", "cv").collect()
     rows.sort(key=lambda r: r["cid"])
     cids = np.array([r["cid"] for r in rows], dtype=np.int64)
-    C = np.array([r["cv"] for r in rows], dtype=np.float64)
-    cn = np.linalg.norm(C, axis=1)
-    Cn = C / np.where(cn == 0.0, 1.0, cn)[:, None]
-    return cids, Cn
-
-
-def _probe_order(X, Cn, npb: int):
-    """The multi-probe kernel of :func:`_sem_assign_probes`, factored
-    out: rows normalized (zero-norm rows kept, sims all 0), one GEMM,
-    stable argsort of the negated sims (equal values in index order =
-    smaller cid first). Returns the (n, npb) column-index matrix."""
-    import numpy as np
-
-    xn = np.linalg.norm(X, axis=1)
-    Xn = X / np.where(xn == 0.0, 1.0, xn)[:, None]
-    sims = Xn @ Cn.T
-    return np.argsort(-sims, axis=1, kind="stable")[:, :npb]
-
-
-def _fold_norms(X):
-    """Vector norms with EXACTLY the Catalyst fold's float64 result:
-    ``norm()`` folds ``0.0 + x1*x1 + x2*x2 + ...`` left-to-right, and
-    ``np.cumsum`` accumulates the same sequence in the same order (a
-    square is never -0.0, so the 0.0 seed adds nothing) — the values
-    are bit-identical to the expression path, which the oracle-checked
-    prenormed cosines require. Used by the driver-side assignment fast
-    path; parity with the expression column is pinned in tests."""
-    import numpy as np
-
-    if X.shape[1] == 0:
-        return np.zeros(len(X), dtype=np.float64)
-    return np.sqrt(np.cumsum(X * X, axis=1)[:, -1])
-
-
-def _sem_assign_probes(
-    emb: DataFrame, cents: DataFrame, id_col: str, vec_col: str, nprobe: int,
-    matrix=None,
-) -> DataFrame:
-    """Multi-probe cell assignment for the ADMIT side: up to
-    ``nprobe`` (vec_id, cid, _rank) rows per vector, nearest cells
-    first — rank 0 is EXACTLY :func:`_sem_assign`'s cell (same GEMM
-    argmax, same smaller-cid tie rule: a stable argsort of the negated
-    sims puts equal values in index order). The canonical batch
-    columns (norm, embedding) repeat per rank; probe tables are
-    batch-sized x nprobe, never corpus-sized, so the duplication is
-    the cheap side of recovering cell-boundary pairs."""
-    import numpy as np
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    cids, Cn = matrix if matrix is not None else _centroid_matrix(cents)
-    npb = max(1, min(int(nprobe), len(cids)))
-
-    src = emb.select(
-        F.col(id_col).alias("vec_id"),
-        norm(F.col(vec_col)).alias("norm"),
-        F.col(vec_col).alias("embedding"),
-    )
-    out_schema = StructType(
-        list(src.schema.fields)
-        + [StructField("cid", LongType(), False),
-           StructField("_rank", LongType(), False)]
-    )
-
-    def assign(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(list(pdf["embedding"]), dtype=np.float64)
-            if X.ndim != 2 or X.shape[1] == 0:
-                raise ValueError(
-                    "_sem_assign_probes: embedding must be fixed-width "
-                    f"non-empty arrays; got batch array of shape {X.shape}"
-                )
-            order = _probe_order(X, Cn, npb)
-            reps = []
-            for r in range(npb):
-                part = pdf.copy()
-                part["cid"] = cids[order[:, r]]
-                part["_rank"] = r
-                reps.append(part)
-            yield pd.concat(reps, ignore_index=True)
-
-    return src.mapInPandas(assign, out_schema)
-
-
-def _assign_probes_local(
-    spark, queries: DataFrame, cents: DataFrame, id_col: str,
-    vec_col: str, nprobe: int, matrix=None,
-):
-    """Driver-side :func:`_sem_assign_probes` for BOUNDED query
-    batches: ONE Arrow collect of the queries, then the same numpy
-    kernel (:func:`_probe_order`) the distributed closure runs, with
-    the ``norm`` column via :func:`_fold_norms` (bit-identical to the
-    expression path). Returns ``(probes, touched)`` where ``probes``
-    is a local-relation DataFrame in the exact _sem_assign_probes
-    schema (vec_id, norm, embedding, cid, _rank) and ``touched`` is
-    the sorted distinct cid list — already driver-resident, so the
-    caller's cell pruning needs NO extra collect and the frame needs
-    no localCheckpoint (nothing to recompute). The distributed path
-    spends three driver-synchronized jobs on the same answer
-    (mapInPandas assignment -> eager checkpoint -> cid collect)."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    cids, Cn = matrix if matrix is not None else _centroid_matrix(cents)
-    npb = max(1, min(int(nprobe), len(cids)))
-    src = queries.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-    )
-    fields = {f.name: f for f in src.schema.fields}
-    out_schema = StructType([
-        fields["vec_id"],
-        StructField("norm", DoubleType(), True),
-        fields["embedding"],
-        StructField("cid", LongType(), False),
-        StructField("_rank", LongType(), False),
-    ])
-    # pin Arrow for both driver<->JVM conversions (vanilla sessions may
-    # have it off and would silently take the 10x Row path)
-    _AK = "spark.sql.execution.arrow.pyspark.enabled"
-    prev = spark.conf.get(_AK, "false")
-    spark.conf.set(_AK, "true")
-    try:
-        pdf = src.toPandas()
-        if len(pdf) == 0:
-            empty = pd.DataFrame(
-                {f.name: pd.Series(dtype=object) for f in out_schema.fields}
-            )
-            return spark.createDataFrame(empty, out_schema), []
-        X = np.array(list(pdf["embedding"]), dtype=np.float64)
-        if X.ndim != 2 or X.shape[1] == 0:
-            raise ValueError(
-                "_assign_probes_local: embedding must be fixed-width "
-                f"non-empty arrays; got array of shape {X.shape}"
-            )
-        order = _probe_order(X, Cn, npb)
-        norms = _fold_norms(X)
-        base = pd.DataFrame({
-            "vec_id": pdf["vec_id"],
-            "norm": norms,
-            "embedding": pdf["embedding"],
-        })
-        reps = []
-        for r in range(npb):
-            part = base.copy()
-            part["cid"] = cids[order[:, r]]
-            part["_rank"] = r
-            reps.append(part)
-        out = pd.concat(reps, ignore_index=True)
-        touched = sorted(int(c) for c in pd.unique(out["cid"]))
-        return spark.createDataFrame(out, out_schema), touched
-    finally:
-        spark.conf.set(_AK, prev)
+    return cids, _unit_rows(np.array([r["cv"] for r in rows], dtype=np.float64))
 
 
 def _sem_recount_cells(spark, index_dir: str, meta: dict) -> None:
@@ -1690,7 +1566,7 @@ def semdedup_index_search(
 
     Plan: queries GEMM-assign to their ``nprobe`` nearest frozen
     cells (one k-bounded centroid collect — the same
-    :func:`_sem_assign_probes` the admit uses, so search and dedup
+    :func:`_sem_assign` the build and admit use, so search and dedup
     agree on the cell space), then ONE equi-join on cid against
     ``cells/``. A broadcast hash join does NOT push its join keys
     into the parquet scan, so the join alone would read the WHOLE
@@ -1738,7 +1614,7 @@ def semdedup_index_search(
 
     ``driver_assign=True`` runs the probe assignment on the DRIVER in
     one Arrow collect of the query batch (same numpy kernel, norms
-    bit-identical to the expression fold — `_assign_probes_local`),
+    folded in the JVM — :func:`_sem_assign_local`),
     so the eager checkpoint and the touched-cid collect disappear:
     three driver-synchronized round-trips become one. Opt-in because
     it collects the query batch whole; use it when the batch is
@@ -1760,22 +1636,15 @@ def semdedup_index_search(
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     cents = _art["cents"]
     _mat = _index_matrix(_art)
-    touched = None
-    if driver_assign:
-        # serving batches are driver-sized by definition (the gemm
-        # engine collects them whole anyway): assign on the driver in
-        # ONE Arrow collect — same kernel, same norms (bit-identical,
-        # see _assign_probes_local) — which makes the checkpoint AND
-        # the prune collect below free
-        probes, touched = _assign_probes_local(
-            spark, queries.select(id_col, vec_col), cents, id_col,
-            vec_col, nprobe, matrix=_mat,
-        )
-    else:
-        probes = _sem_assign_probes(
-            queries.select(id_col, vec_col), cents, id_col, vec_col, nprobe,
-            matrix=_mat,
-        )
+    # serving batches are driver-sized by definition (the gemm engine
+    # collects them whole anyway): driver_assign runs the same kernel
+    # on ONE Arrow collect and hands back the touched cids, which makes
+    # the checkpoint AND the prune collect below free
+    probes, touched = (
+        _sem_assign_local(spark, queries, cents, id_col, vec_col, nprobe, _mat)
+        if driver_assign
+        else (_sem_assign(queries, cents, id_col, vec_col, nprobe, _mat), None)
+    )
     cells = _art["cells"]
     if (prune_cells or engine == "gemm") and touched is None:
         # materialize the assignment once: the cid collect (prune),
@@ -1956,9 +1825,9 @@ def incremental_semdedup(
 
     ``driver_assign=True`` (opt-in, mirrors
     :func:`semdedup_index_search`): assign the batch on the DRIVER in
-    one Arrow collect — same numpy kernel, norms bit-identical to the
-    expression fold — so the mapInPandas assignment stage, its Python
-    workers, the checkpoint, and the guard's cid collect all
+    one Arrow collect — same numpy kernel (:func:`_sem_assign_local`),
+    norms folded in the JVM — so the mapInPandas assignment stage, its
+    Python workers, the checkpoint, and the guard's cid collect all
     disappear. Use it when the batch is driver-sized (the gemm
     engine's own posture); results are identical either way (pinned
     in tests)."""
@@ -1983,8 +1852,6 @@ def incremental_semdedup(
             "gemm engine, whose per-batch renormalization dequantizes "
             "the stored unit vectors"
         )
-    if int(nprobe) < 1:
-        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     cents, cells = _art["cents"], _art["cells"]
     _mat = _index_matrix(_art)
@@ -1996,51 +1863,34 @@ def incremental_semdedup(
     # storage — same reuse, one fewer driver-synchronized job per
     # admit (r13 opt, guide §5 driver round-trips)
     eager = engine == "gemm"
-    touched_local = None
-    if driver_assign:
-        # driver-sized batches (the gemm engine's own posture —
-        # opt-in, mirrors semdedup_index_search): ONE Arrow collect +
-        # the shared numpy kernel assigns on the driver, so the
-        # mapInPandas assignment stage, its Python workers, AND the
-        # checkpoint disappear (a local relation has nothing to
-        # recompute). Norms/assignment are bit-identical to the
-        # distributed path (see _assign_probes_local); the touched-cid
-        # set rides along, making the guard collect free too.
-        probes, touched_local = _assign_probes_local(
-            spark, new_emb.select(id_col, vec_col), cents, id_col,
-            vec_col, nprobe, matrix=_mat,
+    # one assignment: distributed (checkpointed, so its GEMM pass runs
+    # once for all consumers) or, for driver-sized batches (opt-in,
+    # mirrors semdedup_index_search), on the driver — ONE Arrow
+    # collect replaces the mapInPandas stage, its Python workers and
+    # the checkpoint (a local relation has nothing to recompute), and
+    # the touched-cid set rides along, making the guard collect free
+    probes, touched_local = (
+        _sem_assign_local(spark, new_emb, cents, id_col, vec_col, nprobe, _mat)
+        if driver_assign
+        else (
+            _sem_assign(
+                new_emb, cents, id_col, vec_col, nprobe, _mat
+            ).localCheckpoint(eager=eager),
+            None,
         )
-        probes = probes.select(
-            F.col("vec_id").alias("_bid"),
-            "cid",
-            F.col("norm").alias("_bn"),
-            F.col("embedding").alias("_bv"),
-            "_rank",
-        )
-        batch = probes.filter(F.col("_rank") == 0).drop("_rank")
-        probes = probes.drop("_rank")
-    elif nprobe > 1:
-        # one GEMM pass emits every probe rank; rank 0 IS the primary
-        # assignment (same argmax/tie rules as _sem_assign)
-        probes = _sem_assign_probes(
-            new_emb, cents, id_col, vec_col, nprobe, matrix=_mat
-        ).select(
-            F.col("vec_id").alias("_bid"),
-            "cid",
-            F.col("norm").alias("_bn"),
-            F.col("embedding").alias("_bv"),
-            "_rank",
-        ).localCheckpoint(eager=eager)
-        batch = probes.filter(F.col("_rank") == 0).drop("_rank")
-        probes = probes.drop("_rank")
-    else:
-        batch = _sem_assign(new_emb, cents, id_col, vec_col, matrix=_mat).select(
-            F.col("vec_id").alias("_bid"),
-            "cid",
-            F.col("norm").alias("_bn"),
-            F.col("embedding").alias("_bv"),
-        ).localCheckpoint(eager=eager)  # one GEMM pass for all consumers
-        probes = batch
+    )
+    probes = probes.select(
+        F.col("vec_id").alias("_bid"),
+        "cid",
+        F.col("norm").alias("_bn"),
+        F.col("embedding").alias("_bv"),
+        *(["rank"] if nprobe > 1 else []),
+    )
+    batch = probes
+    if nprobe > 1:
+        # rank 0 IS the primary assignment (the cell an append stores)
+        batch = probes.filter(F.col("rank") == 0).drop("rank")
+        probes = probes.drop("rank")
 
     def guard(touched) -> None:
         if max_batch_cell_rows is None:

@@ -37,11 +37,6 @@ NESTED_LOOP_OK = {
 # a pandas-UDF surface by design (SURVEY §2.11).
 PYTHON_EVAL_OK = {
     "multimodal_features",
-    # the 'idx' part's multi-probe GEMM cell assignment
-    # (_sem_assign_probes) is the declared Arrow-batched §2.11
-    # surface: one numpy matmul per Arrow batch against the k-bounded
-    # centroid matrix
-    "similarity_topk",
 }
 
 

@@ -6,6 +6,7 @@ with KNOWN near-dup pairs above and decoys below the threshold)."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from siskin_spark import index_store
@@ -90,7 +91,6 @@ def test_ivf_nprobe_recall_ladder(spark):
     from siskin_spark.functions.vectors import (
         brute_force_topk,
         ivf_assign,
-        ivf_probe_cells,
         ivf_topk,
     )
 
@@ -99,58 +99,131 @@ def test_ivf_nprobe_recall_ladder(spark):
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
     )
     assigned = ivf_assign(df, centroids)
-    truth = {
-        (r.probe_id, r.neighbor_id)
-        for r in brute_force_topk(df, df, k=3).collect()
-    }
+    brute = {tuple(r) for r in brute_force_topk(df, df, k=3).collect()}
+    truth = {(p, n) for p, n, _, _ in brute}
 
-    def recall(probe_df):
+    def topk(nprobe):
         got = {
-            (r.probe_id, r.neighbor_id)
-            for r in ivf_topk(probe_df, assigned, k=3).collect()
+            tuple(r)
+            for r in ivf_topk(
+                ivf_assign(df, centroids, nprobe=nprobe), assigned, k=3
+            ).collect()
         }
-        assert all(p != n for p, n in got)  # no self-neighbors
-        return len(got & truth) / len(truth)
+        assert all(p != n for p, n, _, _ in got)  # no self-neighbors
+        return got
 
-    r1 = recall(ivf_assign(df, centroids))
-    r2 = recall(ivf_probe_cells(df, centroids, nprobe=2))
-    r_all = recall(ivf_probe_cells(df, centroids, nprobe=4))
-    assert r1 <= r2 <= r_all
-    assert r_all == 1.0  # exhaustive probing == brute force
+    def recall(got):
+        return len({(p, n) for p, n, _, _ in got} & truth) / len(truth)
+
+    exhaustive = topk(4)
+    assert recall(topk(1)) <= recall(topk(2)) <= recall(exhaustive)
+    # exhaustive probing == brute force, row for row (scores and ranks)
+    assert exhaustive == brute
 
 
-def test_ivf_assign_gemm_matches_expression_path(spark):
-    """The GEMM build path must agree cell-for-cell with the Catalyst
-    fold path (argmax cosine, ties to the smaller cid) — the contract
-    that lets scale_bench build with GEMM while the registered query
-    stays on the oracle-checkable expression path."""
-    from siskin_spark.functions.vectors import ivf_assign, ivf_assign_gemm
+_CELL_VECS = [
+    (1, [1.0, 0.0, 0.0]),
+    (2, [0.0, 1.0, 0.0]),
+    (3, [0.0, 0.0, 0.0]),  # zero vector: scores 0 everywhere
+    (4, [-1.0, 0.0, 0.0]),  # beats no real centroid: the zero one wins
+    (5, [1.0, 1.0, 0.0]),  # three-way exact tie (cids 3, 5, 9)
+]
+_CELL_CENTS = [
+    (9, [1.0, 0.0, 0.0]),
+    (3, [1.0, 0.0, 0.0]),  # duplicate of 9: exact tie -> smaller cid
+    (5, [0.0, 1.0, 0.0]),
+    (7, [0.0, 0.0, 0.0]),  # zero centroid: scores 0 against everything
+]
+# every vector's cells, nearest first
+_CELL_ORDER = {
+    1: [3, 9, 5, 7],
+    2: [5, 3, 7, 9],
+    3: [3, 5, 7, 9],
+    4: [5, 7, 3, 9],
+    5: [3, 5, 9, 7],
+}
+
+
+def _assign_cells(spark, engine, vecs, cents, nprobe):
+    """(vec_id, cid, rank) set of one engine; rank 0 when nprobe=1
+    (no rank column then)."""
+    from siskin_spark.functions.vectors import (
+        _sem_assign_local,
+        ivf_assign,
+        ivf_assign_gemm,
+        norm,
+    )
+
+    if engine == "expr":
+        out = ivf_assign(vecs, cents, nprobe=nprobe)
+    elif engine == "gemm":
+        out = ivf_assign_gemm(vecs, cents, nprobe=nprobe)
+    else:
+        out, touched = _sem_assign_local(
+            spark, vecs, cents, "vec_id", "embedding", nprobe
+        )
+    rows = out.collect()
+    if engine == "gemm_driver":
+        assert touched == sorted({r["cid"] for r in rows})
+        # the driver path's norm column is the JVM norm() fold, bit for
+        # bit (the oracle-checked prenormed cosines read it)
+        want = {
+            r["vec_id"]: r["n"]
+            for r in vecs.select("vec_id", norm(F.col("embedding")).alias("n"))
+            .collect()
+        }
+        assert {r["vec_id"]: r["norm"] for r in rows} == want
+    assert ("rank" in out.columns) == (nprobe > 1)
+    return {(r["vec_id"], r["cid"], r["rank"] if nprobe > 1 else 0) for r in rows}
+
+
+@pytest.mark.parametrize("nprobe", [1, 2, pytest.param(None, id="k")])
+@pytest.mark.parametrize("engine", ["expr", "gemm", "gemm_driver"])
+def test_cell_assignment_engines_agree(spark, engine, nprobe):
+    """One cell-assignment semantics for the expression engine
+    (ivf_assign), the GEMM engine (ivf_assign_gemm) and the GEMM
+    kernel's driver path: the same (vector, cid, rank) set at
+    nprobe 1, 2 and k — an exact tie goes to the smaller cid, a
+    zero-norm vector or centroid scores 0 against every cell, and
+    ranks run nearest first. On the planted corpus every engine
+    agrees with the expression engine cell for cell."""
+    vecs = spark.createDataFrame(_CELL_VECS, "vec_id int, embedding array<float>")
+    cents = spark.createDataFrame(_CELL_CENTS, "cid int, cv array<float>")
+    n = nprobe or len(_CELL_CENTS)
+    want = {
+        (v, c, r) for v, cells in _CELL_ORDER.items() for r, c in enumerate(cells[:n])
+    }
+    assert _assign_cells(spark, engine, vecs, cents, n) == want
+
+    if engine != "expr":
+        df, _, _ = _mk_embeddings(spark)
+        planted = df.filter(F.col("vec_id") < 6).select(
+            F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
+        )
+        n = nprobe or 6
+        assert _assign_cells(spark, engine, df, planted, n) == _assign_cells(
+            spark, "expr", df, planted, n
+        )
+
+
+def test_ivf_assign_multiprobe_plan_has_no_window_or_shuffle(spark):
+    """ivf_assign(nprobe>1) ranks cells inside the row's projection
+    (sorted slice of the one scored array, then an explode): no
+    window, no hash shuffle, no nested-loop join over probe x k rows."""
+    from siskin_spark.functions.vectors import ivf_assign
 
     df, _, _ = _mk_embeddings(spark)
-    centroids = df.filter(F.col("vec_id") < 6).select(
+    cents = df.filter(F.col("vec_id") < 6).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
     )
-    expr = {(r.vec_id, r.cid) for r in ivf_assign(df, centroids).collect()}
-    gemm = {(r.vec_id, r.cid) for r in ivf_assign_gemm(df, centroids).collect()}
-    assert expr == gemm
-
-
-def test_ivf_assign_gemm_tie_breaks_to_smaller_cid(spark):
-    """Duplicate centroids force an exact cosine tie; both paths must
-    keep the smaller cid."""
-    from siskin_spark.functions.vectors import ivf_assign, ivf_assign_gemm
-
-    vecs = spark.createDataFrame(
-        [(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0])],
-        "vec_id int, embedding array<float>",
-    )
-    cents = spark.createDataFrame(
-        [(9, [1.0, 0.0, 0.0]), (3, [1.0, 0.0, 0.0]), (5, [0.0, 1.0, 0.0])],
-        "cid int, cv array<float>",
-    )
-    for fn in (ivf_assign, ivf_assign_gemm):
-        got = {(r.vec_id, r.cid) for r in fn(vecs, cents).collect()}
-        assert got == {(1, 3), (2, 5)}, fn.__name__
+    out = ivf_assign(df, cents, nprobe=2)
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan, plan
+    assert "Exchange hashpartitioning" not in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    with pytest.raises(ValueError, match="nprobe"):
+        ivf_assign(df, cents, nprobe=0)
 
 
 def test_ivf_assign_rowlocal_matches_maxby_and_plan_shape(spark):
@@ -159,9 +232,9 @@ def test_ivf_assign_rowlocal_matches_maxby_and_plan_shape(spark):
     row — including exact ties (duplicate centroids -> smaller cid) —
     and (b) plan with NO shuffle Exchange, NO SortAggregate and NO
     BroadcastNestedLoopJoin (the non-foldable constant join key must
-    survive optimization as a real equi-join). Zero-norm vectors are
-    out of contract for BOTH shapes: ANSI-mode double division throws
-    on a zero divisor, so neither form ever yields NaN scores."""
+    survive optimization as a real equi-join). The reference shape
+    has no zero-norm guard, so this corpus holds no zero vector; the
+    zero-norm rule is pinned by test_cell_assignment_engines_agree."""
     from pyspark.sql import functions as F
 
     from siskin_spark.functions.vectors import (
@@ -1722,28 +1795,6 @@ def test_semdedup_index_search_driver_assign(tmp_path, spark):
         ).count()
         == 0
     )
-
-
-def test_fold_norms_matches_expression_norm(spark):
-    """_fold_norms (np.cumsum) is bit-identical to the Catalyst
-    sequential-fold norm() column — the contract that lets the driver
-    assignment reuse the oracle-checked prenormed cosines."""
-    from siskin_spark.functions.vectors import _fold_norms, norm
-
-    rng = np.random.default_rng(31)
-    X = rng.normal(size=(50, DIM)).astype(np.float32)
-    X[7] = 0.0  # zero vector
-    rows = [(i, [float(v) for v in X[i]]) for i in range(len(X))]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = {
-        r["vec_id"]: r["n"]
-        for r in df.select(
-            "vec_id", norm(F.col("embedding")).alias("n")
-        ).collect()
-    }
-    want = _fold_norms(np.array(X, dtype=np.float64))
-    for i in range(len(X)):
-        assert got[i] == float(want[i]), (i, got[i], float(want[i]))
 
 
 def test_semdedup_index_search_gemm_engine(tmp_path, spark):
