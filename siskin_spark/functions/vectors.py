@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from siskin_spark import index_store
+from siskin_spark.session import arrow_pinned
 
 
 def _parallel(df: DataFrame, key: str) -> DataFrame:
@@ -322,6 +323,9 @@ def ivf_assign(
     one. Zero norms follow the one rule both engines share: a
     zero-norm vector or centroid scores 0 against every cell (the
     guard covers only this division; pair cosines are untouched).
+    A NULL vector has no cell: both engines refuse it (here a
+    ``raise_error`` naming ``vec_col``) rather than file it under some
+    cid and silently corrupt an index built from the assignment.
     """
     if int(nprobe) < 1:
         raise ValueError(f"nprobe must be >= 1, got {nprobe}")
@@ -351,8 +355,11 @@ def ivf_assign(
     staged = _parallel(index, id_col).withColumns({
         "_vd": as_double(F.col(vec_col)),
         "_vn": norm(F.col(vec_col)),
-        "_ivf_one": F.coalesce(
-            F.size(F.col(vec_col)) - F.size(F.col(vec_col)), F.lit(0)
+        "_ivf_one": F.when(
+            F.col(vec_col).isNull(),
+            F.raise_error(F.lit(f"cell assignment: {vec_col} is NULL")),
+        ).otherwise(
+            F.coalesce(F.size(F.col(vec_col)) - F.size(F.col(vec_col)), F.lit(0))
         ),
     })
     scored = staged.join(broadcast(clist), "_ivf_one")
@@ -478,12 +485,13 @@ def ivf_assign_gemm(
     Same contract and output shape as :func:`ivf_assign` — the
     ``nprobe`` nearest centroids by cosine (``cid``, plus ``rank``
     when ``nprobe > 1``), ties to the smaller cid, a zero-norm vector
-    or centroid scoring 0 against every cell, empty or ragged
+    or centroid scoring 0 against every cell, NULL, empty or ragged
     embedding arrays refused with ``ValueError`` (never silently
-    dropped) — but the per-batch cost is a single ``X @ C.T`` (BLAS)
-    over the whole batch, which is the plan you want when building a
-    100 TB index: the expression engine evaluates |centroids|
-    sequential folds per row and dominates the build. Numerics:
+    dropped or filed under a cell) — but the per-batch cost is a
+    single ``X @ C.T`` (BLAS) over the whole batch, which is the plan
+    you want when building a 100 TB index: the expression engine
+    evaluates |centroids| sequential folds per row and dominates the
+    build. Numerics:
     float64 accumulation both ways; the GEMM sums pairwise rather
     than left-to-right, so results can differ from the fold engine
     only on near-exact ties (tests pin agreement on a planted corpus).
@@ -529,6 +537,8 @@ def _gemm_assigner(schema, vec_col: str, nprobe: int, matrix):
     out_schema = StructType(list(schema.fields) + extra)
 
     def assign(pdf):
+        if pdf[vec_col].isna().any():
+            raise ValueError(f"cell assignment: {vec_col} is NULL")
         X = np.array(list(pdf[vec_col]), dtype=np.float64)
         if X.ndim != 2 or X.shape[1] == 0:
             # empty or ragged embedding arrays: refuse loudly — skipping
@@ -1173,31 +1183,88 @@ def _sem_assign_local(
     """Driver-side :func:`_sem_assign` for BOUNDED batches: ONE Arrow
     collect of the batch (norm included), then the same kernel
     (:func:`_gemm_assigner`) the distributed path runs per Arrow
-    batch. Returns ``(probes, touched)`` where ``probes`` is a
+    batch. Returns ``(probes, cell_rows)`` where ``probes`` is a
     local-relation DataFrame in :func:`_sem_assign`'s schema and
-    ``touched`` the sorted distinct cid list — already
-    driver-resident, so the caller's cell pruning needs NO extra
-    collect and the frame needs no localCheckpoint (nothing to
-    recompute). The distributed path spends three
-    driver-synchronized jobs on the same answer (mapInPandas
-    assignment -> eager checkpoint -> cid collect)."""
+    ``cell_rows`` maps each touched cid to its probe-row count —
+    already driver-resident, so the caller's cell pruning, skew guard
+    and chunk planning need NO extra collect and the frame needs no
+    localCheckpoint (nothing to recompute)."""
     src = _sem_src(emb, id_col, vec_col)
     assign, out_schema = _gemm_assigner(
         src.schema, "embedding", nprobe,
         matrix if matrix is not None else _centroid_matrix(cents),
     )
-    # pin Arrow for both driver<->JVM conversions (vanilla sessions may
-    # have it off and would silently take the 10x Row path)
-    _AK = "spark.sql.execution.arrow.pyspark.enabled"
-    prev = spark.conf.get(_AK, "false")
-    spark.conf.set(_AK, "true")
-    try:
+    with arrow_pinned(spark):
         pdf = src.toPandas()
         out = assign(pdf) if len(pdf) else []
         probes = spark.createDataFrame(out, out_schema).select(*_sem_cols(nprobe))
-    finally:
-        spark.conf.set(_AK, prev)
-    return probes, sorted(int(c) for c in out["cid"].unique()) if len(out) else []
+    if not len(out):
+        return probes, {}
+    return probes, {int(c): int(n) for c, n in out["cid"].value_counts().items()}
+
+
+def _probe_cells(
+    spark, emb: DataFrame, art: dict, nprobe: int, driver_assign: bool,
+    checkpoint: bool | None, counts: bool,
+):
+    """The probe front end both index entry points (search and admit)
+    share: ``emb`` assigned to its ``nprobe`` nearest frozen cells of
+    the index entry ``art`` (:func:`_index_artifacts`), in
+    :func:`_sem_assign`'s schema. ``driver_assign`` runs the kernel
+    on one driver-side Arrow collect (:func:`_sem_assign_local`);
+    otherwise the distributed assignment is localCheckpointed with
+    ``eager=checkpoint`` (None: not at all) so its GEMM pass runs once
+    for every consumer. Returns ``(probes, cell_rows)``, the touched
+    cid -> probe-row count map: free on the driver path, one
+    k-bounded collect on the distributed path when ``counts`` asks
+    for it, else None — never a job the caller would not run anyway."""
+    meta = art["meta"]
+    args = (
+        emb, art["cents"], meta["id_col"], meta["vec_col"], nprobe,
+        _index_matrix(art),
+    )
+    if driver_assign:
+        return _sem_assign_local(spark, *args)
+    probes = _sem_assign(*args)
+    if checkpoint is not None:
+        probes = probes.localCheckpoint(eager=checkpoint)
+    if not counts:
+        return probes, None
+    rows = probes.groupBy("cid").agg(F.count(F.lit(1)).alias("n")).collect()
+    return probes, {int(r["cid"]): int(r["n"]) for r in rows}
+
+
+def _cid_filter(cids) -> Column:
+    """The cells-scan prune predicate for a touched cid set: an OR of
+    contiguous-cid RANGES (equalities for single cids), FALSE when
+    empty. Not ``isin``: past
+    ``spark.sql.parquet.pushdown.inFilterThreshold`` (10) Parquet
+    degrades an In to one [min, max] range, which a scattered cid set
+    stretches over most of the index (measured: 198 of 432 MB read
+    where ~8% was touched); the range-OR tree pushes losslessly and
+    the cid-clustered layout turns it into row-group/page skips."""
+    from functools import reduce
+
+    runs: list[list[int]] = []
+    for c in sorted({int(c) for c in cids}):
+        if runs and c == runs[-1][1] + 1:
+            runs[-1][1] = c
+        else:
+            runs.append([c, c])
+    terms = [
+        (F.col("cid") == a) if a == b else F.col("cid").between(a, b)
+        for a, b in runs
+    ]
+    return reduce(lambda x, y: x | y, terms) if terms else F.lit(False)
+
+
+def _index_dim(meta: dict, probes: DataFrame) -> int:
+    """Embedding width from the meta; a pre-r12 index meta lacks it
+    and pays one probe-row job."""
+    if meta.get("dim") is not None:
+        return max(1, int(meta["dim"]))
+    first = probes.select(F.size("embedding").alias("d")).first()
+    return max(1, int(first["d"])) if first is not None else 1
 
 
 def _centroid_matrix(cents: DataFrame):
@@ -1559,50 +1626,53 @@ def semdedup_index_search(
     """Top-k cosine retrieval FROM the persisted cell index — the
     serving half of the index family (build/append/compact/remove/
     drift/admit cover maintenance and dedup; this is "give me the k
-    nearest stored vectors to each query", the RAG/eval lookup). The
-    reference has no vector surface at all; this rounds out the
-    beyond-reference ANN story over the SAME on-disk artifact the
-    daily dedup gate maintains, so one index serves both jobs.
+    nearest stored vectors to each query", the RAG/eval lookup), over
+    the SAME on-disk artifact the daily dedup gate maintains.
 
-    Plan: queries GEMM-assign to their ``nprobe`` nearest frozen
-    cells (one k-bounded centroid collect — the same
-    :func:`_sem_assign` the build and admit use, so search and dedup
-    agree on the cell space), then ONE equi-join on cid against
-    ``cells/``. A broadcast hash join does NOT push its join keys
-    into the parquet scan, so the join alone would read the WHOLE
-    index per lookup; ``prune_cells`` (default on) first collects
-    the probes' distinct cids — bounded by min(n_queries x nprobe,
-    k_cells), never corpus-sized — and filters ``cells`` on that
-    set BEFORE the join (the admit's exact pattern). The index is
+    Search is the admit (:func:`incremental_semdedup`) with a top-k
+    in place of a threshold: both run one probe path — the shared
+    front end :func:`_probe_cells` (queries assigned to their
+    ``nprobe`` nearest frozen cells by the build's own GEMM
+    assignment, so search and dedup agree on the cell space), the
+    shared cid prune :func:`_cid_filter`, and on the gemm engine the
+    shared co-cell kernel :func:`_co_cell_gemm` — and differ only in
+    the final reduction. At threshold ``t`` the admit's vs-index
+    pairs are exactly the ``exclude_self`` search hits scoring >= t
+    at a k no cell exceeds (pinned in tests).
+
+    Plan: a broadcast hash join does NOT push its join keys into the
+    parquet scan, so ``prune_cells`` (default on) filters ``cells``
+    on the probes' touched cids — bounded by min(n_queries x nprobe,
+    k_cells), never corpus-sized — BEFORE the compare; the index is
     cid-clustered on disk and footer-skip certified
-    (operators/layout.py), so the pushed IN/range predicate becomes
-    row-group skips: each query scans ~nprobe/k_cells of the index,
-    which makes the docstring's serving claim literally true. The
-    probes frame is localCheckpointed first so the GEMM assignment
-    runs once, not once for the cid collect and again in the join.
-    The corpus-scale side never shuffles (the probe side broadcasts
-    by default; set ``broadcast_queries=False`` for query batches
-    too large to broadcast and Spark will shuffle BOTH sides on cid
-    instead). Cosines are Column expressions (fixed fold order —
-    oracle-exact, same contract as the expr admit); ranking is a
-    per-query row_number over (cos_sim DESC, vec_id) — deterministic
-    under score ties — and only ``rank <= k`` survive the window.
+    (operators/layout.py), so each query scans ~nprobe/k_cells of
+    the index. The distributed assignment is localCheckpointed first
+    so its GEMM pass runs once, not once per consumer.
+    ``driver_assign=True`` runs the assignment on the DRIVER in one
+    Arrow collect of the query batch instead (same numpy kernel,
+    norms folded in the JVM), so the checkpoint and the touched-cid
+    collect disappear; opt-in because it collects the batch whole —
+    use it when the batch is driver-sized. Results are identical
+    either way (pinned in tests).
 
-    ``engine='gemm'`` is the THROUGHPUT path for batch serving
-    (mirrors the admit's engine split): the probe table is Arrow-
-    collected (guarded by ``gemm_budget_bytes`` — serving batches
-    are driver-sized by definition; chunk the query set yourself or
-    use expr beyond it), packed per cid, broadcast, and each Arrow
-    batch of the cells scan computes one BLAS block per co-probed
-    cell (``sim_buffer_bytes`` tiles the query axis) — replacing
-    the interpreted per-row cosine fold, measured 6-10x on the 3M
-    sweep. Each (batch, cell) block emits only its LOCAL top-k per
-    query (stable argsort over id-ordered columns, so score ties
-    keep the smaller id — exactly the global rule), which ALSO cuts
-    the rank-window shuffle from scored-rows to <= partitions x
-    queries x k. Same RANKING as the expr engine (ties included);
-    cosine VALUES differ in the last ulps (float64 GEMM vs the
-    expression fold), so the oracle-checked slot keeps expr.
+    ``engine='expr'`` (default) joins the probes on cid against the
+    cells scan (the probe side broadcasts; ``broadcast_queries=False``
+    shuffles BOTH sides on cid for query batches too large to
+    broadcast) and folds each cosine as a Column expression (fixed
+    fold order — oracle-exact). ``engine='gemm'`` is the THROUGHPUT
+    path for batch serving: the probe table is Arrow-collected
+    (guarded by ``gemm_budget_bytes`` — chunk the query set yourself
+    or use expr beyond it) and run through :func:`_co_cell_gemm`
+    (``sim_buffer_bytes`` tiles the query axis), measured 6-10x on
+    the 3M sweep. Its reduction keeps each (batch, cell) block's
+    LOCAL top-k per query (stable argsort over id-ascending columns,
+    so score ties keep the smaller id — exactly the global rule),
+    which also cuts the rank-window shuffle from scored rows to
+    <= partitions x queries x k. Same RANKING as the expr engine
+    (ties included); cosine VALUES differ in the last ulps (float64
+    GEMM vs the expression fold), so the oracle-checked slot keeps
+    expr. Both engines rank per query with one row_number over
+    (cos_sim DESC, neighbor_id ASC) and keep ``rank <= k``.
 
     An ``store='int8'`` index searches transparently: the stored
     tinyint vector preserves DIRECTION (unit vector x 127, rounded),
@@ -1610,18 +1680,8 @@ def semdedup_index_search(
     sees the quantized direction — the same ~1e-3 cosine error bound
     the admit documents. Returns (query_id, neighbor_id, cos_sim,
     rank); ``exclude_self`` drops neighbor rows whose id equals the
-    query id (lookups of vectors that are themselves indexed).
-
-    ``driver_assign=True`` runs the probe assignment on the DRIVER in
-    one Arrow collect of the query batch (same numpy kernel, norms
-    folded in the JVM — :func:`_sem_assign_local`),
-    so the eager checkpoint and the touched-cid collect disappear:
-    three driver-synchronized round-trips become one. Opt-in because
-    it collects the query batch whole; use it when the batch is
-    driver-sized (the gemm engine's own posture), keep the default
-    for query streams you would not ``toPandas``. Results are
-    identical either way (pinned in tests)."""
-    import os
+    query id (lookups of vectors that are themselves indexed)."""
+    import numpy as np
 
     from pyspark.sql import Window
 
@@ -1631,94 +1691,76 @@ def semdedup_index_search(
         raise ValueError(f"engine must be 'expr' or 'gemm', got {engine!r}")
     # r13 opt: per-meta-version artifact memo (see _index_artifacts) —
     # recurring lookups stop re-paying reader setup + centroid collect
-    _art = _index_artifacts(spark, index_dir)
-    meta = _art["meta"]
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    cents = _art["cents"]
-    _mat = _index_matrix(_art)
-    # serving batches are driver-sized by definition (the gemm engine
-    # collects them whole anyway): driver_assign runs the same kernel
-    # on ONE Arrow collect and hands back the touched cids, which makes
-    # the checkpoint AND the prune collect below free
-    probes, touched = (
-        _sem_assign_local(spark, queries, cents, id_col, vec_col, nprobe, _mat)
-        if driver_assign
-        else (_sem_assign(queries, cents, id_col, vec_col, nprobe, _mat), None)
+    art = _index_artifacts(spark, index_dir)
+    meta, cells = art["meta"], art["cells"]
+    # the checkpoint serves the prune collect and the gemm collects
+    probes, cell_rows = _probe_cells(
+        spark, queries, art, nprobe, driver_assign,
+        checkpoint=True if prune_cells or engine == "gemm" else None,
+        counts=prune_cells,
     )
-    cells = _art["cells"]
-    if (prune_cells or engine == "gemm") and touched is None:
-        # materialize the assignment once: the cid collect (prune),
-        # the budget count and the Arrow collect (gemm) would each
-        # re-run the GEMM assignment otherwise
-        probes = probes.localCheckpoint(eager=True)
     if prune_cells:
-        # one bounded collect of the touched cids. The filter is
-        # pushed as an OR of contiguous-cid RANGES, not isin: beyond
-        # spark.sql.parquet.pushdown.inFilterThreshold (10) an In
-        # degrades to one [min,max] range at the parquet layer, which
-        # a scattered cid set stretches over most of the index
-        # (measured: 198 of 432 MB read where ~8% was touched); the
-        # range-OR tree pushes losslessly and the cid-clustered
-        # layout turns it into row-group/page skips.
-        if touched is None:
-            touched = sorted(
-                int(r["cid"]) for r in probes.select("cid").distinct().collect()
-            )
-        if touched:
-            runs: list[tuple[int, int]] = []
-            lo = prev = touched[0]
-            for c in touched[1:]:
-                if c == prev + 1:
-                    prev = c
-                    continue
-                runs.append((lo, prev))
-                lo = prev = c
-            runs.append((lo, prev))
-            pred = None
-            for a, b in runs:
-                p = (
-                    (F.col("cid") == a)
-                    if a == b
-                    else (F.col("cid") >= a) & (F.col("cid") <= b)
-                )
-                pred = p if pred is None else pred | p
-            cells = cells.filter(pred)
-        else:
-            cells = cells.filter(F.lit(False))
+        cells = cells.filter(_cid_filter(cell_rows))
     if engine == "gemm":
-        return _index_search_gemm(
-            spark, probes, cells, k, exclude_self,
-            sim_buffer_bytes, gemm_budget_bytes,
-            dim=meta.get("dim"),
+        n_probes = probes.count() if cell_rows is None else sum(cell_rows.values())
+        need = n_probes * _index_dim(meta, probes) * 8
+        if need > gemm_budget_bytes:
+            raise ValueError(
+                f"engine='gemm' would collect {need >> 20} MB of probes "
+                f"(> gemm_budget_bytes={gemm_budget_bytes >> 20} MB): gemm "
+                "is the SERVING path for driver-sized query batches — "
+                "chunk the query set across calls or use engine='expr'"
+            )
+        with arrow_pinned(spark):
+            qpdf = probes.select("vec_id", "cid", "embedding").toPandas()
+        take = k + (1 if exclude_self else 0)  # self rows dropped below
+
+        def topk(pids, iids, S):
+            # id-ascending columns: a stable argsort of -S then keeps
+            # the smaller neighbor id on score ties — the global
+            # (cos DESC, id ASC) rule the rank window applies
+            order = np.argsort(iids, kind="stable")
+            S, iids = S[:, order], iids[order]
+            top = np.argsort(-S, axis=1, kind="stable")[:, :take]
+            return (
+                np.repeat(pids, top.shape[1]),
+                iids[top].ravel(),
+                np.take_along_axis(S, top, axis=1).ravel(),
+            )
+
+        scored = _co_cell_gemm(
+            spark, qpdf, cells, topk, sim_buffer_bytes,
+            ("query_id", "neighbor_id"), probes.schema["vec_id"].dataType,
         )
-    if meta.get("store", "float32") == "int8":
-        # stored norm is the ORIGINAL float norm (diagnostics); the
-        # quantized direction needs its own magnitude for the cosine
-        cells = cells.withColumn("norm", norm(F.col("embedding")))
-    p = probes.select(
-        F.col("vec_id").alias("query_id"),
-        as_double(F.col("embedding")).alias("_qv"),
-        F.col("norm").alias("_qn"),
-        "cid",
-    )
-    if broadcast_queries:
-        p = broadcast(p)
-    i = cells.select(
-        F.col("vec_id").alias("neighbor_id"),
-        as_double(F.col("embedding")).alias("_iv"),
-        F.col("norm").alias("_in"),
-        "cid",
-    )
-    scored = p.join(i, on="cid").select(
-        "query_id",
-        "neighbor_id",
-        _memo_col(
-            "idxsearch_cos",
-            lambda: _cosine_prenormed(
-                F.col("_qv"), F.col("_iv"), F.col("_qn"), F.col("_in")
-            ),
-        ).alias("cos_sim"),
-    )
+    else:
+        if meta.get("store", "float32") == "int8":
+            # stored norm is the ORIGINAL float norm (diagnostics); the
+            # quantized direction needs its own magnitude for the cosine
+            cells = cells.withColumn("norm", norm(F.col("embedding")))
+        p = probes.select(
+            F.col("vec_id").alias("query_id"),
+            as_double(F.col("embedding")).alias("_qv"),
+            F.col("norm").alias("_qn"),
+            "cid",
+        )
+        if broadcast_queries:
+            p = broadcast(p)
+        i = cells.select(
+            F.col("vec_id").alias("neighbor_id"),
+            as_double(F.col("embedding")).alias("_iv"),
+            F.col("norm").alias("_in"),
+            "cid",
+        )
+        scored = p.join(i, on="cid").select(
+            "query_id",
+            "neighbor_id",
+            _memo_col(
+                "idxsearch_cos",
+                lambda: _cosine_prenormed(
+                    F.col("_qv"), F.col("_iv"), F.col("_qn"), F.col("_in")
+                ),
+            ).alias("cos_sim"),
+        )
     if exclude_self:
         scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
     w = Window.partitionBy("query_id").orderBy(
@@ -1749,48 +1791,44 @@ def incremental_semdedup(
     vector — anti-join ``vec_id`` to admit only novel embeddings
     (SemDeDup as a daily gate instead of a corpus rebuild).
 
-    Plan: the batch is GEMM-assigned under the index's frozen
-    centroids (one broadcast of k centroids), then compared against
-    co-cell index vectors. A batch wide enough to touch every cell
-    (30 K vectors over 256 cells already does) makes the compare
-    LINEAR IN THE INDEX — so HOW each index row meets its co-cell
-    batch rows decides everything:
+    The vs-index half is :func:`semdedup_index_search` with a
+    threshold in place of a top-k: the same probe front end
+    (:func:`_probe_cells` — the batch GEMM-assigned under the index's
+    frozen centroids), the same cid prune (:func:`_cid_filter`) and,
+    on the gemm engine, the same co-cell kernel
+    (:func:`_co_cell_gemm`), whose reduction here keeps pairs at or
+    over ``threshold`` and drops a batch id meeting its own index
+    row (a re-run over an appended batch). A batch wide enough to
+    touch every cell (30 K vectors over 256 cells already does) makes
+    the compare LINEAR IN THE INDEX — so HOW each index row meets its
+    co-cell batch rows decides everything:
 
     - ``engine='gemm'`` (default): the assigned batch is collected
       via Arrow (``toPandas`` — numpy-backed columns, ~8 bytes per
       float64 dim, NOT Python Row objects at ~10x that) ONE
-      cid-range AT A TIME: a k-bounded per-cell count plans
+      cid-range AT A TIME: the k-bounded per-cell counts plan
       contiguous cid ranges whose batch rows fit
       ``batch_budget_bytes`` (or exactly ``batch_chunk_rows`` rows
-      when given), and each range is collected, packed, broadcast,
-      compared, and RELEASED before the next range's collect — both
-      the driver residency and the broadcast bound are the CHUNK,
-      never the whole daily batch (the one exception that tracks
-      data skew: a single cell whose batch rows alone exceed the
-      budget is collected whole, then sliced locally so its
-      broadcasts stay bounded). In rows x dims terms the default
-      256 MB budget is ~43 K rows at a realistic 768-dim embedding
-      and ~512 K rows at 64-dim — a 1 M x 768 daily batch runs as
-      ~24 range collects with ~256 MB driver peak, no upstream
-      slicing required. Chunks are cid-coherent, so each chunk's
-      co-cell scan prunes the cid-clustered ``cells/`` parquet to
-      its own cells (total index rows read stay ~one pass; only
-      boundary cells are scanned twice). Per
-      chunk the packed cell blocks are SPARK-BROADCAST (once per
-      executor, never per task) and compared in a ``mapInPandas``
-      over the index scan: one BLAS block per (Arrow batch, cell),
-      tiled so no sim block exceeds ``sim_buffer_bytes`` regardless
-      of batch-side cell skew. ZERO shuffle, zero join. Each
-      chunk's result materializes eagerly (localCheckpoint) so its
-      broadcast is destroyed before the next chunk packs — peak
-      executor memory is one chunk, and repeated admits in a
-      long-lived session do not accumulate copies; the pair set is
-      duplicate-rate-sized, so storing it once in block storage
-      before the caller's sink is the cheap side of that trade.
-      Batch-internal duplicates ride the DISTRIBUTED
-      :func:`_within_group_pairs_gemm` (per-cell BLAS, lazy) — a
-      duplicate-heavy batch can emit quadratically many internal
-      pairs, which must never accumulate as a driver-side list.
+      when given), and each range is collected, run through the
+      kernel and RELEASED before the next range's collect — both the
+      driver residency and the broadcast bound are the CHUNK, never
+      the whole daily batch (the one exception that tracks data
+      skew: a single cell whose batch rows alone exceed the budget is
+      collected whole, then sliced locally so its broadcasts stay
+      bounded). In rows x dims terms the default 256 MB budget is
+      ~43 K rows at a realistic 768-dim embedding and ~512 K rows at
+      64-dim — a 1 M x 768 daily batch runs as ~24 range collects
+      with ~256 MB driver peak, no upstream slicing required. Chunks
+      are cid-coherent, so each chunk's co-cell scan prunes the
+      cid-clustered ``cells/`` parquet to its own cells (total index
+      rows read stay ~one pass; only boundary cells are scanned
+      twice); a batch that fits one chunk scans the index once,
+      unfiltered. Each chunk's pairs materialize eagerly inside the
+      kernel, so peak executor memory is one chunk. Batch-internal
+      duplicates ride the DISTRIBUTED :func:`_within_group_pairs_gemm`
+      (per-cell BLAS, lazy) — a duplicate-heavy batch can emit
+      quadratically many internal pairs, which must never accumulate
+      as a driver-side list.
     - ``engine='expr'``: broadcast-join the batch on cid and fold the
       cosine per pair in Catalyst — lazy, no driver collect, the
       right form for small indexes/oracles (measured 18x slower at
@@ -1804,11 +1842,12 @@ def incremental_semdedup(
 
     ``max_batch_cell_rows`` guards index-side degenerate-cell skew as
     a DRIVER-SIDE lookup against the meta's persisted cell histogram
-    (no index scan). An index whose meta predates the histogram falls
-    back to ONE live count restricted to the touched cells — the
-    guard never silently disables. An index hot cell means the index
-    was built with too-coarse cells; fix it at build time. None
-    disables.
+    (no index scan); when the histogram proves no cell exceeds the
+    bound, the touched-cid collect that only feeds the guard is
+    skipped. An index whose meta predates the histogram falls back to
+    ONE live count restricted to the touched cells — the guard never
+    silently disables. An index hot cell means the index was built
+    with too-coarse cells; fix it at build time. None disables.
 
     ``nprobe`` is the FAISS-style recall lever for SemDeDup's known
     miss class, cell-BOUNDARY pairs: a batch vector whose true near-
@@ -1823,23 +1862,23 @@ def incremental_semdedup(
     multi-probe self-join would double-count pairs whose members
     probe each other's cells.
 
-    ``driver_assign=True`` (opt-in, mirrors
+    ``driver_assign=True`` (opt-in, as in
     :func:`semdedup_index_search`): assign the batch on the DRIVER in
     one Arrow collect — same numpy kernel (:func:`_sem_assign_local`),
     norms folded in the JVM — so the mapInPandas assignment stage, its
-    Python workers, the checkpoint, and the guard's cid collect all
-    disappear. Use it when the batch is driver-sized (the gemm
-    engine's own posture); results are identical either way (pinned
-    in tests)."""
-    import os
+    Python workers, the checkpoint, and the guard's and chunk
+    planner's cid collect all disappear. Use it when the batch is
+    driver-sized (the gemm engine's own posture); results are
+    identical either way (pinned in tests)."""
+    import numpy as np
 
     if engine not in ("expr", "gemm"):
         raise ValueError(f"engine must be 'expr' or 'gemm', got {engine!r}")
     # r13 opt: meta/reader plans/centroid matrix come from the per-
     # meta-version artifact memo — recurring admits stop re-paying the
     # reader setup and the k-row centroid collect (guide §5)
-    _art = _index_artifacts(spark, index_dir)
-    meta = _art["meta"]
+    art = _index_artifacts(spark, index_dir)
+    meta, cells = art["meta"], art["cells"]
     if meta.get("store", "float32") == "int8" and engine != "gemm":
         # the expr folds compute prenormed cosine from the RAW stored
         # embedding + the stored (original) norm — on a quantized index
@@ -1852,9 +1891,17 @@ def incremental_semdedup(
             "gemm engine, whose per-batch renormalization dequantizes "
             "the stored unit vectors"
         )
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    cents, cells = _art["cents"], _art["cells"]
-    _mat = _index_matrix(_art)
+    # the touched-cid collect only feeds the hot-cell guard (and the
+    # gemm chunk planner): when the meta's persisted histogram proves
+    # NO cell in the index exceeds the bound, the guard cannot fire for
+    # any touched set, so it is skipped (r13 opt). A pre-histogram
+    # index or an actually-hot index keeps the exact collect-then-check
+    # path (including its construction-time ValueError, pinned in tests).
+    hist = meta.get("cell_counts")
+    guarded = max_batch_cell_rows is not None and not (
+        hist is not None
+        and all(int(n) <= max_batch_cell_rows for n in hist.values())
+    )
     # gemm: the checkpoint MUST be eager — the cid-count collect and
     # the per-range Arrow collects each drive their own job against
     # it. expr: every consumer (vs-index broadcast, the self-join's
@@ -1862,29 +1909,9 @@ def incremental_semdedup(
     # checkpoint materializes on first touch and is shared from block
     # storage — same reuse, one fewer driver-synchronized job per
     # admit (r13 opt, guide §5 driver round-trips)
-    eager = engine == "gemm"
-    # one assignment: distributed (checkpointed, so its GEMM pass runs
-    # once for all consumers) or, for driver-sized batches (opt-in,
-    # mirrors semdedup_index_search), on the driver — ONE Arrow
-    # collect replaces the mapInPandas stage, its Python workers and
-    # the checkpoint (a local relation has nothing to recompute), and
-    # the touched-cid set rides along, making the guard collect free
-    probes, touched_local = (
-        _sem_assign_local(spark, new_emb, cents, id_col, vec_col, nprobe, _mat)
-        if driver_assign
-        else (
-            _sem_assign(
-                new_emb, cents, id_col, vec_col, nprobe, _mat
-            ).localCheckpoint(eager=eager),
-            None,
-        )
-    )
-    probes = probes.select(
-        F.col("vec_id").alias("_bid"),
-        "cid",
-        F.col("norm").alias("_bn"),
-        F.col("embedding").alias("_bv"),
-        *(["rank"] if nprobe > 1 else []),
+    probes, cell_rows = _probe_cells(
+        spark, new_emb, art, nprobe, driver_assign,
+        checkpoint=engine == "gemm", counts=engine == "gemm" or guarded,
     )
     batch = probes
     if nprobe > 1:
@@ -1892,10 +1919,8 @@ def incremental_semdedup(
         batch = probes.filter(F.col("rank") == 0).drop("rank")
         probes = probes.drop("rank")
 
-    def guard(touched) -> None:
-        if max_batch_cell_rows is None:
-            return
-        counts = meta.get("cell_counts")
+    if guarded:
+        counts = hist
         if counts is None:
             # index built before the histogram landed in the meta:
             # ONE live count restricted to the touched cells — never
@@ -1905,7 +1930,7 @@ def incremental_semdedup(
             from siskin_spark.session import local_table
 
             tdf = local_table(
-                spark, [(int(c),) for c in sorted(touched)], "cid long"
+                spark, [(int(c),) for c in sorted(cell_rows)], "cid long"
             )
             live = (
                 cells.join(F.broadcast(tdf), "cid", "left_semi")
@@ -1915,7 +1940,7 @@ def incremental_semdedup(
             )
             counts = {str(int(r["cid"])): int(r["n"]) for r in live}
         hot = sorted(
-            ((counts.get(str(c), 0), c) for c in touched
+            ((counts.get(str(c), 0), c) for c in cell_rows
              if counts.get(str(c), 0) > max_batch_cell_rows),
             reverse=True,
         )
@@ -1928,24 +1953,10 @@ def incremental_semdedup(
             )
 
     if engine == "gemm":
-        # Per-cid batch row counts: ONE k-bounded collect that serves
-        # BOTH the skew guard and the chunk planner — the planner adds
-        # no extra corpus-scale job (probes is checkpointed).
-        cid_counts = {
-            int(r["cid"]): int(r["n"])
-            for r in probes.groupBy("cid")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        guard(set(cid_counts))
         if batch_chunk_rows is not None:
             chunk = max(1, int(batch_chunk_rows))
         else:
-            dim = meta.get("dim")
-            if dim is None:  # pre-r12 index meta: one probe-row job
-                first = probes.select(F.size("_bv").alias("d")).first()
-                dim = int(first["d"]) if first is not None else 1
-            chunk = max(1, batch_budget_bytes // (8 * max(1, dim)))
+            chunk = max(1, batch_budget_bytes // (8 * _index_dim(meta, probes)))
         # Plan contiguous cid RANGES whose summed batch rows fit the
         # chunk, then COLLECT per range — the driver never holds more
         # than one range (+ its packed copy): driver residency is the
@@ -1953,10 +1964,12 @@ def incremental_semdedup(
         # exceed the chunk becomes its own range (collected whole —
         # the one residency case that tracks batch-side cell skew —
         # then sliced locally below so the BROADCAST stays bounded).
+        # Collects are of PROBES (batch x nprobe rows), so the chunk
+        # budget naturally accounts for the multi-probe inflation.
         ranges: list[tuple[int, int]] = []
         run, lo, prev_c = 0, None, 0
-        for c in sorted(cid_counts):
-            n = cid_counts[c]
+        for c in sorted(cell_rows):
+            n = cell_rows[c]
             if lo is not None and run + n > chunk:
                 ranges.append((lo, prev_c))
                 run, lo = 0, None
@@ -1967,28 +1980,22 @@ def incremental_semdedup(
         if lo is not None:
             ranges.append((lo, prev_c))
         # effectively unchunked: one range that fits the budget — skip
-        # the index-side cid pruning (scan the index once, unfiltered,
-        # exactly like the pre-chunking fast path)
+        # the index-side cid pruning (scan the index once, unfiltered)
         single = len(ranges) <= 1 and run <= chunk
-        # Arrow collect: numpy-backed columns, not Row objects — the
-        # resident range costs ~8 B/dim, so the budget math above is
-        # honest about driver memory, not off by the ~10x Row overhead.
-        # Arrow is OFF by default in a vanilla session (our session.py
-        # enables it, arbitrary callers may not) and toPandas would
-        # silently fall back to the Row path — pin it on for exactly
-        # these collects and restore the caller's setting after.
-        # Collects are of PROBES (batch x nprobe rows), so the chunk
-        # budget naturally accounts for the multi-probe inflation.
-        _AK = "spark.sql.execution.arrow.pyspark.enabled"
-        prev = spark.conf.get(_AK, "false")
+
+        def over(pids, iids, S):
+            hit_p, hit_i = np.nonzero(S >= threshold)
+            keep = pids[hit_p] != iids[hit_i]  # re-run over appended batch
+            hit_p, hit_i = hit_p[keep], hit_i[keep]
+            return pids[hit_p], iids[hit_i], S[hit_p, hit_i]
+
         parts = []
-        spark.conf.set(_AK, "true")
-        try:
+        with arrow_pinned(spark):
             for lo, hi in ranges or [(0, -1)]:  # empty batch: one
                 # empty collect keeps the empty-result schema path
                 cpdf = (
-                    probes.select("_bid", "cid", "_bv")
-                    .filter((F.col("cid") >= lo) & (F.col("cid") <= hi))
+                    probes.select("vec_id", "cid", "embedding")
+                    .filter(F.col("cid").between(lo, hi))
                     .toPandas()
                 )
                 # ranges were planned to fit the chunk, so a range
@@ -1996,31 +2003,22 @@ def incremental_semdedup(
                 # cid-coherent, no sort needed before slicing
                 for i0 in range(0, max(len(cpdf), 1), chunk):
                     s = cpdf.iloc[i0:i0 + chunk]
-                    ccells = cells
-                    if not single:
-                        # cid-coherent chunks prune the cid-clustered
-                        # index scan to their own cells: N chunks read
-                        # the index ~once in total, not N passes
-                        touched = [int(c) for c in s["cid"].unique()]
-                        ccells = cells.filter(
-                            F.col("cid").isin(touched)
-                            if touched else F.lit(False)
-                        )
-                    parts.append(_incremental_vs_index_gemm(
-                        spark, s, ccells, threshold, sim_buffer_bytes
+                    parts.append(_co_cell_gemm(
+                        spark, s,
+                        cells if single else cells.filter(_cid_filter(s["cid"])),
+                        over, sim_buffer_bytes, ("vec_id", "dup_of"),
+                        cells.schema["vec_id"].dataType,
                     ))
                     del s  # a slice VIEW pins the whole range's block
                 del cpdf  # release the range before the next collect
-        finally:
-            spark.conf.set(_AK, prev)
         vs_index = parts[0]
         for p in parts[1:]:
             vs_index = vs_index.unionByName(p)
         vb = batch.select(
-            F.col("_bid").alias("_id"),
+            F.col("vec_id").alias("_id"),
             "cid",
             F.lit(0).cast("long").alias("_sub"),
-            F.col("_bv").alias("_v"),
+            F.col("embedding").alias("_v"),
         )
         vs_batch = (
             _within_group_pairs_gemm(vb, threshold, sim_buffer_bytes)
@@ -2037,28 +2035,19 @@ def incremental_semdedup(
         )
         return vs_index.unionByName(vs_batch)
 
-    # the probe-cid collect exists only to feed the hot-cell guard; if
-    # the meta's persisted histogram proves NO cell in the index
-    # exceeds the bound, the guard cannot fire for any touched set —
-    # skip the per-admit job entirely (r13 opt). A pre-histogram index
-    # or an actually-hot index keeps the exact collect-then-check path
-    # (including its construction-time ValueError, pinned in tests).
-    _counts = meta.get("cell_counts")
-    if max_batch_cell_rows is not None and not (
-        _counts is not None
-        and all(int(n) <= max_batch_cell_rows for n in _counts.values())
-    ):
-        guard(
-            set(touched_local)
-            if touched_local is not None
-            else {int(r["cid"]) for r in probes.select("cid").distinct().collect()}
-        )
     # r14 opt: both join sides fan out (each cell row meets many
     # probes and vice versa) — stage the float->double cast once per
     # ROW instead of paying 2*dim casts per PAIR inside the fold
     # (as_double; bit-identical)
+    def staged(df):
+        return df.select(
+            F.col("vec_id").alias("_bid"),
+            "cid",
+            F.col("norm").alias("_bn"),
+            as_double(F.col("embedding")).alias("_bvd"),
+        )
+
     cells = cells.withColumn("_ivd", as_double(F.col("embedding")))
-    probes = probes.withColumn("_bvd", as_double(F.col("_bv")))
     zero_safe = _memo_col(
         "incsem_vs_index_cos_v2",
         lambda: F.when(
@@ -2070,7 +2059,7 @@ def incremental_semdedup(
         ),
     )
     vs_index = (
-        cells.join(F.broadcast(probes), "cid")
+        cells.join(F.broadcast(staged(probes)), "cid")
         .filter(F.col("_bid") != F.col("vec_id"))
         .select(
             F.col("_bid").alias("vec_id"),
@@ -2079,7 +2068,7 @@ def incremental_semdedup(
         )
         .filter(F.col("cos_sim") >= threshold)
     )
-    batch = batch.withColumn("_bvd", as_double(F.col("_bv")))
+    batch = staged(batch)
     if driver_assign:
         # the local-relation batch scans as ONE partition; spread the
         # self-join's STREAM side so the pair cosine folds use every
@@ -2115,106 +2104,69 @@ def incremental_semdedup(
     return vs_index.unionByName(vs_batch)
 
 
-def _index_search_gemm(
-    spark, probes, cells: DataFrame, k: int, exclude_self: bool,
-    sim_buffer_bytes: int, gemm_budget_bytes: int, dim: int | None,
+def _co_cell_gemm(
+    spark, pdf, cells: DataFrame, reduce, sim_buffer_bytes: int,
+    names: tuple[str, str], pid_type,
 ) -> DataFrame:
-    """Batch-serving half of :func:`semdedup_index_search`: the probe
-    table is Arrow-collected (driver residency guarded by
-    ``gemm_budget_bytes``), packed per cid, broadcast, and each Arrow
-    batch of the (pruned) cells scan computes one BLAS block per
-    co-probed cell — the ``_incremental_vs_index_gemm`` shape pointed
-    at retrieval. Each (batch, cell) block emits only its LOCAL
-    top-k(+self slack) rows per query, selected by a STABLE argsort
-    over id-ascending columns so score ties keep the smaller
-    neighbor id — the same rule the global rank window applies — and
-    the window then runs over <= partitions x queries x k rows
-    instead of every scored pair. Eagerly materialized so the packed
-    broadcast can be destroyed before returning."""
+    """The co-cell GEMM kernel both index entry points run: ``pdf`` is
+    an Arrow-collected pandas frame of probes (``vec_id``, ``cid``,
+    ``embedding``) whose size the caller bounds; it is packed per cid
+    as unit rows and SPARK-BROADCAST (once per executor, never per
+    task), and a ``mapInPandas`` over the (pruned) cells scan computes
+    one BLAS block per (Arrow batch, co-probed cell). The probe axis
+    is tiled so no sim block exceeds ``sim_buffer_bytes`` whatever the
+    probe-side cell skew (``max_batch_cell_rows`` bounds the index
+    side only). ZERO shuffle, zero join.
+
+    ``reduce(pids, iids, S)`` is the one variable part: it maps a
+    (probe tile x cell rows) cosine block to the ``(probe id, index
+    id, cos_sim)`` arrays to keep — a stable local top-k for the
+    search, a threshold for the admit. Output columns are ``names``
+    plus ``cos_sim``; the probe id column has ``pid_type``. Eagerly
+    materialized (localCheckpoint) so the broadcast is destroyed
+    before returning: repeated calls in a long-lived session never
+    accumulate copies, and the pair set is result-sized."""
     import numpy as np
 
-    from pyspark.sql import Window
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    if dim is None:
-        first = probes.select(F.size("embedding").alias("d")).first()
-        dim = int(first["d"]) if first is not None else 1
-    n_probes = probes.count()
-    need = n_probes * max(1, dim) * 8
-    if need > gemm_budget_bytes:
-        raise ValueError(
-            f"engine='gemm' would collect {need >> 20} MB of probes "
-            f"(> gemm_budget_bytes={gemm_budget_bytes >> 20} MB): gemm "
-            "is the SERVING path for driver-sized query batches — "
-            "chunk the query set across calls or use engine='expr'"
-        )
-    _AK = "spark.sql.execution.arrow.pyspark.enabled"
-    prev = spark.conf.get(_AK, "false")
-    spark.conf.set(_AK, "true")
-    try:
-        qpdf = probes.select("vec_id", "cid", "embedding").toPandas()
-    finally:
-        spark.conf.set(_AK, prev)
     packed: dict[int, tuple] = {}
-    if len(qpdf):
-        cid_arr = qpdf["cid"].to_numpy()
+    if len(pdf):
+        cid_arr = pdf["cid"].to_numpy()
         for cid in np.unique(cid_arr):
             m = cid_arr == cid
-            Q = np.array(list(qpdf["embedding"][m]), dtype=np.float64)
-            qn = np.linalg.norm(Q, axis=1)
-            Qn = Q / np.where(qn == 0.0, 1.0, qn)[:, None]
-            packed[int(cid)] = (qpdf["vec_id"][m].to_numpy(), Qn)
+            packed[int(cid)] = (
+                pdf["vec_id"][m].to_numpy(),
+                _unit_rows(np.array(list(pdf["embedding"][m]), dtype=np.float64)),
+            )
     bc = spark.sparkContext.broadcast(packed)
-    out_schema = StructType(
-        [
-            StructField("query_id", probes.schema["vec_id"].dataType),
-            StructField("neighbor_id", cells.schema["vec_id"].dataType),
-            StructField("cos_sim", DoubleType()),
-        ]
-    )
-    kk = k + (1 if exclude_self else 0)  # self rows dropped post-hoc
+    out_schema = StructType([
+        StructField(names[0], pid_type),
+        StructField(names[1], cells.schema["vec_id"].dataType),
+        StructField("cos_sim", DoubleType()),
+    ])
 
     def emit(batches):
         import pandas as pd
 
         table = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cids = pdf["cid"].to_numpy()
+        for part in batches:
+            cids = part["cid"].to_numpy()
             out = []
             for cid in np.unique(cids):
                 blk = table.get(int(cid))
                 if blk is None:
                     continue
-                qids, Qn = blk
+                pids, Pn = blk
                 m = cids == cid
-                iid = pdf["vec_id"][m].to_numpy()
-                X = np.array(list(pdf["embedding"][m]), dtype=np.float64)
-                # id-ascending columns: a stable argsort of -sims then
-                # resolves score ties toward the smaller neighbor id,
-                # matching the global (cos DESC, id ASC) window rule
-                order = np.argsort(iid, kind="stable")
-                iid, X = iid[order], X[order]
-                xn = np.linalg.norm(X, axis=1)
-                Xn = X / np.where(xn == 0.0, 1.0, xn)[:, None]
-                take = min(kk, len(iid))
-                step = max(1, sim_buffer_bytes // (8 * max(1, len(iid))))
-                for t0 in range(0, len(qids), step):
-                    S = Qn[t0:t0 + step] @ Xn.T  # (query tile, cell rows)
-                    top = np.argsort(-S, axis=1, kind="stable")[:, :take]
-                    rows = np.repeat(qids[t0:t0 + step], take)
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": rows,
-                                "neighbor_id": iid[top].ravel(),
-                                "cos_sim": np.take_along_axis(
-                                    S, top, axis=1
-                                ).ravel(),
-                            }
-                        )
-                    )
+                iid = part["vec_id"][m].to_numpy()
+                X = np.array(list(part["embedding"][m]), dtype=np.float64)
+                Xn = _unit_rows(X)
+                step = max(1, sim_buffer_bytes // (8 * len(iid)))
+                for t0 in range(0, len(pids), step):
+                    hit = reduce(pids[t0:t0 + step], iid, Pn[t0:t0 + step] @ Xn.T)
+                    if len(hit[0]):
+                        out.append(pd.DataFrame(dict(zip(out_schema.names, hit))))
             if out:
                 yield pd.concat(out, ignore_index=True)
 
@@ -2224,105 +2176,7 @@ def _index_search_gemm(
         .localCheckpoint(eager=True)
     )
     bc.destroy()
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-
-
-def _incremental_vs_index_gemm(
-    spark, batch_pdf, cells: DataFrame, threshold: float,
-    sim_buffer_bytes: int,
-) -> DataFrame:
-    """Batch-CHUNK-vs-index pairs as one tiled BLAS block per (Arrow
-    batch, cell) inside ``mapInPandas`` over the cid-clustered index
-    scan. ``batch_pdf`` is an Arrow-collected pandas slice of the
-    assigned batch (columns ``_bid``/``cid``/``_bv``) — the caller
-    bounds its size (``batch_chunk_rows`` / ``batch_budget_bytes``),
-    so the broadcast below is chunk-sized by construction. Every sim
-    tile is bounded by ``sim_buffer_bytes`` — ``max_batch_cell_rows``
-    bounds the INDEX side only, so a skewed BATCH piling into one
-    cell must not be allowed to allocate rows x cell in one np array
-    (the sibling ``_within_group_pairs_gemm`` chunks for exactly this
-    reason). Eagerly materialized; the packed-chunk broadcast is
-    destroyed before returning."""
-    import numpy as np
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    packed: dict[int, tuple] = {}
-    if len(batch_pdf):
-        cid_arr = batch_pdf["cid"].to_numpy()
-        for cid in np.unique(cid_arr):
-            m = cid_arr == cid
-            B = np.array(list(batch_pdf["_bv"][m]), dtype=np.float64)
-            bn = np.linalg.norm(B, axis=1)
-            Bn = B / np.where(bn == 0.0, 1.0, bn)[:, None]
-            # zero-norm batch rows: unit-sub yields cos 0 -> below any
-            # positive threshold, matching the expr engine's 0.0 guard
-            packed[int(cid)] = (batch_pdf["_bid"][m].to_numpy(), Bn)
-    bc = spark.sparkContext.broadcast(packed)
-    id_type = cells.schema["vec_id"].dataType
-    out_schema = StructType(
-        [
-            StructField("vec_id", id_type),
-            StructField("dup_of", id_type),
-            StructField("cos_sim", DoubleType()),
-        ]
-    )
-
-    def emit(batches):
-        import pandas as pd
-
-        table = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cids = pdf["cid"].to_numpy()
-            out = []
-            for cid in np.unique(cids):
-                blk = table.get(int(cid))
-                if blk is None:
-                    continue
-                bids, Bn = blk
-                m = cids == cid
-                X = np.array(list(pdf["embedding"][m]), dtype=np.float64)
-                xn = np.linalg.norm(X, axis=1)
-                Xn = X / np.where(xn == 0.0, 1.0, xn)[:, None]
-                iid = pdf["vec_id"][m].to_numpy()
-                step = max(1, sim_buffer_bytes // (8 * max(1, len(Xn))))
-                for j0 in range(0, len(bids), step):
-                    sims = Xn @ Bn[j0:j0 + step].T  # (index rows, tile)
-                    hit_i, hit_b = np.nonzero(sims >= threshold)
-                    if len(hit_i) == 0:
-                        continue
-                    gids = bids[j0:j0 + step][hit_b]
-                    keep = iid[hit_i] != gids  # re-run over appended batch
-                    if not keep.any():
-                        continue
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "vec_id": gids[keep],
-                                "dup_of": iid[hit_i[keep]],
-                                "cos_sim": sims[hit_i[keep], hit_b[keep]],
-                            }
-                        )
-                    )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    vs_index = (
-        cells.select("vec_id", "cid", "embedding")
-        .mapInPandas(emit, out_schema)
-        .localCheckpoint(eager=True)
-    )
-    bc.destroy()
-    return vs_index
+    return scored
 
 
 def incremental_semdedup_keep(

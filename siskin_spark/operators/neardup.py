@@ -796,8 +796,10 @@ def neardup_index_build(
 
 def _index_frames(docs, id_col, text_col, n, k, bands, hash_family):
     """The two index tables (band keys, shingle universe) as lazy
-    frames in the canonical column names — shared by build and append
-    so the two can never drift schema- or semantics-wise."""
+    frames in the canonical column names — the one place batch bands
+    are built: build and append write them, admit and search probe
+    with them, so none of the four can drift schema- or
+    semantics-wise."""
     rows = k // bands
     sigs = minhash_table(docs, id_col, text_col, n, k, hash_family=hash_family)
     banded = sigs.filter(
@@ -854,44 +856,31 @@ def incremental_neardup(
     jaccard) where ``doc_id`` is always from the new batch and
     ``dup_of`` is an index doc or a smaller-id batch doc.
 
-    Plan: all CPU-heavy work (shingling, hashing, banding) runs over
-    the batch only; the corpus contributes two narrow-column parquet
-    scans and no shuffle. The batch is shingled and banded fresh
-    (params from the index meta); its band keys join the persisted
-    band index — the batch side is broadcast, so the corpus-scale
-    index is scanned (2 narrow columns) but never shuffled. Exact-Jaccard verification reads only the candidate
-    corpus docs' shingles via a broadcast semi-filter (candidates are
-    near-dup-rate-sized), unioned with the batch's own shingles —
-    :func:`exact_jaccard` then verifies index hits and batch-internal
-    duplicates in one pass. Output orientation: ``doc_id`` is always
-    the DROP side — the batch doc for index hits (the corpus copy
-    wins), the LARGER id for batch-internal pairs — so
-    :func:`incremental_keep`'s keep-first rule is one anti-join."""
+    The vs-index half is :func:`neardup_index_search` with a threshold
+    in place of a top-k: the same probe (batch bands from
+    :func:`_index_frames`, params from the index meta, broadcast-joined
+    to the persisted ``bands/``) and the same verification
+    (:func:`_verify_vs_index`). All CPU-heavy work (shingling,
+    hashing, banding) runs over the batch only; the corpus
+    contributes two narrow-column parquet scans and no shuffle — the
+    batch side is broadcast, so the corpus-scale index is scanned
+    but never shuffled. Batch-internal candidates come from a
+    self-join of the batch bands and are verified in the same pass.
+    Output orientation: ``doc_id`` is always the DROP side — the
+    batch doc for index hits (the corpus copy wins), the LARGER id
+    for batch-internal pairs — so :func:`incremental_keep`'s
+    keep-first rule is one anti-join."""
     import os
 
-    meta_n, meta_k, meta_bands, fam = _read_index_params(index_dir)
-    rows = meta_k // meta_bands
-    sh_new = shingle_table(new_docs, id_col, text_col, meta_n).select(
-        F.col(id_col).alias("doc_id"), "shingle"
+    n, k, bands, fam = _read_index_params(index_dir)
+    new_bands, sh_new = _index_frames(
+        new_docs, id_col, text_col, n, k, bands, fam
     )
-    sigs = minhash_table(
-        new_docs, id_col, text_col, meta_n, meta_k,
-        shingles=sh_new.withColumnRenamed("doc_id", id_col),
-        hash_family=fam,
-    )
-    new_bands = sigs.filter(
-        F.element_at("signature", 1) != F.lit(_family_sentinel(fam))
-    ).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(
-            lsh_band_keys(F.col("signature"), meta_bands, rows)
-        ).alias("band"),
-    )
-    old_bands = spark.read.parquet(os.path.join(index_dir, "bands"))
     # batch vs index: broadcast the (small) batch band table against
     # the corpus-scale index — map-side hash join, index not shuffled
     vs_index = (
-        old_bands.join(
+        spark.read.parquet(os.path.join(index_dir, "bands"))
+        .join(
             F.broadcast(new_bands.withColumnRenamed("doc_id", "id_a")), on="band"
         )
         .filter(F.col("id_a") != F.col("doc_id"))
@@ -907,20 +896,9 @@ def incremental_neardup(
         .select("id_a", "id_b")
     )
     pairs = vs_index.unionByName(vs_batch).distinct()
-    # verification universe: batch shingles + ONLY the candidate index
-    # docs' shingles (broadcast semi-filter — candidate ids are
-    # near-dup-rate-sized, the shingle store is corpus-sized)
-    cand_old = pairs.select(F.col("id_b").alias("doc_id")).join(
-        new_bands.select("doc_id").distinct(), on="doc_id", how="left_anti"
-    ).distinct()
-    old_sh = spark.read.parquet(os.path.join(index_dir, "shingles")).join(
-        F.broadcast(cand_old), on="doc_id", how="left_semi"
-    )
-    sh_all = sh_new.unionByName(old_sh)
-    verified = exact_jaccard(
-        pairs, sh_all, id_col="doc_id", broadcast_candidates=False
-    ).filter(F.col("jaccard") >= threshold)
-    return verified.select(
+    return _verify_vs_index(
+        spark, index_dir, pairs, new_bands, sh_new, threshold
+    ).select(
         F.col("id_a").alias(id_col),
         F.col("id_b").alias("dup_of"),
         "jaccard",
@@ -947,75 +925,40 @@ def neardup_index_search(
     jaccard, rank); rank is a deterministic per-query row_number
     (jaccard DESC, neighbor_id ASC), only ``rank <= k`` survive.
 
-    Plan — the admit's economics re-oriented to retrieval: all
-    CPU-heavy work (shingling, hashing, banding; params from the
-    index meta) runs over the QUERY batch only; its band keys
-    broadcast-join the persisted ``bands/`` (the corpus-scale index
-    is scanned, never shuffled), exact-Jaccard verification reads
-    only the candidate docs' shingles via a broadcast semi-filter,
-    and the rank window runs over candidate-sized rows — everything
-    after the two narrow index scans is bounded by queries x band
-    collisions. Recall is the banding curve (same s-curve as the
-    dedup path): a neighbor sharing no band with the query is not a
-    candidate — raise k/bands at build time for higher-recall
+    Search is the admit (:func:`incremental_neardup`) with a top-k in
+    place of a threshold: the same probe — query bands from
+    :func:`_index_frames` (params from the index meta) broadcast-
+    joined to the persisted ``bands/``, so the corpus-scale index is
+    scanned, never shuffled — and the same verification
+    (:func:`_verify_vs_index`: only the candidate docs' shingles are
+    read, via a broadcast semi-filter, then exact Jaccard), followed
+    by the rank window over candidate-sized rows. At threshold ``t``
+    the admit's vs-index pairs are exactly the ``exclude_self`` hits
+    with ``min_jaccard=t`` at a k no query's candidate list exceeds
+    (pinned in tests). Recall is the banding curve (same s-curve as
+    the dedup path): a neighbor sharing no band with the query is not
+    a candidate — raise k/bands at build time for higher-recall
     serving, and use ``min_jaccard`` to trim the long tail of
     incidental band collisions. A query id also present in the index
-    resolves to the QUERY text (same batch-wins rule as the admit);
-    its self-hit scores jaccard 1.0 at rank 1 unless
-    ``exclude_self``."""
+    resolves to the QUERY text (the admit's batch-wins rule); its
+    self-hit scores jaccard 1.0 at rank 1 unless ``exclude_self``."""
     import os
+
+    from pyspark.sql import Window
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    from pyspark.sql import Window
-
-    meta_n, meta_k, meta_bands, fam = _read_index_params(index_dir)
-    rows = meta_k // meta_bands
-    sh_q = shingle_table(queries, id_col, text_col, meta_n).select(
-        F.col(id_col).alias("doc_id"), "shingle"
-    )
-    sigs = minhash_table(
-        queries, id_col, text_col, meta_n, meta_k,
-        shingles=sh_q.withColumnRenamed("doc_id", id_col),
-        hash_family=fam,
-    )
-    q_bands = sigs.filter(
-        F.element_at("signature", 1) != F.lit(_family_sentinel(fam))
-    ).select(
-        F.col(id_col).alias("query_id"),
-        F.explode(
-            lsh_band_keys(F.col("signature"), meta_bands, rows)
-        ).alias("band"),
-    )
-    old_bands = spark.read.parquet(os.path.join(index_dir, "bands"))
+    n, kk, bands, fam = _read_index_params(index_dir)
+    q_bands, sh_q = _index_frames(queries, id_col, text_col, n, kk, bands, fam)
     cand = (
-        old_bands.join(F.broadcast(q_bands), on="band")
-        .select("query_id", F.col("doc_id").alias("neighbor_id"))
+        spark.read.parquet(os.path.join(index_dir, "bands"))
+        .join(F.broadcast(q_bands.withColumnRenamed("doc_id", "id_a")), on="band")
+        .select("id_a", F.col("doc_id").alias("id_b"))
         .distinct()
     )
     if exclude_self:
-        cand = cand.filter(F.col("query_id") != F.col("neighbor_id"))
-    # verification shingles: the query batch's own, plus ONLY the
-    # candidate index docs' — query text wins for ids in both (the
-    # admit's batch-wins rule)
-    cand_old = (
-        cand.select(F.col("neighbor_id").alias("doc_id"))
-        .distinct()
-        .join(sh_q.select("doc_id").distinct(), on="doc_id", how="left_anti")
-    )
-    old_sh = spark.read.parquet(os.path.join(index_dir, "shingles")).join(
-        F.broadcast(cand_old), on="doc_id", how="left_semi"
-    )
-    sh_all = sh_q.unionByName(old_sh)
-    verified = exact_jaccard(
-        cand.select(
-            F.col("query_id").alias("id_a"),
-            F.col("neighbor_id").alias("id_b"),
-        ),
-        sh_all,
-        id_col="doc_id",
-        broadcast_candidates=False,
-    ).filter(F.col("jaccard") >= min_jaccard)
+        cand = cand.filter(F.col("id_a") != F.col("id_b"))
+    verified = _verify_vs_index(spark, index_dir, cand, q_bands, sh_q, min_jaccard)
     w = Window.partitionBy("id_a").orderBy(F.desc("jaccard"), F.asc("id_b"))
     return (
         verified.withColumn("rank", F.row_number().over(w))
@@ -1027,6 +970,28 @@ def neardup_index_search(
             "rank",
         )
     )
+
+
+def _verify_vs_index(spark, index_dir, pairs, banded, sh, min_jaccard):
+    """Exact Jaccard of candidate ``pairs`` (``id_a`` a batch doc,
+    ``id_b`` an index or batch doc) over the batch's shingles ``sh``
+    plus ONLY the candidate index docs' — a broadcast semi-filter on
+    the corpus-sized shingle store (candidate ids are
+    near-dup-rate-sized). Batch wins: an id in both the batch
+    (``banded``) and the index is verified with the batch text.
+    Returns exact_jaccard rows with ``jaccard >= min_jaccard``."""
+    import os
+
+    cand_old = pairs.select(F.col("id_b").alias("doc_id")).join(
+        banded.select("doc_id").distinct(), on="doc_id", how="left_anti"
+    ).distinct()
+    old_sh = spark.read.parquet(os.path.join(index_dir, "shingles")).join(
+        F.broadcast(cand_old), on="doc_id", how="left_semi"
+    )
+    return exact_jaccard(
+        pairs, sh.unionByName(old_sh), id_col="doc_id",
+        broadcast_candidates=False,
+    ).filter(F.col("jaccard") >= min_jaccard)
 
 
 def _read_index_params(index_dir: str) -> tuple[int, int, int, str]:

@@ -15,6 +15,7 @@ Defaults are chosen for correctness-vs-oracle parity and for scale:
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -173,10 +174,21 @@ def local_table(spark: SparkSession, rows, schema):
     if not rows:
         return spark.createDataFrame([], st)
     pdf = pd.DataFrame([tuple(r) for r in rows], columns=st.names, dtype=object)
+    with arrow_pinned(spark):
+        return spark.createDataFrame(pdf, st)
+
+
+@contextmanager
+def arrow_pinned(spark: SparkSession):
+    """Arrow on for the driver<->JVM conversions inside the block
+    (``toPandas``, ``createDataFrame`` from pandas), the caller's
+    setting restored after. Vanilla sessions may have it off and would
+    silently take the ~10x slower Row path; every such conversion in
+    the engine runs under this one pin."""
     ak = "spark.sql.execution.arrow.pyspark.enabled"
     prev = spark.conf.get(ak, "false")
     spark.conf.set(ak, "true")
     try:
-        return spark.createDataFrame(pdf, st)
+        yield
     finally:
         spark.conf.set(ak, prev)

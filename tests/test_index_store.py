@@ -3,13 +3,16 @@ through both index families on tiny indexes: crash-injected replays
 converge to exactly one copy, rewrites refuse while an append is
 pending, the ledger survives compaction and removal, a foreign layout
 version fails loudly, and an index dir left mid-append in the on-disk
-format replays and then compacts."""
+format replays and then compacts. Both families' search and admit run
+one probe path, so they agree: the admit's vs-index pairs at a
+threshold are the search hits at or over it."""
 
 from __future__ import annotations
 
 import hashlib
 import json
 import os
+import re
 import shutil
 
 import numpy as np
@@ -367,3 +370,156 @@ def test_cli_append_requires_batch_id(capsys, verb):
         main([verb, "in.parquet", "idx", "--append"])
     assert exc.value.code == 2
     assert "--append requires --batch-id" in capsys.readouterr().err
+
+
+def _perturb(i: int, m: int) -> str:
+    """Doc i with m of its 120 words replaced: Jaccard to doc i falls
+    with m, so a threshold keeps some candidates and drops others."""
+    words = _doc(i).split()
+    for j in range(m):
+        words[(j * 120) // m] = f"x{i}-{j}"
+    return " ".join(words)
+
+
+@pytest.fixture(scope="module")
+def sem_probe_index(spark, tmp_path_factory):
+    """A 48-cell SemDeDup index over 600 vectors and a batch of noisy
+    copies of one indexed vector from every EVEN cid, so the batch
+    touches a scattered cid set of more than 10 cells."""
+    rng = np.random.default_rng(71)
+    d = str(tmp_path_factory.mktemp("probe") / "sem")
+    V.semdedup_index_build(
+        spark.createDataFrame(
+            [(i, _unit(rng)) for i in range(600)],
+            "vec_id long, embedding array<float>",
+        ),
+        d, k=48, sample=600, iters=5, seed=3,
+    )
+    first = {}
+    for r in spark.read.parquet(os.path.join(d, "cells")).collect():
+        if r["cid"] % 2 == 0 and r["vec_id"] < first.get(r["cid"], (1 << 62, None))[0]:
+            first[r["cid"]] = (r["vec_id"], r["embedding"])
+    rows = []
+    for j, (vid, v) in enumerate(sorted(first.values())):
+        # noise 0.05..0.2 per dim: cosine to the original ~0.98..0.78
+        w = np.array(v) + 0.05 * (1 + j % 4) * rng.normal(size=_DIM)
+        rows.append((10_000 + vid, [float(x) for x in w]))
+    batch = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    return d, batch
+
+
+def _pushed(plan: str) -> str:
+    """The pushed filters of every scan in ``plan`` (the plan string
+    truncates long ones, but an In or Or leads its filter)."""
+    return " ".join(re.findall(r"PushedFilters: \[(.*?), ReadSchema", plan))
+
+
+_AGREE_CASES = [
+    pytest.param("semdedup", engine, npb, id=f"semdedup-{engine}-{npb}")
+    for engine in ("expr", "gemm")
+    for npb in (1, 2)
+] + [pytest.param("neardup", None, None, id="neardup")]
+
+
+@pytest.mark.parametrize("family,engine,nprobe", _AGREE_CASES)
+def test_search_and_admit_agree(
+    spark, tmp_path, monkeypatch, sem_probe_index, family, engine, nprobe
+):
+    """Search is the admit with a top-k: on one index and one batch,
+    the admit's vs-index pairs at threshold t are exactly the search
+    hits scoring >= t (exclude_self, a k no candidate list reaches,
+    the same engine and nprobe; min_jaccard=t for near-dup). On
+    SemDeDup a scattered touched-cid set of more than 10 cids reaches
+    the cells scan as a range-OR pushed filter, never an In, on the
+    search and on the chunked admit."""
+    if family == "neardup":
+        d = str(tmp_path / "nd")
+        N.neardup_index_build(
+            spark.createDataFrame(
+                [(i, _doc(i)) for i in range(30)], "doc_id long, text string"
+            ),
+            d,
+        )
+        batch = spark.createDataFrame(
+            [(500 + i, _perturb(i, m)) for i, m in enumerate((0, 2, 6, 12, 24, 40))],
+            "doc_id long, text string",
+        )
+        t = 0.8
+        admit = {
+            (r["doc_id"], r["dup_of"]): r["jaccard"]
+            for r in N.incremental_neardup(spark, batch, d, threshold=t).collect()
+            if r["dup_of"] < 500
+        }
+        hits = {
+            (r["query_id"], r["neighbor_id"]): r["jaccard"]
+            for r in N.neardup_index_search(
+                spark, batch, d, k=100, min_jaccard=t, exclude_self=True
+            ).collect()
+        }
+        assert admit == hits
+        # the threshold did real work: some candidates fell below it
+        loose = N.neardup_index_search(spark, batch, d, k=100, exclude_self=True)
+        assert 0 < len(admit) < loose.count()
+        return
+
+    d, batch = sem_probe_index
+    calls = []
+    kernel = V._co_cell_gemm
+
+    def spy(spark_, pdf, cells, *args):
+        calls.append(
+            (sorted({int(c) for c in pdf["cid"]}),
+             _pushed(cells._jdf.queryExecution().executedPlan().toString()))
+        )
+        return kernel(spark_, pdf, cells, *args)
+
+    monkeypatch.setattr(V, "_co_cell_gemm", spy)
+    t = 0.9
+    admit = {
+        (r["vec_id"], r["dup_of"]): r["cos_sim"]
+        for r in V.incremental_semdedup(
+            spark, batch, d, threshold=t, engine=engine, nprobe=nprobe,
+            batch_chunk_rows=16,
+        ).collect()
+        if r["dup_of"] < 10_000
+    }
+    admit_calls, calls[:] = list(calls), []
+    search = V.semdedup_index_search(
+        spark, batch, d, k=600, nprobe=nprobe, exclude_self=True, engine=engine
+    )
+    hits = {
+        (r["query_id"], r["neighbor_id"]): r["cos_sim"]
+        for r in search.collect()
+        if r["cos_sim"] >= t
+    }
+    assert set(admit) == set(hits) and admit
+    for p in admit:
+        assert abs(admit[p] - hits[p]) < 1e-12
+    # the threshold did real work: some noisy copies score below it
+    assert len(admit) < batch.count() * nprobe
+
+    def scattered(cids):
+        return len(cids) > 10 and cids[-1] - cids[0] + 1 > len(cids)
+
+    if engine == "gemm":
+        assert len(admit_calls) > 1  # chunked
+        search_calls = calls
+    else:
+        assert not admit_calls and not calls
+        touched = sorted({
+            r["cid"]
+            for r in V._sem_assign(
+                batch, spark.read.parquet(os.path.join(d, "centroids")),
+                "vec_id", "embedding", nprobe,
+            ).collect()
+        })
+        search_calls = [
+            (touched, _pushed(search._jdf.queryExecution().executedPlan().toString()))
+        ]
+    checked = (admit_calls, search_calls) if engine == "gemm" else (search_calls,)
+    for recorded in checked:
+        assert any(scattered(cids) for cids, _ in recorded), recorded
+        for cids, pushed in recorded:
+            assert "In(cid" not in pushed, pushed
+            if scattered(cids):
+                assert "Or(" in pushed, pushed

@@ -5,6 +5,8 @@ with KNOWN near-dup pairs above and decoys below the threshold)."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -159,12 +161,13 @@ def _assign_cells(spark, engine, vecs, cents, nprobe):
     elif engine == "gemm":
         out = ivf_assign_gemm(vecs, cents, nprobe=nprobe)
     else:
-        out, touched = _sem_assign_local(
+        out, cell_rows = _sem_assign_local(
             spark, vecs, cents, "vec_id", "embedding", nprobe
         )
     rows = out.collect()
     if engine == "gemm_driver":
-        assert touched == sorted({r["cid"] for r in rows})
+        # the touched-cid -> probe-row counts ride the driver collect
+        assert cell_rows == dict(Counter(r["cid"] for r in rows))
         # the driver path's norm column is the JVM norm() fold, bit for
         # bit (the oracle-checked prenormed cosines read it)
         want = {
@@ -177,16 +180,36 @@ def _assign_cells(spark, engine, vecs, cents, nprobe):
     return {(r["vec_id"], r["cid"], r["rank"] if nprobe > 1 else 0) for r in rows}
 
 
+@pytest.fixture(scope="module")
+def planted_cells(spark):
+    """The planted corpus, its six planted centroids, and the
+    expression engine's cells on it per nprobe, computed once per n
+    for the module (deterministic, so test order changes nothing)."""
+    df, _, _ = _mk_embeddings(spark)
+    planted = df.filter(F.col("vec_id") < 6).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
+    )
+    ref: dict = {}
+
+    def expr_cells(n):
+        if n not in ref:
+            ref[n] = _assign_cells(spark, "expr", df, planted, n)
+        return ref[n]
+
+    return df, planted, expr_cells
+
+
 @pytest.mark.parametrize("nprobe", [1, 2, pytest.param(None, id="k")])
 @pytest.mark.parametrize("engine", ["expr", "gemm", "gemm_driver"])
-def test_cell_assignment_engines_agree(spark, engine, nprobe):
+def test_cell_assignment_engines_agree(spark, planted_cells, engine, nprobe):
     """One cell-assignment semantics for the expression engine
     (ivf_assign), the GEMM engine (ivf_assign_gemm) and the GEMM
     kernel's driver path: the same (vector, cid, rank) set at
     nprobe 1, 2 and k — an exact tie goes to the smaller cid, a
     zero-norm vector or centroid scores 0 against every cell, and
     ranks run nearest first. On the planted corpus every engine
-    agrees with the expression engine cell for cell."""
+    agrees with the expression engine cell for cell. A NULL vector
+    has no cell: every engine refuses it, naming the vector column."""
     vecs = spark.createDataFrame(_CELL_VECS, "vec_id int, embedding array<float>")
     cents = spark.createDataFrame(_CELL_CENTS, "cid int, cv array<float>")
     n = nprobe or len(_CELL_CENTS)
@@ -195,15 +218,16 @@ def test_cell_assignment_engines_agree(spark, engine, nprobe):
     }
     assert _assign_cells(spark, engine, vecs, cents, n) == want
 
+    with_null = vecs.unionByName(
+        spark.createDataFrame([(6, None)], "vec_id int, embedding array<float>")
+    )
+    with pytest.raises(Exception, match="embedding is NULL"):
+        _assign_cells(spark, engine, with_null, cents, n)
+
     if engine != "expr":
-        df, _, _ = _mk_embeddings(spark)
-        planted = df.filter(F.col("vec_id") < 6).select(
-            F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
-        )
+        df, planted, expr_cells = planted_cells
         n = nprobe or 6
-        assert _assign_cells(spark, engine, df, planted, n) == _assign_cells(
-            spark, "expr", df, planted, n
-        )
+        assert _assign_cells(spark, engine, df, planted, n) == expr_cells(n)
 
 
 def test_ivf_assign_multiprobe_plan_has_no_window_or_shuffle(spark):
@@ -1797,7 +1821,7 @@ def test_semdedup_index_search_driver_assign(tmp_path, spark):
     )
 
 
-def test_semdedup_index_search_gemm_engine(tmp_path, spark):
+def test_semdedup_search_gemm_engine_matches_expr(tmp_path, spark):
     """engine='gemm' (the batch-serving BLAS path) returns the SAME
     ranking as the expr engine — ties included — on float32 and int8
     indexes, with and without exclude_self; cosine values agree to

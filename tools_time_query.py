@@ -1,6 +1,11 @@
 #!/usr/bin/env python
 """Time one or more declared queries in isolation (noop sink), mirroring
-bench.py methodology. Usage: python tools_time_query.py q1 [q2 ...] [--runs N]
+bench.py methodology. Usage: python tools_time_query.py q1 [q2 ...] [--runs=N]
+
+Each query warms until its last three runs are within 5% of their
+median (at most WARMUP_CAP runs); the output line lists the warm-up
+runs and says whether that converged, so a median taken on a still
+falling JVM is visible.
 """
 import os
 import statistics
@@ -11,6 +16,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from siskin_spark.session import get_spark  # noqa: E402
+
+WARMUP_CAP = 15
 
 
 def main() -> None:
@@ -53,13 +60,19 @@ def main() -> None:
     for name in args:
         fn = qs[name]
         spark.sparkContext.setJobDescription(f"warm {name}")
+        # warm until the JVM has settled: the last three runs within 5%
+        # of their median (a looser rule stopped while timed runs still
+        # fell 25-40%), capped so a noisy host cannot loop forever
         wt = []
-        while len(wt) < 6:
+        converged = False
+        while not converged and len(wt) < WARMUP_CAP:
             w0 = time.perf_counter()
             materialize(fn(spark, sf_dir))
             wt.append(time.perf_counter() - w0)
-            if len(wt) >= 3 and wt[-1] > 0.8 * wt[-2] and wt[-2] > 0.8 * wt[-3]:
-                break
+            med = statistics.median(wt[-3:])
+            converged = len(wt) >= 3 and all(
+                abs(w - med) <= 0.05 * med for w in wt[-3:]
+            )
         spark._jvm.System.gc()
         jit_quiesce()
         ts = []
@@ -71,7 +84,8 @@ def main() -> None:
             spark._jvm.System.gc()
         print(
             f"{name}: median {statistics.median(ts):.4f}  runs {ts}  "
-            f"warmups {[round(w, 3) for w in wt]}"
+            f"warmups {[round(w, 3) for w in wt]}  "
+            f"warmup {'converged' if converged else 'NOT converged'}"
         )
     spark.stop()
 
