@@ -1768,11 +1768,10 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = staged.withColumn(
         "_fnz", F.filter(F.col("_toks"), lambda t: F.length(t) > 0)
     ).withColumn("_nf", F.size(F.col("_fnz")))
-    # staged DataFrame form of the top-bigram signal: the Column fold
-    # is JIT-bimodal at scale (52s vs 11s over 3M docs on the same
-    # box); the staged run-length shape is the stable-fast one.
-    # r13 opt: grams come from the staged _toks (the oracle's own
-    # concat formula) instead of the overlapping-lookahead regex.
+    # top-bigram signal (the let-bound run-length form; a struct fold
+    # was JIT-bimodal at scale). r13 opt: grams come from the staged
+    # _toks (the oracle's own concat formula) instead of the
+    # overlapping-lookahead regex.
     staged = X.with_top_ngram_frac(staged, toks_col="_toks")
     # C23 BM25 topical relevance rides the same per-doc slot (≤50-query
     # registry policy): fixed topic seed, stats from ONE bounded

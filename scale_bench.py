@@ -331,13 +331,13 @@ def _semdedup_leg(spark, vectors, results: dict, timed) -> None:
     hot-cell guard the skewed case is sum(cell²) ≈ 2·(n/2)² cosine
     pairs on two join keys — 2.2e12 pairs at 3M vectors, unrunnable.
 
-    r10: the skewed case runs BOTH guard families — the r9
-    secondary-hash split and the new sub-centroid split (the default)
-    — and scores each against the PLANTED near-dup truth (the
-    corpus's (id-1, id) pairs at cos >= 0.95), recording recall where
-    duplicates concentrate. Pair counts come from the parquet the
-    timed run writes (ADVICE r9: the old ``.count()`` re-executed the
-    whole eager pipeline a third time just to count)."""
+    The skewed case runs the sub-centroid split and scores it against
+    the PLANTED near-dup truth (the corpus's (id-1, id) pairs at cos
+    >= 0.95), recording recall where duplicates concentrate. (Its
+    comparison against a hash-only split is in ``SCALE_r10_30M.json``.)
+    Pair counts come from the parquet the timed run writes (ADVICE r9:
+    the old ``.count()`` re-executed the whole eager pipeline a third
+    time just to count)."""
     from siskin_spark.functions.vectors import (
         cosine,
         ivf_fit_centroids,
@@ -421,19 +421,18 @@ def _semdedup_leg(spark, vectors, results: dict, timed) -> None:
     truth = spark.read.parquet(truth_dir)
     results["semdedup_planted_truth_pairs"] = truth.count()
 
-    def hot(mode: str):
-        return lambda: semantic_dedup_pairs(
+    def hot():
+        return semantic_dedup_pairs(
             vectors, skew, threshold=0.95, engine="gemm",
-            max_cell_rows=max_cell, hot_cell=mode,
+            max_cell_rows=max_cell,
         )
 
-    for mode in ("split", "subcentroid"):
-        t, pairs = run_writing(hot(mode), f"hot_{mode}")
-        results[f"semdedup_hot_{mode}_s"] = t
-        results[f"semdedup_hot_{mode}_pairs"] = pairs.count()
-        results[f"semdedup_hot_{mode}_planted_found"] = truth.join(
-            pairs, on=["id_a", "id_b"], how="left_semi"
-        ).count()
+    t, pairs = run_writing(hot, "hot_subcentroid")
+    results["semdedup_hot_subcentroid_s"] = t
+    results["semdedup_hot_subcentroid_pairs"] = pairs.count()
+    results["semdedup_hot_subcentroid_planted_found"] = truth.join(
+        pairs, on=["id_a", "id_b"], how="left_semi"
+    ).count()
     cents.unpersist()
     skew.unpersist()
 
@@ -1534,7 +1533,7 @@ def _curate_chain_leg(spark, docs, results: dict, timed) -> None:
         dup_line_fraction,
         quality_keep,
         repetition_keep,
-        top_ngram_char_fraction,
+        with_top_ngram_frac,
     )
     from siskin_spark.operators import curation as cur
     from siskin_spark.operators.dedup import snapshot_earliest
@@ -1574,12 +1573,15 @@ def _curate_chain_leg(spark, docs, results: dict, timed) -> None:
         ).drop("_uk")
 
     def stage_quality(df):
-        return df.filter(
-            quality_keep(F.col("text"))
-            & repetition_keep(
-                dup_line_fraction("text", sep=" "),
-                top_ngram_char_fraction("text"),
+        return (
+            with_top_ngram_frac(df, out_col="_top_ngram")
+            .filter(
+                quality_keep(F.col("text"))
+                & repetition_keep(
+                    dup_line_fraction("text", sep=" "), F.col("_top_ngram")
+                )
             )
+            .drop("_top_ngram")
         )
 
     def stage_line(df):
@@ -1877,7 +1879,7 @@ def main() -> None:
             vecs_only = spark.read.parquet(os.path.join(CORPUS, "vectors"))
             _semdedup_leg(spark, vecs_only, results, timed_only)
         elif os.environ["SCALE_ONLY"] == "r10":
-            # round-10 additions: sub-centroid vs hash hot-cell recall,
+            # round-10 additions: sub-centroid hot-cell recall,
             # affected-docs span rebuild, 100K-vocab OOV join form, the
             # composed curate chain — with the host controls first
             _control_leg(spark, results, timed_only)
@@ -2287,9 +2289,8 @@ def main() -> None:
     results["ai_chain_s"] = min(timed(ai_chain()) for _ in range(3))
 
     # -- Structured Streaming throughput (availableNow) ----------------
-    # Two shapes: the Python-state stateful dedup (the engine-extension
-    # path — applyInPandasWithState, Arrow batches, state store) and
-    # the JVM-native watermarked windowed aggregation. min-of-2 with a
+    # Two shapes: the JVM-native keep-first dedup and the JVM-native
+    # watermarked windowed aggregation. min-of-2 with a
     # FRESH checkpoint each run (a reused checkpoint would no-op: the
     # state store remembers every emitted key — that exactly-once
     # bookkeeping is the feature, but it makes rerun timings vacuous);
@@ -2297,10 +2298,7 @@ def main() -> None:
     import tempfile
 
     from siskin_spark.streaming.incremental import windowed_counts
-    from siskin_spark.streaming.stateful import (
-        streaming_dedup_first,
-        streaming_dedup_native,
-    )
+    from siskin_spark.streaming.stateful import streaming_dedup_native
 
     n_stream = int(os.environ.get("SCALE_STREAM_ROWS", 2_000_000))
     stream_dir = os.path.join(CORPUS, f"stream_src2_{n_stream}")
@@ -2328,19 +2326,9 @@ def main() -> None:
         finally:
             shutil.rmtree(ckpt, ignore_errors=True)
 
-    def dedup_sink(src, ckpt):
-        return (
-            streaming_dedup_first(src, ["doi"])
-            .writeStream.format("noop")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .outputMode("append")
-            .start()
-        )
-
     def dedup_native_sink(src, ckpt):
-        # same keep-first dedup, JVM dropDuplicatesWithinWatermark:
-        # the production path (bounded state, zero Python in the loop)
+        # keep-first dedup, JVM dropDuplicatesWithinWatermark: the
+        # production path (bounded state, zero Python in the loop)
         return (
             streaming_dedup_native(
                 src, ["doi"], event_time_col="ts", watermark="1 hour"
@@ -2365,7 +2353,6 @@ def main() -> None:
             .start()
         )
 
-    results["stream_dedup_s"] = min(run_stream(dedup_sink) for _ in range(2))
     results["stream_dedup_native_s"] = min(
         run_stream(dedup_native_sink) for _ in range(2)
     )
@@ -2447,8 +2434,6 @@ def main() -> None:
         "ai_chain_s": round(results["ai_chain_s"], 2),
         "ai_chain_rps": round(n_records / results["ai_chain_s"]),
         "stream_rows": n_stream,
-        "stream_dedup_s": round(results["stream_dedup_s"], 2),
-        "stream_dedup_rps": round(n_stream / results["stream_dedup_s"]),
         "stream_dedup_native_s": round(results["stream_dedup_native_s"], 2),
         "stream_dedup_native_rps": round(
             n_stream / results["stream_dedup_native_s"]

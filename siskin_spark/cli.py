@@ -217,12 +217,11 @@ def main(argv: list[str] | None = None) -> int:
                       "--engine expr, whose per-pair folds have no "
                       "per-group memory bound to protect)")
     p_sd.add_argument("--hot-cell", default="subcentroid",
-                      choices=["subcentroid", "split", "raise"],
-                      help="how hot cells split: subcentroid = fitted "
-                      "sub-centroids, recall-preserving (default); split "
-                      "= seeded hash, ~1/n_subs recall in split cells "
-                      "(for known-junk hot cells); raise = refuse with "
-                      "the cell histogram")
+                      choices=["subcentroid", "raise"],
+                      help="what a cell above --max-cell-rows does: "
+                      "subcentroid = split on sub-centroids fitted to a "
+                      "bounded sample, recall-preserving (default); "
+                      "raise = refuse with the cell histogram")
     p_sd.add_argument("--engine", default="gemm", choices=["expr", "gemm"],
                       help="within-cell compare: gemm = BLAS scale path")
     p_sd.add_argument("--seed", type=int, default=7)
@@ -939,7 +938,7 @@ def main(argv: list[str] | None = None) -> int:
             dup_line_fraction,
             quality_keep,
             repetition_keep,
-            top_ngram_char_fraction,
+            with_top_ngram_frac,
         )
         from siskin_spark.operators import curation as cur
 
@@ -975,11 +974,15 @@ def main(argv: list[str] | None = None) -> int:
             ).drop("_url_key")
             staged_any = True
         if args.quality:
-            df = df.filter(
-                quality_keep(F.col(tc))
-                & repetition_keep(
-                    dup_line_fraction(tc), top_ngram_char_fraction(tc)
+            df = (
+                with_top_ngram_frac(df, text_col=tc, out_col="_top_ngram")
+                .filter(
+                    quality_keep(F.col(tc))
+                    & repetition_keep(
+                        dup_line_fraction(tc), F.col("_top_ngram")
+                    )
                 )
+                .drop("_top_ngram")
             )
             staged_any = True
         if args.line_dedup:

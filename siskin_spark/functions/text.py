@@ -452,73 +452,6 @@ def hashed_bow_logit(
     )
 
 
-def top_ngram_char_fraction(
-    text: Column | str, toks: Column | None = None, n: int = 2
-) -> Column:
-    """Gopher repetition rule: fraction of the document's characters
-    covered by its most frequent word n-gram (count * n-gram length /
-    total chars; Rae et al. 2021 §A1.1 'top n-gram fraction' — SEO spam
-    and template text repeat one phrase over and over).
-
-    Row-local, shuffle-free: the n-grams are sorted in-row and a single
-    ``aggregate`` fold counts the longest equal run — equivalent to the
-    explode + groupBy + window formulation (which the oracle SQL uses
-    independently) but without its two corpus-sized shuffles, since
-    per-document state never needs to leave the row. Ties on count
-    resolve to the lexicographically larger n-gram in both forms.
-    Overlapping occurrences each bill the full n-gram length, so the
-    value can exceed 1.0 for degenerate one-phrase documents — callers
-    threshold well below that (Gopher drops at > 0.20 for 2-grams).
-
-    By default the n-grams come from one lookahead-capture regex pass
-    over the text (codegen'd JVM regex, same trick as
-    ``operators/neardup.py:shingle_table`` — measured 6x over the
-    ``transform``/``slice`` HOF form, which Catalyst interprets per
-    element). Like there, the regex assumes single-space-separated
-    text; pass ``toks`` for custom tokenization and the general
-    (slower) slicing path is used instead.
-    """
-    c = F.col(text) if isinstance(text, str) else text
-    if toks is None:
-        pat = "(?=((" + r"\S+ " * (n - 1) + r"\S+)))\S+ ?"
-        grams = F.array_sort(F.regexp_extract_all(c, F.lit(pat), 1))
-    else:
-        from siskin_spark.functions.similarity import word_shingles
-
-        grams = F.array_sort(word_shingles(toks, n))
-    zero = F.struct(
-        F.lit("").alias("prev"),
-        F.lit(0).alias("run"),
-        F.lit(0).alias("best"),
-        F.lit("").alias("bg"),
-    )
-
-    def step(acc, x):
-        run = F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1))
-        better = (run > acc["best"]) | ((run == acc["best"]) & (x > acc["bg"]))
-        return F.struct(
-            x.alias("prev"),
-            run.alias("run"),
-            F.when(better, run).otherwise(acc["best"]).alias("best"),
-            F.when(better, x).otherwise(acc["bg"]).alias("bg"),
-        )
-
-    top = F.aggregate(grams, zero, step)
-    # guard only on text length: with no grams the fold's best stays 0,
-    # so the numerator is already 0.0 — re-testing size(grams) here
-    # would evaluate the whole extraction a second time per row. The
-    # let binds the fold result once: .best and .bg as raw references
-    # would each re-run the entire fold (and its gram extraction).
-    return let_once(
-        top,
-        lambda s: F.when(
-            F.length(c) > 0,
-            (s["best"] * F.length(s["bg"])).cast("double")
-            / F.length(c).cast("double"),
-        ).otherwise(F.lit(0.0)),
-    )
-
-
 def repetition_keep(
     dup_line_frac: Column,
     top_ngram_frac: Column,
@@ -527,7 +460,10 @@ def repetition_keep(
 ) -> Column:
     """Gopher repetition gate (Rae et al. 2021 Table A1): drop a
     document when too much of it is duplicated lines or one repeated
-    n-gram. Combines with :func:`quality_keep` for the full
+    n-gram. ``dup_line_frac`` is :func:`dup_line_fraction`;
+    ``top_ngram_frac`` is the column :func:`with_top_ngram_frac`
+    stages (a DataFrame operator, so filter on its ``out_col`` after
+    staging it). Combines with :func:`quality_keep` for the full
     quality+repetition filter; thresholds are the published 2-gram
     defaults."""
     return (dup_line_frac <= max_dup_line_frac) & (
@@ -542,39 +478,50 @@ def with_top_ngram_frac(
     out_col: str = "top_2gram_frac",
     toks_col: str | None = None,
 ):
-    """DataFrame-level top-n-gram char fraction (same value as
-    :func:`top_ngram_char_fraction`, different physical shape): stages
-    the sorted gram array, the run-start positions, and the run list
-    as MATERIALIZED columns across chained projections, then takes
-    ``array_max`` over (count, gram) structs.
+    """Gopher repetition rule as a DataFrame operator: the fraction of
+    each document's characters covered by its most frequent word
+    n-gram (count * n-gram length / total chars; Rae et al. 2021
+    §A1.1 'top n-gram fraction' — SEO spam and template text repeat
+    one phrase over and over). Ties on count resolve to the
+    lexicographically larger n-gram, as in the explode + groupBy
+    formulation the oracle SQL uses. Overlapping occurrences each bill
+    the full n-gram length, so the value can exceed 1.0 for degenerate
+    one-phrase documents — callers threshold well below that (Gopher
+    drops at > 0.20 for 2-grams). NULL or empty text, and text with
+    fewer than ``n`` tokens, score 0.0.
 
-    Why a DataFrame operator and not a Column: the run-length
-    formulation needs ``element_at(grams, i)`` inside lambdas, and as
-    a single inlined expression Catalyst would re-evaluate the whole
-    gram extraction per element (measured 457s vs 3s on a 50K-doc
-    slice). Staged columns are attribute references — O(1) in the
-    lambda — and CollapseProject keeps the stages separate because
-    inlining would duplicate a non-cheap expression. The struct-fold
-    Column form is portable but JIT-sensitive: its per-element
-    interpreted eval ran 52s vs 11s for this staged form over 3M docs
-    on the same box (SCALE.md, curation section).
+    Shape: ONE row-local projection, no shuffle. The sorted gram
+    array, the run-start positions and the best (count, gram) run are
+    each bound once with :func:`let_once`, so the run-length
+    formulation's ``element_at(grams, i)`` inside lambdas is an O(1)
+    slot access instead of a re-run of the gram extraction per element
+    (measured 457s vs 3s on a 50K-doc slice when unbound). Because the
+    value is one expression, a filter on ``out_col`` stays linear when
+    Catalyst pushes it below the projection and inlines the alias: a
+    form that staged the same arrays as chained projected columns (to
+    get attribute references) was re-inlined per element by that
+    pushdown, 10.0 s vs 0.10 s for this form on a 2K-doc filter, and
+    1.71 s vs 2.08 s for this form projected over 60K docs (4 cores).
+    (A struct-fold Column form ran JIT-bimodal, 9 s vs 52-65 s over
+    3M docs across JVMs — SCALE.md, curation section — and was
+    retired.)
 
-    Appends ``out_col``; all other columns pass through. Intermediate
-    ``_tng_*`` columns are dropped.
+    By default the grams come from one lookahead-capture regex pass
+    over the text (codegen'd JVM regex, same trick as
+    ``operators/neardup.py:shingle_table``), which assumes
+    single-space-separated text. Appends ``out_col``; all other
+    columns pass through.
 
-    ``toks_col`` (r13 opt): when the caller has already staged the
-    single-space token split, build the grams by concatenating
-    consecutive tokens (the oracle's own formula: ``toks[i] || ' ' ||
-    toks[i+1]``) instead of re-scanning the text with the overlapping
-    regex — one array transform versus a backtracking lookahead regex
-    per row, same values wherever token separators are single spaces
-    (which is what the regex form assumed too).
+    ``toks_col``: build the grams from a token array column the caller
+    has already staged, by concatenating consecutive tokens (the
+    oracle's own formula: ``toks[i] || ' ' || toks[i+1]``), instead of
+    re-scanning the text with the overlapping regex — one array
+    transform versus a backtracking lookahead regex per row, same
+    values wherever token separators are single spaces. This is also
+    the path for custom tokenization: stage any token array and pass
+    its name.
     """
     c = F.col(text_col)
-    pat = "(?=((" + r"\S+ " * (n - 1) + r"\S+)))\S+ ?"
-    g = F.col("_tng_g")
-    st = F.col("_tng_starts")
-    runs = F.col("_tng_runs")
     if toks_col is not None:
         toks = F.col(toks_col)
         grams = F.when(
@@ -587,44 +534,44 @@ def with_top_ngram_frac(
             ),
         ).otherwise(F.array().cast("array<string>"))
     else:
+        pat = "(?=((" + r"\S+ " * (n - 1) + r"\S+)))\S+ ?"
         grams = F.regexp_extract_all(c, F.lit(pat), 1)
-    staged = (
-        df.withColumn("_tng_g", F.array_sort(grams))
-        .withColumn(
-            "_tng_starts",
-            # sequence(1, 0) DESCENDS in Spark — guard the empty case
-            F.when(
-                F.size(g) >= 1,
-                F.filter(
-                    F.sequence(F.lit(1), F.size(g)),
-                    lambda i: (i == 1)
-                    | (F.element_at(g, i) != F.element_at(g, i - 1)),
+
+    def frac(top):
+        # array_max of no runs is NULL: no grams score 0.0
+        return F.when(
+            top.isNotNull() & (F.length(c) > 0),
+            (top["c"] * F.length(top["g"])).cast("double")
+            / F.length(c).cast("double"),
+        ).otherwise(F.lit(0.0))
+
+    def over_sorted(g):
+        # sequence(1, 0) DESCENDS in Spark — guard the empty case
+        starts = F.when(
+            F.size(g) >= 1,
+            F.filter(
+                F.sequence(F.lit(1), F.size(g)),
+                lambda i: (i == 1)
+                | (F.element_at(g, i) != F.element_at(g, i - 1)),
+            ),
+        ).otherwise(F.array().cast("array<int>"))
+        return let_once(
+            starts,
+            lambda st: let_once(
+                F.array_max(
+                    F.zip_with(
+                        st,
+                        F.slice(F.concat(st, F.array(F.size(g) + 1)), 2, F.size(st)),
+                        lambda s, e: F.struct(
+                            (e - s).alias("c"), F.element_at(g, s).alias("g")
+                        ),
+                    )
                 ),
-            ).otherwise(F.array().cast("array<int>")),
-        )
-        .withColumn(
-            "_tng_runs",
-            F.zip_with(
-                st,
-                F.slice(F.concat(st, F.array(F.size(g) + 1)), 2, F.size(st)),
-                lambda s, e: F.struct(
-                    (e - s).alias("c"), F.element_at(g, s).alias("g")
-                ),
+                frac,
             ),
         )
-        .withColumn(
-            out_col,
-            let_once(
-                F.array_max(runs),
-                lambda top: F.when(
-                    (F.size(runs) > 0) & (F.length(c) > 0),
-                    (top["c"] * F.length(top["g"])).cast("double")
-                    / F.length(c).cast("double"),
-                ).otherwise(F.lit(0.0)),
-            ),
-        )
-    )
-    return staged.drop("_tng_g", "_tng_starts", "_tng_runs")
+
+    return df.withColumn(out_col, let_once(F.array_sort(grams), over_sorted))
 
 
 #: query parameters stripped by canonical_url: click-tracking noise

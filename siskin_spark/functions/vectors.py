@@ -795,20 +795,19 @@ def semantic_dedup_pairs(
       rows only, ``mapInPandas``). Semantically-close pairs stay
       co-located, so recall degrades like RAISING K — the trade
       SemDeDup already accepts — instead of like random partitioning
-      (the r9 skewed leg measured the hash split at exactly 1/s of
-      the planted duplicate pairs: 753 of 59,962 at s=75). Sub-cells
+      (a hash split of the same cells kept exactly 1/s of the planted
+      duplicate pairs: 753 of 59,962 at s=75, in 65.0 s against this
+      mode's 30,148 in 41.3 s, ``SCALE_r10_30M.json``). Sub-cells
       that geometry cannot balance (thousands of IDENTICAL vectors
       collapse onto one sub-centroid) are re-bounded by a RESIDUAL
       seeded-hash split, so the pair/memory bound always holds; only
       where vectors are indistinguishable does recall fall back to
       the hash trade (and identical vectors pair within ANY slice of
       themselves, so the residual loss hits exact copies' pair COUNT,
-      not whether each doc appears in some pair).
-    - ``hot_cell='split'``: the seeded secondary hash alone — skips
-      the sample/fit/assign pass, but recall inside a split cell is
-      ~1/n_subs of its pairs uniformly at random: the right pick only
-      when hot cells are known junk (near-zero vectors), not
-      duplicates.
+      not whether each doc appears in some pair). A cell whose sample
+      is too small to fit its sub-centroids (fewer than 2 rows per
+      sub-centroid, e.g. ``subcentroid_sample=0``) falls back to the
+      same seeded-hash split for the whole cell.
     - ``hot_cell='raise'`` refuses with the cell histogram.
 
     ``max_cell_rows=None`` disables the guard (and the histogram
@@ -829,9 +828,9 @@ def semantic_dedup_pairs(
     (id_col = ``id_a``/``id_b`` orientation already matches) to keep
     one doc per duplicate relation.
     """
-    if hot_cell not in ("subcentroid", "split", "raise"):
+    if hot_cell not in ("subcentroid", "raise"):
         raise ValueError(
-            f"hot_cell must be 'subcentroid', 'split' or 'raise', got {hot_cell!r}"
+            f"hot_cell must be 'subcentroid' or 'raise', got {hot_cell!r}"
         )
     if engine not in ("expr", "gemm"):
         raise ValueError(f"engine must be 'expr' or 'gemm', got {engine!r}")
@@ -877,11 +876,12 @@ def semantic_dedup_pairs(
             f"semantic_dedup_pairs: {len(hot)} cell(s) exceed "
             f"max_cell_rows={max_cell_rows}; launching the within-cell "
             f"self-join would put sum(n^2) pairs on single join keys. "
-            f"Heaviest cells (rows, cid): {top[:10]}. Use hot_cell='split', "
-            f"raise k (more/tighter cells), or raise max_cell_rows."
+            f"Heaviest cells (rows, cid): {top[:10]}. Use "
+            f"hot_cell='subcentroid' (split on fitted sub-centroids), raise "
+            f"k (more/tighter cells), or raise max_cell_rows."
         )
     sub_cents: dict[int, "object"] = {}
-    if hot and hot_cell == "subcentroid":
+    if hot:
         import numpy as np
 
         counts = {int(r["cid"]): int(r["_cn"]) for r in hist}
@@ -920,8 +920,7 @@ def semantic_dedup_pairs(
                     Xs, hot[c], subcentroid_iters, split_seed
                 )
 
-    # hash-split cells: all hot cells in 'split' mode, plus any
-    # sample-starved fallback cells in 'subcentroid' mode
+    # hash-split cells: the sample-starved fallback cells
     hash_cells = {c: s for c, s in hot.items() if c not in sub_cents}
     if hash_cells:
         spark = v.sparkSession
@@ -1066,27 +1065,6 @@ def semantic_dedup_pairs(
         )
         .filter(F.col("cos_sim") >= threshold)
     )
-
-
-def semantic_dedup(
-    emb: DataFrame,
-    centroids: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    **pair_kwargs,
-) -> DataFrame:
-    """Apply :func:`semantic_dedup_pairs` and keep one embedding per
-    semantic-duplicate relation (keep-first: the smaller id wins, the
-    larger drops — one anti-join over the duplicate-rate-sized drop
-    set, the corpus never shuffles). ``pair_kwargs`` pass through to
-    the pair search (hot-cell guard, engine family)."""
-    from siskin_spark.operators.neardup import keep_canonical
-
-    pairs = semantic_dedup_pairs(
-        emb, centroids, threshold, id_col, vec_col, **pair_kwargs
-    )
-    return keep_canonical(emb, pairs, id_col=id_col)
 
 
 # --- incremental semantic dedup: admit a new embedding batch against -

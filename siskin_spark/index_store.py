@@ -185,8 +185,8 @@ def sweep_pending(index_dir: str, family: str, meta: dict, batch_id: str) -> Non
     """Remove whatever a crashed append of a still-pending ``batch_id``
     placed: its ``batch-<tag>-`` part files in every table and its
     staging dirs. For a caller that must READ the index before it
-    replays the append (the stream gate admits first: a half-placed
-    batch would pair with its own indexed copy). No-op unless the
+    replays the append (the stream gate admits first, and must admit
+    against the index the first attempt saw). No-op unless the
     batch is pending; the replayed :func:`append` places it again."""
     if batch_id not in meta.get("pending", []):
         return

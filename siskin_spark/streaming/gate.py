@@ -18,13 +18,29 @@ id — the survivors land at ``out_dir/gate_batch=<id>`` with
 ``mode=overwrite`` (the standard idempotent-foreachBatch pattern), and
 the index append passes ``batch_id='stream-<id>'`` into the meta
 ledger, so a replay overwrites the same files and no-ops the append
-instead of double-placing vectors. Replaying an ALREADY-APPENDED batch
-also re-admits it against an index that now CONTAINS it — every batch
-vector would pair with its own indexed copy and the survivor set would
-collapse to empty, clobbering the good output. The writer therefore
-consults the ledger FIRST and skips the whole batch when its id is
-already committed (the crash-between-write-and-ledger case replays
-correctly: files are overwritten, the pending marker is swept).
+instead of double-placing vectors. The admit itself drops a hit on the
+probe's own id, so a batch never pairs with its own indexed copy. Two
+more rules keep a replay from judging the batch against an index the
+first attempt did not see:
+
+- A COMMITTED batch is skipped whole: its survivors are already landed
+  and indexed, so the replay is a no-op that launches no Spark job and
+  leaves the landed files untouched. Re-admitting would run against an
+  index that later batches may have extended, and a multi-probe admit
+  is not symmetric (this batch's probes can reach a later survivor
+  whose own probes never reached this batch's cell), so the rewritten
+  survivors could disagree with the copy the index holds.
+- A CRASHED append (id still ``pending``, files possibly half-placed)
+  is swept BEFORE the admit. The half-placed rows are this batch's
+  own survivors under other ids, and the admit would compare the batch
+  against them through the vs-index leg, which probes ``nprobe``
+  cells, while the first attempt compared batch rows with each other
+  only within their primary cell. Two survivors in neighbouring cells
+  would then drop each other on the replay.
+
+Both rules are pinned in ``tests/test_vectors.py``
+(``test_streaming_semdedup_gate``,
+``test_streaming_semdedup_gate_crash_replay_multiprobe``).
 
 Concurrency contract: ONE streaming query per index_dir (micro-batches
 within a query are already serial). The index meta ledger is
@@ -78,16 +94,16 @@ def semdedup_gate_writer(
         ledger_id = f"{batch_id_prefix}-{int(batch_id)}"
         if append and index_store.committed(meta, ledger_id):
             # replay of a COMMITTED batch: survivors are already on
-            # disk and in the index; re-admitting would self-pair
+            # disk and in the index; re-admitting against a possibly
+            # extended index could rewrite them differently
             return
         if append:
             # replay of a CRASHED append (files may be half-placed):
-            # sweep them BEFORE the admit, or the batch's own vectors
-            # sit in the index and every survivor pairs with its
-            # indexed self, collapsing the replayed survivor set to
-            # empty. The append retry sweeps too, but the gate ADMITS
-            # before it appends. The append below recounts the stale
-            # histogram.
+            # sweep them BEFORE the admit, so it sees the index the
+            # first attempt saw — the multi-probe vs-index leg would
+            # otherwise pair survivors across neighbouring cells. The
+            # append retry sweeps too, but the gate ADMITS before it
+            # appends. The append below recounts the stale histogram.
             index_store.sweep_pending(index_dir, "semdedup", meta, ledger_id)
         pairs = incremental_semdedup(
             spark,

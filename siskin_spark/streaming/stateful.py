@@ -1,83 +1,28 @@
-"""Custom stateful streaming operators via ``applyInPandasWithState``
-(engine extension; the reference is batch-only — SURVEY.md §2.10 — but
-a continuous harvest tail needs streaming-native dedup).
+"""Streaming keep-first dedup (engine extension; the reference is
+batch-only — SURVEY.md §2.10 — but a continuous harvest tail needs
+streaming-native dedup).
 
-``streaming_dedup_first`` is the streaming counterpart of the batch
-snapshot/dedup family (operators/dedup.py): keep the FIRST record ever
-seen per key across micro-batches. State is one marker per key in the
-state store, checkpoint-persisted, so re-running an availableNow
-pipeline never re-emits old keys — exactly the incremental-harvest
+:func:`streaming_dedup_native` is the streaming counterpart of the
+batch snapshot/dedup family (operators/dedup.py): keep the FIRST
+record seen per key across micro-batches. It is JVM
+``dropDuplicates`` / ``dropDuplicatesWithinWatermark`` —
+whole-stage-codegen, state in the JVM state store, zero Python in the
+loop. The state store is checkpoint-persisted, so re-running an
+availableNow pipeline never re-emits old keys — the incremental-harvest
 semantics the reference gets from file memoization, with exactly-once
 bookkeeping instead of mtime comparisons.
 
-Scale notes: state is hash-partitioned by key across executors; the
-per-key payload is a single boolean-sized row, so 1e9 keys is a few GB
-of state spread over the cluster. For bounded retention pass a
-watermark + timeout variant (state TTL) — not needed for parity.
-
-Two implementations, same keep-first semantics:
-
-- :func:`streaming_dedup_first` — ``applyInPandasWithState``. The
-  EXTENSION path: use it when the per-key logic grows beyond dedup
-  (session carry-over, custom merge). Every micro-batch pays Arrow
-  transfer + a Python worker round-trip per state partition; measured
-  ~45x slower than the native path on the 2 M-row scale leg.
-- :func:`streaming_dedup_native` — JVM ``dropDuplicates`` /
-  ``dropDuplicatesWithinWatermark``. The PRODUCTION path at 100 TB:
-  whole-stage-codegen, state in the JVM state store, zero Python in
-  the loop. Prefer it whenever "first record per key wins" is the
-  whole requirement.
+Scale notes: state is hash-partitioned by key across executors. The
+exact form keeps one entry per key ever seen; the watermarked form
+expires a key once the watermark passes its first sighting, so state
+tracks the watermark window instead of the key universe.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
-from typing import Any
+from collections.abc import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import StructType
-
-
-def streaming_dedup_first(
-    stream: DataFrame,
-    key_cols: Sequence[str],
-    output_schema: StructType | str | None = None,
-) -> DataFrame:
-    """Emit only the first occurrence of each key, across micro-batches.
-
-    Within one batch, the first row by arrival order wins (pin an
-    upstream sort or use a deterministic source for reproducibility);
-    across batches the state store guarantees a key never re-emits.
-    """
-    schema = output_schema or stream.schema
-    state_schema = "seen boolean"
-
-    def dedup(
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            for _ in batches:  # drain; key already emitted in a prior batch
-                pass
-            return
-        first = None
-        for pdf in batches:
-            if first is None and len(pdf):
-                first = pdf.iloc[[0]]
-        state.update((True,))
-        if first is not None:
-            yield first
-
-    return stream.groupBy(*[stream[c] for c in key_cols]).applyInPandasWithState(
-        dedup,
-        outputStructType=schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def streaming_dedup_native(
@@ -86,14 +31,11 @@ def streaming_dedup_native(
     event_time_col: str | None = None,
     watermark: str | None = None,
 ) -> DataFrame:
-    """JVM-native streaming keep-first dedup — the fast path
-    (measured ~45x over the Python-state variant on the 2 M-row
-    scale leg; see module doc).
+    """JVM-native streaming keep-first dedup.
 
     Without a watermark: ``dropDuplicates(key_cols)`` — exact
-    cross-batch dedup with UNBOUNDED state, the drop-in equivalent of
-    :func:`streaming_dedup_first` (use when the key universe is
-    bounded, e.g. a DOI snapshot).
+    cross-batch dedup with UNBOUNDED state (use when the key universe
+    is bounded, e.g. a DOI snapshot).
 
     With ``event_time_col`` + ``watermark`` (both or neither):
     ``dropDuplicatesWithinWatermark(key_cols)`` on the watermarked

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from siskin_spark.functions.text import dup_line_fraction, top_ngram_char_fraction
+from siskin_spark.functions.text import dup_line_fraction, with_top_ngram_frac
 from siskin_spark.operators import curation as C
 
 
@@ -523,7 +523,13 @@ def test_dup_line_fraction(spark):
     assert got[4] == pytest.approx(1 / 2)
 
 
-def test_top_ngram_char_fraction(spark):
+def _top_ngram(df):
+    return {
+        r["doc_id"]: r["top_2gram_frac"] for r in with_top_ngram_frac(df).collect()
+    }
+
+
+def test_top_ngram_frac_values(spark):
     df = spark.createDataFrame(
         [
             # 'buy now' x3 (2-gram 'buy now' len 7, text len 23): 21/23
@@ -533,12 +539,7 @@ def test_top_ngram_char_fraction(spark):
             Row(doc_id=3, text=""),
         ]
     )
-    got = {
-        r["doc_id"]: r["f"]
-        for r in df.select(
-            "doc_id", top_ngram_char_fraction("text").alias("f")
-        ).collect()
-    }
+    got = _top_ngram(df)
     assert got[0] == pytest.approx(3 * len("buy now") / len("buy now buy now buy now"))
     # distinct grams: every 2-gram occurs once; fraction = len(top gram)/len(text)
     assert 0.0 < got[1] < 0.6
@@ -547,47 +548,19 @@ def test_top_ngram_char_fraction(spark):
 
 def test_top_ngram_tie_breaks_to_larger_gram(spark):
     # 'a b' and 'c d' both occur twice; tie resolves to 'c d'
-    df = spark.createDataFrame([Row(doc_id=0, text="a b x a b y c d z c d")])
-    grams_fold = df.select(top_ngram_char_fraction("text").alias("f")).collect()[0]["f"]
     text = "a b x a b y c d z c d"
-    assert grams_fold == pytest.approx(2 * len("c d") / len(text))
-
-
-def test_with_top_ngram_frac_equals_column_form(spark):
-    """The staged DataFrame operator must equal the Column fold on
-    arbitrary corpora, including the no-gram / empty / null edges."""
-    import random
-
-    from siskin_spark.functions.text import with_top_ngram_frac
-
-    rng = random.Random(11)
-    rows = [
-        Row(doc_id=i, text=" ".join(
-            rng.choice(["aa", "bb", "cc"]) for _ in range(rng.randint(0, 9))))
-        for i in range(80)
-    ] + [Row(doc_id=100, text="solo"), Row(doc_id=101, text=""),
-         Row(doc_id=102, text=None)]
-    df = spark.createDataFrame(rows)
-    staged = {
-        r["doc_id"]: r["top_2gram_frac"]
-        for r in with_top_ngram_frac(df).collect()
-    }
-    fold = {
-        r["doc_id"]: r["f"]
-        for r in df.select(
-            "doc_id", top_ngram_char_fraction("text").alias("f")).collect()
-    }
-    assert staged.keys() == fold.keys()
-    for k in fold:
-        assert staged[k] == pytest.approx(fold[k]), k
-    # all original columns survive, no _tng_ leftovers
-    assert set(with_top_ngram_frac(df).columns) == {"doc_id", "text", "top_2gram_frac"}
+    got = _top_ngram(spark.createDataFrame([Row(doc_id=0, text=text)]))
+    assert got[0] == pytest.approx(2 * len("c d") / len(text))
 
 
 def test_repetition_matches_explode_groupby_formulation(spark):
-    """The row-local fold must equal the shuffle-based explode+count
-    formulation (which the oracle SQL uses) on arbitrary corpora."""
+    """The staged row-local operator must equal the shuffle-based
+    explode+count formulation (which the oracle SQL uses) on arbitrary
+    corpora, including the no-gram / one-token / empty / null edges."""
     import random
+
+    from siskin_spark.functions.similarity import word_shingles
+    from siskin_spark.functions.text import tokens
 
     rng = random.Random(7)
     rows = [
@@ -597,13 +570,15 @@ def test_repetition_matches_explode_groupby_formulation(spark):
         )
         for i in range(60)
     ]
+    rng = random.Random(11)
+    rows += [
+        Row(doc_id=60 + i, text=" ".join(
+            rng.choice(["aa", "bb", "cc"]) for _ in range(rng.randint(0, 9))))
+        for i in range(80)
+    ] + [Row(doc_id=200, text="solo"), Row(doc_id=201, text=""),
+         Row(doc_id=202, text=None)]
     df = spark.createDataFrame(rows)
-    fold = {
-        r["doc_id"]: r["f"]
-        for r in df.select("doc_id", top_ngram_char_fraction("text").alias("f")).collect()
-    }
-    from siskin_spark.functions.similarity import word_shingles
-    from siskin_spark.functions.text import tokens
+    staged = _top_ngram(df)
 
     exploded = (
         df.select("doc_id", F.length("text").alias("nc"),
@@ -621,9 +596,24 @@ def test_repetition_matches_explode_groupby_formulation(spark):
         )
     )
     ref = {r["doc_id"]: r["f"] for r in exploded.collect()}
-    assert fold.keys() == ref.keys()
-    for k in fold:
-        assert fold[k] == pytest.approx(ref[k]), k
+    assert staged.keys() == ref.keys()
+    for k in ref:
+        assert staged[k] == pytest.approx(ref[k]), k
+    assert staged[200] == staged[201] == staged[202] == 0.0
+    # all original columns survive, one column added
+    assert set(with_top_ngram_frac(df).columns) == {"doc_id", "text", "top_2gram_frac"}
+
+
+def test_top_ngram_frac_filter_extracts_grams_once(spark):
+    """A filter on the staged column is pushed below the projection
+    with the alias inlined; the let-bound form must still extract the
+    grams once per row, not once per array element (a multi-projection
+    form re-inlined the extraction into every lambda: 100x slower)."""
+    df = spark.createDataFrame([Row(doc_id=0, text="a b a b c")])
+    kept = with_top_ngram_frac(df, out_col="_t").filter(F.col("_t") <= 0.2).drop("_t")
+    plan = kept._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("regexp_extract_all") == 1
+    assert kept.count() == 0  # 'a b' x2: 2 * 3 / 9 chars > 0.2
 
 
 # ---------------------------------------------------------------------------

@@ -211,7 +211,7 @@ def test_repetition_keep_gate(spark):
     from siskin_spark.functions.text import (
         dup_line_fraction,
         repetition_keep,
-        top_ngram_char_fraction,
+        with_top_ngram_frac,
     )
 
     df = spark.createDataFrame(
@@ -226,10 +226,10 @@ def test_repetition_keep_gate(spark):
     )
     got = {
         r["i"]: r["keep"]
-        for r in df.select(
+        for r in with_top_ngram_frac(df, text_col="t").select(
             "i",
             repetition_keep(
-                dup_line_fraction("t"), top_ngram_char_fraction("t")
+                dup_line_fraction("t"), F.col("top_2gram_frac")
             ).alias("keep"),
         ).collect()
     }

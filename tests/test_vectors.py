@@ -349,9 +349,9 @@ def test_semantic_dedup_matches_within_cell_reference(spark):
     threshold; keep drops exactly the larger ids of found pairs."""
     from siskin_spark.functions.vectors import (
         ivf_fit_centroids,
-        semantic_dedup,
         semantic_dedup_pairs,
     )
+    from siskin_spark.operators.neardup import keep_canonical
 
     df, expected, decoys = _mk_embeddings(spark)
     cents = ivf_fit_centroids(df, k=4, sample=1000, seed=7)
@@ -387,7 +387,8 @@ def test_semantic_dedup_matches_within_cell_reference(spark):
     assert expected <= set(got)
     assert not (decoys & set(got))
 
-    kept = {r["vec_id"] for r in semantic_dedup(df, cents, 0.95).collect()}
+    pairs = semantic_dedup_pairs(df, cents, threshold=0.95)
+    kept = {r["vec_id"] for r in keep_canonical(df, pairs, id_col="vec_id").collect()}
     assert kept == set(ids) - {b for _, b in got}
 
 
@@ -439,10 +440,10 @@ def _reference_pairs(ids, X, cell, threshold, sub=None):
 
 def test_semantic_dedup_hot_cell_split_bounds_pairs(spark):
     """r8 verdict #1: one cell holding ~90% of the corpus must be split
-    into bounded sub-cells by the seeded secondary hash (hot_cell=
-    'split', the no-fit fallback family) — found pairs are exactly the
-    same-sub-cell reference pairs, and no join group exceeds the guard
-    bound (+ binomial slack)."""
+    into bounded sub-cells by the seeded secondary hash (the
+    sample-starved fallback: subcentroid_sample=0 leaves nothing to
+    fit) — found pairs are exactly the same-sub-cell reference pairs,
+    and no join group exceeds the guard bound (+ binomial slack)."""
     from siskin_spark.functions.vectors import semantic_dedup_pairs
 
     df, cents, ids, X, cell = _hot_cell_fixture(spark)
@@ -463,7 +464,8 @@ def test_semantic_dedup_hot_cell_split_bounds_pairs(spark):
     got = {
         (r["id_a"], r["id_b"]): r["cos_sim"]
         for r in semantic_dedup_pairs(
-            df, cents, threshold=thr, max_cell_rows=max_rows, hot_cell="split"
+            df, cents, threshold=thr, max_cell_rows=max_rows,
+            subcentroid_sample=0,
         ).collect()
     }
     want = _reference_pairs(ids, X, cell, thr, sub=sub_of)
@@ -522,6 +524,9 @@ def test_semantic_dedup_hot_cell_raise_mode(spark):
         semantic_dedup_pairs(
             df, cents, threshold=0.95, max_cell_rows=40, hot_cell="raise"
         ).collect()
+    # the two modes are the whole contract: anything else refuses
+    with pytest.raises(ValueError, match="'subcentroid' or 'raise'"):
+        semantic_dedup_pairs(df, cents, hot_cell="hash")
 
 
 def test_semantic_dedup_subcentroid_recovers_planted_dups(spark):
@@ -556,13 +561,15 @@ def test_semantic_dedup_subcentroid_recovers_planted_dups(spark):
     for p, c in got.items():
         assert abs(c - unguarded[p]) < 1e-6
 
-    # the hash split on the SAME input loses planted pairs (the
-    # measured r9 recall hole this mode exists to close) — if this
-    # ever starts passing, the fixture stopped stressing the split
+    # the hash split on the SAME input (the sample-starved fallback)
+    # loses planted pairs (the measured r9 recall hole this mode exists
+    # to close) — if this ever starts passing, the fixture stopped
+    # stressing the split
     hash_got = {
         (r["id_a"], r["id_b"])
         for r in semantic_dedup_pairs(
-            df, cents, threshold=thr, max_cell_rows=max_rows, hot_cell="split"
+            df, cents, threshold=thr, max_cell_rows=max_rows,
+            subcentroid_sample=0,
         ).collect()
     }
     assert len(planted & hash_got) < len(planted)
@@ -1538,9 +1545,10 @@ def test_streaming_semdedup_gate(tmp_path, spark):
     """streaming/gate.py: the daily-gate admit as a foreachBatch sink —
     two micro-batches stream through, cross-batch duplicates are
     caught via the index append, and both replay shapes (committed
-    ledger hit, crashed half-placement) converge instead of
-    double-placing or self-pairing."""
+    ledger hit, crashed half-placement) converge to the first
+    attempt's survivors and exactly one indexed copy."""
     import json
+    import os
     import shutil
 
     import numpy as np
@@ -1602,14 +1610,17 @@ def test_streaming_semdedup_gate(tmp_path, spark):
     assert meta["appended"] == ["stream-0", "stream-1"]
     assert meta.get("pending", []) == []
 
-    # committed replay: same batch id arrives again -> pure no-op
+    # committed replay: same batch id arrives again -> pure no-op, the
+    # landed files are not even rewritten
+    landed = lambda: sorted(os.listdir(f"{out_dir}/gate_batch=1"))  # noqa: E731
+    before = landed()
     gate(spark.createDataFrame(b1, schema), 1)
     assert survivors(1) == {703} and cells() == 122
+    assert landed() == before
 
     # crashed replay: ledger lost the commit (write-ahead 'pending'
-    # remains) while the files ARE placed — the gate must sweep the
-    # half-placement before admitting, or 703 self-pairs and the
-    # replayed survivor set collapses to empty
+    # remains) while the files ARE placed — the replay must land the
+    # same survivors and leave one indexed copy of the batch
     meta["appended"] = ["stream-0"]
     meta["pending"] = ["stream-1"]
     json.dump(meta, open(_sem_meta_path(idx_dir), "w"))
@@ -1618,6 +1629,61 @@ def test_streaming_semdedup_gate(tmp_path, spark):
     meta = json.load(open(_sem_meta_path(idx_dir)))
     assert meta["appended"] == ["stream-0", "stream-1"]
     assert meta.get("pending", []) == []
+
+
+def test_streaming_semdedup_gate_crash_replay_multiprobe(tmp_path, spark):
+    """A crashed append's half-placed survivors are swept BEFORE the
+    replay admits: with nprobe=2 the vs-index leg reaches the
+    neighbouring cell, while batch-internal pairs stay primary-cell
+    only, so two near-duplicate survivors on either side of a cell
+    boundary would otherwise drop each other on the replay."""
+    import json
+
+    import numpy as np
+
+    from siskin_spark.functions.vectors import semdedup_index_build
+    from siskin_spark.streaming.gate import semdedup_gate_writer
+
+    e = np.eye(DIM)
+    rng = np.random.default_rng(4)
+    corpus = []
+    for c in (0, 1):  # two tight clusters far from the batch pair
+        for i in range(20):
+            v = e[c] + 0.05 * rng.normal(size=DIM)
+            corpus.append((100 * c + i, [float(x) for x in v / np.linalg.norm(v)]))
+    schema = "vec_id long, embedding array<float>"
+    idx_dir = str(tmp_path / "mpidx")
+    semdedup_index_build(
+        spark.createDataFrame(corpus, schema), idx_dir,
+        centroids=spark.createDataFrame(
+            [(c, [float(x) for x in e[c]]) for c in (0, 1)], "cid int, cv array<float>"
+        ),
+    )
+    # cos(x, y) = 0.98: a duplicate pair straddling the e0/e1 boundary
+    x, y = 0.55 * e[0] + 0.45 * e[1], 0.45 * e[0] + 0.55 * e[1]
+    batch = spark.createDataFrame(
+        [(800, [float(v) for v in x / np.linalg.norm(x)]),
+         (801, [float(v) for v in y / np.linalg.norm(y)])], schema
+    )
+    out_dir = str(tmp_path / "mpout")
+    gate = semdedup_gate_writer(idx_dir, out_dir, threshold=0.95, nprobe=2)
+
+    def survivors():
+        landed = spark.read.parquet(f"{out_dir}/gate_batch=0")
+        return {r["vec_id"] for r in landed.collect()}
+
+    gate(batch, 0)
+    # different primary cells, so the first attempt keeps both
+    placed = spark.read.parquet(idx_dir + "/cells").filter("vec_id >= 800")
+    assert {r["cid"] for r in placed.collect()} == {0, 1}
+    assert survivors() == {800, 801}
+
+    meta = json.load(open(_sem_meta_path(idx_dir)))
+    meta["appended"], meta["pending"] = [], ["stream-0"]
+    json.dump(meta, open(_sem_meta_path(idx_dir), "w"))
+    gate(batch, 0)
+    assert survivors() == {800, 801}
+    assert spark.read.parquet(idx_dir + "/cells").count() == 42
 
 
 def test_semdedup_index_search(tmp_path, spark):

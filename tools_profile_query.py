@@ -1,8 +1,13 @@
 #!/usr/bin/env python
 """Profile declared queries: per-pass wall time split into plan-build
-(construction), physical planning, and execution; plus job count and
-per-job wall segments (statusTracker). Usage:
-python tools_profile_query.py q1 [q2 ...] [--runs=N]
+(construction), physical planning, and execution; job count per run;
+and the per-job timeline of the last run (job id, offset from the
+first submission, duration or ``running``, tasks, stages, job
+description) — shows which jobs serialize and which overlap.
+Usage: python tools_profile_query.py q1 [q2 ...] [--runs=N]
+
+Each query warms with the converging rule of ``tools_time_query.warm``
+before the measured runs.
 """
 import os
 import statistics
@@ -13,6 +18,37 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from siskin_spark.session import get_spark  # noqa: E402
+from tools_time_query import warm  # noqa: E402
+
+
+def job_timeline(spark, group: str) -> list[str]:
+    """One line per job of ``group`` from the status store (works with
+    the UI disabled), in job-id order."""
+    store = spark._jsparkSession.sparkContext().statusStore()
+    it = store.jobsList(None).iterator()
+    jobs = []
+    while it.hasNext():
+        j = it.next()
+        if j.jobGroup().isDefined() and j.jobGroup().get() == group:
+            jobs.append(j)
+    jobs.sort(key=lambda j: j.jobId())
+    if not jobs:
+        return []
+    base = min(j.submissionTime().get().getTime() for j in jobs)
+    lines = []
+    for j in jobs:
+        sub = j.submissionTime().get().getTime()
+        dur = (
+            f"{(j.completionTime().get().getTime() - sub) / 1000.0:6.3f}s"
+            if j.completionTime().isDefined()
+            else "running"
+        )
+        desc = j.description().get() if j.description().isDefined() else j.name()
+        lines.append(
+            f"  job {j.jobId()}: +{(sub - base) / 1000.0:7.3f}s {dur:>8}  "
+            f"{j.numTasks()} tasks, {j.stageIds().size()} stages  {desc}"
+        )
+    return lines
 
 
 def main() -> None:
@@ -34,9 +70,7 @@ def main() -> None:
     qs = entry_mod.queries()
     for name in args:
         fn = qs[name]
-        # warm-ups
-        for _ in range(3):
-            materialize(fn(spark, sf_dir))
+        wt, converged = warm(lambda: materialize(fn(spark, sf_dir)))
         spark._jvm.System.gc()
         build_ts, phys_ts, exec_ts, tot_ts, njobs = [], [], [], [], []
         for r in range(runs):
@@ -58,13 +92,17 @@ def main() -> None:
             tot_ts.append(t3 - t0)
             njobs.append(len(jobs))
             spark._jvm.System.gc()
+        sc.setJobGroup(None, None)
         print(
             f"{name}: total {statistics.median(tot_ts):.3f}  "
             f"build {statistics.median(build_ts):.3f}  "
             f"plan {statistics.median(phys_ts):.3f}  "
             f"exec {statistics.median(exec_ts):.3f}  "
-            f"jobs {njobs}"
+            f"jobs {njobs}  warmups {len(wt)} "
+            f"({'converged' if converged else 'NOT converged'})"
         )
+        for line in job_timeline(spark, f"prof-{name}-{runs - 1}"):
+            print(line)
     spark.stop()
 
 

@@ -20,6 +20,24 @@ from siskin_spark.session import get_spark  # noqa: E402
 WARMUP_CAP = 15
 
 
+def warm(run) -> tuple[list[float], bool]:
+    """Call ``run()`` until the last three wall times are within 5% of
+    their median (a looser rule stopped while timed runs still fell
+    25-40%), at most ``WARMUP_CAP`` times so a noisy host cannot loop
+    forever. Returns the warm-up times and whether they converged."""
+    wt: list[float] = []
+    converged = False
+    while not converged and len(wt) < WARMUP_CAP:
+        w0 = time.perf_counter()
+        run()
+        wt.append(time.perf_counter() - w0)
+        med = statistics.median(wt[-3:])
+        converged = len(wt) >= 3 and all(
+            abs(w - med) <= 0.05 * med for w in wt[-3:]
+        )
+    return wt, converged
+
+
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     runs = 5
@@ -60,19 +78,7 @@ def main() -> None:
     for name in args:
         fn = qs[name]
         spark.sparkContext.setJobDescription(f"warm {name}")
-        # warm until the JVM has settled: the last three runs within 5%
-        # of their median (a looser rule stopped while timed runs still
-        # fell 25-40%), capped so a noisy host cannot loop forever
-        wt = []
-        converged = False
-        while not converged and len(wt) < WARMUP_CAP:
-            w0 = time.perf_counter()
-            materialize(fn(spark, sf_dir))
-            wt.append(time.perf_counter() - w0)
-            med = statistics.median(wt[-3:])
-            converged = len(wt) >= 3 and all(
-                abs(w - med) <= 0.05 * med for w in wt[-3:]
-            )
+        wt, converged = warm(lambda: materialize(fn(spark, sf_dir)))
         spark._jvm.System.gc()
         jit_quiesce()
         ts = []
