@@ -553,6 +553,57 @@ def test_top_ngram_tie_breaks_to_larger_gram(spark):
     assert got[0] == pytest.approx(2 * len("c d") / len(text))
 
 
+def _column_fold_top_2gram(text: str):
+    """Reference Column form: sort the row's 2-grams and fold the
+    longest equal run (ties to the larger gram) in one ``aggregate``."""
+    c = F.col(text)
+    grams = F.array_sort(F.regexp_extract_all(c, F.lit(r"(?=((\S+ \S+)))\S+ ?"), 1))
+    zero = F.struct(F.lit("").alias("prev"), F.lit(0).alias("run"),
+                    F.lit(0).alias("best"), F.lit("").alias("bg"))
+
+    def step(acc, x):
+        run = F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1))
+        better = (run > acc["best"]) | ((run == acc["best"]) & (x > acc["bg"]))
+        return F.struct(
+            x.alias("prev"),
+            run.alias("run"),
+            F.when(better, run).otherwise(acc["best"]).alias("best"),
+            F.when(better, x).otherwise(acc["bg"]).alias("bg"),
+        )
+
+    top = F.aggregate(grams, zero, step)
+    return F.when(
+        F.length(c) > 0,
+        (top["best"] * F.length(top["bg"])).cast("double") / F.length(c).cast("double"),
+    ).otherwise(F.lit(0.0))
+
+
+def test_with_top_ngram_frac_equals_column_form(spark):
+    """The staged DataFrame operator must equal the row-local Column
+    fold on arbitrary corpora, including the no-gram / empty / null
+    edges."""
+    import random
+
+    rng = random.Random(11)
+    rows = [
+        Row(doc_id=i, text=" ".join(
+            rng.choice(["aa", "bb", "cc"]) for _ in range(rng.randint(0, 9))))
+        for i in range(80)
+    ] + [Row(doc_id=100, text="solo"), Row(doc_id=101, text=""),
+         Row(doc_id=102, text=None)]
+    df = spark.createDataFrame(rows)
+    staged = _top_ngram(df)
+    fold = {
+        r["doc_id"]: r["f"]
+        for r in df.select("doc_id", _column_fold_top_2gram("text").alias("f")).collect()
+    }
+    assert staged.keys() == fold.keys()
+    for k in fold:
+        assert staged[k] == pytest.approx(fold[k]), k
+    # all original columns survive, no staging leftovers
+    assert set(with_top_ngram_frac(df).columns) == {"doc_id", "text", "top_2gram_frac"}
+
+
 def test_repetition_matches_explode_groupby_formulation(spark):
     """The staged row-local operator must equal the shuffle-based
     explode+count formulation (which the oracle SQL uses) on arbitrary

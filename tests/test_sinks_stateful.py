@@ -62,8 +62,7 @@ def test_solr_bulk_sink_batches_and_commit(tmp_path, spark, sf_dir):
     }
 
 
-def _run_native_stream(spark, src, ckpt, dst, **kw):
-    schema = "k bigint, v string, ts timestamp"
+def _run_native_stream(spark, src, ckpt, dst, schema="k bigint, v string, ts timestamp", **kw):
     stream = spark.readStream.schema(schema).json(src)
     q = (
         streaming_dedup_native(stream, ["k"], **kw)
@@ -75,6 +74,35 @@ def _run_native_stream(spark, src, ckpt, dst, **kw):
         .start()
     )
     q.awaitTermination()
+
+
+def test_streaming_dedup_first_across_restarts(tmp_path, spark):
+    """Keep-first on a stream with no event-time column at all: the
+    exact variant needs only the key."""
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    dst = str(tmp_path / "out")
+    os.makedirs(src)
+
+    with open(os.path.join(src, "b1.json"), "w") as fh:
+        for k, v in [(1, "a"), (2, "b"), (1, "dup-in-batch")]:
+            fh.write(json.dumps({"k": k, "v": v}) + "\n")
+    _run_native_stream(spark, src, ckpt, dst, schema="k bigint, v string")
+
+    first = spark.read.parquet(dst)
+    assert first.count() == 2  # in-batch duplicate of k=1 suppressed
+    assert {r.k for r in first.collect()} == {1, 2}
+
+    # second availableNow run: k=1/2 are in the state store -> only k=3 emits
+    with open(os.path.join(src, "b2.json"), "w") as fh:
+        for k, v in [(1, "late-dup"), (3, "c"), (2, "late-dup")]:
+            fh.write(json.dumps({"k": k, "v": v}) + "\n")
+    _run_native_stream(spark, src, ckpt, dst, schema="k bigint, v string")
+
+    final = spark.read.parquet(dst)
+    assert final.count() == 3
+    assert {r.k for r in final.collect()} == {1, 2, 3}
+    assert final.filter(F.col("k") == 3).collect()[0].v == "c"
 
 
 def test_streaming_dedup_native_across_restarts(tmp_path, spark):
