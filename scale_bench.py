@@ -1045,7 +1045,8 @@ def _gate_leg(spark, results: dict, timed) -> None:
     an 8-micro-batch backlog (availableNow, maxFilesPerTrigger=1)
     of the 768-dim admit slice through ``semdedup_gate_writer``
     against a copy of the same index, vs the identical rows as ONE
-    plain batch admit -> keep -> land -> append. The feed files are
+    direct ``gate_batch`` call (admit -> keep -> land -> append, the
+    function each micro-batch runs). The feed files are
     id-range-ordered (mtime-sequenced), so the gate's sequential
     semantics — later batches see earlier survivors in the index —
     and the one-shot admit's smaller-id-wins rule agree; survivor
@@ -1054,13 +1055,8 @@ def _gate_leg(spark, results: dict, timed) -> None:
     staged append + recount)."""
     import shutil as _sh
 
-    from siskin_spark.functions.vectors import (
-        incremental_semdedup,
-        incremental_semdedup_keep,
-        semdedup_index_append,
-        semdedup_index_build,
-    )
-    from siskin_spark.streaming.gate import semdedup_gate_writer
+    from siskin_spark.functions.vectors import semdedup_index_build
+    from siskin_spark.streaming.gate import gate_batch, semdedup_gate_writer
 
     vecs = _vectors768(spark)
     is_admit = F.col("vec_id") % 4 == 3
@@ -1125,21 +1121,19 @@ def _gate_leg(spark, results: dict, timed) -> None:
         spark.read.parquet(out_gate).count()
     )
 
-    # plain batch path: same rows, one admit + keep + land + append
+    # plain batch path: same rows through one gate_batch call
     idx_plain = os.path.join(CORPUS, "sem_index_gate_plain")
     _sh.rmtree(idx_plain, ignore_errors=True)
     _sh.copytree(idx_base, idx_plain)
     out_plain = os.path.join(CORPUS, "gate_out_plain")
     _sh.rmtree(out_plain, ignore_errors=True)
     t0 = time.perf_counter()
-    pairs = incremental_semdedup(spark, admit, idx_plain, threshold=0.95)
-    incremental_semdedup_keep(admit, pairs).write.mode(
-        "overwrite"
-    ).parquet(out_plain)
-    survivors = spark.read.parquet(out_plain)
-    semdedup_index_append(survivors, idx_plain, batch_id="plain-0")
+    gate_batch(
+        "semdedup", admit, idx_plain, out_plain,
+        batch_id="plain-0", threshold=0.95,
+    )
     results["gate_plain_total_s"] = time.perf_counter() - t0
-    results["gate_plain_survivors"] = survivors.count()
+    results["gate_plain_survivors"] = spark.read.parquet(out_plain).count()
     results["gate_survivor_parity"] = (
         results["gate_stream_survivors"] == results["gate_plain_survivors"]
     )

@@ -20,15 +20,15 @@ Usage:  python -m siskin_spark.cli <cmd> ...
   neardup-index DOCS DIR    build (or --append to) a persisted near-dup
                             signature index over a doc table
   neardup-batch DOCS DIR OUT  dedup a new batch against the index:
-                            writes pairs/ (and survivors with --keep;
+                            writes pairs/ and survivors to kept/;
                             --append-survivors ID also extends the
-                            index idempotently — the daily one-liner)
+                            index idempotently — the daily one-liner
   semdedup-index VECS DIR   build (or --append to) a persisted SemDeDup
                             cell index (frozen centroids + assignments)
   semdedup-batch VECS DIR OUT  admit an embedding batch against the
-                            index: pairs/ (and survivors with --keep;
-                            --append-survivors ID also extends the
-                            index idempotently — the daily one-liner)
+                            index: pairs/ and kept/; --append-survivors
+                            ID also extends the index idempotently —
+                            the daily one-liner
   semdedup-stream FEED DIR OUT --checkpoint CK  the same gate as a
                             Structured Streaming sink: drain the feed
                             backlog (or --follow to tail) through
@@ -188,20 +188,16 @@ def main(argv: list[str] | None = None) -> int:
     p_nbatch = sub.add_parser("neardup-batch")
     p_nbatch.add_argument("docs", help="new-batch doc table (doc_id, text)")
     p_nbatch.add_argument("index_dir")
-    p_nbatch.add_argument("out_dir", help="writes pairs/ (+ kept/ with --keep)")
+    p_nbatch.add_argument("out_dir", help="writes pairs/ and kept/")
     p_nbatch.add_argument("--id-col", default="doc_id")
     p_nbatch.add_argument("--text-col", default="text")
     p_nbatch.add_argument("--threshold", type=float, default=0.5)
     p_nbatch.add_argument(
-        "--keep", action="store_true",
-        help="also write the batch survivors under keep-first",
-    )
-    p_nbatch.add_argument(
         "--append-survivors", metavar="BATCH_ID", default=None,
         help="the daily-pipeline one-liner: after writing pairs/ and "
              "kept/, append the survivors to the index under this "
-             "batch id (idempotent — a replayed day no-ops); implies "
-             "--keep",
+             "batch id; a day already committed under it is skipped "
+             "whole (nothing is admitted or rewritten)",
     )
     p_sd = sub.add_parser("semdedup")
     p_sd.add_argument("vectors", help="parquet vector table (vec_id, embedding)")
@@ -319,7 +315,7 @@ def main(argv: list[str] | None = None) -> int:
     p_sbatch = sub.add_parser("semdedup-batch")
     p_sbatch.add_argument("vectors", help="new-batch vector table")
     p_sbatch.add_argument("index_dir")
-    p_sbatch.add_argument("out_dir", help="writes pairs/ (+ kept/ with --keep)")
+    p_sbatch.add_argument("out_dir", help="writes pairs/ and kept/")
     p_sbatch.add_argument("--threshold", type=float, default=0.95)
     p_sbatch.add_argument("--engine", default="gemm", choices=["expr", "gemm"])
     p_sbatch.add_argument("--max-cell-rows", type=int, default=500_000,
@@ -341,15 +337,11 @@ def main(argv: list[str] | None = None) -> int:
              "is unset (~43K rows/chunk at 768-dim, ~512K at 64-dim)",
     )
     p_sbatch.add_argument(
-        "--keep", action="store_true",
-        help="also write the batch survivors under keep-first",
-    )
-    p_sbatch.add_argument(
         "--append-survivors", metavar="BATCH_ID", default=None,
         help="the daily-pipeline one-liner: after writing pairs/ and "
              "kept/, append the survivors to the index under this "
-             "batch id (idempotent — a replayed day no-ops); implies "
-             "--keep",
+             "batch id; a day already committed under it is skipped "
+             "whole (nothing is admitted or rewritten)",
     )
     p_sstream = sub.add_parser("semdedup-stream")
     p_sstream.add_argument("feed_dir", help="directory a harvester drops "
@@ -636,40 +628,38 @@ def main(argv: list[str] | None = None) -> int:
                 hash_family=args.hash_family,
             )
         print(f"index at {args.index_dir}: {docs.count()} docs")
-    elif args.cmd == "neardup-batch":
-        from siskin_spark.operators.neardup import (
-            incremental_keep,
-            incremental_neardup,
-        )
+    elif args.cmd in ("neardup-batch", "semdedup-batch"):
+        from siskin_spark.streaming.gate import gate_batch
 
-        batch = _read(spark, args.docs)
-        pairs = incremental_neardup(
-            spark, batch, args.index_dir,
-            id_col=args.id_col, text_col=args.text_col,
-            threshold=args.threshold,
-        )
+        if args.cmd == "neardup-batch":
+            family, batch = "neardup", _read(spark, args.docs)
+            admit = dict(id_col=args.id_col, text_col=args.text_col,
+                         threshold=args.threshold)
+        else:
+            family, batch = "semdedup", _read(spark, args.vectors)
+            admit = dict(
+                threshold=args.threshold, engine=args.engine,
+                max_batch_cell_rows=args.max_cell_rows or None,
+                batch_chunk_rows=args.chunk_rows,
+                batch_budget_bytes=args.chunk_budget_mb << 20,
+                nprobe=args.nprobe,
+            )
         pairs_path = os.path.join(args.out_dir, "pairs")
-        pairs.write.mode("overwrite").parquet(pairs_path)
-        n_pairs = spark.read.parquet(pairs_path).count()
-        print(f"pairs: {n_pairs} at {pairs_path}")
-        if args.keep or args.append_survivors:
-            kept_path = os.path.join(args.out_dir, "kept")
-            incremental_keep(
-                batch, spark.read.parquet(pairs_path), id_col=args.id_col
-            ).write.mode("overwrite").parquet(kept_path)
+        kept_path = os.path.join(args.out_dir, "kept")
+        if gate_batch(
+            family, batch, args.index_dir, kept_path,
+            batch_id=args.append_survivors, pairs_path=pairs_path, **admit,
+        ):
+            print(f"pairs: {spark.read.parquet(pairs_path).count()} at {pairs_path}")
             print(f"kept: {spark.read.parquet(kept_path).count()} at {kept_path}")
-        if args.append_survivors:
-            from siskin_spark.operators.neardup import neardup_index_append
-
-            neardup_index_append(
-                spark.read.parquet(kept_path), args.index_dir,
-                id_col=args.id_col, text_col=args.text_col,
-                batch_id=args.append_survivors,
-            )
-            print(
-                f"appended survivors to {args.index_dir} "
-                f"(batch {args.append_survivors})"
-            )
+            if args.append_survivors:
+                print(
+                    f"appended survivors to {args.index_dir} "
+                    f"(batch {args.append_survivors})"
+                )
+        else:
+            print(f"batch {args.append_survivors} already committed to "
+                  f"{args.index_dir}: skipped")
     elif args.cmd == "semdedup-index":
         from siskin_spark.functions.vectors import (
             semdedup_index_append,
@@ -813,49 +803,11 @@ def main(argv: list[str] | None = None) -> int:
             f"{counts.get('changed', 0)} changed, "
             f"{counts.get('removed', 0)} removed"
         )
-    elif args.cmd == "semdedup-batch":
-        from siskin_spark.functions.vectors import (
-            incremental_semdedup,
-            incremental_semdedup_keep,
-        )
-
-        batch = _read(spark, args.vectors)
-        pairs = incremental_semdedup(
-            spark, batch, args.index_dir,
-            threshold=args.threshold, engine=args.engine,
-            max_batch_cell_rows=args.max_cell_rows or None,
-            batch_chunk_rows=args.chunk_rows,
-            batch_budget_bytes=args.chunk_budget_mb << 20,
-            nprobe=args.nprobe,
-        )
-        pairs_path = os.path.join(args.out_dir, "pairs")
-        pairs.write.mode("overwrite").parquet(pairs_path)
-        print(f"pairs: {spark.read.parquet(pairs_path).count()} at {pairs_path}")
-        if args.keep or args.append_survivors:
-            from siskin_spark import index_store
-
-            idc = index_store.read_meta(args.index_dir, "semdedup")["id_col"]
-            kept_path = os.path.join(args.out_dir, "kept")
-            incremental_semdedup_keep(
-                batch, spark.read.parquet(pairs_path), id_col=idc
-            ).write.mode("overwrite").parquet(kept_path)
-            print(f"kept: {spark.read.parquet(kept_path).count()} at {kept_path}")
-        if args.append_survivors:
-            from siskin_spark.functions.vectors import semdedup_index_append
-
-            semdedup_index_append(
-                spark.read.parquet(kept_path), args.index_dir,
-                batch_id=args.append_survivors,
-            )
-            print(
-                f"appended survivors to {args.index_dir} "
-                f"(batch {args.append_survivors})"
-            )
     elif args.cmd == "semdedup-stream":
         # the daily gate as a Structured Streaming sink: drain the feed
         # backlog (availableNow) or tail it (--follow) through the
-        # replay-safe foreachBatch gate — same admit/append path as
-        # semdedup-batch, with the micro-batch id as the ledger key
+        # replay-safe foreachBatch gate — the gate_batch semdedup-batch
+        # runs, with the micro-batch id as the ledger key
         from siskin_spark.streaming.gate import semdedup_gate_writer
 
         schema = spark.read.parquet(args.feed_dir).schema

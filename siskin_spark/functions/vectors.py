@@ -1838,7 +1838,12 @@ def incremental_semdedup(
     Batch-INTERNAL pairs stay primary-cell-only: their miss class is
     the same boundary trade the corpus-wide operator accepts, and a
     multi-probe self-join would double-count pairs whose members
-    probe each other's cells.
+    probe each other's cells. So at ``nprobe > 1`` the verdict on a
+    boundary pair depends on the batch boundary: two near-duplicates
+    in neighbouring cells both survive when they arrive in one batch,
+    but once the first is indexed, the second's vs-index probe finds
+    it and drops the second (pinned by
+    ``test_semdedup_gate_batch_boundary``).
 
     ``driver_assign=True`` (opt-in, as in
     :func:`semdedup_index_search`): assign the batch on the DRIVER in

@@ -369,9 +369,7 @@ def test_cli_neardup_index_and_batch(capsys, tmp_path, spark):
     batch_path = str(tmp_path / "cli_batch")
     batch.write.parquet(batch_path)
     out_dir = str(tmp_path / "cli_out")
-    assert main(
-        ["neardup-batch", batch_path, idx, out_dir, "--keep"]
-    ) == 0
+    assert main(["neardup-batch", batch_path, idx, out_dir]) == 0
     out = capsys.readouterr().out
     assert "pairs: 1" in out and "kept: 1" in out
     got = spark.read.parquet(out_dir + "/pairs").first()
@@ -751,7 +749,7 @@ def test_cli_semdedup_index_and_batch(capsys, tmp_path, spark):
     batch.write.parquet(b_path)
     out = str(tmp_path / "out")
     assert main([
-        "semdedup-batch", b_path, idx, out, "--threshold", "0.95", "--keep",
+        "semdedup-batch", b_path, idx, out, "--threshold", "0.95",
     ]) == 0
     capsys.readouterr()
     pairs = {(r["vec_id"], r["dup_of"])
@@ -795,10 +793,12 @@ def test_cli_semdedup_index_and_batch(capsys, tmp_path, spark):
 def test_cli_daily_oneliner_append_survivors_and_compact(capsys, tmp_path, spark):
     """r11: the daily-pipeline one-liner — `semdedup-batch
     --append-survivors ID` admits, keeps, and idempotently extends the
-    index in one verb (a replayed day re-writes pairs/kept but appends
-    nothing), `semdedup-compact` re-packs the accumulated generations
-    without changing results; the neardup twin drives the same flow
-    over text."""
+    index in one verb (a replayed day is skipped whole: the index,
+    pairs/ and kept/ are left as they were), `semdedup-compact`
+    re-packs the accumulated generations without changing results;
+    the neardup twin drives the same flow over text."""
+    import os
+
     import numpy as np
 
     from siskin_spark.cli import main
@@ -833,10 +833,17 @@ def test_cli_daily_oneliner_append_survivors_and_compact(capsys, tmp_path, spark
             spark.read.parquet(out + "/kept").collect()} == {101}
     n_cells = spark.read.parquet(idx + "/cells").count()
     assert n_cells == 51  # survivor appended, dup not
-    # replayed day: pairs/kept rewritten, index UNCHANGED
+
+    def listings(out_dir):
+        return {t: sorted(os.listdir(os.path.join(out_dir, t)))
+                for t in ("pairs", "kept")}
+
+    # replayed day: skipped whole — index, pairs/ and kept/ UNCHANGED
+    landed = listings(out)
     assert main(one) == 0
-    capsys.readouterr()
+    assert "already committed" in capsys.readouterr().out
     assert spark.read.parquet(idx + "/cells").count() == 51
+    assert listings(out) == landed
     # compact the accumulated generations; results unchanged
     assert main(["semdedup-compact", idx]) == 0
     capsys.readouterr()
@@ -879,9 +886,11 @@ def test_cli_daily_oneliner_append_survivors_and_compact(capsys, tmp_path, spark
     assert {r["doc_id"] for r in
             spark.read.parquet(nout + "/kept").collect()} == {101}
     n_sh = spark.read.parquet(nidx + "/shingles").count()
+    landed = listings(nout)
     assert main(none) == 0  # replayed day
-    capsys.readouterr()
+    assert "already committed" in capsys.readouterr().out
     assert spark.read.parquet(nidx + "/shingles").count() == n_sh
+    assert listings(nout) == landed
 
     # r12 retraction verbs: literal-id removal rewrites the index and
     # the removed vector/doc stops matching

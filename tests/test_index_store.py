@@ -3,9 +3,11 @@ through both index families on tiny indexes: crash-injected replays
 converge to exactly one copy, rewrites refuse while an append is
 pending, the ledger survives compaction and removal, a foreign layout
 version fails loudly, and an index dir left mid-append in the on-disk
-format replays and then compacts. Both families' search and admit run
-one probe path, so they agree: the admit's vs-index pairs at a
-threshold are the search hits at or over it."""
+format replays and then compacts; the replays hold when the batch
+goes through the whole daily gate (streaming/gate.py:gate_batch), and
+the gate gives the results of its steps run by hand. Both families'
+search and admit run one probe path, so they agree: the admit's
+vs-index pairs at a threshold are the search hits at or over it."""
 
 from __future__ import annotations
 
@@ -21,6 +23,7 @@ import pytest
 from siskin_spark import index_store
 from siskin_spark.functions import vectors as V
 from siskin_spark.operators import neardup as N
+from siskin_spark.streaming.gate import gate_batch
 
 _VOCAB = [f"w{v}" for v in range(50)]
 _DIM = 16
@@ -51,6 +54,19 @@ class _NearDup:
 
     def batch(self, spark):
         return spark.createDataFrame([(200, _doc(60))], "doc_id long, text string")
+
+    def day(self, spark):
+        """A novel doc, its copy and a copy of indexed doc 3."""
+        return spark.createDataFrame(
+            [(200, _doc(60)), (201, _doc(60)), (202, _doc(3))],
+            "doc_id long, text string",
+        )
+
+    def by_hand(self, spark, d, b, pairs_path, kept_path, batch_id, **admit):
+        pairs = N.incremental_neardup(spark, b, d, **admit)
+        pairs.write.parquet(pairs_path)
+        N.incremental_keep(b, spark.read.parquet(pairs_path)).write.parquet(kept_path)
+        N.neardup_index_append(spark.read.parquet(kept_path), d, batch_id=batch_id)
 
     def append(self, df, d, batch_id):
         N.neardup_index_append(df, d, batch_id=batch_id)
@@ -106,6 +122,22 @@ class _SemDedup:
         return spark.createDataFrame(
             [(700, self._w())], "vec_id long, embedding array<float>"
         )
+
+    def day(self, spark):
+        """A novel vector, its copy and a copy of indexed vector 0."""
+        return spark.createDataFrame(
+            [(700, self._w()), (701, self._w()),
+             (702, _unit(np.random.default_rng(61)))],
+            "vec_id long, embedding array<float>",
+        )
+
+    def by_hand(self, spark, d, b, pairs_path, kept_path, batch_id, **admit):
+        pairs = V.incremental_semdedup(spark, b, d, **admit)
+        pairs.write.parquet(pairs_path)
+        V.incremental_semdedup_keep(b, spark.read.parquet(pairs_path)).write.parquet(
+            kept_path
+        )
+        V.semdedup_index_append(spark.read.parquet(kept_path), d, batch_id=batch_id)
 
     def append(self, df, d, batch_id):
         V.semdedup_index_append(df, d, batch_id=batch_id)
@@ -194,30 +226,54 @@ def _staging_dirs(d):
     return [x for x in os.listdir(d) if x.startswith("_append_")]
 
 
-def test_append_replay_is_idempotent(spark, pristine, tmp_path, fam):
+def _placer(fam, via, tmp_path):
+    """Place a batch under a batch id: the index append alone, or the
+    whole daily gate (admit -> keep -> land -> append)."""
+    if via == "append":
+        return fam.append
+    kept = str(tmp_path / "kept")
+    return lambda b, d, batch_id: gate_batch(fam.name, b, d, kept, batch_id=batch_id)
+
+
+_VIA = [
+    pytest.param(name, via, id=name if via == "append" else f"{name}-{via}")
+    for via in ("append", "gate")
+    for name in sorted(FAMILIES)
+]
+
+
+@pytest.mark.parametrize("family,via", _VIA)
+def test_append_replay_is_idempotent(spark, pristine, tmp_path, family, via):
     """A replayed batch id is a no-op in every table — the happy replay
     (ledger hit), the lost-ledger replay (files placed, meta entry
-    lost: swept and re-placed) and the replay after compaction. A
+    lost: swept and re-placed) and the replay after compaction —
+    whether the append runs alone or inside the daily gate, whose
+    committed replay also leaves the landed survivors untouched. A
     doubled batch would inflate exact-Jaccard union sizes (near-dup)
     or the pair lists and histogram (SemDeDup). Remove-then-replay is
     pinned per family in test_index_remove / test_semdedup_index_remove."""
+    fam = FAMILIES[family]
     d, n1 = _index(pristine, tmp_path, fam)
     b = fam.batch(spark)
-    fam.append(b, d, "2026-08-16")
+    place = _placer(fam, via, tmp_path)
+    place(b, d, "2026-08-16")
     assert _rows(spark, d, fam) == n1
+    landed = sorted(os.listdir(tmp_path / "kept")) if via == "gate" else None
     # happy replay: the ledger short-circuits
-    fam.append(b, d, "2026-08-16")
+    place(b, d, "2026-08-16")
     assert _rows(spark, d, fam) == n1
+    if via == "gate":
+        assert sorted(os.listdir(tmp_path / "kept")) == landed
     # lost-ledger replay: swept + re-placed, never doubled
     assert _meta(d, fam)["appended"] == ["2026-08-16"]
     _set_meta(d, fam, appended=[])
-    fam.append(b, d, "2026-08-16")
+    place(b, d, "2026-08-16")
     assert _rows(spark, d, fam) == n1
     # the appended batch is live, and matches exactly once
     assert fam.hits(spark, d) == fam.expected_hits
     # compaction keeps the ledger: a compacted batch still no-ops
     fam.compact(spark, d)
-    fam.append(b, d, "2026-08-16")
+    place(b, d, "2026-08-16")
     assert _rows(spark, d, fam) == n1
 
 
@@ -231,17 +287,21 @@ _CRASHES = [
 
 
 @pytest.mark.parametrize(
-    "family,step,call", _CRASHES, ids=[f"{f}-{s}-{c}" for f, s, c in _CRASHES]
+    "family,step,call,via",
+    [pytest.param(f, s, c, "append", id=f"{f}-{s}-{c}") for f, s, c in _CRASHES]
+    + [pytest.param(f, s, c, "gate", id=f"{f}-{s}-{c}-gate") for f, s, c in _CRASHES],
 )
 def test_crash_replay_converges(
-    spark, pristine, tmp_path, monkeypatch, family, step, call
+    spark, pristine, tmp_path, monkeypatch, family, step, call, via
 ):
-    """A crash injected at each step of the append leaves the batch
-    pending (so rewrites refuse); the replay converges to exactly one
-    copy of the batch in every table and clears every marker."""
+    """A crash injected at each step of the append — run alone or
+    inside the daily gate — leaves the batch pending (so rewrites
+    refuse); the replay converges to exactly one copy of the batch in
+    every table and clears every marker."""
     fam = FAMILIES[family]
     d, want = _index(pristine, tmp_path, fam)
     b = fam.batch(spark)
+    place = _placer(fam, via, tmp_path)
 
     real, calls = getattr(index_store, step), []
 
@@ -253,13 +313,13 @@ def test_crash_replay_converges(
 
     monkeypatch.setattr(index_store, step, crashing)
     with pytest.raises(RuntimeError, match="injected crash"):
-        fam.append(b, d, "day-1")
+        place(b, d, "day-1")
     monkeypatch.undo()
 
     assert _meta(d, fam)["pending"] == ["day-1"]
     with pytest.raises(RuntimeError, match="day-1"):
         fam.compact(spark, d)
-    fam.append(b, d, "day-1")
+    place(b, d, "day-1")
     assert _rows(spark, d, fam) == want
     meta = _meta(d, fam)
     assert meta["appended"] == ["day-1"] and meta["pending"] == []
@@ -358,6 +418,45 @@ def test_mid_append_dir_replays_then_compacts(spark, pristine, tmp_path, fam):
     )[0] == f"batch-{tag}-00000.parquet"
     fam.compact(spark, d)
     assert _rows(spark, d, fam) == want
+
+
+_GATE_CASES = [pytest.param("neardup", {}, id="neardup")] + [
+    pytest.param("semdedup", {"engine": engine, "nprobe": npb},
+                 id=f"semdedup-{engine}-{npb}")
+    for engine in ("expr", "gemm")
+    for npb in (1, 2)
+]
+
+
+@pytest.mark.parametrize("family,admit", _GATE_CASES)
+def test_gate_matches_by_hand(spark, pristine, tmp_path, family, admit):
+    """``gate_batch`` is admit -> land pairs -> keep -> land survivors
+    -> append, nothing more: on copies of one index and one batch (an
+    index duplicate, a batch-internal duplicate and a novel row) it
+    lands the same pairs and survivors and leaves the same part files,
+    rows, meta, histogram and ledger as the steps run by hand."""
+    fam = FAMILIES[family]
+    b = fam.day(spark)
+    runs = {}
+    for how in ("gate", "hand"):
+        d = str(tmp_path / how / "idx")
+        shutil.copytree(pristine[family][0], d)
+        pairs, kept = str(tmp_path / how / "pairs"), str(tmp_path / how / "kept")
+        if how == "gate":
+            assert gate_batch(family, b, d, kept, batch_id="day-1",
+                              pairs_path=pairs, **admit)
+        else:
+            fam.by_hand(spark, d, b, pairs, kept, "day-1", **admit)
+        runs[how] = (
+            [sorted(spark.read.parquet(p).collect()) for p in (pairs, kept)],
+            {t: sorted(os.listdir(os.path.join(d, t))) for t in fam.tables},
+            {t: sorted(spark.read.parquet(os.path.join(d, t)).collect())
+             for t in fam.tables},
+            _meta(d, fam),
+        )
+    assert runs["gate"] == runs["hand"]
+    landed = runs["gate"][0]
+    assert landed[0] and len(landed[1]) == 1  # the novel row alone survives
 
 
 @pytest.mark.parametrize("verb", ["neardup-index", "semdedup-index"])

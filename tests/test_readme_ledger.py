@@ -11,6 +11,11 @@ ledger row fails here.
   function, a key of an artifact cited on the same row, a benchmark
   workload, or a Spark SQL function.
 - Every cited ``SCALE_*``/``PERF_*`` artifact must be committed.
+
+It also lints the README's shell examples: every ``--flag`` on a
+``siskin-spark <verb>`` line in a code block must be one the verb's
+``--help`` lists, so removing a CLI flag without sweeping the README
+fails here too.
 """
 
 from __future__ import annotations
@@ -20,6 +25,7 @@ import json
 import re
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -135,3 +141,37 @@ def test_ledger_artifacts_exist():
     cited = {a for row in _ledger_rows() for a in _ARTIFACT.findall(row)}
     assert cited, "the ledger cites no artifact"
     assert sorted(a for a in cited if not (ROOT / a).exists()) == []
+
+
+def _readme_cli_lines() -> list[str]:
+    """``siskin-spark`` command lines inside README code blocks, with
+    backslash continuations joined."""
+    blocks = (ROOT / "README.md").read_text().split("```")[1::2]
+    lines = []
+    for block in blocks:
+        for ln in block.replace("\\\n", " ").splitlines():
+            if ln.strip().startswith("siskin-spark "):
+                lines.append(ln.strip())
+    return lines
+
+
+def test_readme_cli_flags_exist(capsys):
+    """Every ``--flag`` on a README ``siskin-spark <verb>`` line is one
+    the verb's ``--help`` lists. ``main([verb, "--help"])`` exits in
+    argparse, before any Spark session starts, so this needs no
+    Spark."""
+    from siskin_spark.cli import main
+
+    lines = _readme_cli_lines()
+    assert lines, "README has no siskin-spark command lines"
+    missing = []
+    for ln in lines:
+        verb = ln.split()[1]
+        with pytest.raises(SystemExit) as exc:
+            main([verb, "--help"])
+        assert exc.value.code == 0, ln
+        usage = capsys.readouterr().out
+        for flag in re.findall(r"(?<!\S)--[\w-]+", ln):
+            if not re.search(rf"(?<![\w-]){re.escape(flag)}(?![\w-])", usage):
+                missing.append(f"{verb} {flag}")
+    assert not missing, "README cites CLI flags that do not exist:\n" + "\n".join(missing)

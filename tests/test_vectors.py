@@ -1631,59 +1631,112 @@ def test_streaming_semdedup_gate(tmp_path, spark):
     assert meta.get("pending", []) == []
 
 
-def test_streaming_semdedup_gate_crash_replay_multiprobe(tmp_path, spark):
-    """A crashed append's half-placed survivors are swept BEFORE the
-    replay admits: with nprobe=2 the vs-index leg reaches the
-    neighbouring cell, while batch-internal pairs stay primary-cell
-    only, so two near-duplicate survivors on either side of a cell
-    boundary would otherwise drop each other on the replay."""
-    import json
-
+def _boundary_pair_index(spark, tmp_path):
+    """A 2-cell index (centroids e0, e1; two tight clusters of 20 far
+    from the pair) and two near-duplicate vectors 800 and 801
+    (cos 0.98) on either side of the e0/e1 cell boundary. Returns the
+    index dir and the pair's rows."""
     import numpy as np
 
     from siskin_spark.functions.vectors import semdedup_index_build
-    from siskin_spark.streaming.gate import semdedup_gate_writer
 
     e = np.eye(DIM)
     rng = np.random.default_rng(4)
     corpus = []
-    for c in (0, 1):  # two tight clusters far from the batch pair
+    for c in (0, 1):
         for i in range(20):
             v = e[c] + 0.05 * rng.normal(size=DIM)
             corpus.append((100 * c + i, [float(x) for x in v / np.linalg.norm(v)]))
-    schema = "vec_id long, embedding array<float>"
     idx_dir = str(tmp_path / "mpidx")
     semdedup_index_build(
-        spark.createDataFrame(corpus, schema), idx_dir,
+        spark.createDataFrame(corpus, "vec_id long, embedding array<float>"),
+        idx_dir,
         centroids=spark.createDataFrame(
             [(c, [float(x) for x in e[c]]) for c in (0, 1)], "cid int, cv array<float>"
         ),
     )
-    # cos(x, y) = 0.98: a duplicate pair straddling the e0/e1 boundary
     x, y = 0.55 * e[0] + 0.45 * e[1], 0.45 * e[0] + 0.55 * e[1]
-    batch = spark.createDataFrame(
-        [(800, [float(v) for v in x / np.linalg.norm(x)]),
-         (801, [float(v) for v in y / np.linalg.norm(y)])], schema
-    )
+    return idx_dir, [
+        (800, [float(v) for v in x / np.linalg.norm(x)]),
+        (801, [float(v) for v in y / np.linalg.norm(y)]),
+    ]
+
+
+@pytest.mark.parametrize("caller", ["stream", "cli"])
+def test_streaming_semdedup_gate_crash_replay_multiprobe(tmp_path, spark, caller):
+    """A crashed append's half-placed survivors are swept BEFORE the
+    replay admits, by the stream writer and by ``semdedup-batch
+    --nprobe 2 --append-survivors`` alike: with nprobe=2 the vs-index
+    leg reaches the neighbouring cell, while batch-internal pairs stay
+    primary-cell only, so two near-duplicate survivors on either side
+    of a cell boundary would otherwise drop each other on the replay."""
+    import json
+
+    from siskin_spark.cli import main
+    from siskin_spark.streaming.gate import semdedup_gate_writer
+
+    idx_dir, rows = _boundary_pair_index(spark, tmp_path)
+    batch = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     out_dir = str(tmp_path / "mpout")
-    gate = semdedup_gate_writer(idx_dir, out_dir, threshold=0.95, nprobe=2)
+    if caller == "stream":
+        ledger_id, kept = "stream-0", f"{out_dir}/gate_batch=0"
+        gate = semdedup_gate_writer(idx_dir, out_dir, threshold=0.95, nprobe=2)
+        run = lambda: gate(batch, 0)  # noqa: E731
+    else:
+        ledger_id, kept = "day-0", f"{out_dir}/kept"
+        b_path = str(tmp_path / "mpbatch")
+        batch.write.parquet(b_path)
+        argv = ["semdedup-batch", b_path, idx_dir, out_dir, "--threshold", "0.95",
+                "--nprobe", "2", "--append-survivors", ledger_id]
+        run = lambda: main(argv)  # noqa: E731
 
     def survivors():
-        landed = spark.read.parquet(f"{out_dir}/gate_batch=0")
-        return {r["vec_id"] for r in landed.collect()}
+        return {r["vec_id"] for r in spark.read.parquet(kept).collect()}
 
-    gate(batch, 0)
+    run()
     # different primary cells, so the first attempt keeps both
     placed = spark.read.parquet(idx_dir + "/cells").filter("vec_id >= 800")
     assert {r["cid"] for r in placed.collect()} == {0, 1}
     assert survivors() == {800, 801}
 
     meta = json.load(open(_sem_meta_path(idx_dir)))
-    meta["appended"], meta["pending"] = [], ["stream-0"]
+    meta["appended"], meta["pending"] = [], [ledger_id]
     json.dump(meta, open(_sem_meta_path(idx_dir), "w"))
-    gate(batch, 0)
+    run()
     assert survivors() == {800, 801}
     assert spark.read.parquet(idx_dir + "/cells").count() == 42
+
+
+def test_semdedup_gate_batch_boundary(tmp_path, spark):
+    """At nprobe > 1 the batch boundary decides a cell-boundary pair:
+    arriving in one batch, both near-duplicates survive (batch-internal
+    pairs are compared within the primary cell only); arriving in two
+    batches, in either order, the later one meets the indexed earlier
+    one through the multi-probe vs-index leg and is dropped."""
+    import shutil
+
+    from siskin_spark.streaming.gate import gate_batch
+
+    base, rows = _boundary_pair_index(spark, tmp_path)
+    schema = "vec_id long, embedding array<float>"
+    arrivals = {
+        "together": [rows],
+        "800-first": [rows[:1], rows[1:]],
+        "801-first": [rows[1:], rows[:1]],
+    }
+    got = {}
+    for name, batches in arrivals.items():
+        idx_dir = str(tmp_path / name)
+        shutil.copytree(base, idx_dir)
+        got[name] = set()
+        for i, b in enumerate(batches):
+            kept = str(tmp_path / f"{name}-kept{i}")
+            gate_batch(
+                "semdedup", spark.createDataFrame(b, schema), idx_dir, kept,
+                batch_id=f"day-{i}", threshold=0.95, nprobe=2,
+            )
+            got[name] |= {r["vec_id"] for r in spark.read.parquet(kept).collect()}
+    assert got == {"together": {800, 801}, "800-first": {800}, "801-first": {801}}
 
 
 def test_semdedup_index_search(tmp_path, spark):
