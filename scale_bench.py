@@ -1807,7 +1807,10 @@ def _licensing_inputs(spark) -> tuple:
 def _licensing_leg(spark, results: dict, timed) -> None:
     """The two span-tool legs: ``apply_oa_flag`` with the 50K OA list
     and ``attach_labels`` with the 22-ISIL config over the records
-    parquet (best of three after a warm-up)."""
+    parquet (best of three after a warm-up). Also the driver-side plan
+    build of the first ``attach_labels`` call, which compiles the config
+    (what a one-shot CLI run pays), and of a later one, which reuses it
+    (``licensing_build_cold_s`` / ``licensing_build_warm_s``)."""
     import datetime
 
     from siskin_spark.operators.licensing import apply_oa_flag, attach_labels
@@ -1830,7 +1833,11 @@ def _licensing_leg(spark, results: dict, timed) -> None:
         holdings=holdings,
         now=datetime.date(2026, 8, 13),
     )
-    timed(lic())
+    for leg in ("cold", "warm"):
+        t0 = time.perf_counter()
+        df = lic()
+        results[f"licensing_build_{leg}_s"] = time.perf_counter() - t0
+        timed(df)
     results["licensing_tag_s"] = min(timed(lic()) for _ in range(3))
 
 

@@ -807,7 +807,7 @@ def main(argv: list[str] | None = None) -> int:
         # the daily gate as a Structured Streaming sink: drain the feed
         # backlog (availableNow) or tail it (--follow) through the
         # replay-safe foreachBatch gate — the gate_batch semdedup-batch
-        # runs, with the micro-batch id as the ledger key
+        # runs, with the query id and micro-batch id as the ledger key
         from siskin_spark.streaming.gate import semdedup_gate_writer
 
         schema = spark.read.parquet(args.feed_dir).schema

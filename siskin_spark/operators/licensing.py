@@ -28,16 +28,34 @@ ISSNs and aggregated back to one flag bitmask per record; the tree
 then references per-leaf flag columns. All ISILs are evaluated in a
 single job — no per-ISIL or per-leaf passes over the corpus (span-tag
 iterates filters per record in one pass too).
+
+Compiled once per config: the reference loads its filter config once
+per run, and a daily pipeline tags batch after batch against the same
+one, while walking the trees into Columns costs thousands of Py4J
+round-trips per call. Through :mod:`siskin_spark.memo`, keyed on
+``(json.dumps(config), record_id_col)`` (key order kept, as in
+``normalize.compile_mapping``), one gateway epoch compiles a config
+once: the holdings, content and ISSN leaf maps, the flag-bit layout,
+the per-record flag aggregate and per-flag tests, the label Column and
+the KBART file -> flags Column. The folded large-ISSN ``local_table``
+is a LocalRelation bound to its session, so its key adds
+``session_token(spark)``. A new config supersedes the previous one,
+so a long-lived session holds one compiled config. Never memoized:
+the records and holdings DataFrames (their files change between days)
+and everything derived from their columns — the coverage condition,
+the probe and side select lists, the id cast.
 """
 
 from __future__ import annotations
 
-from typing import Any, Sequence
+import json
+from typing import Any, NamedTuple, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from siskin_spark.memo import memo, session_token
 from siskin_spark.schema import issns_all
 from siskin_spark.session import local_table
 
@@ -128,6 +146,19 @@ def _overlap(col: Column, values: list[str]) -> Column:
     )
 
 
+class _Compiled(NamedTuple):
+    """What a config compiles to, independent of any DataFrame (the
+    memo value; see the module doc)."""
+
+    holdings_leaves: dict[tuple[str, ...], str]
+    content_leaves: dict[tuple[str, ...], str]
+    issn_leaves: dict[tuple[str, ...], str]
+    bits: dict[str, int] | None  # one bit per flag; None past 63 leaves
+    holdings_flag: Column | None  # a KBART row's _flag from its file_uri
+    flag_exprs: tuple[Column, dict[str, Column]] | None  # _flags agg, tests
+    labels: Column  # array_sort(array_compact(array(when(tree, isil)...)))
+
+
 class LicensingCompiler:
     """Compiles a {ISIL: tree} config against a records DataFrame."""
 
@@ -149,6 +180,9 @@ class LicensingCompiler:
         self._holdings_leaves: dict[tuple[str, ...], str] = {}
         self._content_leaves: dict[tuple[str, ...], str] = {}
         self._issn_leaves: dict[tuple[str, ...], str] = {}
+        self._bits: dict[str, int] | None = {}
+        self._holdings_flag: Column | None = None
+        self._flag_exprs: tuple[Column, dict[str, Column]] | None = None
 
     # -- pass 1: find join-backed leaves so their one fused join can be
     # planned ---------------------------------------------------------
@@ -240,24 +274,98 @@ class LicensingCompiler:
             *self._issn_leaves.values(),
         ]
 
-    def _flag_bits(self) -> dict[str, int] | None:
-        names = self._all_flag_names()
-        if len(names) > 63:
-            return None
-        return {name: 1 << i for i, name in enumerate(names)}
-
     def _flag_type(self) -> str:
-        return "long" if self._flag_bits() is not None else "array<string>"
+        return "long" if self._bits is not None else "array<string>"
 
     def _flag_value(self, flags: Sequence[str]) -> Any:
         """The ``_flag`` of a row that matches ``flags``: the OR of
         their bits, or past 63 leaves the array of their names."""
-        bits = self._flag_bits()
-        if bits is None:
+        if self._bits is None:
             return sorted(set(flags))
-        return sum(bits[f] for f in set(flags))
+        return sum(self._bits[f] for f in set(flags))
 
-    def _probe_side(self, spark: Any) -> DataFrame:
+    def _flag_lit(self, flags: Sequence[str]) -> Column:
+        return F.lit(self._flag_value(flags)).cast(self._flag_type())
+
+    def _compile_holdings_flag(self) -> Column:
+        """A KBART row's ``_flag``: the flags of every holdings leaf
+        whose ``files`` lists the row's file_uri, plus every leaf
+        without ``files``."""
+        every = [f for files, f in self._holdings_leaves.items() if not files]
+        by_file: dict[str, list[str]] = {}
+        for files, f in self._holdings_leaves.items():
+            for uri in files:
+                by_file.setdefault(uri, list(every)).append(f)
+        flag = self._flag_lit(every)
+        if by_file:
+            pairs = sorted(by_file.items())
+            file_flags = F.create_map(
+                *[c for u, fl in pairs for c in (F.lit(u), self._flag_lit(fl))]
+            )
+            flag = F.coalesce(file_flags[F.col("file_uri")], flag)
+        return flag
+
+    def _compile_flag_exprs(self) -> tuple[Column, dict[str, Column]]:
+        """The per-record ``_flags`` aggregate of the matched ``_flag``
+        values and one Boolean column per flag testing it."""
+        bits = self._bits
+        if bits is not None:
+            # one long bitmask per record; bit_or partial-aggregates
+            # map-side like any sum
+            agg = F.bit_or("_flag")
+            test = lambda f: F.col("_flags").bitwiseAND(bits[f]) != 0  # noqa: E731
+        else:
+            agg = F.flatten(F.collect_list("_flag"))
+            test = lambda f: F.array_contains(F.col("_flags"), f)  # noqa: E731
+        return agg.alias("_flags"), {
+            f: F.coalesce(test(f), F.lit(False)) for f in self._all_flag_names()
+        }
+
+    def _compile_config(self, config: dict[str, dict[str, Any]]) -> _Compiled:
+        """Both passes over ``config`` and everything else derived from
+        it alone; the leaf maps and bit layout stay set on ``self``."""
+        self._holdings_leaves, self._content_leaves, self._issn_leaves = {}, {}, {}
+        for tree in config.values():
+            self._collect_holdings(tree)
+        names = self._all_flag_names()
+        self._bits = (
+            {name: 1 << i for i, name in enumerate(names)} if len(names) <= 63 else None
+        )
+        pairs = [
+            F.when(self._compile(tree), F.lit(isil)) for isil, tree in config.items()
+        ]
+        return _Compiled(
+            self._holdings_leaves,
+            self._content_leaves,
+            self._issn_leaves,
+            self._bits,
+            self._compile_holdings_flag() if self._holdings_leaves else None,
+            self._compile_flag_exprs() if names else None,
+            F.array_sort(F.array_compact(F.array(*pairs))),
+        )
+
+    def _issn_table(self, spark: Any, key: tuple) -> DataFrame:
+        """The large ISSN lists folded on the driver into one
+        (ident -> flags) row per distinct ISSN, memoized per session."""
+
+        def build() -> DataFrame:
+            by_ident: dict[str, list[str]] = {}
+            for issn_list, f in self._issn_leaves.items():
+                for v in issn_list:
+                    by_ident.setdefault(v, []).append(f)
+            return local_table(
+                spark,
+                [(v, self._flag_value(fl)) for v, fl in by_ident.items()],
+                f"_ident string, _flag {self._flag_type()}",
+            )
+
+        return memo(
+            ("licensing-issns", *key, session_token(spark)),
+            build,
+            evict_prefix=("licensing-issns",),
+        )
+
+    def _probe_side(self, spark: Any, key: tuple) -> DataFrame:
         """Every ident-keyed leaf — holdings files and large ISSN lists —
         in ONE small frame, the broadcast side of the single probe join.
 
@@ -267,11 +375,6 @@ class LicensingCompiler:
         fold on the driver into one (ident -> flags) row per distinct
         ISSN with null coverage bounds, which pass every coverage test.
         Rows carrying no flag are dropped."""
-        ftype = self._flag_type()
-
-        def flag_lit(flags: Sequence[str]) -> Column:
-            return F.lit(self._flag_value(flags)).cast(ftype)
-
         side = None
         if self._holdings_leaves:
             h = self.holdings
@@ -279,18 +382,6 @@ class LicensingCompiler:
             opt = lambda name: (  # noqa: E731
                 F.col(name) if name in cols else F.lit(None).cast("string")
             )
-            every = [f for files, f in self._holdings_leaves.items() if not files]
-            by_file: dict[str, list[str]] = {}
-            for files, f in self._holdings_leaves.items():
-                for uri in files:
-                    by_file.setdefault(uri, list(every)).append(f)
-            flag = flag_lit(every)
-            if by_file:
-                pairs = sorted(by_file.items())
-                file_flags = F.create_map(
-                    *[c for u, fl in pairs for c in (F.lit(u), flag_lit(fl))]
-                )
-                flag = F.coalesce(file_flags[F.col("file_uri")], flag)
             idents = F.array(F.col("print_identifier"), F.col("online_identifier"))
             side = h.select(
                 F.explode(F.array_distinct(F.array_compact(idents))).alias("_ident"),
@@ -306,26 +397,18 @@ class LicensingCompiler:
                 opt("num_first_issue_online").try_cast("int").alias("_fiss"),
                 opt("num_last_vol_online").try_cast("int").alias("_lvol"),
                 opt("num_last_issue_online").try_cast("int").alias("_liss"),
-                flag.alias("_flag"),
+                self._holdings_flag.alias("_flag"),
             )
         if self._issn_leaves:
-            by_ident: dict[str, list[str]] = {}
-            for issn_list, f in self._issn_leaves.items():
-                for v in issn_list:
-                    by_ident.setdefault(v, []).append(f)
-            issns = local_table(
-                spark,
-                [(v, self._flag_value(fl)) for v, fl in by_ident.items()],
-                f"_ident string, _flag {ftype}",
-            )
+            issns = self._issn_table(spark, key)
             side = (
                 issns
                 if side is None
                 else side.unionByName(issns, allowMissingColumns=True)
             )
-        return side.filter(F.col("_flag") != flag_lit([]))
+        return side.filter(F.col("_flag") != self._flag_lit([]))
 
-    def _attach_flags(self, records: DataFrame, id_col: str) -> DataFrame:
+    def _attach_flags(self, records: DataFrame, id_col: str, key: tuple) -> DataFrame:
         """Attach every join-backed flag with ONE probe of the records:
         holdings leaves and large ISSN lists share one broadcast side
         (``_probe_side``) joined once to one explode of the records'
@@ -394,7 +477,7 @@ class LicensingCompiler:
                     )
             matches = records.select(
                 *probe, F.explode(issns_all()).alias("_ident")
-            ).join(broadcast(self._probe_side(spark)), on="_ident")
+            ).join(broadcast(self._probe_side(spark, key)), on="_ident")
             if cond is not None:
                 matches = matches.filter(cond)
             matches = matches.select("_rk", "_flag")
@@ -405,22 +488,14 @@ class LicensingCompiler:
                 spark, [(str(i),) for i in content_ids], "_id string"
             ).select(
                 F.col("_id").cast(id_type).alias("_rk"),
-                F.lit(self._flag_value([flag])).cast(self._flag_type()).alias("_flag"),
+                self._flag_lit([flag]).alias("_flag"),
             )
             # records ∩ whitelist resolved in the same single aggregate:
             # semi-join happens implicitly when flags join back below
             matches = c if matches is None else matches.unionByName(c)
 
-        bits = self._flag_bits()
-        if bits is not None:
-            # one long bitmask per record (see _flag_bits); bit_or
-            # partial-aggregates map-side like any sum
-            agg = F.bit_or("_flag")
-            test = lambda f: F.col("_flags").bitwiseAND(bits[f]) != 0  # noqa: E731
-        else:
-            agg = F.flatten(F.collect_list("_flag"))
-            test = lambda f: F.array_contains(F.col("_flags"), f)  # noqa: E731
-        flags_per_rec = matches.groupBy("_rk").agg(agg.alias("_flags"))
+        flags_agg, flag_cols = self._flag_exprs
+        flags_per_rec = matches.groupBy("_rk").agg(flags_agg)
         # shuffle_hash on the NARROW flags side: a sort-merge join here
         # would sort the full wide corpus by id — at 30 M rows in one
         # JVM that sort was the measured heap-pressure cliff. A
@@ -431,9 +506,7 @@ class LicensingCompiler:
             on=id_col,
             how="left",
         )
-        return records.withColumns(
-            {f: F.coalesce(test(f), F.lit(False)) for f in names}
-        ).drop("_flags")
+        return records.withColumns(flag_cols).drop("_flags")
 
     def attach_labels(
         self,
@@ -445,28 +518,33 @@ class LicensingCompiler:
     ) -> DataFrame:
         """J6 span-tag: evaluate every ISIL's tree, set ``labels_col``
         to the sorted list of matching ISILs; optionally drop records
-        with no label (span-tag -D, workflows/ai.py:232-237)."""
-        self._holdings_leaves = {}
-        self._content_leaves = {}
-        self._issn_leaves = {}
-        for tree in config.values():
-            self._collect_holdings(tree)
-        work = self._attach_flags(records, id_col)
-        pairs = [
-            F.when(self._compile(tree), F.lit(isil)) for isil, tree in config.items()
-        ]
-        out = work.withColumn(
-            labels_col, F.array_sort(F.array_compact(F.array(*pairs)))
+        with no label (span-tag -D, workflows/ai.py:232-237). The
+        config compiles once per gateway epoch (module doc). Raises
+        ValueError when ``records`` already carries a column name the
+        compiled config uses internally (a flag column or ``_flags``)."""
+        key = (json.dumps(config), self.record_id_col)
+        (
+            self._holdings_leaves,
+            self._content_leaves,
+            self._issn_leaves,
+            self._bits,
+            self._holdings_flag,
+            self._flag_exprs,
+            labels,
+        ) = memo(
+            ("licensing", *key),
+            lambda: self._compile_config(config),
+            evict_prefix=("licensing",),
         )
-        out = out.drop(
-            *[
-                c
-                for c in out.columns
-                if c.startswith(
-                    (HOLDINGS_FLAG_PREFIX, CONTENT_FLAG_PREFIX, ISSN_FLAG_PREFIX)
-                )
-            ]
-        )
+        names = self._all_flag_names()
+        clash = sorted(set(records.columns) & {*names, "_flags"}) if names else []
+        if clash:
+            raise ValueError(
+                f"records carry column(s) {clash}, which attach_labels uses "
+                "for its join-backed flags; rename them first"
+            )
+        out = self._attach_flags(records, id_col, key).withColumn(labels_col, labels)
+        out = out.drop(*names)
         if drop_unlabeled:
             out = out.filter(F.size(labels_col) > 0)
         return out

@@ -18,10 +18,13 @@ from tests.fixtures import (
 )
 
 
+def _got(out) -> dict:
+    return {r["finc_id"]: list(r["x_labels"]) for r in out.collect()}
+
+
 def _labels(spark):
     recs = is_records(spark)
-    out = attach_labels(recs, FILTER_CONFIG, holdings=kbart_holdings(spark))
-    return {r["finc_id"]: list(r["x_labels"]) for r in out.collect()}
+    return _got(attach_labels(recs, FILTER_CONFIG, holdings=kbart_holdings(spark)))
 
 
 def test_attach_labels_golden(spark):
@@ -402,7 +405,7 @@ def test_more_than_63_join_leaves_match_smaller_configs(spark):
         )
         out = comp.attach_labels(is_records(spark), cfg)
         got = {r["finc_id"]: list(r["x_labels"]) for r in out.collect()}
-        return got, comp._flag_bits() is None
+        return got, comp._bits is None
 
     got, fallback = labels(config)
     assert fallback  # 66 join-backed leaves
@@ -471,3 +474,111 @@ def test_join_leaves_share_one_broadcast_probe(spark, tmp_path):
     assert plan.count("BroadcastExchange") == 1, plan
     under_agg = _tree_lines_under(plan, "functions=[bit_or(")
     assert sum("BroadcastExchange" in ln for ln in under_agg) == 1, plan
+
+
+# --- compiled once per config (licensing module doc) -------------------
+
+
+def _count_compiles(monkeypatch) -> list:
+    """Record every ``LicensingCompiler._compile`` call (one per tree
+    node walked into a Column)."""
+    from siskin_spark.operators.licensing import LicensingCompiler
+
+    calls: list = []
+    walk = LicensingCompiler._compile
+
+    def counting(self, tree):
+        calls.append(tree)
+        return walk(self, tree)
+
+    monkeypatch.setattr(LicensingCompiler, "_compile", counting)
+    return calls
+
+
+def test_attach_labels_reuses_an_equal_config(spark, monkeypatch):
+    import copy
+
+    calls = _count_compiles(monkeypatch)
+    want = _labels(spark)
+    calls.clear()
+    out = attach_labels(
+        is_records(spark), copy.deepcopy(FILTER_CONFIG), holdings=kbart_holdings(spark)
+    )
+    assert calls == []  # an equal config in a new dict: served compiled
+    assert _got(out) == want
+    changed = copy.deepcopy(FILTER_CONFIG)
+    changed["DE-14"]["and"][0]["source"] = ["49", "28"]
+    attach_labels(is_records(spark), changed, holdings=kbart_holdings(spark))
+    assert calls  # a changed config compiles
+
+
+def test_attach_labels_changed_config_changes_labels(spark):
+    """One more entry in a large ISSN list (a join-backed flag folded
+    into the memoized per-session ISSN table) or in an inline
+    collection list is a new config: its labels are its own."""
+    recs = is_records(spark)
+    big = _big_issn_list("999X")
+    assert _got(attach_labels(recs, {"DE-X": {"issn": {"list": big}}}))["ai-49-a1"] == []
+    got = _got(attach_labels(recs, {"DE-X": {"issn": {"list": big + ["3333-4444"]}}}))
+    assert got["ai-49-a1"] == ["DE-X"] and got["ai-49-a2"] == []
+
+    colls = ["JSTOR Music Archive"]
+    got = _got(attach_labels(recs, {"DE-C": {"collection": colls}}))
+    assert got["ai-55-c1"] == ["DE-C"] and got["ai-49-a2"] == []
+    got = _got(attach_labels(recs, {"DE-C": {"collection": colls + ["Crossref General"]}}))
+    assert got["ai-55-c1"] == ["DE-C"] and got["ai-49-a2"] == ["DE-C"]
+
+
+def test_attach_labels_rereads_rewritten_holdings(spark, tmp_path):
+    """The holdings DataFrame is never memoized: a KBART parquet
+    rewritten between two calls with the same config is what the second
+    call joins (a day's new holdings files)."""
+    import datetime
+
+    path = str(tmp_path / "kbart")
+    kbart_holdings(spark).write.parquet(path)
+    label = lambda: _got(  # noqa: E731
+        attach_labels(is_records(spark), FILTER_CONFIG, holdings=spark.read.parquet(path))
+    )
+    assert label()["ai-55-c1"] == ["DE-15", "FID-BBI-DE-23"]
+    # the J Mus window now closes before c1's 1980 date
+    kbart_holdings(spark).withColumn(
+        "date_last_issue_online",
+        F.when(F.col("print_identifier") == "7777-8888", F.lit(datetime.date(1970, 1, 1)))
+        .otherwise(F.col("date_last_issue_online")),
+    ).write.mode("overwrite").parquet(path)
+    assert label()["ai-55-c1"] == ["FID-BBI-DE-23"]
+
+
+def test_attach_labels_new_session(spark, monkeypatch):
+    """The compiled Columns are shared by the gateway's sessions; the
+    large-ISSN table is a LocalRelation bound to its session, so a new
+    session tags with one of its own."""
+    import json
+
+    from siskin_spark.operators.licensing import LicensingCompiler
+
+    config = dict(FILTER_CONFIG, I1={"issn": {"list": _big_issn_list("555X", ["5555-6666"])}})
+    want = _got(attach_labels(is_records(spark), config, holdings=kbart_holdings(spark)))
+    assert want["ai-28-b1"] == ["DE-15", "FID-BBI-DE-23", "I1"]
+    calls = _count_compiles(monkeypatch)
+    other = spark.newSession()
+    comp = LicensingCompiler(holdings=kbart_holdings(other))
+    assert _got(comp.attach_labels(is_records(other), config)) == want
+    assert calls == []
+    key = (json.dumps(config), comp.record_id_col)
+    assert comp._issn_table(other, key).sparkSession is other
+
+
+def test_attach_labels_keeps_caller_columns(spark):
+    """``attach_labels`` drops only the flag columns it added, by name,
+    and refuses records that already carry one of their names."""
+    import pytest
+
+    recs = is_records(spark).withColumn("_hold_note", F.lit("keep me"))
+    out = attach_labels(recs, FILTER_CONFIG, holdings=kbart_holdings(spark))
+    assert {r["_hold_note"] for r in out.collect()} == {"keep me"}
+    assert _got(out) == _labels(spark)
+    clash = is_records(spark).withColumn("_hold_0", F.lit(True))
+    with pytest.raises(ValueError, match="_hold_0"):
+        attach_labels(clash, FILTER_CONFIG, holdings=kbart_holdings(spark))

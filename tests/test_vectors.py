@@ -5,6 +5,7 @@ with KNOWN near-dup pairs above and decoys below the threshold)."""
 
 from __future__ import annotations
 
+import contextlib
 from collections import Counter
 
 import numpy as np
@@ -1549,7 +1550,6 @@ def test_streaming_semdedup_gate(tmp_path, spark):
     attempt's survivors and exactly one indexed copy."""
     import json
     import os
-    import shutil
 
     import numpy as np
 
@@ -1572,20 +1572,12 @@ def test_streaming_semdedup_gate(tmp_path, spark):
     b0 = [(700, [float(x) for x in X[0]]), (701, [float(x) for x in w1])]
     b1 = [(702, [float(x) for x in w1]), (703, [float(x) for x in w2])]
 
-    feed = tmp_path / "feed"
-    feed.mkdir()
-    for i, data in enumerate([b0, b1]):
-        staging = tmp_path / f"stage{i}"
-        spark.createDataFrame(data, schema).coalesce(1).write.parquet(str(staging))
-        part = next(p for p in staging.iterdir() if p.name.endswith(".parquet"))
-        shutil.move(str(part), str(feed / f"f{i}.parquet"))
-
     out_dir = str(tmp_path / "gated")
     gate = semdedup_gate_writer(idx_dir, out_dir, threshold=0.95)
     q = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(str(feed))
+        .parquet(_feed(spark, tmp_path, "feed", [b0, b1]))
         .writeStream.foreachBatch(gate)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
@@ -1607,28 +1599,117 @@ def test_streaming_semdedup_gate(tmp_path, spark):
     cells = lambda: spark.read.parquet(idx_dir + "/cells").count()  # noqa: E731
     assert cells() == 122
     meta = json.load(open(_sem_meta_path(idx_dir)))
-    assert meta["appended"] == ["stream-0", "stream-1"]
+    ids = [f"stream-{q.id}-0", f"stream-{q.id}-1"]
+    assert meta["appended"] == ids
     assert meta.get("pending", []) == []
 
     # committed replay: same batch id arrives again -> pure no-op, the
     # landed files are not even rewritten
     landed = lambda: sorted(os.listdir(f"{out_dir}/gate_batch=1"))  # noqa: E731
     before = landed()
-    gate(spark.createDataFrame(b1, schema), 1)
+    with _in_stream(spark, q.id):
+        gate(spark.createDataFrame(b1, schema), 1)
     assert survivors(1) == {703} and cells() == 122
     assert landed() == before
 
     # crashed replay: ledger lost the commit (write-ahead 'pending'
     # remains) while the files ARE placed — the replay must land the
     # same survivors and leave one indexed copy of the batch
-    meta["appended"] = ["stream-0"]
-    meta["pending"] = ["stream-1"]
+    meta["appended"] = ids[:1]
+    meta["pending"] = ids[1:]
     json.dump(meta, open(_sem_meta_path(idx_dir), "w"))
-    gate(spark.createDataFrame(b1, schema), 1)
+    with _in_stream(spark, q.id):
+        gate(spark.createDataFrame(b1, schema), 1)
     assert survivors(1) == {703} and cells() == 122
     meta = json.load(open(_sem_meta_path(idx_dir)))
-    assert meta["appended"] == ["stream-0", "stream-1"]
+    assert meta["appended"] == ids
     assert meta.get("pending", []) == []
+
+
+@contextlib.contextmanager
+def _in_stream(spark, query_id: str):
+    """Call a ``semdedup_gate_writer`` callable as ``foreachBatch``
+    does: with the streaming query id set on this thread."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("sql.streaming.queryId", query_id)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("sql.streaming.queryId", None)
+
+
+def _feed(spark, tmp_path, name: str, batches) -> str:
+    """A parquet feed directory holding one file per batch, in order."""
+    import shutil
+
+    feed = tmp_path / name
+    feed.mkdir()
+    for i, data in enumerate(batches):
+        staging = tmp_path / f"{name}-stage{i}"
+        spark.createDataFrame(data, "vec_id long, embedding array<float>").coalesce(
+            1
+        ).write.parquet(str(staging))
+        part = next(p for p in staging.iterdir() if p.name.endswith(".parquet"))
+        shutil.move(str(part), str(feed / f"f{i}.parquet"))
+    return str(feed)
+
+
+def test_streaming_semdedup_gate_checkpoint_reset(tmp_path, spark):
+    """A fresh checkpoint restarts the micro-batch number at 0. The
+    ledger id carries the query id, which lives in the checkpoint, so
+    two streams on fresh checkpoints over one index both land and index
+    their batch 0, while a query restarted on its checkpoint keeps its
+    id and replaying its batch 0 stays a no-op. Outside a stream the
+    callable refuses to append."""
+    import json
+    import os
+
+    from siskin_spark.functions.vectors import semdedup_index_build
+    from siskin_spark.streaming.gate import semdedup_gate_writer
+
+    rows, X = _sem_corpus(spark, 120, seed=61)
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    idx_dir = str(tmp_path / "resetidx")
+    semdedup_index_build(corpus, idx_dir, k=3, sample=120, iters=5, seed=3)
+    rng = np.random.default_rng(12)
+    fresh = [rng.normal(size=DIM) for _ in range(2)]
+    a, b = [[(600 + i, [float(x) for x in v / np.linalg.norm(v)])] for i, v in enumerate(fresh)]
+    schema = "vec_id long, embedding array<float>"
+
+    def run(feed, ckpt, out_dir):
+        gate = semdedup_gate_writer(idx_dir, out_dir, threshold=0.95)
+        q = (
+            spark.readStream.schema(schema).parquet(feed)
+            .writeStream.foreachBatch(gate)
+            .option("checkpointLocation", str(tmp_path / ckpt))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(180)
+        return q, gate
+
+    out_a, out_b = str(tmp_path / "out-a"), str(tmp_path / "out-b")
+    qa, gate_a = run(_feed(spark, tmp_path, "feed-a", [a]), "ckpt-a", out_a)
+    qb, _ = run(_feed(spark, tmp_path, "feed-b", [b]), "ckpt-b", out_b)
+    assert qa.id != qb.id
+    for out_dir, want in ((out_a, {600}), (out_b, {601})):
+        landed = spark.read.parquet(f"{out_dir}/gate_batch=0").collect()
+        assert {r["vec_id"] for r in landed} == want
+    cells = lambda: spark.read.parquet(idx_dir + "/cells")  # noqa: E731
+    assert {r["vec_id"] for r in cells().filter("vec_id >= 600").collect()} == {600, 601}
+    meta = json.load(open(_sem_meta_path(idx_dir)))
+    assert meta["appended"] == [f"stream-{qa.id}-0", f"stream-{qb.id}-0"]
+
+    # restart on checkpoint a: same query id; its batch 0 replayed is a no-op
+    qa2, _ = run(str(tmp_path / "feed-a"), "ckpt-a", out_a)
+    assert qa2.id == qa.id
+    before = sorted(os.listdir(f"{out_a}/gate_batch=0")), cells().count()
+    with _in_stream(spark, qa.id):
+        gate_a(spark.createDataFrame(a, schema), 0)
+    assert (sorted(os.listdir(f"{out_a}/gate_batch=0")), cells().count()) == before
+
+    with pytest.raises(ValueError, match="foreachBatch"):
+        gate_a(spark.createDataFrame(a, schema), 0)
 
 
 def _boundary_pair_index(spark, tmp_path):
@@ -1679,9 +1760,13 @@ def test_streaming_semdedup_gate_crash_replay_multiprobe(tmp_path, spark, caller
     batch = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     out_dir = str(tmp_path / "mpout")
     if caller == "stream":
-        ledger_id, kept = "stream-0", f"{out_dir}/gate_batch=0"
+        query_id = "0b7e2c1d-query"
+        ledger_id, kept = f"stream-{query_id}-0", f"{out_dir}/gate_batch=0"
         gate = semdedup_gate_writer(idx_dir, out_dir, threshold=0.95, nprobe=2)
-        run = lambda: gate(batch, 0)  # noqa: E731
+
+        def run():
+            with _in_stream(spark, query_id):
+                gate(batch, 0)
     else:
         ledger_id, kept = "day-0", f"{out_dir}/kept"
         b_path = str(tmp_path / "mpbatch")
