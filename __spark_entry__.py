@@ -2565,13 +2565,14 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     iqueries = emb.filter(
         (F.col("vec_id") % 3 == 2) & (F.col("vec_id") < 300)
     ).select("vec_id", "embedding")
-    # r13 opt: the 100-query serving batch is driver-sized — assign it
-    # on the driver (one Arrow collect; bit-identical kernel+norms) so
-    # the GEMM stage, eager checkpoint and cid collect collapse into
-    # the final action (guide §5 driver round-trips)
+    # the 100-query serving batch is a filtered parquet scan whose size
+    # estimate (the table's file bytes x (1 + nprobe): ~2.0 MB at sf0.1)
+    # fits the driver bound, so the search assigns it on the driver (one
+    # Arrow collect; bit-identical kernel+norms): the GEMM stage, eager
+    # checkpoint and cid collect collapse into the final action (guide
+    # §5 driver round-trips)
     idxp = semdedup_index_search(
         spark, iqueries, _sem_oracle_index(spark, sf_dir, emb), k=3, nprobe=2,
-        driver_assign=True,
     ).select(
         F.lit("idx").alias("part"),
         F.col("query_id").alias("probe_id"),
@@ -2658,7 +2659,7 @@ def _similarity_topk_pure(spark: SparkSession, sf_dir: str) -> DataFrame:
     sem = semantic_dedup_pairs(
         emb.filter(F.col("vec_id") % 5 == 0)
         .select("vec_id", "embedding").unionByName(planted),
-        centroids, threshold=0.45, use_gemm=False,
+        centroids, threshold=0.45, engine="expr",
         # the oracle SQL joins same-cell pairs UNCONDITIONALLY — pin
         # the guard off so a larger SF can never split a cell and
         # silently drop cross-sub-cell pairs the SQL still produces
@@ -3483,15 +3484,16 @@ def semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionByName(planted(20, 3_000_000))
         ),
     )
-    # r13 opt: the admit batch is driver-sized — assign it on the
-    # driver (one Arrow collect; bit-identical kernel+norms, equality
-    # pinned in tests/test_vectors.py) so the mapInPandas assignment
-    # stage, its Python workers, the checkpoint and the guard collect
-    # collapse into the final action (guide §5 driver round-trips;
-    # same pattern as similarity_topk's idx leg)
+    # where the admit assigns this batch follows its size estimate (the
+    # four scans' file bytes; filters do not shrink it): up to sf0.01
+    # it fits the driver bound, so the batch is assigned in one Arrow
+    # collect and the mapInPandas stage, its Python workers, the
+    # checkpoint and the guard collect collapse into the final action;
+    # at sf0.1 (~5 MB x 2) it is assigned distributed, where the
+    # measured crossover puts the expr admit. Results are bit-identical
+    # either way (pinned in tests/test_vectors.py)
     return incremental_semdedup(
         spark, batch, idx_dir, threshold=0.35, engine="expr",
-        driver_assign=True,
     )
 
 

@@ -19,6 +19,9 @@ and reports records/second.
     SCALE_RECORDS=2000000 python scale_bench.py
     SCALE_ONLY=licensing SCALE_RECORDS=2000000 python scale_bench.py
                                           # controls + oa_flag/licensing legs
+    SCALE_ONLY=assign SCALE_RECORDS=20000 python scale_bench.py
+                                          # controls + SemDeDup assignment
+                                          # driver/distributed crossover
 
 Prints ONE JSON line:
     {"metric": "records_per_second", "oa_flag": N, "licensing_tag": N,
@@ -48,6 +51,9 @@ HOLDINGS_ROWS_PER_FILE = 30_000
 N_ISILS = 22
 N_SOURCES = 40
 N_COLLECTIONS = 400
+#: an admit ``batch_budget_bytes`` no batch reaches: the whole batch is
+#: collected as one chunk (one packed broadcast)
+ONE_CHUNK = 1 << 62
 
 
 def _issn(col):
@@ -540,8 +546,9 @@ def _semincr_chunked_leg(spark, vectors, results: dict, timed) -> None:
     measured with a batch several times the chunk size. Index over 90%
     of the corpus, admit the 10% slice (≈n_vec/10 vectors — at 64-dim
     that is under the default 256 MB packed budget, so the 'unchunked'
-    leg runs as ONE packed broadcast) and again with
-    ``batch_chunk_rows=65_536`` (≈5 chunks): pair counts must agree
+    leg runs as ONE packed broadcast) and again with a 32 MB
+    ``batch_budget_bytes`` (65,536 rows per chunk at 64-dim, ≈5
+    chunks): pair counts must agree
     and the chunked run's cost shows what the driver-memory bound
     costs — cid-sorted chunks prune the index scan to their own
     cells, so the index is still read ~once in total."""
@@ -569,7 +576,7 @@ def _semincr_chunked_leg(spark, vectors, results: dict, timed) -> None:
 
     legs = (
         ("unchunked", {}),
-        ("chunked64k", {"batch_chunk_rows": 65_536}),
+        ("chunked64k", {"batch_budget_bytes": 65_536 * 8 * 64}),
     )
     for label, kw in legs:
         pairs_dir = os.path.join(CORPUS, f"sem_incr_pairs_{label}")
@@ -641,7 +648,7 @@ def _dim768_leg(spark, results: dict, timed) -> None:
     results["d768_batch"] = batch.count()
     for label, kw in (
         ("budget_chunked", {}),  # default 256 MB -> ~43K rows/chunk
-        ("one_broadcast", {"batch_chunk_rows": 1 << 30}),
+        ("one_broadcast", {"batch_budget_bytes": ONE_CHUNK}),
     ):
         pairs_dir = os.path.join(CORPUS, f"sem_incr_pairs_768_{label}")
 
@@ -767,10 +774,110 @@ def _daily_gate_leg(spark, results: dict, timed) -> None:
     # whole-batch collect last (its arena high-water is sticky)
     admit(idx_q8, "composed", nprobe=2, batch_budget_bytes=budget)
     admit(idx_f32, "plain", nprobe=1, batch_budget_bytes=budget)
-    admit(idx_q8, "onebc", nprobe=2, batch_chunk_rows=1 << 30)
+    admit(idx_q8, "onebc", nprobe=2, batch_budget_bytes=ONE_CHUNK)
     results["dg_pair_parity"] = (
         results["dg_admit_composed_pairs"] == results["dg_admit_onebc_pairs"]
     )
+
+
+#: ``SCALE_ONLY=assign`` batch rows per dim: estimates x 2 of about
+#: 0.6-2, 3-6 and 10-23 MB, the range where the driver path stops
+#: winning (a wider sweep up to the 256 MB budgets lost from ~20 MB up)
+ASSIGN_ROWS = {64: (2_000, 10_000, 40_000), 768: (500, 2_000, 8_000)}
+
+
+def _assign_vectors(spark, tag: str, n: int, dim: int):
+    """Synthesize-once ``n x dim`` hash-valued vectors (ids tagged so
+    batches never collide with the index corpus) as parquet."""
+    path = os.path.join(CORPUS, f"assign_{tag}_{dim}_{n}")
+    if not os.path.exists(path):
+        comp = F.transform(
+            F.sequence(F.lit(0), F.lit(dim - 1)),
+            lambda j: ((F.hash(F.col("id"), j, F.lit(tag)) % 10_000) / 10_000.0)
+            .cast("float"),
+        )
+        off = 10_000_000 if tag == "batch" else 0
+        spark.range(n).select(
+            (F.col("id") + off).alias("vec_id"), comp.alias("embedding")
+        ).write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
+
+
+def _assign_leg(spark, results: dict, timed) -> None:
+    """Where a SemDeDup batch's cell assignment pays: on the driver
+    (one Arrow collect, the GEMM kernel on the driver, a local
+    relation back) or distributed (``mapInPandas`` per Arrow batch,
+    checkpoint, cid-count collect). ``_probe_cells`` picks by the
+    batch's Catalyst estimate x ``1 + nprobe`` against
+    ``vectors._DRIVER_ASSIGN_BYTES``; this leg forces each path by
+    patching that constant (0: distributed; the budget: driver), so
+    the admit's and the search's own budgets stay at their defaults.
+
+    Per dim (64, 768): one k=256 index over a 20 K-vector corpus, and
+    parquet batches at three sizes (``ASSIGN_ROWS``). For
+    each batch, the admit on the gemm and the expr engine and the
+    search (default expr engine, k=5) run at nprobe 1, alternating
+    driver/distributed, best of two timed runs after a warm-up. Walls
+    time construction plus a noop write (both paths do eager work at
+    construction). Keys ``assign_<op>_<dim>_<rows>_<path>_s`` and
+    ``..._jobs`` (Spark jobs per call, timed run), the batch estimate
+    ``assign_<dim>_<rows>_est_mb`` and ``..._rows_equal`` (result
+    row counts equal on both paths)."""
+    import shutil as _sh
+
+    from siskin_spark.functions import vectors as V
+    from siskin_spark.session import plan_bytes
+
+    sc = spark.sparkContext
+    forced = {"driver": 256 << 20, "distributed": 0}
+    saved = V._DRIVER_ASSIGN_BYTES
+    ops = {
+        "admit_gemm": lambda b, idx: V.incremental_semdedup(
+            spark, b, idx, threshold=0.95, engine="gemm"),
+        "admit_expr": lambda b, idx: V.incremental_semdedup(
+            spark, b, idx, threshold=0.95, engine="expr"),
+        "search": lambda b, idx: V.semdedup_index_search(
+            spark, b, idx, k=5),
+    }
+    try:
+        for dim, sizes in ASSIGN_ROWS.items():
+            idx = os.path.join(CORPUS, f"sem_index_assign_{dim}")
+            _sh.rmtree(idx, ignore_errors=True)
+            V.semdedup_index_build(
+                _assign_vectors(spark, "corpus", 20_000, dim), idx,
+                k=256, sample=20_000, iters=5,
+            )
+            for op, fn in ops.items():
+                for n in sizes:
+                    batch = _assign_vectors(spark, "batch", n, dim)
+                    results[f"assign_{dim}_{n}_est_mb"] = round(
+                        plan_bytes(batch) / (1 << 20), 2
+                    )
+                    key = f"assign_{op}_{dim}_{n}"
+                    rows = {}
+                    for rep in range(3):  # rep 0 warms both paths
+                        for path, bound in forced.items():
+                            V._DRIVER_ASSIGN_BYTES = bound
+                            group = f"{key}_{path}_{rep}"
+                            sc.setJobGroup(group, group)
+                            t0 = time.perf_counter()
+                            out = fn(batch, idx)
+                            out.write.format("noop").mode("overwrite").save()
+                            wall = time.perf_counter() - t0
+                            sc.setLocalProperty("spark.jobGroup.id", None)
+                            if rep == 0:
+                                rows[path] = out.count()
+                                continue
+                            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+                            best = results.get(f"{key}_{path}_s")
+                            if best is None or wall < best:
+                                results[f"{key}_{path}_s"] = wall
+                                results[f"{key}_{path}_jobs"] = jobs
+                    results[f"{key}_rows_equal"] = (
+                        rows["driver"] == rows["distributed"]
+                    )
+    finally:
+        V._DRIVER_ASSIGN_BYTES = saved
 
 
 def _jvm_rchar(spark) -> int:
@@ -1859,7 +1966,7 @@ def main() -> None:
         "neardup_incremental", "curation", "r9", "r10", "semincr", "r11",
         "sq8", "tokbudget", "nprobe", "dim768", "dailygate", "bm25", "dsir",
         "search", "searchprune", "searchgemm", "gatebench", "ndsearch",
-        "licensing",
+        "licensing", "assign",
     ):
         # iterate on this one leg without the ~25-minute full suite;
         # emits a partial JSON with only the leg's keys
@@ -1934,6 +2041,9 @@ def main() -> None:
         elif os.environ["SCALE_ONLY"] == "licensing":
             _control_leg(spark, results, timed_only)
             _licensing_leg(spark, results, timed_only)
+        elif os.environ["SCALE_ONLY"] == "assign":
+            _control_leg(spark, results, timed_only)
+            _assign_leg(spark, results, timed_only)
         elif os.environ["SCALE_ONLY"] == "gatebench":
             _control_leg(spark, results, timed_only)
             _gate_leg(spark, results, timed_only)

@@ -327,14 +327,10 @@ def main(argv: list[str] | None = None) -> int:
              "scales ~linearly with n)",
     )
     p_sbatch.add_argument(
-        "--chunk-rows", type=int, default=None,
-        help="gemm engine: rows per collected batch chunk (default: "
-             "derived from --chunk-budget-mb and the embedding dim)",
-    )
-    p_sbatch.add_argument(
         "--chunk-budget-mb", type=int, default=256,
-        help="gemm engine: packed-chunk byte budget when --chunk-rows "
-             "is unset (~43K rows/chunk at 768-dim, ~512K at 64-dim)",
+        help="driver budget: gemm engine packed-chunk bytes (~43K "
+             "rows/chunk at 768-dim, ~512K at 64-dim); also caps the "
+             "batch size assigned on the driver",
     )
     p_sbatch.add_argument(
         "--append-survivors", metavar="BATCH_ID", default=None,
@@ -348,7 +344,8 @@ def main(argv: list[str] | None = None) -> int:
                            "embedding parquet files into")
     p_sstream.add_argument("index_dir")
     p_sstream.add_argument("out_dir", help="survivors land at "
-                           "out_dir/gate_batch=<n>/ per micro-batch")
+                           "out_dir/query=<queryId>/gate_batch=<n>/ per "
+                           "micro-batch")
     p_sstream.add_argument("--checkpoint", required=True,
                            help="streaming checkpoint dir (exactly-once "
                            "bookkeeping; reuse it across invocations)")
@@ -640,7 +637,6 @@ def main(argv: list[str] | None = None) -> int:
             admit = dict(
                 threshold=args.threshold, engine=args.engine,
                 max_batch_cell_rows=args.max_cell_rows or None,
-                batch_chunk_rows=args.chunk_rows,
                 batch_budget_bytes=args.chunk_budget_mb << 20,
                 nprobe=args.nprobe,
             )

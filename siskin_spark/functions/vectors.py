@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from siskin_spark import index_store
-from siskin_spark.session import arrow_pinned
+from siskin_spark.session import arrow_pinned, plan_bytes
 
 
 def _parallel(df: DataFrame, key: str) -> DataFrame:
@@ -31,20 +31,21 @@ def _parallel(df: DataFrame, key: str) -> DataFrame:
     scale where the scan already yields enough splits.
 
     The small/large decision uses Catalyst's optimized-plan size
-    estimate — a driver-only lookup. (``df.rdd.getNumPartitions()``
-    would answer exactly, but under AQE converting to an RDD
-    materializes upstream shuffle stages: a hidden 1-2 s job per
-    call.) If the estimate is at least cores x maxPartitionBytes the
-    scan already splits to core count and the shuffle is skipped;
-    below that a repartition of so little data costs microseconds."""
+    estimate (:func:`~siskin_spark.session.plan_bytes`, the same
+    driver-only lookup that places a SemDeDup batch's cell assignment
+    in :func:`_probe_cells`). (``df.rdd.getNumPartitions()`` would
+    answer exactly, but under AQE converting to an RDD materializes
+    upstream shuffle stages: a hidden 1-2 s job per call.) If the
+    estimate is at least cores x maxPartitionBytes the scan already
+    splits to core count and the shuffle is skipped; below that a
+    repartition of so little data costs microseconds."""
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
     raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
     m = re.fullmatch(r"(\d+)\s*([kmg]?)b?", raw.strip().lower())
     max_split = int(m.group(1)) * units.get(m.group(2), 1) if m else 128 << 20
-    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    if size < cores * max_split:
+    if plan_bytes(df) < cores * max_split:
         return df.repartition(cores, F.col(key))
     return df
 
@@ -741,19 +742,22 @@ def _within_group_pairs_gemm(
     return v.groupBy("cid", "_sub").applyInPandas(emit, out_schema)
 
 
+#: Seed of the hot-cell split's hashes and sub-centroid fits, and the
+#: sub-centroid k-means iteration count, in :func:`semantic_dedup_pairs`.
+_SPLIT_SEED = 11
+_SUBCENTROID_ITERS = 6
+
+
 def semantic_dedup_pairs(
     emb: DataFrame,
     centroids: DataFrame,
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    use_gemm: bool = True,
     max_cell_rows: int | None = 50_000,
     hot_cell: str = "subcentroid",
-    split_seed: int = 11,
     engine: str = "expr",
     subcentroid_sample: int = 16_384,
-    subcentroid_iters: int = 6,
 ) -> DataFrame:
     """SemDeDup-style semantic duplicate pairs (Abbas et al. 2023,
     arXiv:2303.09540): assign every embedding to its nearest k-means
@@ -764,10 +768,8 @@ def semantic_dedup_pairs(
     verify all-pairs.
 
     Scale: cell assignment is a broadcast of k centroids against the
-    corpus (the GEMM engine :func:`ivf_assign_gemm` by default,
-    measured 14x over the expression engine :func:`ivf_assign` at 3M
-    vectors; ``use_gemm=False`` picks the oracle-exact expression
-    engine — both share the tie and zero-norm rules), then
+    corpus (``engine`` picks :func:`ivf_assign` or
+    :func:`ivf_assign_gemm`, see below), then
     ``localCheckpoint``-ed ONCE: the assignment feeds the cell
     histogram and both self-join sides, and without the lineage cut
     the GEMM pass would re-execute per consumer. The within-cell
@@ -790,7 +792,8 @@ def semantic_dedup_pairs(
     - ``hot_cell='subcentroid'`` (default): sample the hot cell's
       members (bounded, ~``subcentroid_sample`` rows per cell), fit
       ``ceil(n / max_cell_rows)`` SUB-CENTROIDS driver-side
-      (:func:`_spherical_kmeans`, seeded — deterministic), and assign
+      (:func:`_spherical_kmeans`, ``_SUBCENTROID_ITERS`` iterations
+      seeded with ``_SPLIT_SEED`` — deterministic), and assign
       members to their nearest sub-centroid (one GEMM pass over hot
       rows only, ``mapInPandas``). Semantically-close pairs stay
       co-located, so recall degrades like RAISING K — the trade
@@ -816,11 +819,21 @@ def semantic_dedup_pairs(
     hyperplane-bucket recall suits the corpus better — see the README
     selection table.
 
-    ``engine='expr'`` (default) computes cosines as Catalyst fold
-    expressions — sequential float64 sums, bit-matching the DuckDB
-    oracle. ``engine='gemm'`` routes each (cell, sub-cell) group
-    through :func:`_within_group_pairs_gemm` — the scale family for
-    100 TB runs, where the guard doubles as the GEMM block bound.
+    ``engine`` is the one engine choice, for the assignment and the
+    pair compare together:
+
+    - ``engine='expr'`` (default): the expression assignment
+      :func:`ivf_assign` and cosines as Catalyst fold expressions —
+      sequential float64 sums, bit-matching the DuckDB oracle.
+    - ``engine='gemm'``: the GEMM assignment :func:`ivf_assign_gemm`
+      (measured 14x over the expression engine at 3M vectors) and
+      each (cell, sub-cell) group through
+      :func:`_within_group_pairs_gemm` — the scale family for 100 TB
+      runs, where the guard doubles as the GEMM block bound.
+
+    Both assignment engines share the tie and zero-norm rules. The
+    earlier default, GEMM assignment with expression folds, is
+    retired.
 
     Returns (id_a, id_b, cid, cos_sim) with id_a < id_b,
     cos_sim >= threshold (cid is the cell of both sides, cast long);
@@ -843,7 +856,7 @@ def semantic_dedup_pairs(
             "the per-group pandas matrix; set max_cell_rows or use "
             "engine='expr'"
         )
-    assign = ivf_assign_gemm if use_gemm else ivf_assign
+    assign = ivf_assign_gemm if engine == "gemm" else ivf_assign
     assigned = assign(
         emb.select(id_col, vec_col), centroids, id_col=id_col, vec_col=vec_col
     )
@@ -899,7 +912,7 @@ def semantic_dedup_pairs(
             v.join(broadcast(sizes), "cid")
             .filter(
                 F.pmod(
-                    F.xxhash64(F.col("_id").cast("string"), F.lit(split_seed + 1)),
+                    F.xxhash64(F.col("_id").cast("string"), F.lit(_SPLIT_SEED + 1)),
                     F.col("_hc_n"),
                 )
                 < F.lit(int(subcentroid_sample))
@@ -917,7 +930,7 @@ def semantic_dedup_pairs(
             # subcentroid_sample setting) falls back to the hash split
             if len(Xs) >= 2 * hot[c]:
                 sub_cents[c] = _spherical_kmeans(
-                    Xs, hot[c], subcentroid_iters, split_seed
+                    Xs, hot[c], _SUBCENTROID_ITERS, _SPLIT_SEED
                 )
 
     # hash-split cells: the sample-starved fallback cells
@@ -937,7 +950,7 @@ def semantic_dedup_pairs(
                     F.col("_ns").isNotNull(),
                     F.pmod(
                         F.xxhash64(
-                            F.col("_id").cast("string"), F.lit(split_seed)
+                            F.col("_id").cast("string"), F.lit(_SPLIT_SEED)
                         ),
                         F.col("_ns"),
                     ),
@@ -1025,7 +1038,7 @@ def semantic_dedup_pairs(
                         + F.pmod(
                             F.xxhash64(
                                 F.col("_id").cast("string"),
-                                F.lit(split_seed + 2),
+                                F.lit(_SPLIT_SEED + 2),
                             ),
                             F.col("_ns2"),
                         ),
@@ -1181,35 +1194,60 @@ def _sem_assign_local(
     return probes, {int(c): int(n) for c, n in out["cid"].value_counts().items()}
 
 
+#: Driver-assignment bound in bytes: :func:`_probe_cells` assigns a
+#: batch on the driver when its Catalyst estimate times the
+#: ``1 + nprobe`` rows the driver kernel materializes is at most this
+#: (and at most the entry point's own driver budget). The crossover in
+#: ``SCALE_pr14_assign.json`` (4 cores): at 1.94 MiB the driver path
+#: still won or tied the gemm admit, the expr admit and the search, at
+#: 2.88 MiB the expr admit lost, and from ~10 MiB up every op lost —
+#: the distributed path runs the Arrow conversions on every core.
+_DRIVER_ASSIGN_BYTES = 2 << 20
+
+
 def _probe_cells(
-    spark, emb: DataFrame, art: dict, nprobe: int, driver_assign: bool,
+    spark, emb: DataFrame, art: dict, nprobe: int, budget: int,
     checkpoint: bool | None, counts: bool,
 ):
     """The probe front end both index entry points (search and admit)
     share: ``emb`` assigned to its ``nprobe`` nearest frozen cells of
     the index entry ``art`` (:func:`_index_artifacts`), in
-    :func:`_sem_assign`'s schema. ``driver_assign`` runs the kernel
-    on one driver-side Arrow collect (:func:`_sem_assign_local`);
-    otherwise the distributed assignment is localCheckpointed with
-    ``eager=checkpoint`` (None: not at all) so its GEMM pass runs once
-    for every consumer. Returns ``(probes, cell_rows)``, the touched
-    cid -> probe-row count map: free on the driver path, one
+    :func:`_sem_assign`'s schema.
+
+    Where the assignment runs is decided here, from the batch's size
+    and never from a caller flag: when Catalyst's estimate of ``emb``
+    (:func:`~siskin_spark.session.plan_bytes`) times ``1 + nprobe``
+    is at most ``min(_DRIVER_ASSIGN_BYTES, budget)`` — ``budget``
+    being the entry point's existing driver budget — the kernel runs
+    on one driver-side Arrow collect (:func:`_sem_assign_local`), so
+    the ``mapInPandas`` stage, its Python workers, the checkpoint and
+    the cid collect all disappear. Otherwise (a larger batch, or a
+    plan with no statistics such as a Python-row ``createDataFrame``,
+    which estimates Long.MaxValue) the distributed assignment is
+    localCheckpointed with ``eager=checkpoint`` (None: not at all) so
+    its GEMM pass runs once for every consumer. Both paths run the
+    same kernel (:func:`_gemm_assigner`) on JVM-folded norms, so
+    results are identical (pinned in tests).
+
+    Returns ``(probes, cell_rows, local)``: ``cell_rows`` is the
+    touched cid -> probe-row count map — free on the driver path, one
     k-bounded collect on the distributed path when ``counts`` asks
-    for it, else None — never a job the caller would not run anyway."""
+    for it, else None (never a job the caller would not run anyway);
+    ``local`` says the driver path ran."""
     meta = art["meta"]
     args = (
         emb, art["cents"], meta["id_col"], meta["vec_col"], nprobe,
         _index_matrix(art),
     )
-    if driver_assign:
-        return _sem_assign_local(spark, *args)
+    if plan_bytes(emb) * (1 + nprobe) <= min(_DRIVER_ASSIGN_BYTES, budget):
+        return (*_sem_assign_local(spark, *args), True)
     probes = _sem_assign(*args)
     if checkpoint is not None:
         probes = probes.localCheckpoint(eager=checkpoint)
     if not counts:
-        return probes, None
+        return probes, None, False
     rows = probes.groupBy("cid").agg(F.count(F.lit(1)).alias("n")).collect()
-    return probes, {int(r["cid"]): int(r["n"]) for r in rows}
+    return probes, {int(r["cid"]): int(r["n"]) for r in rows}, False
 
 
 def _cid_filter(cids) -> Column:
@@ -1594,12 +1632,10 @@ def semdedup_index_search(
     k: int = 5,
     nprobe: int = 1,
     exclude_self: bool = False,
-    broadcast_queries: bool = True,
     prune_cells: bool = True,
     engine: str = "expr",
     sim_buffer_bytes: int = 64 << 20,
     gemm_budget_bytes: int = 256 << 20,
-    driver_assign: bool = False,
 ) -> DataFrame:
     """Top-k cosine retrieval FROM the persisted cell index — the
     serving half of the index family (build/append/compact/remove/
@@ -1624,21 +1660,20 @@ def semdedup_index_search(
     k_cells), never corpus-sized — BEFORE the compare; the index is
     cid-clustered on disk and footer-skip certified
     (operators/layout.py), so each query scans ~nprobe/k_cells of
-    the index. The distributed assignment is localCheckpointed first
-    so its GEMM pass runs once, not once per consumer.
-    ``driver_assign=True`` runs the assignment on the DRIVER in one
-    Arrow collect of the query batch instead (same numpy kernel,
-    norms folded in the JVM), so the checkpoint and the touched-cid
-    collect disappear; opt-in because it collects the batch whole —
-    use it when the batch is driver-sized. Results are identical
-    either way (pinned in tests).
+    the index. :func:`_probe_cells` places the assignment by the query
+    batch's size: a batch whose Catalyst estimate times ``1 + nprobe``
+    fits ``gemm_budget_bytes`` (and the module's measured crossover
+    bound) is assigned on the DRIVER in one Arrow collect, so the
+    Python stage, the checkpoint and the touched-cid collect
+    disappear; a larger or unestimated batch is assigned distributed
+    and localCheckpointed first so its GEMM pass runs once, not once
+    per consumer. Results are identical either way (pinned in tests).
 
     ``engine='expr'`` (default) joins the probes on cid against the
-    cells scan (the probe side broadcasts; ``broadcast_queries=False``
-    shuffles BOTH sides on cid for query batches too large to
-    broadcast) and folds each cosine as a Column expression (fixed
-    fold order — oracle-exact). ``engine='gemm'`` is the THROUGHPUT
-    path for batch serving: the probe table is Arrow-collected
+    cells scan (the probe side broadcasts) and folds each cosine as a
+    Column expression (fixed fold order — oracle-exact).
+    ``engine='gemm'`` is the THROUGHPUT path for batch serving: the
+    probe table is Arrow-collected
     (guarded by ``gemm_budget_bytes`` — chunk the query set yourself
     or use expr beyond it) and run through :func:`_co_cell_gemm`
     (``sim_buffer_bytes`` tiles the query axis), measured 6-10x on
@@ -1672,8 +1707,8 @@ def semdedup_index_search(
     art = _index_artifacts(spark, index_dir)
     meta, cells = art["meta"], art["cells"]
     # the checkpoint serves the prune collect and the gemm collects
-    probes, cell_rows = _probe_cells(
-        spark, queries, art, nprobe, driver_assign,
+    probes, cell_rows, _ = _probe_cells(
+        spark, queries, art, nprobe, gemm_budget_bytes,
         checkpoint=True if prune_cells or engine == "gemm" else None,
         counts=prune_cells,
     )
@@ -1715,14 +1750,12 @@ def semdedup_index_search(
             # stored norm is the ORIGINAL float norm (diagnostics); the
             # quantized direction needs its own magnitude for the cosine
             cells = cells.withColumn("norm", norm(F.col("embedding")))
-        p = probes.select(
+        p = broadcast(probes.select(
             F.col("vec_id").alias("query_id"),
             as_double(F.col("embedding")).alias("_qv"),
             F.col("norm").alias("_qn"),
             "cid",
-        )
-        if broadcast_queries:
-            p = broadcast(p)
+        ))
         i = cells.select(
             F.col("vec_id").alias("neighbor_id"),
             as_double(F.col("embedding")).alias("_iv"),
@@ -1757,10 +1790,8 @@ def incremental_semdedup(
     engine: str = "gemm",
     max_batch_cell_rows: int | None = 500_000,
     sim_buffer_bytes: int = 64 << 20,
-    batch_chunk_rows: int | None = None,
     batch_budget_bytes: int = 256 << 20,
     nprobe: int = 1,
-    driver_assign: bool = False,
 ) -> DataFrame:
     """Semantic-duplicate pairs between a NEW embedding batch and
     (index corpus + batch), without re-comparing the corpus: returns
@@ -1786,8 +1817,8 @@ def incremental_semdedup(
       float64 dim, NOT Python Row objects at ~10x that) ONE
       cid-range AT A TIME: the k-bounded per-cell counts plan
       contiguous cid ranges whose batch rows fit
-      ``batch_budget_bytes`` (or exactly ``batch_chunk_rows`` rows
-      when given), and each range is collected, run through the
+      ``batch_budget_bytes`` (``budget // (8 * dim)`` rows per
+      chunk), and each range is collected, run through the
       kernel and RELEASED before the next range's collect — both the
       driver residency and the broadcast bound are the CHUNK, never
       the whole daily batch (the one exception that tracks data
@@ -1845,14 +1876,16 @@ def incremental_semdedup(
     it and drops the second (pinned by
     ``test_semdedup_gate_batch_boundary``).
 
-    ``driver_assign=True`` (opt-in, as in
-    :func:`semdedup_index_search`): assign the batch on the DRIVER in
-    one Arrow collect — same numpy kernel (:func:`_sem_assign_local`),
-    norms folded in the JVM — so the mapInPandas assignment stage, its
-    Python workers, the checkpoint, and the guard's and chunk
-    planner's cid collect all disappear. Use it when the batch is
-    driver-sized (the gemm engine's own posture); results are
-    identical either way (pinned in tests)."""
+    Where the batch is assigned follows its size, as in
+    :func:`semdedup_index_search` (:func:`_probe_cells`): a batch
+    whose Catalyst estimate times ``1 + nprobe`` fits
+    ``batch_budget_bytes`` (and the module's measured crossover
+    bound) is assigned on the DRIVER in one Arrow collect — same numpy
+    kernel (:func:`_sem_assign_local`), norms folded in the JVM — so
+    the mapInPandas assignment stage, its Python workers, the
+    checkpoint, and the guard's and chunk planner's cid collect all
+    disappear; a larger or unestimated batch is assigned distributed.
+    Results are identical either way (pinned in tests)."""
     import numpy as np
 
     if engine not in ("expr", "gemm"):
@@ -1892,8 +1925,8 @@ def incremental_semdedup(
     # checkpoint materializes on first touch and is shared from block
     # storage — same reuse, one fewer driver-synchronized job per
     # admit (r13 opt, guide §5 driver round-trips)
-    probes, cell_rows = _probe_cells(
-        spark, new_emb, art, nprobe, driver_assign,
+    probes, cell_rows, local = _probe_cells(
+        spark, new_emb, art, nprobe, batch_budget_bytes,
         checkpoint=engine == "gemm", counts=engine == "gemm" or guarded,
     )
     batch = probes
@@ -1936,10 +1969,7 @@ def incremental_semdedup(
             )
 
     if engine == "gemm":
-        if batch_chunk_rows is not None:
-            chunk = max(1, int(batch_chunk_rows))
-        else:
-            chunk = max(1, batch_budget_bytes // (8 * _index_dim(meta, probes)))
+        chunk = max(1, batch_budget_bytes // (8 * _index_dim(meta, probes)))
         # Plan contiguous cid RANGES whose summed batch rows fit the
         # chunk, then COLLECT per range — the driver never holds more
         # than one range (+ its packed copy): driver residency is the
@@ -2052,7 +2082,7 @@ def incremental_semdedup(
         .filter(F.col("cos_sim") >= threshold)
     )
     batch = staged(batch)
-    if driver_assign:
+    if local:
         # the local-relation batch scans as ONE partition; spread the
         # self-join's STREAM side so the pair cosine folds use every
         # core (the build side stays the cheap local relation)

@@ -24,6 +24,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from siskin_spark.session import plan_bytes
+
 
 def _dir_parts(path: str) -> list[str]:
     return [
@@ -78,8 +80,7 @@ def write_range_layout(
         if sample_bytes_per_row is not None:
             est = df.count() * sample_bytes_per_row
         else:
-            est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            est = float(min(est, 2**63 - 1))
+            est = plan_bytes(df)
         n_files = _files_for_target(int(est), target_file_mb)
         if n_files > _MAX_DERIVED_FILES:
             if sample_bytes_per_row is not None:

@@ -178,6 +178,19 @@ def local_table(spark: SparkSession, rows, schema):
         return spark.createDataFrame(pdf, st)
 
 
+def plan_bytes(df) -> int:
+    """Catalyst's optimized-plan size estimate of ``df`` in bytes: a
+    driver-only lookup that runs no job. File scans estimate their file
+    bytes (a filter does not shrink it, a ``localCheckpoint`` keeps it);
+    an Arrow ``LocalRelation`` estimates a fixed ~20 B/row whatever its
+    width; a plan with no statistics (a Python-row ``createDataFrame``,
+    an RDD) reads ``spark.sql.defaultSizeInBytes`` (Long.MaxValue), and
+    joins multiply their children's sizes, so the result is capped at
+    Long.MaxValue."""
+    est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return min(int(est), 2**63 - 1)
+
+
 @contextmanager
 def arrow_pinned(spark: SparkSession):
     """Arrow on for the driver<->JVM conversions inside the block

@@ -134,21 +134,22 @@ def semdedup_gate_writer(
 ) -> Callable[[DataFrame, int], None]:
     """Build the ``foreachBatch`` callable for
     ``stream.writeStream.foreachBatch(...)``: micro-batch ``n`` runs
-    :func:`gate_batch` with its survivors at ``out_dir/gate_batch=<n>``
-    and ledger id ``stream-<queryId>-<n>`` (``append=False`` gates
-    without touching the index). The query id is stored in the
-    checkpoint, so a restarted query replays under the same ids, while
-    a fresh checkpoint, which restarts ``n`` at 0, gets a new id and
-    its batches are not mistaken for the old stream's committed ones.
-    Give each checkpoint its own ``out_dir``: a fresh checkpoint's
-    batch ``n`` overwrites the survivors an earlier stream landed at
-    ``gate_batch=<n>`` (their indexed copies stay). Appending needs
-    the query id, so outside ``foreachBatch`` the callable raises
+    :func:`gate_batch` with its survivors at
+    ``out_dir/query=<queryId>/gate_batch=<n>`` and ledger id
+    ``stream-<queryId>-<n>`` (``append=False`` gates without touching
+    the index). The query id is stored in the checkpoint, so a
+    restarted query replays under the same ids and rewrites only its
+    own landing paths, while a fresh checkpoint, which restarts ``n``
+    at 0, gets a new id: its batches are not mistaken for the old
+    stream's committed ones, and its survivors land beside the old
+    stream's instead of over them, so streams on fresh checkpoints can
+    share one ``out_dir``. The landing path and the ledger id need the
+    query id, so outside ``foreachBatch`` the callable raises
     ValueError. The batch frame must carry the index's
     id/vector columns (meta ``id_col``/``vec_col``, same contract as
     the batch admit). ``admit`` passes through to
     :func:`~siskin_spark.functions.vectors.incremental_semdedup`
-    (``threshold``, ``engine``, ``nprobe``, ``batch_chunk_rows``, ...).
+    (``threshold``, ``engine``, ``nprobe``, ``batch_budget_bytes``, ...).
 
     Scale: each micro-batch costs one batch-sized GEMM assignment +
     co-cell compares — the index never reshuffles, the driver/broadcast
@@ -159,20 +160,17 @@ def semdedup_gate_writer(
 
     def gate(batch: DataFrame, batch_id: int) -> None:
         n = int(batch_id)
-        ledger_id = None
-        if append:
-            sc = batch.sparkSession.sparkContext
-            query_id = sc.getLocalProperty("sql.streaming.queryId")
-            if query_id is None:
-                raise ValueError(
-                    "semdedup_gate_writer's callable appends under the "
-                    "streaming query id and runs inside foreachBatch only"
-                )
-            ledger_id = f"stream-{query_id}-{n}"
+        sc = batch.sparkSession.sparkContext
+        query_id = sc.getLocalProperty("sql.streaming.queryId")
+        if query_id is None:
+            raise ValueError(
+                "semdedup_gate_writer's callable lands and appends under "
+                "the streaming query id and runs inside foreachBatch only"
+            )
         gate_batch(
             "semdedup", batch, index_dir,
-            os.path.join(out_dir, f"gate_batch={n}"),
-            batch_id=ledger_id, **admit,
+            os.path.join(out_dir, f"query={query_id}", f"gate_batch={n}"),
+            batch_id=f"stream-{query_id}-{n}" if append else None, **admit,
         )
 
     return gate

@@ -578,7 +578,7 @@ def test_search_and_admit_agree(
         (r["vec_id"], r["dup_of"]): r["cos_sim"]
         for r in V.incremental_semdedup(
             spark, batch, d, threshold=t, engine=engine, nprobe=nprobe,
-            batch_chunk_rows=16,
+            batch_budget_bytes=16 * _DIM * 8,
         ).collect()
         if r["dup_of"] < 10_000
     }

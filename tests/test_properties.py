@@ -1447,7 +1447,7 @@ def test_incremental_semdedup_equals_full_recompute_property(
     chunked = {
         (r["vec_id"], r["dup_of"])
         for r in incremental_semdedup(
-            spark, batch, idx_dir, threshold=0.9, batch_chunk_rows=3
+            spark, batch, idx_dir, threshold=0.9, batch_budget_bytes=3 * 16 * 8
         ).collect()
     }
     expr = {

@@ -1038,8 +1038,8 @@ def test_incremental_semdedup_guard_fallback_and_dup_ids(tmp_path, spark):
 def test_incremental_semdedup_chunked_matches_unchunked(tmp_path, spark):
     """Round 11: the gemm admit must give the SAME pair set whether the
     Arrow-collected batch runs as one packed broadcast or as many
-    cid-sorted chunks (batch_chunk_rows straddling the batch, and the
-    byte-budget auto-derivation forced tiny) — chunking bounds driver/
+    cid-sorted chunks (a tiny ``batch_budget_bytes``, whose
+    ``budget // (8 * dim)`` rows straddle the batch) — chunking bounds driver/
     executor memory, never results. Chunk boundaries land mid-cell on
     purpose: a cid straddling two chunks is the correctness edge (its
     index rows are scanned by both chunks but against disjoint batch
@@ -1079,17 +1079,15 @@ def test_incremental_semdedup_chunked_matches_unchunked(tmp_path, spark):
         }
 
     one = pairs()  # 92 rows, default budget -> single chunk
-    chunked = pairs(batch_chunk_rows=17)  # 6 chunks, boundaries mid-cell
+    # 17 rows x DIM x 8B budget: 6 chunks, boundaries mid-cell
+    chunked = pairs(batch_budget_bytes=17 * DIM * 8)
     assert set(one) == set(chunked)
     for p in one:
         assert abs(one[p] - chunked[p]) < 1e-12
-    # byte-budget derivation: 17 rows x DIM x 8B budget -> same chunking
-    budget = pairs(batch_budget_bytes=17 * DIM * 8)
-    assert set(budget) == set(one)
     # r12 per-range collect: a chunk smaller than every cell's batch
     # rows forces the heavy-cid path (each cid its own range, collected
     # whole, sliced locally into several sub-chunk broadcasts)
-    assert set(pairs(batch_chunk_rows=5)) == set(one)
+    assert set(pairs(batch_budget_bytes=5 * DIM * 8)) == set(one)
     assert len(one) >= 40  # every planted copy + the internal pair
 
 
@@ -1400,7 +1398,7 @@ def test_semdedup_index_int8_store(tmp_path, spark):
     q8_chunked = {
         (r["vec_id"], r["dup_of"])
         for r in incremental_semdedup(
-            spark, batch, q8_dir, threshold=0.9, batch_chunk_rows=5
+            spark, batch, q8_dir, threshold=0.9, batch_budget_bytes=5 * DIM * 8
         ).collect()
     }
     assert q8_chunked == set(pq)
@@ -1524,7 +1522,7 @@ def test_incremental_semdedup_nprobe_boundary_recovery(tmp_path, spark):
     for kw in (
         {"nprobe": 2},
         {"nprobe": 2, "engine": "expr"},
-        {"nprobe": 2, "batch_chunk_rows": 1},
+        {"nprobe": 2, "batch_budget_bytes": DIM * 8},
     ):
         got = pairs(**kw)
         assert (900, 10) in got, kw
@@ -1588,7 +1586,9 @@ def test_streaming_semdedup_gate(tmp_path, spark):
     def survivors(bid):
         return {
             r["vec_id"]
-            for r in spark.read.parquet(f"{out_dir}/gate_batch={bid}").collect()
+            for r in spark.read.parquet(
+                f"{out_dir}/query={q.id}/gate_batch={bid}"
+            ).collect()
         }
 
     # batch 0: 700 dups corpus vec 0; batch 1: 702 dups INDEXED 701 —
@@ -1605,7 +1605,7 @@ def test_streaming_semdedup_gate(tmp_path, spark):
 
     # committed replay: same batch id arrives again -> pure no-op, the
     # landed files are not even rewritten
-    landed = lambda: sorted(os.listdir(f"{out_dir}/gate_batch=1"))  # noqa: E731
+    landed = lambda: sorted(os.listdir(f"{out_dir}/query={q.id}/gate_batch=1"))  # noqa: E731
     before = landed()
     with _in_stream(spark, q.id):
         gate(spark.createDataFrame(b1, schema), 1)
@@ -1656,11 +1656,13 @@ def _feed(spark, tmp_path, name: str, batches) -> str:
 
 def test_streaming_semdedup_gate_checkpoint_reset(tmp_path, spark):
     """A fresh checkpoint restarts the micro-batch number at 0. The
-    ledger id carries the query id, which lives in the checkpoint, so
-    two streams on fresh checkpoints over one index both land and index
-    their batch 0, while a query restarted on its checkpoint keeps its
-    id and replaying its batch 0 stays a no-op. Outside a stream the
-    callable refuses to append."""
+    ledger id and the landing path carry the query id, which lives in
+    the checkpoint, so two streams on fresh checkpoints over one index
+    and one ``out_dir`` both index their batch 0 and both keep their
+    landed survivors, while a query restarted on its checkpoint keeps
+    its id, replaying its batch 0 stays a no-op, and a replay that
+    does run rewrites only its own query's path. Outside a stream the
+    callable refuses."""
     import json
     import os
 
@@ -1688,25 +1690,39 @@ def test_streaming_semdedup_gate_checkpoint_reset(tmp_path, spark):
         q.awaitTermination(180)
         return q, gate
 
-    out_a, out_b = str(tmp_path / "out-a"), str(tmp_path / "out-b")
-    qa, gate_a = run(_feed(spark, tmp_path, "feed-a", [a]), "ckpt-a", out_a)
-    qb, _ = run(_feed(spark, tmp_path, "feed-b", [b]), "ckpt-b", out_b)
+    out_dir = str(tmp_path / "out")
+    qa, gate_a = run(_feed(spark, tmp_path, "feed-a", [a]), "ckpt-a", out_dir)
+    qb, _ = run(_feed(spark, tmp_path, "feed-b", [b]), "ckpt-b", out_dir)
     assert qa.id != qb.id
-    for out_dir, want in ((out_a, {600}), (out_b, {601})):
-        landed = spark.read.parquet(f"{out_dir}/gate_batch=0").collect()
-        assert {r["vec_id"] for r in landed} == want
+    path_a = f"{out_dir}/query={qa.id}/gate_batch=0"
+    path_b = f"{out_dir}/query={qb.id}/gate_batch=0"
+
+    def landed(path):
+        return {r["vec_id"] for r in spark.read.parquet(path).collect()}
+
+    assert landed(path_a) == {600} and landed(path_b) == {601}
     cells = lambda: spark.read.parquet(idx_dir + "/cells")  # noqa: E731
     assert {r["vec_id"] for r in cells().filter("vec_id >= 600").collect()} == {600, 601}
     meta = json.load(open(_sem_meta_path(idx_dir)))
     assert meta["appended"] == [f"stream-{qa.id}-0", f"stream-{qb.id}-0"]
 
     # restart on checkpoint a: same query id; its batch 0 replayed is a no-op
-    qa2, _ = run(str(tmp_path / "feed-a"), "ckpt-a", out_a)
+    qa2, _ = run(str(tmp_path / "feed-a"), "ckpt-a", out_dir)
     assert qa2.id == qa.id
-    before = sorted(os.listdir(f"{out_a}/gate_batch=0")), cells().count()
+    before = sorted(os.listdir(path_a)), cells().count()
     with _in_stream(spark, qa.id):
         gate_a(spark.createDataFrame(a, schema), 0)
-    assert (sorted(os.listdir(f"{out_a}/gate_batch=0")), cells().count()) == before
+    assert (sorted(os.listdir(path_a)), cells().count()) == before
+
+    # a replay that runs (no ledger to skip it) rewrites only its own path
+    listing_b = sorted(os.listdir(path_b))
+    with _in_stream(spark, qa.id):
+        semdedup_gate_writer(idx_dir, out_dir, append=False, threshold=0.95)(
+            spark.createDataFrame(a, schema), 0
+        )
+    assert sorted(os.listdir(path_a)) != before[0]
+    assert landed(path_a) == {600}
+    assert sorted(os.listdir(path_b)) == listing_b and landed(path_b) == {601}
 
     with pytest.raises(ValueError, match="foreachBatch"):
         gate_a(spark.createDataFrame(a, schema), 0)
@@ -1761,7 +1777,8 @@ def test_streaming_semdedup_gate_crash_replay_multiprobe(tmp_path, spark, caller
     out_dir = str(tmp_path / "mpout")
     if caller == "stream":
         query_id = "0b7e2c1d-query"
-        ledger_id, kept = f"stream-{query_id}-0", f"{out_dir}/gate_batch=0"
+        ledger_id = f"stream-{query_id}-0"
+        kept = f"{out_dir}/query={query_id}/gate_batch=0"
         gate = semdedup_gate_writer(idx_dir, out_dir, threshold=0.95, nprobe=2)
 
         def run():
@@ -1959,19 +1976,29 @@ def test_semdedup_index_search(tmp_path, spark):
     assert "GreaterThanOrEqual(cid" not in pushed_un, plan_un
 
 
-def test_semdedup_index_search_driver_assign(tmp_path, spark):
-    """driver_assign=True (one Arrow collect + the numpy kernel on
-    the driver) is BYTE-identical to the distributed assignment path —
-    ids, ranks AND cos_sim doubles (the driver-computed fold norms
-    feed the prenormed cosines, so a single ulp of drift would show) —
-    including nprobe 1/2, an empty query frame, and the cid predicate
-    still pushed into the cells scan. The fast path must also remove
-    the Python stage from the plan. (Zero-norm QUERIES are out of
-    scope either way: the search's prenormed cosine divides by the
-    query norm on both paths — ANSI raises; the admit is the
-    zero-safe surface.)"""
+def _parquet(df, path: str):
+    """``df`` written to and read back from parquet: a batch with a
+    real Catalyst size estimate (a Python-row ``createDataFrame`` has
+    none, so its cell assignment always runs distributed)."""
+    df.write.parquet(path)
+    return df.sparkSession.read.parquet(path)
+
+
+def test_semdedup_index_search_driver_assign(tmp_path, spark, monkeypatch):
+    """The driver assignment (one Arrow collect + the numpy kernel on
+    the driver, taken for a batch under ``_DRIVER_ASSIGN_BYTES``) is
+    BYTE-identical to the distributed assignment path (forced with
+    the constant at 0) — ids, ranks AND cos_sim doubles (the
+    driver-computed fold norms feed the prenormed cosines, so a
+    single ulp of drift would show) — including nprobe 1/2, an empty
+    query frame, and the cid predicate still pushed into the cells
+    scan. The driver path must also remove the Python stage from the
+    plan. (Zero-norm QUERIES are out of scope either way: the
+    search's prenormed cosine divides by the query norm on both paths
+    — ANSI raises; the admit is the zero-safe surface.)"""
     import re
 
+    from siskin_spark.functions import vectors as V
     from siskin_spark.functions.vectors import (
         semdedup_index_build,
         semdedup_index_search,
@@ -1985,28 +2012,23 @@ def test_semdedup_index_search_driver_assign(tmp_path, spark):
     qrng = np.random.default_rng(9)
     Q = qrng.normal(size=(6, DIM))
     qrows = [(1000 + i, [float(x) for x in Q[i]]) for i in range(6)]
-    queries = spark.createDataFrame(
-        qrows, "vec_id long, embedding array<float>"
+    queries = _parquet(
+        spark.createDataFrame(qrows, "vec_id long, embedding array<float>"),
+        str(tmp_path / "queries"),
     )
     key = lambda r: (r["query_id"], r["rank"], r["neighbor_id"])  # noqa: E731
+
+    def search(bound, **kw):
+        with monkeypatch.context() as m:
+            m.setattr(V, "_DRIVER_ASSIGN_BYTES", bound)
+            return semdedup_index_search(spark, queries, idx_dir, k=3, **kw)
+
     for npb in (1, 2):
-        a = sorted(
-            semdedup_index_search(
-                spark, queries, idx_dir, k=3, nprobe=npb
-            ).collect(),
-            key=key,
-        )
-        b = sorted(
-            semdedup_index_search(
-                spark, queries, idx_dir, k=3, nprobe=npb, driver_assign=True
-            ).collect(),
-            key=key,
-        )
+        a = sorted(search(0, nprobe=npb).collect(), key=key)
+        b = sorted(search(V._DRIVER_ASSIGN_BYTES, nprobe=npb).collect(), key=key)
         assert a == b  # Row equality: exact doubles, not approx
 
-    fast = semdedup_index_search(
-        spark, queries, idx_dir, k=3, nprobe=2, driver_assign=True
-    )
+    fast = semdedup_index_search(spark, queries, idx_dir, k=3, nprobe=2)
     plan = fast._jdf.queryExecution().executedPlan().toString()
     for marker in ("ArrowEvalPython", "MapInPandas", "BatchEvalPython"):
         assert marker not in plan, plan
@@ -2017,12 +2039,7 @@ def test_semdedup_index_search_driver_assign(tmp_path, spark):
     ), plan
 
     empty = queries.filter(F.col("vec_id") < 0)
-    assert (
-        semdedup_index_search(
-            spark, empty, idx_dir, k=3, driver_assign=True
-        ).count()
-        == 0
-    )
+    assert semdedup_index_search(spark, empty, idx_dir, k=3).count() == 0
 
 
 def test_semdedup_search_gemm_engine_matches_expr(tmp_path, spark):
@@ -2144,10 +2161,12 @@ def test_index_artifact_memo_rotates_on_mutation(tmp_path, spark):
     assert before[0]["neighbor_id"] != 999
 
 
-def test_incremental_semdedup_driver_assign_equal(tmp_path, spark):
-    """driver_assign=True (r13: driver-side batch assignment for the
-    expr admit) returns EXACTLY the distributed path's pairs — ids and
-    cosine values — at nprobe 1 and 2."""
+def test_incremental_semdedup_driver_assign_equal(tmp_path, spark, monkeypatch):
+    """The driver-side batch assignment of the expr admit (taken for
+    a batch under ``_DRIVER_ASSIGN_BYTES``) returns EXACTLY the
+    distributed path's pairs (forced with the constant at 0) — ids
+    and cosine values — at nprobe 1 and 2."""
+    from siskin_spark.functions import vectors as V
     from siskin_spark.functions.vectors import (
         incremental_semdedup,
         semdedup_index_build,
@@ -2159,23 +2178,64 @@ def test_incremental_semdedup_driver_assign_equal(tmp_path, spark):
     semdedup_index_build(corpus, idx_dir, k=4, sample=160, iters=5, seed=3)
 
     brows, _ = _sem_corpus(spark, 60, seed=31)
-    batch = spark.createDataFrame(
-        [(vid + 10_000, v) for vid, v in brows],
-        "vec_id long, embedding array<float>",
+    batch = _parquet(
+        spark.createDataFrame(
+            [(vid + 10_000, v) for vid, v in brows],
+            "vec_id long, embedding array<float>",
+        ),
+        str(tmp_path / "batch"),
     )
+
+    def pairs(bound, npb):
+        with monkeypatch.context() as m:
+            m.setattr(V, "_DRIVER_ASSIGN_BYTES", bound)
+            return sorted(
+                (r["vec_id"], r["dup_of"], r["cos_sim"])
+                for r in incremental_semdedup(
+                    spark, batch, idx_dir, threshold=0.2, engine="expr",
+                    nprobe=npb,
+                ).collect()
+            )
+
     for npb in (1, 2):
-        base = sorted(
-            (r["vec_id"], r["dup_of"], r["cos_sim"])
-            for r in incremental_semdedup(
-                spark, batch, idx_dir, threshold=0.2, engine="expr",
-                nprobe=npb,
-            ).collect()
-        )
-        drv = sorted(
-            (r["vec_id"], r["dup_of"], r["cos_sim"])
-            for r in incremental_semdedup(
-                spark, batch, idx_dir, threshold=0.2, engine="expr",
-                nprobe=npb, driver_assign=True,
-            ).collect()
-        )
+        base = pairs(0, npb)
+        drv = pairs(V._DRIVER_ASSIGN_BYTES, npb)
         assert base == drv and len(base) > 0
+
+
+def test_probe_cells_places_assignment_by_size(tmp_path, spark, monkeypatch):
+    """A parquet batch whose estimate x (1 + nprobe) is under
+    ``_DRIVER_ASSIGN_BYTES`` is assigned on the driver, so its plan
+    has no ``MapInPandas``; the same batch with the constant at 0 is
+    assigned distributed and plans one. A batch with no size
+    estimate (a Python-row ``createDataFrame``) stays distributed, and
+    the entry point's own budget caps the bound. The unpruned expr
+    search keeps the assignment in the final plan (no checkpoint)."""
+    from siskin_spark.functions import vectors as V
+    from siskin_spark.functions.vectors import (
+        semdedup_index_build,
+        semdedup_index_search,
+    )
+    from siskin_spark.session import plan_bytes
+
+    rows, _ = _sem_corpus(spark, 120, seed=37)
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    idx_dir = str(tmp_path / "placeidx")
+    semdedup_index_build(corpus, idx_dir, k=3, sample=120, iters=5, seed=3)
+    qrows, _ = _sem_corpus(spark, 20, seed=41)
+    py_rows = spark.createDataFrame(qrows, "vec_id long, embedding array<float>")
+    batch = _parquet(py_rows, str(tmp_path / "placebatch"))
+    assert 0 < plan_bytes(batch) * 3 <= V._DRIVER_ASSIGN_BYTES
+
+    def plan(df, bound, **kw):
+        with monkeypatch.context() as m:
+            m.setattr(V, "_DRIVER_ASSIGN_BYTES", bound)
+            out = semdedup_index_search(
+                spark, df, idx_dir, k=2, nprobe=2, prune_cells=False, **kw
+            )
+            return out._jdf.queryExecution().executedPlan().toString()
+
+    assert "MapInPandas" not in plan(batch, V._DRIVER_ASSIGN_BYTES)
+    assert "MapInPandas" in plan(batch, 0)
+    assert "MapInPandas" in plan(py_rows, V._DRIVER_ASSIGN_BYTES)
+    assert "MapInPandas" in plan(batch, V._DRIVER_ASSIGN_BYTES, gemm_budget_bytes=1)
